@@ -4,8 +4,9 @@ import graft.{Doc, ExtractedDoc}
 import graft.extract.Extract
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Checkpoint / lineage / resume (SURVEY.md S9 + K6 — the Spark-native
   * replacement for the reference's DynamoDB result cache,
@@ -22,6 +23,21 @@ import org.apache.spark.sql.functions._
   *  - metrics table `<metricsPath>` — one row per document:
   *    (run_id, partition_id, doc_id, status, n_tables, n_cells, checksum,
   *    wall_ms, ts) per FIXTURES.md §4.
+  *
+  * A run's bookkeeping takes few passes, and every read uses a schema
+  * known up front, so no read pays a schema-inference job:
+  *
+  *  1. run_id reuse and table existence are filesystem checks on the
+  *     catalog (no Spark job);
+  *  2. one completed-set read (`doc_id`, `status` only) feeds a single
+  *     aggregation that fingerprints the input's and the completed set's
+  *     resume buckets; its <= 2 x `buckets` values are collected to the
+  *     driver, which derives both the skipped count and the incomplete
+  *     buckets from them;
+  *  3. the per-doc anti-join runs on the incomplete buckets alone;
+  *  4. the commit appends the output, reads back only this run's
+  *     partition, and appends the metrics rows derived from it, counting
+  *     them in the same pass (`Observe`).
   *
   * Resume = left-anti join of the input against the metrics table's
   * successfully completed doc_ids. Idempotence: Spark's output committer
@@ -41,16 +57,24 @@ object Lineage {
       partition_id: Int,
       wall_ms: Long)
 
+  /** The metrics-table columns the resume reads. */
+  private val CompletedSchema = StructType(Seq(
+    StructField("doc_id", StringType), StructField("status", StringType)))
+
+  /** Data columns of the output table; run_id lives in the partition path. */
+  private val OutSchema = Encoders.product[LineageDoc].schema
+
+  /** Resume buckets of a production run. */
+  private val ResumeBuckets = 4096
+
   /** doc_ids already successfully extracted in any previous run. */
   def completedDocIds(spark: SparkSession, metricsPath: String,
-      catalog: TableCatalog = ParquetCatalog): DataFrame = {
+      catalog: TableCatalog = ParquetCatalog): DataFrame =
     if (catalog.exists(spark, metricsPath))
-      catalog.read(spark, metricsPath)
+      catalog.read(spark, metricsPath, CompletedSchema)
         .filter(col("status") === "ok")
         .select(col("doc_id")).distinct()
-    else
-      spark.range(0).select(lit("").as("doc_id")).filter(lit(false))
-  }
+    else spark.range(0).select(lit("").as("doc_id")).filter(lit(false))
 
   /** Input minus completed docs — the resume anti-join (broadcast-able
     * when the completed set is small; Catalyst/AQE picks the strategy).
@@ -69,68 +93,98 @@ object Lineage {
   private def resumeBucket(buckets: Int) =
     pmod(xxhash64(col("doc_id"), lit(16)), lit(buckets))
 
-  /** Buckets NOT fully completed, decided by per-bucket SET fingerprints
-    * (count plus two independent mod-p hash sums of the doc_ids — mod-p
-    * keeps the running sums overflow-free at 10^8 docs/bucket under
-    * ANSI arithmetic), each side one column-pruned scan + map-side-
-    * combined agg into <= `buckets` rows. A bucket is wholly done only
-    * when the completed-id set equals the input-id set exactly, so the
-    * pruning stays CORRECT when the metrics table holds doc_ids not in
-    * the current input (a replaced/renamed doc sharing a bucket with a
-    * completed one): any asymmetry fails the fingerprint and the bucket
-    * falls through to the per-doc anti-join, which handles extras
-    * natively. False "equal" needs a simultaneous collision of both
-    * independent sums (~p^-2 ~ 2.5e-19 per bucket).
+  /** What the resume pass leaves on the driver: the completed-doc count
+    * and the input buckets not wholly completed.
+    */
+  private final case class ResumeState(skipped: Long, incomplete: Seq[Long])
+
+  /** The resume pass. Per-bucket SET fingerprints (count plus two
+    * independent mod-p hash sums of the doc_ids — mod-p keeps the
+    * running sums overflow-free at 10^8 docs/bucket under ANSI
+    * arithmetic) of the input and of the completed set, computed by ONE
+    * aggregation over the tagged union of both column-pruned scans and
+    * collected to the driver (<= `buckets` rows, two fingerprints each).
+    * A bucket is wholly done only when the completed-id set equals the
+    * input-id set exactly, so the pruning stays CORRECT when the metrics
+    * table holds doc_ids not in the current input (a replaced/renamed
+    * doc sharing a bucket with a completed one): any asymmetry fails the
+    * fingerprint and the bucket falls through to the per-doc anti-join,
+    * which handles extras natively. False "equal" needs a simultaneous
+    * collision of both independent sums (~p^-2 ~ 2.5e-19 per bucket).
+    * The skipped count is the completed side's total, so it needs no
+    * pass of its own.
+    */
+  private def resumeState(spark: SparkSession, input: Dataset[Doc],
+      metricsPath: String, buckets: Int, catalog: TableCatalog): ResumeState = {
+    val P = 2000000011L
+    def side(df: DataFrame, isInput: Boolean): DataFrame =
+      df.select(resumeBucket(buckets).as("bucket"), lit(isInput).as("is_in"),
+        pmod(xxhash64(col("doc_id"), lit(71)), lit(P)).as("h1"),
+        pmod(xxhash64(col("doc_id"), lit(1213)), lit(P)).as("h2"))
+    def fp(isInput: Boolean, suffix: String): Seq[Column] = {
+      val mine = col("is_in") === isInput
+      Seq(count(when(mine, 1)).as(s"n_$suffix"),
+        sum(when(mine, col("h1"))).as(s"s1_$suffix"),
+        sum(when(mine, col("h2"))).as(s"s2_$suffix"))
+    }
+    val aggs = fp(isInput = true, "in") ++ fp(isInput = false, "done")
+    val rows = side(input.toDF(), isInput = true)
+      .unionByName(side(completedDocIds(spark, metricsPath, catalog), isInput = false))
+      .groupBy("bucket").agg(aggs.head, aggs.tail: _*)
+      .select(col("bucket"), col("n_in"), col("n_done"),
+        (col("n_done") === col("n_in") && col("s1_done") <=> col("s1_in") &&
+          col("s2_done") <=> col("s2_in")).as("done"))
+      .collect()
+    ResumeState(
+      skipped = rows.map(_.getLong(2)).sum,
+      incomplete = rows.collect { case r if r.getLong(1) > 0 && !r.getBoolean(3) => r.getLong(0) }
+        .toSeq.sorted)
+  }
+
+  /** Input buckets NOT fully completed, as a `bucket` column — the
+    * resume pass's driver-side result (see [[filterPendingBucketed]]).
     */
   def incompleteBuckets(spark: SparkSession, input: Dataset[Doc],
       metricsPath: String, buckets: Int,
-      catalog: TableCatalog = ParquetCatalog): DataFrame = {
-    val b = resumeBucket(buckets)
-    val P = 2000000011L
-    def fp(df: DataFrame, suffix: String): DataFrame =
-      df.select(b.as("bucket"),
-          pmod(xxhash64(col("doc_id"), lit(71)), lit(P)).as("h1"),
-          pmod(xxhash64(col("doc_id"), lit(1213)), lit(P)).as("h2"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as(s"n_$suffix"),
-          sum(col("h1")).as(s"s1_$suffix"),
-          sum(col("h2")).as(s"s2_$suffix"))
-    val inFp = fp(input.toDF(), "in")
-    val doneFp = fp(completedDocIds(spark, metricsPath, catalog), "done")
-    inFp.join(doneFp, Seq("bucket"), "left")
-      .filter(!(col("n_done") <=> col("n_in") &&
-        col("s1_done") <=> col("s1_in") && col("s2_done") <=> col("s2_in")))
-      .select(col("bucket"))
+      catalog: TableCatalog = ParquetCatalog): DataFrame =
+    spark.createDataset(resumeState(spark, input, metricsPath, buckets, catalog).incomplete)(
+      Encoders.scalaLong).toDF("bucket")
+
+  /** (skipped, pending) of one run: one resume pass, then the per-doc
+    * anti-join over the incomplete buckets alone.
+    */
+  private def resume(spark: SparkSession, input: Dataset[Doc], metricsPath: String,
+      buckets: Int, catalog: TableCatalog): (Long, Dataset[Doc]) = {
+    implicit val enc = Encoders.product[Doc]
+    if (!catalog.exists(spark, metricsPath)) return (0L, input)
+    val state = resumeState(spark, input, metricsPath, buckets, catalog)
+    val pending =
+      if (state.incomplete.isEmpty) input.filter(lit(false))
+      else {
+        val inS = resumeBucket(buckets).isin(state.incomplete: _*)
+        val done = completedDocIds(spark, metricsPath, catalog).filter(inS)
+        input.filter(inS).join(done, Seq("doc_id"), "left_anti").as[Doc]
+      }
+    (state.skipped, pending)
   }
 
   /** Partition-granular resume fast path. The plain anti-join keys the
     * FULL input against the FULL completed-id set — at 10^12 docs the
     * completed side is itself a 10^12-row shuffle on every resume. Here
-    * whole completed buckets are skipped first with two bounded
-    * aggregations, and only docs in partially-complete buckets (the
-    * crash frontier — a few buckets out of thousands on a steady
-    * resume) reach the per-doc anti-join; both pruning joins broadcast
-    * the <= `buckets`-row incomplete set. Worst case (fresh run, all
-    * buckets incomplete) degrades to the plain path plus two cheap
-    * count scans. Output is identical to filterPending.
+    * the resume pass (one completed-set read, one bounded aggregation,
+    * fingerprints collected on the driver: <= 2 x `buckets` values)
+    * runs eagerly and finds the incomplete buckets S; the returned plan
+    * is `input[bucket in S]` left-anti `completed[bucket in S]`, so only
+    * docs in partially-complete buckets (the crash frontier — a few
+    * buckets out of thousands on a steady resume) reach the per-doc
+    * anti-join, and an empty S is the empty input with no scan at all.
+    * Worst case (every bucket incomplete) degrades to the plain path
+    * plus one aggregation. Output is identical to filterPending.
     */
   def filterPendingBucketed(spark: SparkSession, input: Dataset[Doc],
-      metricsPath: String, buckets: Int = 4096,
-      catalog: TableCatalog = ParquetCatalog): Dataset[Doc] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
-    if (!catalog.exists(spark, metricsPath)) return input
-    val b = resumeBucket(buckets)
-    val incomplete = broadcast(
-      incompleteBuckets(spark, input, metricsPath, buckets, catalog))
-    val candidates = input.toDF().withColumn("bucket", b)
-      .join(incomplete, Seq("bucket"), "left_semi")
-    val pendingDone = completedDocIds(spark, metricsPath, catalog)
-      .withColumn("bucket", b)
-      .join(incomplete, Seq("bucket"), "left_semi")
-      .select(col("doc_id"))
-    candidates.join(pendingDone, Seq("doc_id"), "left_anti")
-      .drop("bucket").as[Doc]
-  }
+      metricsPath: String, buckets: Int = ResumeBuckets,
+      catalog: TableCatalog = ParquetCatalog): Dataset[Doc] =
+    resume(spark, input, metricsPath, buckets, catalog)._2
 
   /** Extract with lineage columns captured inside the task (partition id
     * and per-doc wall time measured where the work happens).
@@ -161,6 +215,13 @@ object Lineage {
 
   /** One resumable run. Returns (#processed this run, #skipped as done).
     *
+    * Passes: a filesystem check that `runId` has no output partition
+    * yet; the resume pass of [[filterPendingBucketed]] (which also yields
+    * the skipped count); extraction and the output append; a read-back of
+    * this run's output partition only, with the known output schema; and
+    * the metrics append, whose row count is observed in the same pass to
+    * give the processed count.
+    *
     * Crash-window contract: the output append commits before the metrics
     * append, so a crash between the two leaves output rows with no
     * metrics row ("orphans"). Each attempt MUST use a fresh runId
@@ -179,13 +240,11 @@ object Lineage {
       strategy: Extract.Strategy = Extract.Strategy.RegionClustering,
       numPartitions: Int = 0,
       catalog: TableCatalog = ParquetCatalog): (Long, Long) = {
-    if (catalog.exists(spark, outPath) &&
-        !catalog.read(spark, outPath).filter(col("run_id") === runId).isEmpty)
+    if (catalog.hasPartition(spark, outPath, "run_id", runId))
       throw new IllegalStateException(
         s"run_id=$runId already exists under $outPath; every attempt needs " +
           "a fresh run_id (a same-id rerun would append duplicate rows)")
-    val skipped = completedDocIds(spark, metricsPath, catalog).count()
-    val pending = filterPendingBucketed(spark, input, metricsPath, catalog = catalog)
+    val (skipped, pending) = resume(spark, input, metricsPath, ResumeBuckets, catalog)
     val extracted = extractWithLineage(spark, pending, strategy, numPartitions)
 
     catalog.appendPartitioned(
@@ -195,16 +254,15 @@ object Lineage {
     // sha256 over the canonical JSON of the ordered span sequence (the
     // reference checksums input bytes, file.go:22-24 — ours gates the
     // output invariant).
-    val runOut = catalog.read(spark, outPath).filter(col("run_id") === runId)
+    val runOut = catalog.readPartition(spark, outPath, "run_id", runId, OutSchema)
     val metrics = runOut.select(
       col("run_id"), col("partition_id"), col("doc_id"), col("status"),
       col("n_tables"), col("n_cells"),
       sha2(to_json(col("spans")), 256).as("checksum"),
       col("wall_ms"), current_timestamp().as("ts"))
-    catalog.append(metrics, metricsPath)
-
-    val processed = runOut.count()
-    (processed, skipped)
+    val observed = Observe.writeWithMetrics(metrics, "processed" -> count(lit(1)))(
+      catalog.append(_, metricsPath))
+    (observed("processed").asInstanceOf[Long], skipped)
   }
 
   /** The bucket-slice of the input a batched run processes as batch
@@ -226,8 +284,9 @@ object Lineage {
     * (filterPendingBucketed) before touching per-doc state. Each batch
     * commits under run_id `<runId>-b<b>`; a retry needs a fresh base
     * runId like any other attempt. Returns (processed this run,
-    * completed-doc count found in metrics at start), mirroring
-    * runResumable's contract.
+    * completed-doc count found in metrics at start — batch 0's skipped
+    * count, taken before batch 0 commits), mirroring runResumable's
+    * contract.
     */
   def runResumableBatched(
       spark: SparkSession,
@@ -240,14 +299,10 @@ object Lineage {
       numPartitions: Int = 0,
       catalog: TableCatalog = ParquetCatalog): (Long, Long) = {
     require(batches >= 1, s"batches must be positive: $batches")
-    val skipped = completedDocIds(spark, metricsPath, catalog).count()
-    var processed = 0L
-    for (b <- 0 until batches) {
-      val (p, _) = runResumable(spark, batchSlice(input, batches, b),
-        outPath, metricsPath, s"$runId-b$b", strategy, numPartitions, catalog)
-      processed += p
-    }
-    (processed, skipped)
+    val counts = (0 until batches).map(b =>
+      runResumable(spark, batchSlice(input, batches, b),
+        outPath, metricsPath, s"$runId-b$b", strategy, numPartitions, catalog))
+    (counts.map(_._1).sum, counts.head._2)
   }
 
   /** The full extracted output across all runs (resume-aware readers). */

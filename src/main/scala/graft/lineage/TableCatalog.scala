@@ -1,7 +1,9 @@
 package graft.lineage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -16,7 +18,27 @@ trait TableCatalog {
   def append(df: DataFrame, table: String): Unit
   def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit
   def read(spark: SparkSession, table: String): DataFrame
+
+  /** `read` with a schema the caller already knows: no inference pass,
+    * and table columns outside `schema` are not read.
+    */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame
+
+  /** Whether the table holds any data file; runs no Spark job. */
   def exists(spark: SparkSession, table: String): Boolean
+
+  /** Whether partition `partitionCol = value` holds any data file;
+    * runs no Spark job.
+    */
+  def hasPartition(spark: SparkSession, table: String, partitionCol: String,
+      value: String): Boolean
+
+  /** The rows of partition `partitionCol = value` alone, read with the
+    * known data `schema`, plus `partitionCol` as a string column. Empty
+    * when the partition holds no data.
+    */
+  def readPartition(spark: SparkSession, table: String, partitionCol: String,
+      value: String, schema: StructType): DataFrame
 
   /** Committed snapshot ids, ascending — one per successful append. */
   def snapshots(spark: SparkSession, table: String): Seq[Long]
@@ -49,8 +71,13 @@ object ParquetCatalog extends TableCatalog {
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The manifest dir and Spark's side files (`_SUCCESS`, `.crc`,
+    * `_temporary`) start with `_` or `.`; Spark's reader skips them.
+    */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
   /** Data files under the table root, as table-relative paths. Skips
-    * the manifest dir and Spark's hidden/underscore side files.
+    * every path with a hidden segment.
     */
   private def listDataFiles(spark: SparkSession, table: String): Set[String] = {
     val fs = fsFor(spark, new Path(table))
@@ -61,11 +88,26 @@ object ParquetCatalog extends TableCatalog {
     while (it.hasNext) {
       val status = it.next()
       val rel = root.toUri.relativize(status.getPath.toUri).toString
-      val hidden = rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith("."))
-      if (!hidden) out += rel
+      if (!rel.split('/').exists(hidden)) out += rel
     }
     out.toSet
   }
+
+  /** Whether `dir` holds a data file by listDataFiles' rule; stops at
+    * the first one and never descends into a hidden directory.
+    */
+  private def hasDataFile(spark: SparkSession, dir: Path): Boolean = {
+    val fs = fsFor(spark, dir)
+    def walk(d: Path): Boolean = fs.listStatus(d).exists(st =>
+      !hidden(st.getPath.getName) && (st.isFile || walk(st.getPath)))
+    fs.exists(dir) && walk(dir)
+  }
+
+  /** `<table>/<col>=<value>`, escaped the way Spark's partitioned
+    * writer names the directory.
+    */
+  private def partitionDir(table: String, partitionCol: String, value: String): Path =
+    new Path(table, ExternalCatalogUtils.getPartitionPathString(partitionCol, value))
 
   /** A rewrite manifest (compaction / expiry self-containment) starts
     * with this marker line and lists the table's FULL effective file
@@ -145,9 +187,29 @@ object ParquetCatalog extends TableCatalog {
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(table)
 
+  override def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(table)
+
   override def exists(spark: SparkSession, table: String): Boolean =
-    try { spark.read.parquet(table).schema; true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
+    hasDataFile(spark, new Path(table))
+
+  override def hasPartition(spark: SparkSession, table: String, partitionCol: String,
+      value: String): Boolean =
+    hasDataFile(spark, partitionDir(table, partitionCol, value))
+
+  /** Reads the one directory with `basePath` at the table root, so
+    * Spark fills in `partitionCol` from the path and every column has
+    * the nullable type a whole-table `read` would give it.
+    */
+  override def readPartition(spark: SparkSession, table: String, partitionCol: String,
+      value: String, schema: StructType): DataFrame = {
+    val dir = partitionDir(table, partitionCol, value)
+    val full = StructType(schema.fields.map(_.copy(nullable = true)) :+
+      StructField(partitionCol, StringType))
+    if (hasDataFile(spark, dir))
+      spark.read.schema(full).option("basePath", table).parquet(dir.toString)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), full)
+  }
 
   override def snapshots(spark: SparkSession, table: String): Seq[Long] = {
     val fs = fsFor(spark, new Path(table))
@@ -337,7 +399,9 @@ object ParquetCatalog extends TableCatalog {
   * `df.writeTo(table).append()`, reads `spark.table(table)`, snapshots
   * the `<table>.snapshots` metadata table, and `readAsOf` becomes
   * `spark.read.option("snapshot-id", id).table(table)`. The run_id
-  * partition column maps to a hidden partition transform. Kept as the
-  * documented swap point.
+  * partition column maps to a hidden partition transform;
+  * `hasPartition` becomes a lookup in the `<table>.partitions` metadata
+  * table and `readPartition` a filtered `spark.table(table)`. Kept as
+  * the documented swap point.
   */
 // final class IcebergCatalog extends TableCatalog { ... }

@@ -461,4 +461,82 @@ class LineageSpec extends AnyFunSuite {
       lineage.MergeUpsert.merge(target, source, "id")
     }
   }
+
+  test("job-count gate: a fresh run and a resume stay within their Spark job budgets") {
+    import spark.implicits._
+    import org.apache.spark.jobcount.JobCount
+    // At the benchmark's shape (10k SpanGen docs, local[4]) graft.Run
+    // started 8 jobs fresh and 27 on resume before the single-pass
+    // resume (schema inference on every read, three metrics-table reads,
+    // a re-count of the committed output), and 4 and 9 after it; one of
+    // each is Run's own input read, outside runResumable.
+    val fixtures = SpanGen.genDocs(60, seed = 71L)
+    val base = tmp()
+    spark.createDataset(fixtures.take(30).map(_._1)).write.parquet(s"$base/half")
+    spark.createDataset(fixtures.map(_._1)).write.parquet(s"$base/full")
+    val half = spark.read.parquet(s"$base/half").as[Doc]
+    val full = spark.read.parquet(s"$base/full").as[Doc]
+    val out = s"$base/out"
+    val metrics = s"$base/metrics"
+
+    val ((p1, s1), fresh) =
+      JobCount(spark)(Lineage.runResumable(spark, half, out, metrics, "run-1"))
+    assert(p1 == 30 && s1 == 0)
+    assert(fresh <= 4, s"fresh run started $fresh Spark jobs")
+
+    val ((p2, s2), resumed) =
+      JobCount(spark)(Lineage.runResumable(spark, full, out, metrics, "run-2"))
+    assert(p2 == 30 && s2 == 30)
+    assert(resumed <= 12, s"resume started $resumed Spark jobs")
+  }
+
+  test("a no-op resume commits one empty snapshot on each table") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    val ds = spark.createDataset(SpanGen.genDocs(12, 13L).map(_._1))
+    val out = tmp() + "/out"
+    val metrics = tmp() + "/metrics"
+    Lineage.runResumable(spark, ds, out, metrics, "run-1")
+    val (p, s) = Lineage.runResumable(spark, ds, out, metrics, "run-2")
+    assert(p == 0 && s == 12)
+    assert(ParquetCatalog.snapshots(spark, out) == Seq(1L, 2L))
+    assert(ParquetCatalog.snapshots(spark, metrics) == Seq(1L, 2L))
+    assert(Lineage.readOutput(spark, out).count() == 12)
+    val m = spark.read.parquet(metrics)
+    assert(m.count() == 12)
+    assert(m.schema.simpleString == "struct<run_id:string,partition_id:int,doc_id:string," +
+      "status:string,n_tables:int,n_cells:int,checksum:string,wall_ms:bigint,ts:timestamp>")
+  }
+
+  test("reusing a run_id that needs path escaping still fails fast") {
+    import spark.implicits._
+    val ds = spark.createDataset(SpanGen.genDocs(4, 17L).map(_._1))
+    val out = tmp() + "/out"
+    val metrics = tmp() + "/metrics"
+    val runId = "a b=c"
+    val (p, _) = Lineage.runResumable(spark, ds, out, metrics, runId)
+    assert(p == 4)
+    val e = intercept[IllegalStateException] {
+      Lineage.runResumable(spark, ds, out, metrics, runId)
+    }
+    assert(e.getMessage.contains(runId))
+    assert(Lineage.readCommitted(spark, out, metrics)
+      .select("run_id").as[String].collect().toSet == Set(runId))
+  }
+
+  test("ParquetCatalog.exists: only a visible data file makes a table exist") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import java.nio.file.Paths
+    val base = tmp()
+    assert(!ParquetCatalog.exists(spark, base + "/missing"))
+    val table = Paths.get(base, "t")
+    Files.createDirectories(table.resolve("_graft_snapshots"))
+    Files.createFile(table.resolve("_SUCCESS"))
+    Files.createFile(table.resolve("_graft_snapshots").resolve("snap-000000001"))
+    assert(!ParquetCatalog.exists(spark, table.toString))
+    ParquetCatalog.append(Seq.empty[(Long, String)].toDF("id", "v"), table.toString)
+    assert(ParquetCatalog.exists(spark, table.toString))
+    assert(ParquetCatalog.read(spark, table.toString).count() == 0)
+  }
 }
