@@ -3,7 +3,11 @@ package graft
 import graft.extract.Extract
 import graft.lineage.Lineage
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 
 /** The spark-submit-able job entry point — the batch counterpart of the
   * reference's user-facing mains (cmd/cli/main.go:22-138 reads one file,
@@ -20,15 +24,55 @@ import org.apache.spark.sql.SparkSession
   * - runId: unique per attempt (default: wall-clock stamp). Reusing an
   *   id fails fast.
   * - strategy: e1 | e2 | e2mid (default e1, the reference's live path).
-  * - numPartitions: 0 = auto (4x parallelism).
+  * - numPartitions: 0 (default) extracts where the rows are and spreads
+  *   only an input with fewer splits than the session's parallelism;
+  *   N > 0 does a salted hash repartition into N first, for inputs laid
+  *   out by document size.
   * - batches: 1 = one job (default); N > 1 = Lineage.runResumableBatched
   *   sequential bucket-batches, so a crash loses at most one batch —
   *   the right setting for any long-running corpus-scale run.
+  *
+  * The input is read with the `Doc` schema, so no job infers it. One
+  * data file's footer is checked on the driver first: an input without
+  * `doc_id` string and `spans` of that shape fails before any table is
+  * touched, instead of committing every doc as an error row.
   *
   * Prints one JSON line with the run summary; exit code 0 only if the
   * run committed (output + metrics appends both done).
   */
 object Run {
+
+  private val DocSchema = Encoders.product[Doc].schema
+
+  /** The input as `Dataset[Doc]`, after checking the footer of its first
+    * visible data file (a filesystem listing and one footer read, no
+    * Spark job) for `DocSchema`'s columns; other columns are ignored.
+    */
+  def readInput(spark: SparkSession, inputPath: String): Dataset[Doc] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(inputPath)
+    val fs = root.getFileSystem(conf)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def firstFile(d: Path): Option[Path] = fs.listStatus(d).iterator
+      .filter(st => visible(st.getPath))
+      .flatMap(st => if (st.isFile) Some(st.getPath) else firstFile(st.getPath))
+      .nextOption()
+    val file = (if (fs.exists(root)) firstFile(root) else None).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $inputPath"))
+    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val found =
+      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(footer.getFooter.getFileMetaData.getSchema)
+      finally footer.close()
+    for (want <- DocSchema) {
+      val got = found.find(_.name == want.name).map(_.dataType.catalogString)
+      if (!got.contains(want.dataType.catalogString))
+        throw new IllegalArgumentException(
+          s"input $inputPath: column ${want.name} must be ${want.dataType.catalogString}, " +
+            s"found ${got.getOrElse("no such column")} in $file")
+    }
+    spark.read.schema(DocSchema).parquet(inputPath).as[Doc](Encoders.product[Doc])
+  }
 
   def parseStrategy(s: String): Extract.Strategy = s.toLowerCase match {
     case "e1" | "regions" => Extract.Strategy.RegionClustering
@@ -48,8 +92,7 @@ object Run {
     val numPartitions = if (args.length > 5) args(5).toInt else 0
     val batches = if (args.length > 6) args(6).toInt else 1
 
-    implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
-    val input = spark.read.parquet(inputPath).as[Doc]
+    val input = readInput(spark, inputPath)
     val (processed, skipped) =
       if (batches > 1)
         Lineage.runResumableBatched(spark, input, outPath, metricsPath, runId,

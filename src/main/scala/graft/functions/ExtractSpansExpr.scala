@@ -30,14 +30,26 @@ import scala.collection.mutable.ArrayBuffer
   * (`acc = trim(acc + " " + w, ' ')`, box/box.go:241) verbatim, with a
   * zero-copy concatWs fast path for clean words; E2 joins raw and trims
   * once with String.trim semantics (strings.TrimSpace, textract.go:261).
+  *
+  * `timed = true` is the production job's form (`Lineage`): each row's
+  * struct gains `wall_ms`, the row's extraction time measured inside
+  * eval, so the expression is non-deterministic; and a null `spans`
+  * becomes an error row (no spans, no tables,
+  * `status = "error:NullPointerException"`) instead of a null struct, so
+  * the doc is committed like any other bad doc. The untimed form is the
+  * registered, deterministic `extract_spans` (null in, null out).
   */
 case class ExtractSpansExpr(child: Expression, useSplitHeuristic: Boolean,
-    useMidpoint: Boolean = false)
+    useMidpoint: Boolean = false, timed: Boolean = false)
     extends UnaryExpression {
 
   import ExtractSpansExpr._
 
   override def prettyName: String = "extract_spans"
+
+  override lazy val deterministic: Boolean = !timed && child.deterministic
+
+  override def nullable: Boolean = !timed && child.nullable
 
   /** Real codegen (not CodegenFallback): emit a static call so the
     * surrounding Project stays inside whole-stage codegen — a
@@ -48,8 +60,19 @@ case class ExtractSpansExpr(child: Expression, useSplitHeuristic: Boolean,
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ExtractSpansExpr.evalStatic($c, $useSplitHeuristic, $useMidpoint);")
+    if (timed) {
+      import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral}
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} =
+          graft.functions.ExtractSpansExpr.evalTimed(
+            ${c.isNull} ? null : ${c.value}, $useSplitHeuristic, $useMidpoint);""",
+        isNull = FalseLiteral)
+    } else
+      nullSafeCodeGen(ctx, ev, c =>
+        s"${ev.value} = graft.functions.ExtractSpansExpr.evalStatic($c, $useSplitHeuristic, $useMidpoint);")
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     child.dataType match {
@@ -65,7 +88,11 @@ case class ExtractSpansExpr(child: Expression, useSplitHeuristic: Boolean,
     }
   }
 
-  override def dataType: DataType = OutputType
+  override def dataType: DataType = if (timed) TimedOutputType else OutputType
+
+  override def eval(input: InternalRow): Any =
+    if (timed) evalTimed(child.eval(input).asInstanceOf[ArrayData], useSplitHeuristic, useMidpoint)
+    else super.eval(input)
 
   override def nullSafeEval(input: Any): Any =
     ExtractSpansExpr.evalStatic(input.asInstanceOf[ArrayData], useSplitHeuristic, useMidpoint)
@@ -156,6 +183,21 @@ object ExtractSpansExpr {
         InternalRow(new GenericArrayData(out), 0, 0,
           UTF8String.fromString(s"error:${e.getClass.getSimpleName}"))
     }
+
+  /** The timed form's entry point: [[evalStatic]] plus the row's wall
+    * time in whole milliseconds; a null array is an error row.
+    */
+  def evalTimed(arr: ArrayData, useSplitHeuristic: Boolean, useMidpoint: Boolean): InternalRow = {
+    val t0 = System.nanoTime()
+    val r =
+      if (arr == null) NullSpansRow
+      else evalStatic(arr, useSplitHeuristic, useMidpoint)
+    InternalRow(r.getArray(0), r.getInt(1), r.getInt(2), r.getUTF8String(3),
+      (System.nanoTime() - t0) / 1000000L)
+  }
+
+  private val NullSpansRow: InternalRow = InternalRow(new GenericArrayData(Array.empty[Any]), 0, 0,
+    UTF8String.fromString(s"error:${classOf[NullPointerException].getSimpleName}"))
 
   private def evalSpans(arr: ArrayData, useSplitHeuristic: Boolean, useMidpoint: Boolean): InternalRow = {
     val sp = new Spans(arr)
@@ -255,6 +297,9 @@ object ExtractSpansExpr {
     StructField("n_tables", IntegerType, nullable = false),
     StructField("n_cells", IntegerType, nullable = false),
     StructField("status", StringType, nullable = false)))
+
+  val TimedOutputType: StructType =
+    OutputType.add(StructField("wall_ms", LongType, nullable = false))
 
   private val U8WordBox = UTF8String.fromString(SpanKinds.WordBox)
   private val U8Cell = UTF8String.fromString(SpanKinds.Cell)

@@ -1,10 +1,12 @@
 package graft.lineage
 
-import graft.{Doc, ExtractedDoc}
+import graft.{Doc, Parallelize}
 import graft.extract.Extract
+import graft.functions.ExtractSpansExpr
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, RepartitionOperation}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -35,7 +37,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     driver, which derives both the skipped count and the incomplete
   *     buckets from them;
   *  3. the per-doc anti-join runs on the incomplete buckets alone;
-  *  4. the commit appends the output, reads back only this run's
+  *  4. extraction is one codegen'd Project over the pending rows, the
+  *     timed form of `extract_spans`, run on the partitions the rows
+  *     already have: a fresh run's scan splits or the anti-join's output.
+  *     Only an under-split fresh input, or an explicit `numPartitions`,
+  *     pays a placement shuffle (see [[extractWithLineage]]);
+  *  5. the commit appends the output, reads back only this run's
   *     partition, and appends the metrics rows derived from it, counting
   *     them in the same pass (`Observe`).
   *
@@ -186,31 +193,59 @@ object Lineage {
       catalog: TableCatalog = ParquetCatalog): Dataset[Doc] =
     resume(spark, input, metricsPath, buckets, catalog)._2
 
-  /** Extract with lineage columns captured inside the task (partition id
-    * and per-doc wall time measured where the work happens).
+  /** Extraction with its lineage columns, as one codegen'd Project over
+    * `docs`: the timed form of `extract_spans` (each row's `wall_ms` is
+    * measured inside the expression's eval) and `partition_id` =
+    * `spark_partition_id()`. No object is deserialized and the values
+    * equal `Extract.extractDoc`'s; a doc whose `spans` is null becomes an
+    * error row (`status = "error:NullPointerException"`, no spans).
+    *
+    * Placement. The extraction is record-local, so with
+    * `numPartitions == 0` it runs where the rows already are:
+    *  - a plan that already moves rows between partitions (a join, an
+    *    aggregation or a repartition; a resume's anti-join) is extracted
+    *    on its own partitions. Its partition count is never asked for,
+    *    because under AQE that would run the plan's stages twice;
+    *  - any other plan (a fresh run's scan) is spread by
+    *    `Parallelize.bySplits`, which is a no-op once the scan has at
+    *    least the session's parallelism in splits, so only an
+    *    under-split input pays a shuffle.
+    * `numPartitions > 0` salts a hash repartition into that many
+    * partitions first, for inputs laid out by document size.
     */
   def extractWithLineage(
       spark: SparkSession,
       docs: Dataset[Doc],
       strategy: Extract.Strategy,
       numPartitions: Int): Dataset[LineageDoc] = {
-    implicit val docEnc = org.apache.spark.sql.Encoders.product[Doc]
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[LineageDoc]
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else math.max(1, spark.sparkContext.defaultParallelism * 4)
-    docs
-      .repartition(parts, pmod(xxhash64(col("doc_id"), lit(16)), lit(parts)))
-      .as[Doc]
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        it.map { doc =>
-          val t0 = System.nanoTime()
-          val e: ExtractedDoc = Extract.extractDoc(doc, strategy)
-          val wallMs = (System.nanoTime() - t0) / 1000000L
-          LineageDoc(e.doc_id, e.spans, e.n_tables, e.n_cells, e.status, pid, wallMs)
-        }
-      }
+    val placed =
+      if (numPartitions > 0)
+        docs.toDF().repartition(numPartitions,
+          pmod(xxhash64(col("doc_id"), lit(16)), lit(numPartitions)))
+      else if (movesRows(docs.queryExecution.optimizedPlan)) docs.toDF()
+      else Parallelize.bySplits(docs.toDF(), "doc_id")
+    val (split, mid) = strategy match {
+      case Extract.Strategy.RegionClustering => (false, false)
+      case Extract.Strategy.SplitHeuristic   => (true, false)
+      case Extract.Strategy.SplitMidpoint    => (true, true)
+    }
+    val ex = PlanBridge.column(
+      ExtractSpansExpr(PlanBridge.expression(col("spans")), split, mid, timed = true))
+    placed
+      .select(col("doc_id"), ex.as("ex"), spark_partition_id().as("partition_id"))
+      .select(col("doc_id"), col("ex.spans").as("spans"), col("ex.n_tables").as("n_tables"),
+        col("ex.n_cells").as("n_cells"), col("ex.status").as("status"),
+        col("partition_id"), col("ex.wall_ms").as("wall_ms"))
+      .as[LineageDoc](Encoders.product[LineageDoc])
+  }
+
+  /** Whether `plan` has an operator that places rows by an exchange (a
+    * `coalesce` only merges partitions, so it does not count).
+    */
+  private def movesRows(plan: LogicalPlan): Boolean = plan.exists {
+    case _: Join | _: Aggregate => true
+    case r: RepartitionOperation => r.shuffle
+    case _ => false
   }
 
   /** One resumable run. Returns (#processed this run, #skipped as done).

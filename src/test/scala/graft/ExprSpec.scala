@@ -216,6 +216,36 @@ class ExprSpec extends AnyFunSuite {
     assert(typed("with-null-span")._1.length == 3)
   }
 
+  test("timed form: extract_spans plus wall_ms, null spans an error row, codegen == interpreted") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.PlanBridge
+    val docs = SpanGen.genDocs(40, seed = 93L).map(_._1) :+ Doc("null-spans", null)
+    val df = spark.createDataset(docs).toDF()
+    val timed = PlanBridge.column(graft.functions.ExtractSpansExpr(
+      PlanBridge.expression(col("spans")), useSplitHeuristic = false, timed = true))
+    def run(): Map[String, ((Seq[Span], Int, Int, String), Long)] =
+      df.select(col("doc_id"), timed.as("ex"))
+        .select(col("doc_id"), col("ex.spans"), col("ex.n_tables"), col("ex.n_cells"),
+          col("ex.status"), col("ex.wall_ms"))
+        .as[(String, Seq[Span], Int, Int, String, Long)].collect()
+        .map(r => r._1 -> (((r._2, r._3, r._4, r._5), r._6))).toMap
+    val untimed = collectPath(GraftFunctions.extractDF(spark, df.filter(col("spans").isNotNull)))
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val codegen = run()
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    val interp = try run() finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+    for (got <- Seq(codegen, interp)) {
+      assert(got.keySet == docs.map(_.doc_id).toSet)
+      assert(got.values.forall(_._2 >= 0L))
+      assert(got("null-spans")._1 == ((Seq.empty[Span], 0, 0, "error:NullPointerException")))
+      for (d <- docs if d.spans != null) assert(got(d.doc_id)._1 == untimed(d.doc_id), d.doc_id)
+    }
+    // the registered, untimed form keeps null in, null out
+    assert(GraftFunctions.extractDF(spark, df).filter(col("doc_id") === "null-spans")
+      .select("status").head().isNullAt(0))
+  }
+
   test("E1 cell-text fold: leading-space word keeps its space mid-cell (a, ' b' -> 'a  b')") {
     import spark.implicits._
     // two words in one cell: same row band, same x-region (chained)

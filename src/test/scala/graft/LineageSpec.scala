@@ -468,8 +468,11 @@ class LineageSpec extends AnyFunSuite {
     // At the benchmark's shape (10k SpanGen docs, local[4]) graft.Run
     // started 8 jobs fresh and 27 on resume before the single-pass
     // resume (schema inference on every read, three metrics-table reads,
-    // a re-count of the committed output), and 4 and 9 after it; one of
-    // each is Run's own input read, outside runResumable.
+    // a re-count of the committed output), and 4 and 9 after it, one of
+    // each being Run's own schema-inferring input read. Run now reads its
+    // input with the Doc schema, and extraction has no placement shuffle
+    // whose map stage AQE ran as a job of its own: 2 and 7, all of them
+    // in runResumable.
     val fixtures = SpanGen.genDocs(60, seed = 71L)
     val base = tmp()
     spark.createDataset(fixtures.take(30).map(_._1)).write.parquet(s"$base/half")
@@ -538,5 +541,121 @@ class LineageSpec extends AnyFunSuite {
     ParquetCatalog.append(Seq.empty[(Long, String)].toDF("id", "v"), table.toString)
     assert(ParquetCatalog.exists(spark, table.toString))
     assert(ParquetCatalog.read(spark, table.toString).count() == 0)
+  }
+
+  test("a doc whose spans is null is committed as an error row; the job goes on") {
+    import spark.implicits._
+    val fixtures = SpanGen.genDocs(20, seed = 91L)
+    val docs = fixtures.map(_._1).patch(7, Seq(Doc("null-spans", null)), 0)
+    val out = tmp() + "/out"
+    val metrics = tmp() + "/metrics"
+    val (p, s) = Lineage.runResumable(spark, spark.createDataset(docs), out, metrics, "run-1")
+    assert(p == 21 && s == 0)
+    val rows = Lineage.readCommitted(spark, out, metrics)
+      .select("doc_id", "spans", "n_tables", "n_cells", "status")
+      .as[(String, Seq[Span], Int, Int, String)].collect().map(r => r._1 -> r).toMap
+    assert(rows.size == 21)
+    assert(rows("null-spans") == (("null-spans", Seq.empty[Span], 0, 0,
+      "error:NullPointerException")))
+    for ((doc, golden) <- fixtures) {
+      assert(rows(doc.doc_id)._5 == "ok")
+      assert(rows(doc.doc_id)._2 == golden, doc.doc_id)
+    }
+    val m = spark.read.parquet(metrics)
+    assert(m.filter($"status" =!= "ok").select("doc_id", "status").as[(String, String)]
+      .collect().toSeq == Seq(("null-spans", "error:NullPointerException")))
+  }
+
+  test("fresh run over a well-split scan: one codegen'd Project, no exchange; stage gate") {
+    import spark.implicits._
+    import org.apache.spark.jobcount.JobCount
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec,
+      ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val fixtures = SpanGen.genDocs(60, seed = 83L)
+    val base = tmp()
+    spark.createDataset(fixtures.map(_._1)).repartition(4).write.parquet(s"$base/in")
+    val input = spark.read.parquet(s"$base/in").as[Doc]
+    assert(input.queryExecution.toRdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    val out = s"$base/out"
+
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { done.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val ((p, s), jobs, stages) =
+      try JobCount.withStages(spark)(
+        Lineage.runResumable(spark, input, out, s"$base/metrics", "run-1"))
+      finally spark.listenerManager.unregister(listener)
+    assert(p == 60 && s == 0)
+
+    object Plans extends AdaptiveSparkPlanHelper
+    val outPath = new org.apache.hadoop.fs.Path(out).toUri.getPath
+    val write: SparkPlan = done.toArray(Array.empty[QueryExecution]).iterator
+      .flatMap(qe => Plans.collect(qe.executedPlan) {
+        case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+            if c.outputPath.toUri.getPath == outPath => w.child
+      }).toSeq match {
+        case Seq(child) => child
+        case other => fail(s"expected one write to $out, found ${other.length}")
+      }
+    def any(pred: SparkPlan => Boolean): Boolean = Plans.find(write)(pred).isDefined
+    assert(!any(_.isInstanceOf[Exchange]), write.treeString)
+    assert(!any(_.isInstanceOf[DeserializeToObjectExec]), write.treeString)
+    assert(!any(_.isInstanceOf[MapPartitionsExec]), write.treeString)
+    val extractsInCodegen = Plans.collect(write) { case w: WholeStageCodegenExec => w }
+      .exists(_.find {
+        case pr: ProjectExec =>
+          pr.projectList.exists(_.find(_.isInstanceOf[graft.functions.ExtractSpansExpr]).isDefined)
+        case _ => false
+      }.isDefined)
+    assert(extractsInCodegen, write.treeString)
+
+    // with the typed map behind its own hash repartition this run took
+    // 3 jobs and 3 stages (AQE ran the placement shuffle's map stage as
+    // a job of its own); with the Project in place, 2 and 2: the output
+    // write and the metrics append
+    assert(jobs <= 2, s"fresh run started $jobs Spark jobs")
+    assert(stages <= 2, s"fresh run ran $stages Spark stages")
+  }
+
+  test("placement: an under-split input is spread, numPartitions is kept, wall_ms >= 0") {
+    import spark.implicits._
+    val fixtures = SpanGen.genDocs(60, seed = 87L)
+    val base = tmp()
+    spark.createDataset(fixtures.map(_._1)).repartition(4).write.parquet(s"$base/in")
+    val input = spark.read.parquet(s"$base/in").as[Doc]
+    def committed(out: String, metrics: String) =
+      Lineage.readCommitted(spark, out, metrics)
+        .select("doc_id", "spans", "partition_id", "wall_ms")
+        .as[(String, Seq[Span], Int, Long)].collect()
+    def checkGoldens(rows: Seq[(String, Seq[Span], Int, Long)]): Unit = {
+      assert(rows.length == 60)
+      val byId = rows.map(r => r._1 -> r._2).toMap
+      for ((doc, golden) <- fixtures) assert(byId(doc.doc_id) == golden, doc.doc_id)
+      assert(rows.forall(_._4 >= 0L))
+    }
+
+    // one split: spread over the session's cores, not run on one
+    val oneSplit = input.coalesce(1)
+    assert(oneSplit.queryExecution.toRdd.getNumPartitions == 1)
+    Lineage.runResumable(spark, oneSplit, s"$base/out1", s"$base/m1", "run-1")
+    val spread = committed(s"$base/out1", s"$base/m1")
+    checkGoldens(spread)
+    assert(spread.map(_._3).distinct.length >= 2)
+
+    // an explicit partition count still salts a repartition into it
+    Lineage.runResumable(spark, input, s"$base/out2", s"$base/m2", "run-1", numPartitions = 4)
+    val salted = committed(s"$base/out2", s"$base/m2")
+    checkGoldens(salted)
+    assert(salted.forall(r => r._3 >= 0 && r._3 < 4))
+    assert(spark.read.parquet(s"$base/m2").select("partition_id", "wall_ms").as[(Int, Long)]
+      .collect().forall { case (pid, ms) => pid >= 0 && pid < 4 && ms >= 0 })
   }
 }

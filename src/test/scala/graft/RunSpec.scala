@@ -5,7 +5,7 @@ import graft.lineage.Lineage
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The spark-submit entry point end-to-end: a partial attempt followed
   * by a full resume through `graft.Run.run`, verified against goldens.
@@ -70,5 +70,23 @@ class RunSpec extends AnyFunSuite {
     assert(Run.parseStrategy("e2mid") == graft.extract.Extract.Strategy.SplitMidpoint)
     intercept[IllegalArgumentException] { Run.parseStrategy("bogus") }
     intercept[IllegalArgumentException] { Run.run(spark, Array("onlyone")) }
+  }
+
+  test("an input without Doc-shaped spans fails before any table is touched") {
+    import spark.implicits._
+    val base = tmp()
+    val noSpans = s"$base/no_spans"
+    Seq(("d1", "x")).toDF("doc_id", "text").write.parquet(noSpans)
+    val flatSpans = s"$base/flat_spans"
+    Seq(("d1", Seq("x"))).toDF("doc_id", "spans").write.parquet(flatSpans)
+    val out = s"$base/out"
+    val metrics = s"$base/metrics"
+    for (in <- Seq(noSpans, flatSpans)) {
+      val e = intercept[IllegalArgumentException] {
+        Run.run(spark, Array(in, out, metrics, "r1"))
+      }
+      assert(e.getMessage.contains("spans"), e.getMessage)
+      assert(!Files.exists(Paths.get(out)) && !Files.exists(Paths.get(metrics)))
+    }
   }
 }
