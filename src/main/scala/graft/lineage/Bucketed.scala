@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
   * shuffle was paid once, at ingest, amortized over every later join.
   *
   * The managed-table catalog is the sandbox stand-in for the Iceberg
-  * warehouse (same seam as `TableCatalog`): `bucketBy(n, key)` +
+  * warehouse (as `ParquetCatalog` is): `bucketBy(n, key)` +
   * `sortBy(key)` + `saveAsTable`, parquet format, overwrite-idempotent.
   * `bucketedJoin` adds a merge-join hint so a small test-scale side is
   * not broadcast away — the point is the exchange-free SMJ shape that

@@ -75,10 +75,9 @@ object Lineage {
   private val ResumeBuckets = 4096
 
   /** doc_ids already successfully extracted in any previous run. */
-  def completedDocIds(spark: SparkSession, metricsPath: String,
-      catalog: TableCatalog = ParquetCatalog): DataFrame =
-    if (catalog.exists(spark, metricsPath))
-      catalog.read(spark, metricsPath, CompletedSchema)
+  def completedDocIds(spark: SparkSession, metricsPath: String): DataFrame =
+    if (ParquetCatalog.exists(spark, metricsPath))
+      ParquetCatalog.read(spark, metricsPath, CompletedSchema)
         .filter(col("status") === "ok")
         .select(col("doc_id")).distinct()
     else spark.range(0).select(lit("").as("doc_id")).filter(lit(false))
@@ -86,10 +85,9 @@ object Lineage {
   /** Input minus completed docs — the resume anti-join (broadcast-able
     * when the completed set is small; Catalyst/AQE picks the strategy).
     */
-  def filterPending(spark: SparkSession, input: Dataset[Doc], metricsPath: String,
-      catalog: TableCatalog = ParquetCatalog): Dataset[Doc] = {
+  def filterPending(spark: SparkSession, input: Dataset[Doc], metricsPath: String): Dataset[Doc] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
-    val done = completedDocIds(spark, metricsPath, catalog)
+    val done = completedDocIds(spark, metricsPath)
     input.join(done, Seq("doc_id"), "left_anti").as[Doc]
   }
 
@@ -122,7 +120,7 @@ object Lineage {
     * pass of its own.
     */
   private def resumeState(spark: SparkSession, input: Dataset[Doc],
-      metricsPath: String, buckets: Int, catalog: TableCatalog): ResumeState = {
+      metricsPath: String, buckets: Int): ResumeState = {
     val P = 2000000011L
     def side(df: DataFrame, isInput: Boolean): DataFrame =
       df.select(resumeBucket(buckets).as("bucket"), lit(isInput).as("is_in"),
@@ -136,7 +134,7 @@ object Lineage {
     }
     val aggs = fp(isInput = true, "in") ++ fp(isInput = false, "done")
     val rows = side(input.toDF(), isInput = true)
-      .unionByName(side(completedDocIds(spark, metricsPath, catalog), isInput = false))
+      .unionByName(side(completedDocIds(spark, metricsPath), isInput = false))
       .groupBy("bucket").agg(aggs.head, aggs.tail: _*)
       .select(col("bucket"), col("n_in"), col("n_done"),
         (col("n_done") === col("n_in") && col("s1_done") <=> col("s1_in") &&
@@ -152,24 +150,23 @@ object Lineage {
     * resume pass's driver-side result (see [[filterPendingBucketed]]).
     */
   def incompleteBuckets(spark: SparkSession, input: Dataset[Doc],
-      metricsPath: String, buckets: Int,
-      catalog: TableCatalog = ParquetCatalog): DataFrame =
-    spark.createDataset(resumeState(spark, input, metricsPath, buckets, catalog).incomplete)(
+      metricsPath: String, buckets: Int): DataFrame =
+    spark.createDataset(resumeState(spark, input, metricsPath, buckets).incomplete)(
       Encoders.scalaLong).toDF("bucket")
 
   /** (skipped, pending) of one run: one resume pass, then the per-doc
     * anti-join over the incomplete buckets alone.
     */
   private def resume(spark: SparkSession, input: Dataset[Doc], metricsPath: String,
-      buckets: Int, catalog: TableCatalog): (Long, Dataset[Doc]) = {
+      buckets: Int): (Long, Dataset[Doc]) = {
     implicit val enc = Encoders.product[Doc]
-    if (!catalog.exists(spark, metricsPath)) return (0L, input)
-    val state = resumeState(spark, input, metricsPath, buckets, catalog)
+    if (!ParquetCatalog.exists(spark, metricsPath)) return (0L, input)
+    val state = resumeState(spark, input, metricsPath, buckets)
     val pending =
       if (state.incomplete.isEmpty) input.filter(lit(false))
       else {
         val inS = resumeBucket(buckets).isin(state.incomplete: _*)
-        val done = completedDocIds(spark, metricsPath, catalog).filter(inS)
+        val done = completedDocIds(spark, metricsPath).filter(inS)
         input.filter(inS).join(done, Seq("doc_id"), "left_anti").as[Doc]
       }
     (state.skipped, pending)
@@ -189,9 +186,8 @@ object Lineage {
     * plus one aggregation. Output is identical to filterPending.
     */
   def filterPendingBucketed(spark: SparkSession, input: Dataset[Doc],
-      metricsPath: String, buckets: Int = ResumeBuckets,
-      catalog: TableCatalog = ParquetCatalog): Dataset[Doc] =
-    resume(spark, input, metricsPath, buckets, catalog)._2
+      metricsPath: String, buckets: Int = ResumeBuckets): Dataset[Doc] =
+    resume(spark, input, metricsPath, buckets)._2
 
   /** Extraction with its lineage columns, as one codegen'd Project over
     * `docs`: the timed form of `extract_spans` (each row's `wall_ms` is
@@ -273,30 +269,29 @@ object Lineage {
       metricsPath: String,
       runId: String,
       strategy: Extract.Strategy = Extract.Strategy.RegionClustering,
-      numPartitions: Int = 0,
-      catalog: TableCatalog = ParquetCatalog): (Long, Long) = {
-    if (catalog.hasPartition(spark, outPath, "run_id", runId))
+      numPartitions: Int = 0): (Long, Long) = {
+    if (ParquetCatalog.hasPartition(spark, outPath, "run_id", runId))
       throw new IllegalStateException(
         s"run_id=$runId already exists under $outPath; every attempt needs " +
           "a fresh run_id (a same-id rerun would append duplicate rows)")
-    val (skipped, pending) = resume(spark, input, metricsPath, ResumeBuckets, catalog)
+    val (skipped, pending) = resume(spark, input, metricsPath, ResumeBuckets)
     val extracted = extractWithLineage(spark, pending, strategy, numPartitions)
 
-    catalog.appendPartitioned(
+    ParquetCatalog.appendPartitioned(
       extracted.withColumn("run_id", lit(runId)), outPath, "run_id")
 
     // Directory-pruned read-back of just this run's output; checksum is
     // sha256 over the canonical JSON of the ordered span sequence (the
     // reference checksums input bytes, file.go:22-24 — ours gates the
     // output invariant).
-    val runOut = catalog.readPartition(spark, outPath, "run_id", runId, OutSchema)
+    val runOut = ParquetCatalog.readPartition(spark, outPath, "run_id", runId, OutSchema)
     val metrics = runOut.select(
       col("run_id"), col("partition_id"), col("doc_id"), col("status"),
       col("n_tables"), col("n_cells"),
       sha2(to_json(col("spans")), 256).as("checksum"),
       col("wall_ms"), current_timestamp().as("ts"))
     val observed = Observe.writeWithMetrics(metrics, "processed" -> count(lit(1)))(
-      catalog.append(_, metricsPath))
+      ParquetCatalog.append(_, metricsPath))
     (observed("processed").asInstanceOf[Long], skipped)
   }
 
@@ -331,12 +326,11 @@ object Lineage {
       runId: String,
       strategy: Extract.Strategy = Extract.Strategy.RegionClustering,
       batches: Int = 8,
-      numPartitions: Int = 0,
-      catalog: TableCatalog = ParquetCatalog): (Long, Long) = {
+      numPartitions: Int = 0): (Long, Long) = {
     require(batches >= 1, s"batches must be positive: $batches")
     val counts = (0 until batches).map(b =>
       runResumable(spark, batchSlice(input, batches, b),
-        outPath, metricsPath, s"$runId-b$b", strategy, numPartitions, catalog))
+        outPath, metricsPath, s"$runId-b$b", strategy, numPartitions))
     (counts.map(_._1).sum, counts.head._2)
   }
 
@@ -349,10 +343,9 @@ object Lineage {
     * append and the metrics append — the reader-side half of the
     * idempotence contract (one row per doc even across crashed attempts).
     */
-  def readCommitted(spark: SparkSession, outPath: String, metricsPath: String,
-      catalog: TableCatalog = ParquetCatalog): DataFrame = {
-    val committed = catalog.read(spark, metricsPath)
+  def readCommitted(spark: SparkSession, outPath: String, metricsPath: String): DataFrame = {
+    val committed = ParquetCatalog.read(spark, metricsPath)
       .select(col("run_id"), col("doc_id")).distinct()
-    catalog.read(spark, outPath).join(committed, Seq("run_id", "doc_id"), "left_semi")
+    ParquetCatalog.read(spark, outPath).join(committed, Seq("run_id", "doc_id"), "left_semi")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * filters on — the metadata that lets a 100 TB query plan skip files
   * without opening them.
   *
-  * The sandbox has no Iceberg runtime jar (see `TableCatalog`), so
+  * No Iceberg runtime is on the classpath (see `ParquetCatalog`), so
   * "file" is a deterministic logical bucket — the portable 60-bit hash
   * of the row id mod `numFiles` — which makes the manifest itself an
   * oracled query instead of a side effect of a write. On a real table

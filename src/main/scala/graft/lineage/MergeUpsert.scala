@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * WHEN NOT MATCHED INSERT`) as a single full-outer join — the
   * copy-on-write rewrite a catalog executes under that statement,
   * expressed engine-side so corpus versioning works through the
-  * `TableCatalog` seam without an Iceberg runtime.
+  * `ParquetCatalog` without an Iceberg runtime.
   *
   * Scale posture: ONE co-partitioned shuffle per side on the merge key
   * (elided entirely when the target table is bucketed on it — the

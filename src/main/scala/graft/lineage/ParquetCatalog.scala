@@ -7,50 +7,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Storage seam for the output + metrics tables. The sandbox has no
-  * Iceberg runtime jar, so the default is Parquet with an Iceberg-shaped
-  * layout (append-only, partition column, directory pruning, snapshot
-  * manifests); on a real cluster `IcebergCatalog` is the only class that
-  * changes — the engine code is catalog-agnostic (SURVEY.md §7 hard
-  * part (d)).
-  */
-trait TableCatalog {
-  def append(df: DataFrame, table: String): Unit
-  def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit
-  def read(spark: SparkSession, table: String): DataFrame
-
-  /** `read` with a schema the caller already knows: no inference pass,
-    * and table columns outside `schema` are not read.
-    */
-  def read(spark: SparkSession, table: String, schema: StructType): DataFrame
-
-  /** Whether the table holds any data file; runs no Spark job. */
-  def exists(spark: SparkSession, table: String): Boolean
-
-  /** Whether partition `partitionCol = value` holds any data file;
-    * runs no Spark job.
-    */
-  def hasPartition(spark: SparkSession, table: String, partitionCol: String,
-      value: String): Boolean
-
-  /** The rows of partition `partitionCol = value` alone, read with the
-    * known data `schema`, plus `partitionCol` as a string column. Empty
-    * when the partition holds no data.
-    */
-  def readPartition(spark: SparkSession, table: String, partitionCol: String,
-      value: String, schema: StructType): DataFrame
-
-  /** Committed snapshot ids, ascending — one per successful append. */
-  def snapshots(spark: SparkSession, table: String): Seq[Long]
-
-  /** Table contents as of `snapshotId` (inclusive) — Iceberg's
-    * `VERSION AS OF` / `option("snapshot-id", ...)` time travel.
-    * Fails on an id that was never committed.
-    */
-  def readAsOf(spark: SparkSession, table: String, snapshotId: Long): DataFrame
-}
-
-/** Parquet-backed default: `table` is a filesystem path.
+/** Storage for the output and metrics tables: `table` is a filesystem
+  * path. No Iceberg runtime is on the classpath, so the tables are
+  * Parquet with an Iceberg-shaped layout (append-only, partition column,
+  * directory pruning, snapshot manifests); the engine reaches storage
+  * only through this object (SURVEY.md §7 hard part (d)).
   *
   * Snapshot emulation (the Iceberg seam made testable without the
   * runtime jar): every append commits a manifest under
@@ -62,10 +23,17 @@ trait TableCatalog {
   *
   * Single-writer by design: the engine's driver is the only committer
   * (Lineage.runResumable fails fast on run_id reuse). Real Iceberg
-  * replaces the before/after listing with optimistic metadata commits,
-  * which is exactly why this stays behind the seam.
+  * replaces the before/after listing with optimistic metadata commits.
+  *
+  * Iceberg mapping (not constructible here, no runtime jar): `table` is a
+  * catalog identifier; appends become `df.writeTo(table).append()`, reads
+  * `spark.table(table)`, snapshots the `<table>.snapshots` metadata table,
+  * and `readAsOf` becomes `spark.read.option("snapshot-id", id).table(table)`.
+  * The run_id partition column maps to a hidden partition transform;
+  * `hasPartition` becomes a lookup in the `<table>.partitions` metadata
+  * table and `readPartition` a filtered `spark.table(table)`.
   */
-object ParquetCatalog extends TableCatalog {
+object ParquetCatalog {
   private val SnapDir = "_graft_snapshots"
 
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
@@ -174,34 +142,44 @@ object ParquetCatalog extends TableCatalog {
     try os.write(body.getBytes(UTF_8)) finally os.close()
   }
 
-  override def append(df: DataFrame, table: String): Unit =
+  def append(df: DataFrame, table: String): Unit =
     commitSnapshot(df.sparkSession, table) {
       df.write.mode(SaveMode.Append).parquet(table)
     }
 
-  override def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit =
+  def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit =
     commitSnapshot(df.sparkSession, table) {
       df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(table)
     }
 
-  override def read(spark: SparkSession, table: String): DataFrame =
+  def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(table)
 
-  override def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+  /** `read` with a schema the caller already knows: no inference pass,
+    * and table columns outside `schema` are not read.
+    */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(table)
 
-  override def exists(spark: SparkSession, table: String): Boolean =
+  /** Whether the table holds any data file; runs no Spark job. */
+  def exists(spark: SparkSession, table: String): Boolean =
     hasDataFile(spark, new Path(table))
 
-  override def hasPartition(spark: SparkSession, table: String, partitionCol: String,
+  /** Whether partition `partitionCol = value` holds any data file;
+    * runs no Spark job.
+    */
+  def hasPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String): Boolean =
     hasDataFile(spark, partitionDir(table, partitionCol, value))
 
-  /** Reads the one directory with `basePath` at the table root, so
-    * Spark fills in `partitionCol` from the path and every column has
-    * the nullable type a whole-table `read` would give it.
+  /** The rows of partition `partitionCol = value` alone, read with the
+    * known data `schema`, plus `partitionCol` as a string column; empty
+    * when the partition holds no data. Reads the one directory with
+    * `basePath` at the table root, so Spark fills in `partitionCol` from
+    * the path and every column has the nullable type a whole-table
+    * `read` would give it.
     */
-  override def readPartition(spark: SparkSession, table: String, partitionCol: String,
+  def readPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String, schema: StructType): DataFrame = {
     val dir = partitionDir(table, partitionCol, value)
     val full = StructType(schema.fields.map(_.copy(nullable = true)) :+
@@ -211,7 +189,8 @@ object ParquetCatalog extends TableCatalog {
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), full)
   }
 
-  override def snapshots(spark: SparkSession, table: String): Seq[Long] = {
+  /** Committed snapshot ids, ascending — one per successful append. */
+  def snapshots(spark: SparkSession, table: String): Seq[Long] = {
     val fs = fsFor(spark, new Path(table))
     val dir = fs.makeQualified(new Path(table, SnapDir))
     if (!fs.exists(dir)) return Seq.empty
@@ -221,7 +200,11 @@ object ParquetCatalog extends TableCatalog {
       .sorted
   }
 
-  override def readAsOf(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
+  /** Table contents as of `snapshotId` (inclusive) — Iceberg's
+    * `VERSION AS OF` / `option("snapshot-id", ...)` time travel.
+    * Fails on an id that was never committed.
+    */
+  def readAsOf(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
     val ids = snapshots(spark, table)
     require(ids.contains(snapshotId),
       s"unknown snapshot $snapshotId for $table (committed: ${ids.mkString(", ")})")
@@ -393,15 +376,3 @@ object ParquetCatalog extends TableCatalog {
     ()
   }
 }
-
-/** Iceberg mapping (not constructible in this sandbox — no runtime jar):
-  * `table` is a catalog identifier; appends become
-  * `df.writeTo(table).append()`, reads `spark.table(table)`, snapshots
-  * the `<table>.snapshots` metadata table, and `readAsOf` becomes
-  * `spark.read.option("snapshot-id", id).table(table)`. The run_id
-  * partition column maps to a hidden partition transform;
-  * `hasPartition` becomes a lookup in the `<table>.partitions` metadata
-  * table and `readPartition` a filtered `spark.table(table)`. Kept as
-  * the documented swap point.
-  */
-// final class IcebergCatalog extends TableCatalog { ... }

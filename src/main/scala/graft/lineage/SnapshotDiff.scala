@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * modified between two table states — the audit step before promoting
   * a re-crawled / re-extracted corpus version to training, and the
   * input to incremental downstream work (only re-embed / re-dedup the
-  * 'added' + 'modified' set). Pairs with [[TableCatalog.readAsOf]]:
+  * 'added' + 'modified' set). Pairs with [[ParquetCatalog.readAsOf]]:
   * diff(readAsOf(t, s1), readAsOf(t, s2), ...) audits two snapshots of
   * one catalog table (DomainCapSpec exercises that integration).
   *

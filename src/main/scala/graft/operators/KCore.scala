@@ -43,12 +43,14 @@ object KCore {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      // dst-semi first, src-semi LAST: the final join's output is
-      // already clustered by src (shuffled semi-joins repartition on
-      // their key; a broadcast semi preserves the incoming src
-      // clustering), so the next round's degree groupBy needs no
-      // further exchange — the explicit repartition-back-to-src this
-      // ordering replaces was one full edge-frame shuffle per round
+      // dst-semi first, src-semi LAST: when the final src semi-join
+      // shuffles, it repartitions on src, so its output is clustered by
+      // src and the next round's degree groupBy needs no further
+      // exchange — the explicit repartition-back-to-src this ordering
+      // replaces was one full edge-frame shuffle per round. The saving
+      // holds only then: when the src semi-join broadcasts, its output
+      // keeps the clustering of its input, the dst-semi's (by dst, if
+      // that one shuffled), and the groupBy pays its own exchange
       val (next, nextIds) = graft.dedup.Dedup.checkpointOwned(
         e.join(surviving.withColumnRenamed("node", "dst"), Seq("dst"), "leftsemi")
           .join(surviving.withColumnRenamed("node", "src"), Seq("src"), "leftsemi")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * small square of the key space instead of a full-width stripe). This
   * is the layout step behind Delta `OPTIMIZE ZORDER BY` and Iceberg's
   * sort-order z-order transform — reproduced here engine-side so the
-  * parquet writer (or the `TableCatalog` seam) can consume it.
+  * parquet writer (or `ParquetCatalog`) can consume it.
   *
   * The bit-spread uses the classic magic-number doubling shifts —
   * five shift/mask Column ops per dimension, all inside whole-stage

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal bridge to the `private[sql]` Dataset constructor — the
   * standard seam every Spark extension library uses to wrap a custom
   * LogicalPlan node into a public DataFrame. Lives in the
-  * `org.apache.spark.sql` namespace solely for that access; contains
-  * no logic.
+  * `org.apache.spark.sql` namespace solely for that access (and for the
+  * listener bus and CacheManager the profiler reads); contains no logic.
   */
 object PlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
@@ -26,4 +26,15 @@ object PlanBridge {
   def expression(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** Blocks until every listener has seen every event posted so far
+    * (the listener bus is `private[spark]`).
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
+  /** Plans registered with the session's CacheManager. */
+  def cacheEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, MapType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Guards on the SparkEntry driver contract itself.
   *
   * Scala Map literals silently keep only the LAST binding for a
@@ -63,6 +65,23 @@ class ContractSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet -- Set("spans_input", "spans_adv_input")
     assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
     assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted}")
+  }
+
+  test("the mains under src/main/scala are the pinned set") {
+    // a new triage main fails here until it is added on purpose;
+    // graft.tools.Profile is the one per-query profiler
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val mains = try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("def main(args"))
+      .map(root.relativize(_).toString).toSet
+    finally files.close()
+    val pinned = Set("Bench", "BenchOne", "ScalingBench", "Verify", "Run",
+      "tools/Profile", "tools/PlanDump", "tools/VerifyOne", "tools/FindAdversarial",
+      "tools/FuzzCampaign").map(n => s"graft/$n.scala")
+    assert(mains == pinned,
+      s"unpinned: ${(mains -- pinned).toSeq.sorted}; gone: ${(pinned -- mains).toSeq.sorted}")
   }
 
   test("no silently-overridden duplicate keys in the SparkEntry maps") {

@@ -1,0 +1,55 @@
+package graft
+
+import graft.tools.Profile
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.File
+
+/** `graft.tools.Profile`'s per-query row: the fields PROFILE.json holds,
+  * their basic consistency, and the error row of a query that throws.
+  */
+class ProfileSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-profile-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** The sf0.001 tables (TESTDATA.md), a sibling of the checkout. */
+  private val sf = new File("../testdata/sf0.001").getCanonicalPath
+
+  private val identity = Seq("query", "sf", "cpus", "trials", "bypass_merge_threshold")
+  private val measured = Seq("rows", "wall_s", "task_cpu_s", "gc_s", "jobs", "stages",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "task_ms_max",
+    "task_ms_median", "exchanges", "sort_merge_joins", "broadcast_hash_joins",
+    "in_memory_table_scans", "existing_rdd_scans", "cache_before", "cache_after")
+
+  test("a profile row holds every field; jobs >= 1, stages >= jobs, wall > 0") {
+    for (q <- Seq("q_filter_word", "q_join_lookup")) {
+      val row = Profile.profile(spark, q, sf, trials = 2).toMap
+      val missing = (identity ++ measured).filterNot(row.contains)
+      assert(missing.isEmpty, s"$q lacks $missing")
+      assert(!row.contains("error"), s"$q: ${row.get("error")}")
+      assert(row("query") == q && row("sf") == "sf0.001" && row("trials") == 2)
+      assert(row("rows") == SparkEntry.queries(q)(spark, sf).count())
+      val jobs = row("jobs").asInstanceOf[Int]
+      assert(jobs >= 1 && row("stages").asInstanceOf[Int] >= jobs, s"$q: $row")
+      assert(row("wall_s").asInstanceOf[Double] > 0.0)
+      val ms = Seq("task_ms_median", "task_ms_max").map(row(_).asInstanceOf[Long])
+      assert(ms(0) <= ms(1), s"$q: $row")
+      if (q == "q_join_lookup")
+        assert(row("broadcast_hash_joins").asInstanceOf[Int] >= 1, row)
+    }
+  }
+
+  test("a query that throws yields an error row, not a dropped one") {
+    val missingDir = new File(sf, "no_such_sf").getPath
+    val row = Profile.profile(spark, "q_filter_word", missingDir, trials = 2).toMap
+    assert(row("error") == "org.apache.spark.sql.AnalysisException", row)
+    assert(identity.forall(row.contains) && !measured.exists(row.contains), row)
+  }
+}
