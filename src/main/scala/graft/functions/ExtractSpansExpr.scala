@@ -1,8 +1,7 @@
 package graft.functions
 
-import graft.geom.Geom
 import graft.html.HtmlStrip
-import graft.{Region, SpanKinds}
+import graft.SpanKinds
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -419,28 +418,100 @@ object ExtractSpansExpr {
     acc
   }
 
-  /** E1 over primitive arrays: region clustering + grid assignment. */
+  /** A closed-interval union: sorted, disjoint regions
+    * `[start(k), end(k)]`.
+    */
+  private final class Regions(val start: Array[Double], val end: Array[Double]) {
+    def length: Int = start.length
+
+    /** Index of the region containing [lo, hi], or -1: the rightmost
+      * region with `start <= lo`, then the containment check
+      * (`Geom.regionIndexOf`).
+      */
+    def indexOf(lo: Double, hi: Double): Int = {
+      var a = 0
+      var b = start.length - 1
+      var ans = -1
+      while (a <= b) {
+        val mid = (a + b) >>> 1
+        if (start(mid) <= lo) { ans = mid; a = mid + 1 }
+        else b = mid - 1
+      }
+      if (ans >= 0 && end(ans) >= hi) ans else -1
+    }
+  }
+
+  /** The union of the closed intervals `[starts(i), ends(i)]`, i < m,
+    * m >= 1 (`Geom.intervalUnion`, touching intervals merge); sorts
+    * `starts` in place. With the starts and the ends sorted
+    * independently, the union has a gap after position k iff
+    * `e(k) < s(k + 1)`: the k + 1 smallest ends then close exactly the
+    * intervals of the k + 1 smallest starts. Each region is
+    * `[s(a), e(b)]` over a gap-free run a..b.
+    */
+  private def intervalUnion(starts: Array[Double], ends: Array[Double], m: Int): Regions = {
+    java.util.Arrays.sort(starts, 0, m)
+    val e = java.util.Arrays.copyOf(ends, m)
+    java.util.Arrays.sort(e)
+    val rs = new Array[Double](m)
+    val re = new Array[Double](m)
+    rs(0) = starts(0)
+    var r = 0
+    var k = 0
+    while (k < m - 1) {
+      if (e(k) < starts(k + 1)) { re(r) = e(k); r += 1; rs(r) = starts(k + 1) }
+      k += 1
+    }
+    re(r) = e(m - 1)
+    new Regions(java.util.Arrays.copyOf(rs, r + 1), java.util.Arrays.copyOf(re, r + 1))
+  }
+
+  /** Position of the first element of ascending `sorted` that is not
+    * below `x` by `java.lang.Double.compare`: equal for equal values,
+    * strictly ordered for different ones (-0.0 before 0.0).
+    */
+  private def rankOf(sorted: Array[Double], x: Double): Int = {
+    var a = 0
+    var b = sorted.length
+    while (a < b) {
+      val mid = (a + b) >>> 1
+      if (java.lang.Double.compare(sorted(mid), x) < 0) a = mid + 1 else b = mid
+    }
+    a
+  }
+
+  /** E1 over primitive arrays: region clustering + grid assignment, the
+    * grid and cell texts of `Geom.toTable` (the typed reference) with no
+    * boxed sort.
+    *
+    * Word order: `Geom.toTable` joins each cell's words in (row region,
+    * x0, input index) order, x0 by `java.lang.Double.compare`. A cell's
+    * words share its row region, so filling the cells in (x0, index)
+    * order gives every cell that same order. That order is one `long`
+    * sort of `rank(x0) * m + index`; rank and index are both below
+    * m < 2^31, so the key stays below 2^62.
+    */
   def toTableRegions(x0: Array[Double], x1: Array[Double], y0: Array[Double],
       y1: Array[Double], txt: Array[UTF8String], m: Int): Array[Array[UTF8String]] = {
-    val xiv = new Array[Region](m)
-    val yiv = new Array[Region](m)
+    val x0Sorted = java.util.Arrays.copyOf(x0, m)
+    val xs = intervalUnion(x0Sorted, x1, m)
+    val ys = intervalUnion(java.util.Arrays.copyOf(y0, m), y1, m)
+    val keys = new Array[Long](m)
     var i = 0
-    while (i < m) { xiv(i) = Region(x0(i), x1(i)); yiv(i) = Region(y0(i), y1(i)); i += 1 }
-    val xs = Geom.intervalUnion(xiv)
-    val ys = Geom.intervalUnion(yiv)
-    val ri = new Array[Int](m)
-    val ci = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      ci(i) = Geom.regionIndexOf(xs, x0(i), x1(i))
-      ri(i) = Geom.regionIndexOf(ys, y0(i), y1(i))
-      i += 1
-    }
-    val idx = Array.range(0, m).sortBy(i => (ri(i), x0(i)))
+    while (i < m) { keys(i) = rankOf(x0Sorted, x0(i)).toLong * m + i; i += 1 }
+    java.util.Arrays.sort(keys)
     val cells = Array.ofDim[ArrayBuffer[UTF8String]](ys.length, xs.length)
-    for (i <- idx if ri(i) >= 0 && ci(i) >= 0) {
-      if (cells(ri(i))(ci(i)) == null) cells(ri(i))(ci(i)) = new ArrayBuffer[UTF8String](2)
-      cells(ri(i))(ci(i)) += txt(i)
+    var k = 0
+    while (k < m) {
+      i = (keys(k) % m).toInt
+      val r = ys.indexOf(y0(i), y1(i))
+      val c = xs.indexOf(x0(i), x1(i))
+      // always >= 0: the regions are unions of the word boxes' extents
+      if (r >= 0 && c >= 0) {
+        if (cells(r)(c) == null) cells(r)(c) = new ArrayBuffer[UTF8String](2)
+        cells(r)(c) += txt(i)
+      }
+      k += 1
     }
     cells.map(_.map(joinCell))
   }

@@ -31,11 +31,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   *  1. run_id reuse and table existence are filesystem checks on the
   *     catalog (no Spark job);
-  *  2. one completed-set read (`doc_id`, `status` only) feeds a single
+  *  2. one completed-set read (`doc_id`, `status` only) feeds an
   *     aggregation that fingerprints the input's and the completed set's
   *     resume buckets; its <= 2 x `buckets` values are collected to the
   *     driver, which derives both the skipped count and the incomplete
-  *     buckets from them;
+  *     buckets from them. The completed side is [[completedDocIds]],
+  *     whose `distinct()` adds a shuffle of every completed doc_id
+  *     before that aggregation;
   *  3. the per-doc anti-join runs on the incomplete buckets alone;
   *  4. extraction is one codegen'd Project over the pending rows, the
   *     timed form of `extract_spans`, run on the partitions the rows
@@ -173,17 +175,20 @@ object Lineage {
   }
 
   /** Partition-granular resume fast path. The plain anti-join keys the
-    * FULL input against the FULL completed-id set — at 10^12 docs the
-    * completed side is itself a 10^12-row shuffle on every resume. Here
-    * the resume pass (one completed-set read, one bounded aggregation,
-    * fingerprints collected on the driver: <= 2 x `buckets` values)
-    * runs eagerly and finds the incomplete buckets S; the returned plan
-    * is `input[bucket in S]` left-anti `completed[bucket in S]`, so only
-    * docs in partially-complete buckets (the crash frontier — a few
-    * buckets out of thousands on a steady resume) reach the per-doc
-    * anti-join, and an empty S is the empty input with no scan at all.
+    * FULL input against the FULL completed-id set. Here the resume pass
+    * (one completed-set read, fingerprints collected on the driver:
+    * <= 2 x `buckets` values) runs eagerly and finds the incomplete
+    * buckets S; the returned plan is `input[bucket in S]` left-anti
+    * `completed[bucket in S]`, so only docs in partially-complete
+    * buckets (the crash frontier — a few buckets out of thousands on a
+    * steady resume) reach the per-doc anti-join, and an empty S is the
+    * empty input with no scan at all. The pass itself still shuffles
+    * the whole completed set once: its completed side is
+    * [[completedDocIds]], whose `distinct()` shuffles every completed
+    * doc_id (partially aggregated per task) before the bounded bucket
+    * aggregation — at 10^12 docs a 10^12-row shuffle on every resume.
     * Worst case (every bucket incomplete) degrades to the plain path
-    * plus one aggregation. Output is identical to filterPending.
+    * plus the resume pass. Output is identical to filterPending.
     */
   def filterPendingBucketed(spark: SparkSession, input: Dataset[Doc],
       metricsPath: String, buckets: Int = ResumeBuckets): Dataset[Doc] =

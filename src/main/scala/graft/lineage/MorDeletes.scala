@@ -1,6 +1,6 @@
 package graft.lineage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Merge-on-read equality deletes (Iceberg v2 delete files): a delete
@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions.col
 object MorDeletes {
   private def delDir(table: String) = s"$table/_graft_deletes"
 
-  /** Commit an equality-delete file of `keyCol` values. */
+  /** Commit an equality-delete file of `keyCol` values, written in the
+    * catalog's codec like its data files.
+    */
   def commitDelete(keys: DataFrame, table: String, keyCol: String): Unit =
-    keys.select(col(keyCol)).write.mode(SaveMode.Append).parquet(delDir(table))
+    ParquetCatalog.writer(keys.select(col(keyCol))).parquet(delDir(table))
 
   private def deleteKeys(spark: SparkSession, table: String): Option[DataFrame] =
     if (ParquetCatalog.exists(spark, delDir(table)))

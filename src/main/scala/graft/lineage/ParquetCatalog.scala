@@ -1,7 +1,7 @@
 package graft.lineage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -21,6 +21,14 @@ import java.nio.charset.StandardCharsets.UTF_8
   * partition columns survive. Underscore-prefixed paths are invisible to
   * Spark's parquet reader, so `read` (current view) is unaffected.
   *
+  * Codec: every data file the catalog writes is zstd-compressed
+  * (`Codec`, Parquet's default zstd level). It is part of the table
+  * format, not a setting: no parameter, session conf or environment
+  * variable changes it. Readers need none either, because Parquet
+  * records the codec per column chunk, so a table holding files of an
+  * earlier codec (snappy, Spark's default) keeps reading, resuming and
+  * compacting; a compaction rewrites them as zstd.
+  *
   * Single-writer by design: the engine's driver is the only committer
   * (Lineage.runResumable fails fast on run_id reuse). Real Iceberg
   * replaces the before/after listing with optimistic metadata commits.
@@ -29,12 +37,21 @@ import java.nio.charset.StandardCharsets.UTF_8
   * catalog identifier; appends become `df.writeTo(table).append()`, reads
   * `spark.table(table)`, snapshots the `<table>.snapshots` metadata table,
   * and `readAsOf` becomes `spark.read.option("snapshot-id", id).table(table)`.
+  * The codec maps to the table property
+  * `write.parquet.compression-codec=zstd` (Iceberg's default since 1.4).
   * The run_id partition column maps to a hidden partition transform;
   * `hasPartition` becomes a lookup in the `<table>.partitions` metadata
   * table and `readPartition` a filtered `spark.table(table)`.
   */
 object ParquetCatalog {
   private val SnapDir = "_graft_snapshots"
+
+  /** The Parquet codec of every data file the catalog writes. */
+  private val Codec = "zstd"
+
+  /** The one writer of catalog data files: an append in `Codec`. */
+  private[lineage] def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode(SaveMode.Append).option("compression", Codec)
 
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -144,12 +161,12 @@ object ParquetCatalog {
 
   def append(df: DataFrame, table: String): Unit =
     commitSnapshot(df.sparkSession, table) {
-      df.write.mode(SaveMode.Append).parquet(table)
+      writer(df).parquet(table)
     }
 
   def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit =
     commitSnapshot(df.sparkSession, table) {
-      df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(table)
+      writer(df).partitionBy(partitionCol).parquet(table)
     }
 
   def read(spark: SparkSession, table: String): DataFrame =
@@ -239,7 +256,7 @@ object ParquetCatalog {
     */
   def overwrite(df: DataFrame, table: String): Unit =
     commitSnapshot(df.sparkSession, table, rewrite = true) {
-      df.write.mode(SaveMode.Append).parquet(table)
+      writer(df).parquet(table)
     }
 
   /** Small-file compaction (Iceberg's `rewrite_data_files`): rewrite
@@ -258,7 +275,7 @@ object ParquetCatalog {
     require(ids.nonEmpty, s"no committed snapshots to compact in $table")
     val current = readAsOf(spark, table, ids.last)
     commitSnapshot(spark, table, rewrite = true) {
-      val w = current.repartition(targetFiles).write.mode(SaveMode.Append)
+      val w = writer(current.repartition(targetFiles))
       partitionCol match {
         case Some(c) => w.partitionBy(c).parquet(table)
         case None => w.parquet(table)
@@ -330,7 +347,7 @@ object ParquetCatalog {
     val before = snapshots(spark, table)
       .flatMap(id => manifestFiles(spark, table, id)).toSet ++
       stagedIds(spark, table).flatMap(id => stagedFiles(spark, table, id))
-    df.write.mode(SaveMode.Append).parquet(table)
+    writer(df).parquet(table)
     val added = (listDataFiles(spark, table) -- before).toSeq.sorted
     val fs = fsFor(spark, new Path(table))
     val root = fs.makeQualified(new Path(table))

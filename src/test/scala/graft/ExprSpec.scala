@@ -130,7 +130,22 @@ class ExprSpec extends AnyFunSuite {
       }
       Doc(s"fuzz-$id", spans)
     }
-    val docs = (0 until 400).map(randDoc)
+    // word boxes on a coarse grid pin E1's tie paths: duplicate x0 in one
+    // row, "-0" (parsed as -0.0) next to "0", touching and nested
+    // intervals, and identical boxes
+    def gridDoc(id: Int): Doc = {
+      def at(g: Int): String = if (g == 0 && rng.nextBoolean()) "-0" else (g * 0.25).toString
+      var ref = ""
+      val spans = (0 until 2 + rng.nextInt(40)).map { k =>
+        if (k == 0 || rng.nextInt(5) > 0) {
+          val (x, y) = (rng.nextInt(6) - 1, rng.nextInt(5) - 1)
+          ref = s"${at(x)},${at(x + rng.nextInt(3))},${at(y)},${at(y + rng.nextInt(2))}"
+        }
+        Span("word_box", s"g$k", ref, k)
+      }
+      Doc(s"grid-$id", spans)
+    }
+    val docs = (0 until 400).map(randDoc) ++ (0 until 300).map(gridDoc)
     val ds = spark.createDataset(docs)
     val typed = collectPath(Extract.run(ds).toDF())
     val exprd = collectPath(GraftFunctions.extractDF(spark, ds.toDF()))

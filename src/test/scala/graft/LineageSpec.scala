@@ -24,6 +24,35 @@ class LineageSpec extends AnyFunSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft-lineage").toString
 
+  /** Parquet files under `root`, the catalog's hidden directories included. */
+  private def parquetFiles(root: String): Set[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
+        .flatMap(c => if (c.isDirectory) walk(c) else Seq(c))
+    walk(new java.io.File(root)).filter(_.getName.endsWith(".parquet")).toSet
+  }
+
+  /** The codec every column chunk of `f` reports in its footer. */
+  private def chunkCodecs(f: java.io.File): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.getPath), spark.sessionState.newHadoopConf())
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+    finally reader.close()
+  }
+
+  /** The codecs of the column chunks in the files `write` adds under
+    * `root`; fails when it adds none.
+    */
+  private def codecsAdded(root: String)(write: => Any): Set[String] = {
+    val before = parquetFiles(root)
+    write
+    val added = parquetFiles(root) -- before
+    assert(added.nonEmpty, s"no parquet file added under $root")
+    added.flatMap(chunkCodecs)
+  }
+
   test("partial run + resume equals one full run; nothing reprocessed") {
     import spark.implicits._
     val fixtures = SpanGen.genDocs(80, seed = 21L)
@@ -371,6 +400,83 @@ class LineageSpec extends AnyFunSuite {
     // and a later commit sequence is unaffected
     ParquetCatalog.append(Seq((4L, "d")).toDF("id", "v"), tbl)
     assert(ParquetCatalog.readCurrent(spark, tbl).count() == 4)
+  }
+
+  test("codec gate: every file each catalog write path adds is zstd in every column chunk") {
+    import spark.implicits._
+    import graft.lineage.{MorDeletes, ParquetCatalog}
+    val base = tmp()
+    val (flat, part, wap) = (s"$base/flat", s"$base/part", s"$base/wap")
+    val df = (1L to 40L).map(i => (i, s"v$i", s"r${i % 2}")).toDF("id", "v", "run_id")
+    val zstd = Set("ZSTD")
+    assert(codecsAdded(flat)(ParquetCatalog.append(df, flat)) == zstd)
+    assert(codecsAdded(part)(ParquetCatalog.appendPartitioned(df, part, "run_id")) == zstd)
+    assert(codecsAdded(flat)(ParquetCatalog.overwrite(df.filter($"id" > 20L), flat)) == zstd)
+    assert(codecsAdded(flat)(ParquetCatalog.compact(spark, flat, targetFiles = 1)) == zstd)
+    assert(codecsAdded(part)(
+      ParquetCatalog.compact(spark, part, targetFiles = 1, Some("run_id"))) == zstd)
+    assert(codecsAdded(wap)(ParquetCatalog.stageAppend(df, wap)) == zstd)
+    assert(codecsAdded(flat)(MorDeletes.commitDelete(Seq(3L).toDF("id"), flat, "id")) == zstd)
+    // the production job's two tables
+    val ds = spark.createDataset(SpanGen.genDocs(10, seed = 5L).map(_._1))
+    val (out, metrics) = (s"$base/out", s"$base/metrics")
+    Lineage.runResumable(spark, ds, out, metrics, "run-1")
+    assert((parquetFiles(out) ++ parquetFiles(metrics)).flatMap(chunkCodecs) == zstd)
+  }
+
+  test("tables holding snappy files resume, read and compact like all-zstd tables") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import org.apache.spark.sql.DataFrame
+    import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+    val fixtures = SpanGen.genDocs(60, seed = 23L)
+    val all = spark.createDataset(fixtures.map(_._1))
+    val firstHalf = spark.createDataset(fixtures.take(30).map(_._1))
+    def outRows(df: DataFrame) =
+      df.select("run_id", "doc_id", "spans", "status", "n_tables", "n_cells")
+        .as[(String, String, Seq[Span], String, Int, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
+    def metricRows(df: DataFrame) =
+      df.select("run_id", "doc_id", "status", "checksum")
+        .as[(String, String, String, String)].collect().sorted.toSeq
+    /** Rewrites each data file under `table` as snappy under its own name,
+      * so the manifests still list it.
+      */
+    def reencodeSnappy(table: String): Unit =
+      parquetFiles(table).foreach { f =>
+        val staged = tmp() + "/f"
+        spark.read.parquet(f.getPath).coalesce(1)
+          .write.option("compression", "snappy").parquet(staged)
+        val written = parquetFiles(staged).head
+        Files.move(written.toPath, f.toPath, REPLACE_EXISTING)
+        // the old checksum no longer matches the file's bytes
+        Files.deleteIfExists(f.toPath.resolveSibling(s".${f.getName}.crc"))
+      }
+    def codecs(table: String): Set[String] = parquetFiles(table).flatMap(chunkCodecs)
+    def runTwice(snappyFirst: Boolean) = {
+      val (out, metrics) = (tmp() + "/out", tmp() + "/metrics")
+      Lineage.runResumable(spark, firstHalf, out, metrics, "run-1")
+      if (snappyFirst) {
+        Seq(out, metrics).foreach(reencodeSnappy)
+        assert(codecs(out) == Set("SNAPPY") && codecs(metrics) == Set("SNAPPY"))
+      }
+      val resumed = Lineage.runResumable(spark, all, out, metrics, "run-2")
+      if (snappyFirst) assert(codecs(out) == Set("SNAPPY", "ZSTD"))
+      val committed = outRows(Lineage.readCommitted(spark, out, metrics))
+      val asOf = Seq(1L, 2L).map(id => (outRows(ParquetCatalog.readAsOf(spark, out, id)),
+        metricRows(ParquetCatalog.readAsOf(spark, metrics, id))))
+      val compacted = Seq(
+        codecsAdded(out)(ParquetCatalog.compact(spark, out, targetFiles = 2, Some("run_id"))),
+        codecsAdded(metrics)(ParquetCatalog.compact(spark, metrics, targetFiles = 2)))
+      assert(compacted == Seq(Set("ZSTD"), Set("ZSTD")))
+      val current = (outRows(ParquetCatalog.readCurrent(spark, out)),
+        metricRows(ParquetCatalog.readCurrent(spark, metrics)))
+      (resumed, committed, asOf, current)
+    }
+    val mixed = runTwice(snappyFirst = true)
+    val zstd = runTwice(snappyFirst = false)
+    assert(mixed._1 == ((30L, 30L)))
+    assert(mixed._2.length == 60)
+    assert(mixed == zstd)
   }
 
   test("merge-on-read deletes: key-file anti-join, then compaction folds them in") {
