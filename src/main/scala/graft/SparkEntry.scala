@@ -6,6 +6,7 @@ import graft.extract.Extract
 import graft.fixtures.SpanGen
 import graft.media.Media
 import graft.sinks.Csv
+import graft.streaming.StreamingState
 import graft.textops.TextOps
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -79,18 +80,6 @@ object SparkEntry {
 
   private def t(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Winnow local-overlap candidate pairs, materialized ONCE
-    * (localCheckpoint) for the composed graph queries (triangles /
-    * clustering coefficient / PageRank centrality): their diamond-shaped
-    * plans read the pair frame on several join branches, and without
-    * the checkpoint each branch re-executes the whole fingerprint
-    * pipeline (scan -> shingle -> md5 -> window-min -> postings join) —
-    * round-5 PLANS.md showed that subtree duplicated per branch and
-    * q_dup_centrality alone burned ~195 task-CPU-s on it in the graded
-    * run. The pair frame itself is tiny (one row per overlapping doc
-    * pair), so the checkpoint is metadata-sized; Bench unpersists all
-    * leftover blocks after every query.
-    */
   /** Index-ordered double dot-product fold as a native expression —
     * bit-identical to the `aggregate(sequence(...))` HOF the cosine
     * baselines previously evaluated interpreted per pair (see
@@ -103,6 +92,18 @@ object SparkEntry {
         org.apache.spark.sql.graft.PlanBridge.expression(a),
         org.apache.spark.sql.graft.PlanBridge.expression(b)))
 
+  /** Winnow local-overlap candidate pairs, materialized ONCE
+    * (localCheckpoint) for the composed graph queries (triangles /
+    * clustering coefficient / PageRank centrality): their diamond-shaped
+    * plans read the pair frame on several join branches, and without
+    * the checkpoint each branch re-executes the whole fingerprint
+    * pipeline (scan -> shingle -> md5 -> window-min -> postings join) —
+    * round-5 PLANS.md showed that subtree duplicated per branch and
+    * q_dup_centrality alone burned ~195 task-CPU-s on it in the graded
+    * run. The pair frame itself is tiny (one row per overlapping doc
+    * pair), so the checkpoint is metadata-sized; Bench unpersists all
+    * leftover blocks after every query.
+    */
   private def winnowPairsCp(s: SparkSession, dir: String): DataFrame = {
     val pairs = graft.dedup.Winnow.candidatePairs(
       graft.dedup.Winnow.fingerprints(
@@ -112,16 +113,9 @@ object SparkEntry {
     cp
   }
 
-  /** One stream landing-zone ROOT (the materialized `in` corpus copy —
-    * the big part) per input dir per JVM, with a single shutdown hook
-    * reclaiming all of them. The streaming drain itself is NOT cached:
-    * every invocation runs a real AvailableNow pass into a fresh
-    * out/cp under the shared root, so a repeated call (bench warmup +
-    * best-of-2 trials) times actual streaming execution rather than a
-    * parquet re-read of a previously drained sink. Per-invocation
-    * out/cp trees are output-sized (not corpus-sized) and are reclaimed
-    * with the root on JVM exit — the returned DataFrame reads its own
-    * run's sink lazily, so earlier runs' frames stay valid too.
+  /** Landing-zone roots by key, one per key per JVM: the materialized
+    * input copy (the big part) that drains and file-source queries
+    * read. A single shutdown hook reclaims all of them.
     */
   private val streamLandingDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -133,30 +127,51 @@ object SparkEntry {
       }
       streamLandingDirs.values.forEach(d => rm(new java.io.File(d)))
     }))
-  /** Runs one streaming drain; returns the fresh sink path. */
-  private def streamDrain(s: SparkSession, dir: String): String = {
+
+  /** The landing root for `key`: on first use, a fresh temp dir named
+    * after `prefix` that `build` fills; cached for the JVM after that.
+    */
+  private def landing(key: String, prefix: String)(build: String => Unit): String = {
     streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-      SpanGen.fromDocuments(s, dir).toDF().coalesce(8).write.parquet(s"$tmp/in")
+    streamLandingDirs.computeIfAbsent(key, _ => {
+      val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+      build(tmp)
       tmp
     })
+  }
+
+  /** A fresh (sink, checkpoint) pair under a landing root for one drain
+    * invocation. The drain itself is NOT cached: every invocation runs
+    * a real AvailableNow pass into its own pair, so a repeated call
+    * (bench warmup + best-of-2 trials) times actual streaming execution
+    * rather than a parquet re-read of a previously drained sink. The
+    * pairs are output-sized (not corpus-sized) and are reclaimed with
+    * the root on JVM exit — the returned DataFrame reads its own run's
+    * sink lazily, so earlier runs' frames stay valid too.
+    */
+  private def runDirs(root: String, sink: String = "out"): (String, String) = {
     val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingExtract.runOnce(s, s"$root/in", out, s"$root/cp$run")
+    (s"$root/$sink$run", s"$root/cp$run")
+  }
+
+  /** Runs one streaming drain; returns the fresh sink path. */
+  private def streamDrain(s: SparkSession, dir: String): String = {
+    val root = landing(dir, "graft_stream") { tmp =>
+      SpanGen.fromDocuments(s, dir).toDF().coalesce(8).write.parquet(s"$tmp/in")
+    }
+    val (out, cp) = runDirs(root)
+    graft.streaming.StreamingExtract.runOnce(s, s"$root/in", out, cp)
     out
   }
 
   /** Span-TSV landing zone for the DSv2 connector query: documents
     * rewritten once per input dir through [[graft.sources.SpanTsv.write]]
-    * (bucket dirs = the zone map the reader prunes on); shares the
-    * stream cleanup hook. One span per doc, media_ref populated on
-    * doc_id % 4 == 0 so the residual (non-pushable) filter has bite.
+    * (bucket dirs = the zone map the reader prunes on). One span per
+    * doc, media_ref populated on doc_id % 4 == 0 so the residual
+    * (non-pushable) filter has bite.
     */
   private def spanTsvLanding(s: SparkSession, dir: String): String =
-    streamLandingDirs.computeIfAbsent(s"$dir#spantsv", _ => {
-      streamCleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory("graft_spantsv").toString
+    landing(s"$dir#spantsv", "graft_spantsv") { tmp =>
       graft.sources.SpanTsv.write(
         s.read.parquet(t(dir, "documents")).select(
           col("doc_id"), lit(0).as("offset"), lit("text").as("kind"),
@@ -165,8 +180,7 @@ object SparkEntry {
             concat(lit("img:"), col("doc_id").cast("string")))
             .otherwise(lit("")).as("media_ref")),
         s"$tmp/spans", bucketWidth = 50L)
-      tmp
-    }) + "/spans"
+    } + "/spans"
 
   /** Streaming-dedup drain: a landing zone of (doc_id, checksum, ts)
     * rows — the corpus plus one exact duplicate (same text, same event
@@ -177,13 +191,9 @@ object SparkEntry {
     * original's event time, so watermark semantics can never let one
     * through, and the surviving row set is exactly one row per
     * distinct checksum — which the batch oracle states directly.
-    * Landing roots share the stream cleanup hook above (keyed
-    * dir#dedup); each invocation drains into its own out/cp.
     */
   private def streamDedupDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#dedup", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val root = landing(s"$dir#dedup", "graft_sdedup") { tmp =>
       val base = s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), sha2(col("text"), 256).as("checksum"),
           timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L)))
@@ -191,18 +201,12 @@ object SparkEntry {
       base.union(base.filter(col("doc_id") % 3 === 0)
           .withColumn("doc_id", col("doc_id") + 1000000L))
         .coalesce(1).write.parquet(s"$tmp/in")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    // 8 state stores: sized to the drain's key cardinality (50k
-    // checksums at sf0.1) — each store pays open/commit/checkpoint per
-    // micro-batch whether or not it holds keys
+    }
+    val (out, cp) = runDirs(root)
     // RocksDB state store: the driver gate runs the provider that
     // holds at production key cardinality (HDFS-backed keeps all state
     // on-heap; provider-equivalence is separately spec-gated)
-    graft.streaming.StreamingState.dedupRunOnce(s, s"$root/in", out, s"$root/cp$run",
-      shufflePartitions = Some(8), useRocksDb = true)
+    StreamingState.dedupRunOnce(s, s"$root/in", out, cp, useRocksDb = true)
     out
   }
 
@@ -213,40 +217,28 @@ object SparkEntry {
     * boundary test), which the batch oracle restates as a HAVING.
     */
   private def streamWindowDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#window", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_swin").toString
+    val root = landing(s"$dir#window", "graft_swin") { tmp =>
       s.read.parquet(t(dir, "events"))
         // the raw table reads as TIMESTAMP_NTZ (parquet without tz);
         // watermarks require TIMESTAMP — same instant under the UTC
         // session, so the oracle's naive-timestamp epoch math matches
         .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
         .coalesce(1).write.parquet(s"$tmp/in")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.windowedCountsRunOnce(
-      s, s"$root/in", out, s"$root/cp$run", "ts", "event_type",
-      shufflePartitions = Some(8))
+    }
+    val (out, cp) = runDirs(root)
+    StreamingState.windowedCountsRunOnce(s, s"$root/in", out, cp, "ts", "event_type")
     out
   }
 
   private def streamSessionWinDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#swinsess", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_swsess").toString
+    val root = landing(s"$dir#swinsess", "graft_swsess") { tmp =>
       s.read.parquet(t(dir, "events"))
         .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
           col("event_id"))
         .coalesce(1).write.parquet(s"$tmp/in")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.sessionWindowCountsRunOnce(
-      s, s"$root/in", out, s"$root/cp$run", "ts", "user_id",
-      shufflePartitions = Some(8))
+    }
+    val (out, cp) = runDirs(root)
+    StreamingState.sessionWindowCountsRunOnce(s, s"$root/in", out, cp, "ts", "user_id")
     out
   }
 
@@ -259,9 +251,7 @@ object SparkEntry {
     * (a merge sink MUTATES its table — reuse would double-apply).
     */
   private def streamMergeDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#merge", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_smerge").toString
+    val root = landing(s"$dir#merge", "graft_smerge") { tmp =>
       val base = s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val updates = base
@@ -274,29 +264,14 @@ object SparkEntry {
         .unionByName(base.filter(col("doc_id") % 13 === 0)
           .select(col("doc_id"), col("lang"), col("n_chars"),
             lit(true).as("_deleted")))
-      def landOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .filter(f => f.getName.startsWith("part-")
-            && f.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(s"$tmp/in/$name.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        require(dst.setLastModified(mtime), s"setLastModified failed: $dst")
-      }
       val now = System.currentTimeMillis()
-      landOne(updates, "a_updates", now)
-      landOne(insDel, "b_insdel", now + 60000L)
+      StreamingState.landFile(updates, s"$tmp/in/a_updates.parquet", now)
+      StreamingState.landFile(insDel, s"$tmp/in/b_insdel.parquet", now + 60000L)
       base.write.parquet(s"$tmp/base")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val table = s"$root/tbl$run"
+    }
+    val (table, cp) = runDirs(root, "tbl")
     graft.lineage.ParquetCatalog.append(s.read.parquet(s"$root/base"), table)
-    graft.streaming.StreamingState.mergeSinkRunOnce(
-      s, s"$root/in", table, "doc_id", "_deleted", s"$root/cp$run",
-      shufflePartitions = Some(8))
+    StreamingState.mergeSinkRunOnce(s, s"$root/in", table, "doc_id", "_deleted", cp)
     table
   }
 
@@ -317,11 +292,8 @@ object SparkEntry {
     */
   private def streamSessionDrain(s: SparkSession, dir: String): String = {
     val root = streamSessionLanding(s, dir)
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.sessionizeRunOnce(
-      s, s"$root/in", out, s"$root/cp$run", gapSec = 1800L,
-      shufflePartitions = Some(8))
+    val (out, cp) = runDirs(root)
+    StreamingState.sessionizeRunOnce(s, s"$root/in", out, cp, gapSec = 1800L)
     out
   }
 
@@ -330,45 +302,27 @@ object SparkEntry {
     * calling the v1 DRAIN — paying a full extra streaming pass per
     * invocation before its own.
     */
-  private def streamSessionLanding(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    streamLandingDirs.computeIfAbsent(s"$dir#session", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ssess").toString
+  private def streamSessionLanding(s: SparkSession, dir: String): String =
+    landing(s"$dir#session", "graft_ssess") { tmp =>
       val ev = s.read.parquet(t(dir, "events"))
         .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
       val maxSec = ev.agg(max(unix_timestamp(col("ts")))).head().getLong(0)
-      def landOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .filter(f => f.getName.startsWith("part-")
-            && f.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(s"$tmp/in/$name.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // file-source batches follow modification-time order; spacing
-        // the mtimes makes the three-batch sequence deterministic
-        require(dst.setLastModified(mtime), s"setLastModified failed: $dst")
-      }
       def sentinel(sec: Long): DataFrame =
         s.range(1).select(lit(-1L).as("user_id"),
           timestamp_seconds(lit(sec)).as("ts"))
       val now = System.currentTimeMillis()
-      landOne(ev, "a_events", now)
-      landOne(sentinel(maxSec + 40000000L), "b_sentinel", now + 60000L)
-      landOne(sentinel(maxSec + 40000001L), "c_sentinel", now + 120000L)
-      tmp
-    })
-  }
+      StreamingState.landFile(ev, s"$tmp/in/a_events.parquet", now)
+      StreamingState.landFile(sentinel(maxSec + 40000000L),
+        s"$tmp/in/b_sentinel.parquet", now + 60000L)
+      StreamingState.landFile(sentinel(maxSec + 40000001L),
+        s"$tmp/in/c_sentinel.parquet", now + 120000L)
+    }
 
   /** Same landing zone, drained through the v2 timer sessionizer. */
   private def streamSessionV2Drain(s: SparkSession, dir: String): String = {
     val root = streamSessionLanding(s, dir)
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.sessionizeV2RunOnce(
-      s, s"$root/in", out, s"$root/cp$run", gapSec = 1800L,
-      shufflePartitions = Some(8))
+    val (out, cp) = runDirs(root)
+    StreamingState.sessionizeV2RunOnce(s, s"$root/in", out, cp, gapSec = 1800L)
     out
   }
 
@@ -386,135 +340,93 @@ object SparkEntry {
     * drop langs absent from the dim.
     */
   private def streamEnrichDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#enrich", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_senrich").toString
+    val root = landing(s"$dir#enrich", "graft_senrich") { tmp =>
       s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .coalesce(1).write.parquet(s"$tmp/in")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
+    }
+    val (out, cp) = runDirs(root)
     val dim = s.createDataFrame(enrichDim).toDF("lang", "lang_weight")
-    graft.streaming.StreamingState.enrichRunOnce(
-      s, s"$root/in", dim, "lang", out, s"$root/cp$run")
+    StreamingState.enrichRunOnce(s, s"$root/in", dim, "lang", out, cp)
     out
   }
 
-  /** Stream-stream join drain: two landing zones derived from the
+  /** The two sides of the stream-stream join landings, derived from the
     * documents table — creations (doc_id, l_ts, lang) and async scores
     * (r_doc_id, r_ts, score) where r_ts lags l_ts by (doc_id % 13)
-    * minutes — drained through the watermarked range-bounded inner
-    * join (range = 10 minutes, so lags 0..10 match and 11..12 drop).
-    * One file per side = one deterministic micro-batch; the batch
-    * oracle restates the join with the range predicate in epoch
-    * seconds.
+    * minutes — landed as one file per side under `<root>/left` and
+    * `<root>/right`. With `sentinels`, two far-future sentinel files
+    * (keys -1, -2) follow the real one on each side, in mtime order, so
+    * the left-outer drain sees the real batch first, then a batch that
+    * advances the global watermark, then one that emits the null-padded
+    * unmatched rows (see StreamingState.streamStreamJoinRunOnce).
+    */
+  private def landJoinSides(s: SparkSession, dir: String, root: String,
+      sentinels: Boolean): Unit = {
+    val base = s.read.parquet(t(dir, "documents"))
+    val left = base.select(col("doc_id"),
+      timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L)))
+        .as("l_ts"),
+      col("lang"))
+    val right = base.select(col("doc_id").as("r_doc_id"),
+      timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L))
+        + pmod(col("doc_id"), lit(13L)) * 60L).as("r_ts"),
+      col("n_chars").as("score"))
+    // far beyond every real l_ts + range + delay
+    def sentinel(k: Long, sec: Long): (DataFrame, DataFrame) = (
+      s.range(1).select(lit(k).as("doc_id"), timestamp_seconds(lit(sec)).as("l_ts"),
+        lit("xx").as("lang")),
+      s.range(1).select(lit(k).as("r_doc_id"), timestamp_seconds(lit(sec)).as("r_ts"),
+        lit(0L).as("score")))
+    val tail = if (sentinels) Seq(sentinel(-1L, 1700300000L), sentinel(-2L, 1700400000L))
+      else Nil
+    val now = System.currentTimeMillis()
+    for ((side, files) <- Seq("left" -> (left +: tail.map(_._1)),
+        "right" -> (right +: tail.map(_._2))); (df, i) <- files.zipWithIndex)
+      StreamingState.landFile(df, s"$root/$side/part-$i.parquet", now + i * 60000L)
+  }
+
+  /** Stream-stream join drain over the join landing (range = 10
+    * minutes, so lags 0..10 match and 11..12 drop). One file per side =
+    * one deterministic micro-batch; the batch oracle restates the join
+    * with the range predicate in epoch seconds.
     */
   private def streamJoinDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#ssjoin", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ssjoin").toString
-      val base = s.read.parquet(t(dir, "documents"))
-      base.select(col("doc_id"),
-          timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L)))
-            .as("l_ts"),
-          col("lang"))
-        .coalesce(1).write.parquet(s"$tmp/left")
-      base.select(col("doc_id").as("r_doc_id"),
-          timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L))
-            + pmod(col("doc_id"), lit(13L)) * 60L).as("r_ts"),
-          col("n_chars").as("score"))
-        .coalesce(1).write.parquet(s"$tmp/right")
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.streamStreamJoinRunOnce(
-      s, s"$root/left", s"$root/right", "doc_id", out, s"$root/cp$run",
-      rangeMaxSec = 600L, shufflePartitions = Some(8))
+    val root = landing(s"$dir#ssjoin", "graft_ssjoin")(
+      landJoinSides(s, dir, _, sentinels = false))
+    val (out, cp) = runDirs(root)
+    StreamingState.streamStreamJoinRunOnce(s, s"$root/left", s"$root/right",
+      "doc_id", out, cp, rangeMaxSec = 600L)
     out
   }
 
-  /** Left-outer stream-stream landing: the real corpus file FIRST,
-    * then two far-future sentinel files per side with strictly
-    * increasing mtimes — the sentinels advance the global watermark
-    * (batch k) and give eviction a later batch (k+1) to emit the
-    * null-padded unmatched rows in (see
-    * StreamingState.streamStreamLeftOuterRunOnce). Sentinel keys are
-    * negative so the query filters them back out.
+  /** Left-outer stream-stream drain over the sentinel join landing.
+    * Sentinel keys are negative so the query filters them back out.
     */
   private def streamJoinOuterDrain(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#ssjoinL", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ssjoinl").toString
-      val base = s.read.parquet(t(dir, "documents"))
-      base.select(col("doc_id"),
-          timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L)))
-            .as("l_ts"),
-          col("lang"))
-        .coalesce(1).write.parquet(s"$tmp/left")
-      base.select(col("doc_id").as("r_doc_id"),
-          timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600L))
-            + pmod(col("doc_id"), lit(13L)) * 60L).as("r_ts"),
-          col("n_chars").as("score"))
-        .coalesce(1).write.parquet(s"$tmp/right")
-      def sentinel(side: String, cols: (String, String, String), k: Long,
-          tsSec: Long): Unit = {
-        import s.implicits._
-        Seq((k, new java.sql.Timestamp(tsSec * 1000L),
-            if (side == "left") "xx" else "0"))
-          .toDF(cols._1, cols._2, cols._3)
-          .select(col(cols._1), col(cols._2).cast("timestamp").as(cols._2),
-            if (side == "left") col(cols._3) else col(cols._3).cast("long").as(cols._3))
-          .coalesce(1).write.mode("append").parquet(s"$tmp/$side")
-      }
-      // two watermark-advancing batches per side, far beyond every
-      // real l_ts + range + delay
-      sentinel("left", ("doc_id", "l_ts", "lang"), -1L, 1700300000L)
-      sentinel("right", ("r_doc_id", "r_ts", "score"), -1L, 1700300000L)
-      sentinel("left", ("doc_id", "l_ts", "lang"), -2L, 1700400000L)
-      sentinel("right", ("r_doc_id", "r_ts", "score"), -2L, 1700400000L)
-      // pin the batch order: real first, sentinels after, by mtime
-      for (side <- Seq("left", "right")) {
-        val files = new java.io.File(s"$tmp/$side").listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .sortBy(_.lastModified())
-        val base = System.currentTimeMillis() - 600000L
-        files.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(base + i * 30000L); ()
-        }
-      }
-      tmp
-    })
-    val run = streamRunSeq.incrementAndGet()
-    val out = s"$root/out$run"
-    graft.streaming.StreamingState.streamStreamLeftOuterRunOnce(
-      s, s"$root/left", s"$root/right", "doc_id", out, s"$root/cp$run",
-      rangeMaxSec = 600L, shufflePartitions = Some(8))
+    val root = landing(s"$dir#ssjoinL", "graft_ssjoinl")(
+      landJoinSides(s, dir, _, sentinels = true))
+    val (out, cp) = runDirs(root)
+    StreamingState.streamStreamJoinRunOnce(s, s"$root/left", s"$root/right",
+      "doc_id", out, cp, rangeMaxSec = 600L, joinType = "leftOuter")
     out
   }
 
   /** JSON landing zone for the permissive-source query: the documents
     * digest as JSON lines plus ONE deterministic malformed line in a
-    * sidecar file (truncated mid-object). Cached per dir under the
-    * shared stream cleanup hook; reading is side-effect-free so the
-    * zone is reused across invocations, unlike the streaming drains.
+    * sidecar file (truncated mid-object). Reading is side-effect-free
+    * so the zone is reused across invocations, unlike the streaming
+    * drains.
     */
-  private def jsonLanding(s: SparkSession, dir: String): String = {
-    streamCleanupHook
-    val root = streamLandingDirs.computeIfAbsent(s"$dir#json", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+  private def jsonLanding(s: SparkSession, dir: String): String =
+    landing(s"$dir#json", "graft_json") { tmp =>
       s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .coalesce(1).write.json(s"$tmp/in")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$tmp/in/part-corrupt.json"),
         "{\"doc_id\": 999999999, \"lang\": \"en\", \"n_chars\"".getBytes("UTF-8"))
-      tmp
-    })
-    s"$root/in"
-  }
+    } + "/in"
 
   /** One trained BPE codec per corpus dir per JVM: training is a pure
     * deterministic function of the documents table (top-word sample ->
@@ -1576,9 +1488,7 @@ object SparkEntry {
     // the decode-invertibility arithmetic, q_media_meta's, on the
     // sampled ids.
     "q_binary_source" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#binary", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bin").toString
+      val root = landing(s"$dir#binary", "graft_bin") { tmp =>
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(s"$tmp/in"))
         Media.synthesize(s, dir, col("doc_id") % 17 === 0)
@@ -1589,8 +1499,7 @@ object SparkEntry {
                 b.content)
             }
           }
-        tmp
-      })
+      }
       import s.implicits._
       val blobs = s.read.format("binaryFile").load(s"$root/in")
         .select(col("path"), col("content"))
@@ -2176,18 +2085,14 @@ object SparkEntry {
     // type-sorted parallel arrays; row with max(n_seen) per user ==
     // the plain batch pivot
     "stream_type_counts" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#typec", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stc").toString
+      val root = landing(s"$dir#typec", "graft_stc") { tmp =>
         s.read.parquet(t(dir, "events"))
           .select(col("user_id"), col("event_type"))
           .coalesce(8).write.parquet(s"$tmp/in")
-        tmp
-      })
-      val run = streamRunSeq.incrementAndGet()
-      val out = s"$root/out$run"
-      graft.streaming.StreamingState.typeCountsRunOnce(
-        s, s"$root/in", out, s"$root/cp$run", shufflePartitions = Some(8))
+      }
+      val (out, cp) = runDirs(root)
+      StreamingState.transformWithStateRunOnce(s, s"$root/in", out, cp,
+        new StreamingState.TypeCountsProcessor)(_.user_id)
       val w = Window.partitionBy("user_id").orderBy(col("n_seen").desc)
       s.read.parquet(out)
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -2203,19 +2108,15 @@ object SparkEntry {
     // order-independent; the sink row with max(n_seen) per user is the
     // final feature vector, which the batch oracle states directly
     "stream_latest_k" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#latestk", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_slk").toString
+      val root = landing(s"$dir#latestk", "graft_slk") { tmp =>
         s.read.parquet(t(dir, "events"))
           .select(col("user_id"), col("event_id"),
             floor(col("value") * 100 + 0.5).as("cents"))
           .coalesce(8).write.parquet(s"$tmp/in")
-        tmp
-      })
-      val run = streamRunSeq.incrementAndGet()
-      val out = s"$root/out$run"
-      graft.streaming.StreamingState.latestKRunOnce(
-        s, s"$root/in", out, s"$root/cp$run", k = 3, shufflePartitions = Some(8))
+      }
+      val (out, cp) = runDirs(root)
+      StreamingState.transformWithStateRunOnce(s, s"$root/in", out, cp,
+        new StreamingState.LatestKProcessor(3))(_.user_id)
       val w = Window.partitionBy("user_id").orderBy(col("n_seen").desc)
       s.read.parquet(out)
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -2233,19 +2134,15 @@ object SparkEntry {
     // the emitted n_events sequence is strictly increasing, so max()
     // over the sink equals the batch totals regardless of file order
     "stream_running" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#running", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_srun").toString
+      val root = landing(s"$dir#running", "graft_srun") { tmp =>
         s.read.parquet(t(dir, "events"))
           .select(col("user_id"),
             floor(col("value") * 100 + 0.5).as("cents"))
           .coalesce(8).write.parquet(s"$tmp/in")
-        tmp
-      })
-      val run = streamRunSeq.incrementAndGet()
-      val out = s"$root/out$run"
-      graft.streaming.StreamingState.runningTotalsRunOnce(
-        s, s"$root/in", out, s"$root/cp$run", shufflePartitions = Some(8))
+      }
+      val (out, cp) = runDirs(root)
+      StreamingState.transformWithStateRunOnce(s, s"$root/in", out, cp,
+        new StreamingState.RunningTotalProcessor)(_.user_id)
       s.read.parquet(out)
         .groupBy(col("user_id"))
         .agg(max(col("n_events")).as("n_events"),
@@ -3242,13 +3139,10 @@ object SparkEntry {
     // oracle over the parquet original gates bit-exact value fidelity
     // through the second columnar format
     "q_orc_roundtrip" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#orc", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+      val root = landing(s"$dir#orc", "graft_orc") { tmp =>
         s.read.parquet(t(dir, "documents")).coalesce(2)
           .write.orc(s"$tmp/in")
-        tmp
-      })
+      }
       s.read.orc(s"$root/in")
     }),
 
@@ -3273,9 +3167,7 @@ object SparkEntry {
     // as q_json_source) — the digest written as headered CSV plus one
     // malformed sidecar line (unparseable long); zone cached per dir
     "q_csv_source" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#csv", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+      val root = landing(s"$dir#csv", "graft_csv") { tmp =>
         s.read.parquet(t(dir, "documents"))
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .coalesce(1)
@@ -3285,8 +3177,7 @@ object SparkEntry {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$tmp/in/part-corrupt.csv"),
           "doc_id,lang,n_chars\nnot_a_long,xx,also_not_a_long\n".getBytes("UTF-8"))
-        tmp
-      })
+      }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -3341,9 +3232,7 @@ object SparkEntry {
     // first bad line otherwise). Landing zone derived from documents
     // with one malformed sidecar line, so the oracle can reconstruct.
     "q_text_source" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#text", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_text").toString
+      val root = landing(s"$dir#text", "graft_text") { tmp =>
         s.read.parquet(t(dir, "documents"))
           .select(concat_ws("\t",
             col("doc_id"), col("lang"), col("n_chars")).as("value"))
@@ -3351,8 +3240,7 @@ object SparkEntry {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$tmp/in/part-malformed.txt"),
           "not_a_long\tonly_two\n".getBytes("UTF-8"))
-        tmp
-      })
+      }
       s.read.text(s"$root/in")
         .select(split(col("value"), "\t").as("f"))
         .select(
@@ -3611,9 +3499,7 @@ object SparkEntry {
     // lacks `lang`, the merged read surfaces NULL for it; no petabyte
     // rewrite to add a column
     "q_schema_evolution" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#schev", _ =>
-        java.nio.file.Files.createTempDirectory("graft_schev").toString)
+      val root = landing(s"$dir#schev", "graft_schev")(_ => ())
       graft.lineage.Evolution.mergeSchemaRead(s,
         s.read.parquet(t(dir, "documents")), root)
     }),
@@ -3622,9 +3508,7 @@ object SparkEntry {
     // incremental recompute replaces ONLY the partition it produced
     // (src1 refreshed, every other partition still stale on read-back)
     "q_dynamic_overwrite" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#dynov", _ =>
-        java.nio.file.Files.createTempDirectory("graft_dynov").toString)
+      val root = landing(s"$dir#dynov", "graft_dynov")(_ => ())
       graft.lineage.Evolution.dynamicPartitionRefresh(s,
         s.read.parquet(t(dir, "documents")), root)
     }),
@@ -3633,9 +3517,7 @@ object SparkEntry {
     // delete commits a small key file (O(deleted keys), never a data
     // rewrite); readers anti-join the delete keys at scan time
     "q_mor_deletes" -> ((s, dir) => {
-      streamCleanupHook
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#mor", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mor").toString
+      val root = landing(s"$dir#mor", "graft_mor") { tmp =>
         val tbl = s"$tmp/tbl"
         graft.lineage.ParquetCatalog.append(
           s.read.parquet(t(dir, "documents"))
@@ -3644,8 +3526,7 @@ object SparkEntry {
           s.read.parquet(t(dir, "documents"))
             .filter(col("doc_id") % 7 === 0).select(col("doc_id")),
           tbl, "doc_id")
-        tmp
-      })
+      }
       graft.lineage.MorDeletes.readCurrent(s, s"$root/tbl", "doc_id")
     }),
 
@@ -3667,18 +3548,15 @@ object SparkEntry {
     // resumes to 6 instead of restarting; identical picounit arithmetic
     // to q_pagerank, here at 6 rounds
     "q_pagerank_resume" -> ((s, dir) => {
-      streamCleanupHook
       val c = s.read.parquet(t(dir, "customer"))
       val fwd = c.select(col("c_custkey").cast("long").as("src"),
         (lit(1000000L) + col("c_nationkey")).as("dst"))
       val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      val root = streamLandingDirs.computeIfAbsent(s"$dir#prres", _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_prres").toString
+      val root = landing(s"$dir#prres", "graft_prres") { tmp =>
         // the "interrupted" first attempt: three committed rounds
         graft.operators.PageRank.pageRankResumable(edges, "src", "dst",
           iters = 3, d = 0.85, stateRoot = s"$tmp/state").count()
-        tmp
-      })
+      }
       graft.operators.PageRank.pageRankResumable(edges, "src", "dst",
         iters = 6, d = 0.85, stateRoot = s"$root/state")
     }),

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions.col
   * Delete files live under `_graft_deletes/` — an underscore directory
   * both `spark.read.parquet(table)` and the catalog's data-file
   * listing already treat as hidden, so delete keys can never be
-  * mistaken for rows.
+  * mistaken for rows. Readers therefore list the directory's files
+  * through the catalog instead of handing Spark the hidden path.
   */
 object MorDeletes {
   private def delDir(table: String) = s"$table/_graft_deletes"
@@ -26,9 +27,7 @@ object MorDeletes {
     ParquetCatalog.writer(keys.select(col(keyCol))).parquet(delDir(table))
 
   private def deleteKeys(spark: SparkSession, table: String): Option[DataFrame] =
-    if (ParquetCatalog.exists(spark, delDir(table)))
-      Some(spark.read.parquet(delDir(table)).distinct())
-    else None
+    ParquetCatalog.readDataFiles(spark, delDir(table)).map(_.distinct())
 
   /** The merge-on-read current view: committed rows minus every key an
     * equality-delete file names.

@@ -178,6 +178,18 @@ object ParquetCatalog {
   def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(table)
 
+  /** The data files under `dir`, by listDataFiles' rule, read as one
+    * frame; None when there are none. Reading the files rather than the
+    * directory lets `dir` itself be hidden (MorDeletes' `_graft_deletes`)
+    * without Spark ignoring the path.
+    */
+  private[lineage] def readDataFiles(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val root = fsFor(spark, new Path(dir)).makeQualified(new Path(dir))
+    val files = listDataFiles(spark, dir).toSeq.sorted
+    if (files.isEmpty) None
+    else Some(spark.read.parquet(files.map(f => new Path(root, f).toString): _*))
+  }
+
   /** Whether the table holds any data file; runs no Spark job. */
   def exists(spark: SparkSession, table: String): Boolean =
     hasDataFile(spark, new Path(table))

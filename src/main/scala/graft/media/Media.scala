@@ -33,10 +33,11 @@ object Media {
     * at thousands of blobs per task (measured ~10x the actual DCT cost
     * at sf0.1). Memory-cached streams + a per-thread writer/reader
     * produce byte-identical JPEG output — same plugin, same default
-    * params, only the scratch I/O changes.
+    * params, only the scratch I/O changes. The streams are passed
+    * explicitly, so ImageIO's global `useCache` flag (which the stock
+    * calls in sinks/DebugImage follow) is left as the JVM has it.
     */
   private object Jio {
-    javax.imageio.ImageIO.setUseCache(false)
     private val writer = ThreadLocal.withInitial[javax.imageio.ImageWriter](
       () => ImageIO.getImageWritersByFormatName("jpg").next())
     private val reader = ThreadLocal.withInitial[javax.imageio.ImageReader](
@@ -201,7 +202,8 @@ object Media {
     if (fast != null) fast
     else if (Jio.isJpg(content)) Jio.readJpg(content)
     else
-      try ImageIO.read(new ByteArrayInputStream(content))
+      try ImageIO.read(new javax.imageio.stream.MemoryCacheImageInputStream(
+        new ByteArrayInputStream(content)))
       catch { case _: Exception => null }
   }
 

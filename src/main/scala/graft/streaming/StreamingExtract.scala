@@ -2,10 +2,7 @@ package graft.streaming
 
 import graft.functions.GraftFunctions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.SparkSession
 
 /** Structured Streaming front-end for the extraction engine.
   *
@@ -20,31 +17,11 @@ import org.apache.spark.sql.Row
   */
 object StreamingExtract {
 
-  /** Streaming source over a growing directory of span-table parquet. */
-  def readSpanStream(spark: SparkSession, inputPath: String, maxFilesPerTrigger: Int = 64): DataFrame = {
-    val schema = spark.read.parquet(inputPath).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputPath)
-  }
-
-  /** The extraction transform on a (possibly streaming) span table. */
-  def extract(spark: SparkSession, docs: DataFrame): DataFrame =
-    GraftFunctions.extractDF(spark, docs)
-
-  /** File-sink writer with checkpointed exactly-once output. */
-  def writer(extracted: DataFrame, outPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    extracted.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-
-  /** Convenience: run one AvailableNow pass (drain what exists, stop). */
-  def runOnce(spark: SparkSession, inputPath: String, outPath: String, checkpoint: String): Unit = {
-    val q = writer(extract(spark, readSpanStream(spark, inputPath)), outPath, checkpoint).start()
-    q.awaitTermination()
-  }
+  /** One AvailableNow pass (drain what exists, stop) over a growing
+    * directory of span-table parquet into a checkpointed exactly-once
+    * parquet sink.
+    */
+  def runOnce(spark: SparkSession, inputPath: String, outPath: String, checkpoint: String): Unit =
+    StreamingState.drain(spark, Seq(inputPath), 64, checkpoint, Left(outPath),
+      stateful = false)(srcs => GraftFunctions.extractDF(spark, srcs.head))
 }

@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit, session_window, window}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, session_window, window}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StatefulProcessor, TimeMode, Trigger}
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Stateful streaming operators over the continuously-arriving span /
   * event tables — the watermark + custom-state half of the streaming
@@ -15,37 +18,86 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingState {
 
-  /** Isolated child session with its own shuffle-partition setting —
-    * every stateful streaming operator keeps ONE state store per
-    * shuffle partition, each paying per-micro-batch open/commit/
-    * checkpoint costs whether or not it holds keys. Batch AQE coalesces
-    * small shuffles automatically; streaming state is pinned at plan
-    * time, so the caller must size it to expected KEY CARDINALITY
-    * (thousands of keys -> a few stores; 10^9 keys at production ->
-    * hundreds). newSession shares the SparkContext but not the SQLConf,
-    * so the caller's session is untouched.
+  /** State-store width of every stateful drain. Each stateful operator
+    * keeps ONE state store per shuffle partition, and every store pays
+    * its open/commit/checkpoint per micro-batch whether or not it holds
+    * keys. Batch AQE coalesces small shuffles; streaming state is
+    * pinned at plan time (and recorded in the checkpoint), so the width
+    * must be fixed before the first batch. 8 is the width every
+    * production drain has run at. It is a constant, not the session
+    * width, because the bench runs at local[32], which would mean 32
+    * stores per operator for a few thousand keys. Sizing it to the key
+    * count (one store per N keys, capped by the cores) is ROADMAP item
+    * 4's next step.
     */
-  private def sessionFor(spark: SparkSession,
-      shufflePartitions: Option[Int],
-      useRocksDb: Boolean = false): SparkSession =
-    if (shufflePartitions.isEmpty && !useRocksDb) spark
-    else {
-      val s2 = spark.newSession()
-      shufflePartitions.foreach { n =>
-        require(n >= 1, s"shufflePartitions must be positive: $n")
-        s2.conf.set("spark.sql.shuffle.partitions", n.toString)
-      }
+  private val StatePartitions = 8
+
+  /** One AvailableNow drain: every `*RunOnce` here and
+    * [[StreamingExtract.runOnce]] is this plus its transform.
+    *
+    * A `stateful` drain runs on a child session (newSession shares the
+    * SparkContext but not the SQLConf, so the caller's session is
+    * untouched) with [[StatePartitions]] shuffle partitions. A stateless
+    * one has no store to size and runs on the caller's session, sparing
+    * a session build per run.
+    *
+    * Each input is a parquet file source with its own footer schema,
+    * reading at most `maxFilesPerTrigger` files per micro-batch;
+    * `transform` turns the sources, in input order, into the query. The
+    * sink is checkpointed at `checkpoint`: `Left(path)` is an
+    * exactly-once parquet directory, `Right(f)` runs `f` on every
+    * micro-batch (foreachBatch). Returns once everything the inputs held
+    * at start is processed.
+    */
+  private[streaming] def drain(spark: SparkSession, inputs: Seq[String],
+      maxFilesPerTrigger: Int, checkpoint: String,
+      sink: Either[String, DataFrame => Unit], stateful: Boolean = true,
+      useRocksDb: Boolean = false)(transform: Seq[DataFrame] => Dataset[_]): Unit = {
+    val s = if (!stateful) spark else {
+      val child = spark.newSession()
+      child.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
       // RocksDB state store: the provider that survives production key
       // cardinality. HDFSBackedStateStoreProvider holds every key's
       // state in executor heap (state size IS the OOM at 10^9 keys);
       // RocksDB keeps a bounded block cache and spills to local SSD,
       // checkpointing changelogs to the checkpoint dir. Output is
       // provider-independent (StreamingSpec gates equality).
-      if (useRocksDb) s2.conf.set(
+      if (useRocksDb) child.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s2
+      child
     }
+    val sources = inputs.map(p => s.readStream
+      .schema(s.read.parquet(p).schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(p))
+    val writer = transform(sources).toDF().writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+    val sinkWriter = sink match {
+      case Left(path) => writer.format("parquet").option("path", path)
+      case Right(f) => writer.foreachBatch((batch: DataFrame, _: Long) => f(batch))
+    }
+    sinkWriter.start().awaitTermination()
+  }
+
+  /** Lands `df` as the ONE parquet file `dst`, modified at `mtime`. A
+    * file source forms micro-batches in modification-time order, so
+    * landing files with spaced mtimes and draining at
+    * maxFilesPerTrigger=1 pins the batch sequence a drain sees. The
+    * write is staged in a hidden sibling directory, then moved.
+    */
+  def landFile(df: DataFrame, dst: String, mtime: Long): Unit = {
+    val file = new java.io.File(dst)
+    val stage = new java.io.File(file.getParentFile, s"_stage_${file.getName}")
+    df.coalesce(1).write.parquet(stage.getPath)
+    val part = stage.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, file.toPath)
+    stage.listFiles().foreach(_.delete())
+    stage.delete()
+    require(file.setLastModified(mtime), s"setLastModified failed: $dst")
+  }
 
   /** Streaming exact dedup: keep the first arrival per checksum, drop
     * later duplicates until the watermark passes — the streaming
@@ -63,22 +115,9 @@ object StreamingState {
     */
   def dedupRunOnce(spark: SparkSession, inputPath: String, outPath: String,
       checkpoint: String, watermark: String = "1 hour",
-      shufflePartitions: Option[Int] = None,
-      useRocksDb: Boolean = false): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb)
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 64)
-      .parquet(inputPath)
-    val q = dedupByChecksum(src, watermark).writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      useRocksDb: Boolean = false): Unit =
+    drain(spark, Seq(inputPath), 64, checkpoint, Left(outPath), useRocksDb = useRocksDb)(
+      srcs => dedupByChecksum(srcs.head, watermark))
 
   /** One AvailableNow drain of a watermarked tumbling-window count —
     * the windowed-aggregation third of the streaming surface (dedup
@@ -90,27 +129,14 @@ object StreamingState {
     */
   def windowedCountsRunOnce(spark: SparkSession, inputPath: String,
       outPath: String, checkpoint: String, tsCol: String, keyCol: String,
-      windowDur: String = "1 hour", delay: String = "30 minutes",
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions)
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 64)
-      .parquet(inputPath)
-    val agg = src.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), windowDur), col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col(keyCol), col("cnt"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      windowDur: String = "1 hour", delay: String = "30 minutes"): Unit =
+    drain(spark, Seq(inputPath), 64, checkpoint, Left(outPath)) { srcs =>
+      srcs.head.withWatermark(tsCol, delay)
+        .groupBy(window(col(tsCol), windowDur), col(keyCol))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
+          col(keyCol), col("cnt"))
+    }
 
   /** Built-in session-window aggregation drain — Spark's native
     * `session_window(ts, gap)` grouping (dynamic-width windows that
@@ -128,27 +154,14 @@ object StreamingState {
     */
   def sessionWindowCountsRunOnce(spark: SparkSession, inputPath: String,
       outPath: String, checkpoint: String, tsCol: String, keyCol: String,
-      gap: String = "30 minutes", delay: String = "30 minutes",
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions)
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 64)
-      .parquet(inputPath)
-    val agg = src.withWatermark(tsCol, delay)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("w_start"),
-        col("session_window.end").as("w_end"), col(keyCol), col("n_events"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      gap: String = "30 minutes", delay: String = "30 minutes"): Unit =
+    drain(spark, Seq(inputPath), 64, checkpoint, Left(outPath)) { srcs =>
+      srcs.head.withWatermark(tsCol, delay)
+        .groupBy(session_window(col(tsCol), gap), col(keyCol))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("session_window.start").as("w_start"),
+          col("session_window.end").as("w_end"), col(keyCol), col("n_events"))
+    }
 
   /** foreachBatch MERGE sink drain — the production "stream of deltas
     * maintains a lakehouse table" pattern: each micro-batch MERGEs
@@ -169,25 +182,12 @@ object StreamingState {
     */
   def mergeSinkRunOnce(spark: SparkSession, inputPath: String,
       table: String, keyCol: String, deleteCol: String,
-      checkpoint: String, shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions)
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val target = graft.lineage.ParquetCatalog.readCurrent(s, table)
-        graft.lineage.ParquetCatalog.overwrite(
-          graft.lineage.MergeUpsert.merge(target, batch.toDF(), keyCol, deleteCol),
-          table)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(spark, Seq(inputPath), 1, checkpoint, Right { batch =>
+      val target = graft.lineage.ParquetCatalog.readCurrent(batch.sparkSession, table)
+      graft.lineage.ParquetCatalog.overwrite(
+        graft.lineage.MergeUpsert.merge(target, batch, keyCol, deleteCol), table)
+    })(_.head)
 
   /** Stream-static enrichment drain: every streamed row inner-joins a
     * static dimension frame on `keyCol` — the canonical pattern for
@@ -200,105 +200,51 @@ object StreamingState {
     */
   def enrichRunOnce(spark: SparkSession, inputPath: String,
       staticDim: DataFrame, keyCol: String, outPath: String,
-      checkpoint: String): Unit = {
-    val schema = spark.read.parquet(inputPath).schema
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 64)
-      .parquet(inputPath)
-    val q = src.join(broadcast(staticDim), Seq(keyCol))
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drain(spark, Seq(inputPath), 64, checkpoint, Left(outPath), stateful = false)(
+      _.head.join(broadcast(staticDim), Seq(keyCol)))
 
-  /** Stream-stream inner join drain: two firehoses (e.g. document
-    * creations and their async quality scores) joined on a key with an
-    * event-time range bound — the fourth Structured Streaming join
-    * surface (after stream-static, windowed agg, and stateful dedup).
-    * Both sides are watermarked and the join condition carries the
-    * time-range constraint, which is what lets Spark EVICT buffered
-    * rows: a left row older than (watermark - rangeMax) can never
-    * match a future right row, so state stays bounded on an unbounded
-    * stream — without the range bound the buffers grow forever, the
-    * 10^12-doc failure mode. Inner semantics: unmatched rows on either
-    * side simply never emit.
+  /** Stream-stream join drain: two firehoses (e.g. document creations
+    * and their async quality scores) joined on a key with an event-time
+    * range bound — the fourth Structured Streaming join surface (after
+    * stream-static, windowed agg, and stateful dedup). Both sides are
+    * watermarked and the join condition carries the time-range
+    * constraint, which is what lets Spark EVICT buffered rows: a left
+    * row older than (watermark - rangeMax) can never match a future
+    * right row, so state stays bounded on an unbounded stream — without
+    * the range bound the buffers grow forever, the 10^12-doc failure
+    * mode.
+    *
+    * `joinType` "inner": unmatched rows on either side simply never
+    * emit. "leftOuter", the trickiest surface: an unmatched left row
+    * can only emit its null-padded result once the GLOBAL watermark
+    * (min across both sources) proves no future right row can match it
+    * (wm > l_ts + rangeMax), and the emission happens in a LATER
+    * micro-batch than the one that raised the watermark. An AvailableNow
+    * drain therefore needs rows arriving AFTER the real data on BOTH
+    * sides — the caller appends far-future sentinel files (two, so a
+    * batch exists after the watermark-raising one) with strictly
+    * increasing modification times, and maxFilesPerTrigger=1 makes each
+    * file its own batch in mtime order. Without the range bound or the
+    * sentinels, unmatched rows sit in state forever — the
+    * silent-incompleteness failure mode this drain exists to pin.
+    * Both join types read one file per side per micro-batch, so a
+    * landing of one file per side is one batch.
     *
     * Left schema must carry (`keyCol`, l_ts), right (r_`keyCol`,
     * r_ts); rangeMaxSec bounds r_ts - l_ts in [0, rangeMaxSec].
     */
   def streamStreamJoinRunOnce(spark: SparkSession, leftPath: String,
       rightPath: String, keyCol: String, outPath: String, checkpoint: String,
-      rangeMaxSec: Long, delay: String = "30 minutes",
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions)
-    val lSchema = s.read.parquet(leftPath).schema
-    val rSchema = s.read.parquet(rightPath).schema
-    val l = s.readStream.schema(lSchema)
-      .option("maxFilesPerTrigger", 64).parquet(leftPath)
-      .withWatermark("l_ts", delay)
-    val r = s.readStream.schema(rSchema)
-      .option("maxFilesPerTrigger", 64).parquet(rightPath)
-      .withWatermark("r_ts", delay)
-    val joined = l.join(r,
-      col(keyCol) === col(s"r_$keyCol") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + org.apache.spark.sql.functions
-          .expr(s"INTERVAL $rangeMaxSec SECONDS"))
-    val q = joined.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Stream-stream LEFT OUTER join drain — the fifth join surface and
-    * the trickiest: an unmatched left row can only emit its null-padded
-    * result once the GLOBAL watermark (min across both sources) proves
-    * no future right row can match it (wm > l_ts + rangeMax), and the
-    * emission happens in a LATER micro-batch than the one that raised
-    * the watermark. An AvailableNow drain therefore needs rows arriving
-    * AFTER the real data on BOTH sides — the caller appends far-future
-    * sentinel files (two, so a batch exists after the watermark-raising
-    * one) with strictly increasing modification times, and
-    * `maxFilesPerTrigger=1` makes each file its own batch in mtime
-    * order. Without the range bound or the sentinels, unmatched rows sit
-    * in state forever — the silent-incompleteness failure mode this
-    * drain exists to pin.
-    */
-  def streamStreamLeftOuterRunOnce(spark: SparkSession, leftPath: String,
-      rightPath: String, keyCol: String, outPath: String, checkpoint: String,
-      rangeMaxSec: Long, delay: String = "30 minutes",
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions)
-    val lSchema = s.read.parquet(leftPath).schema
-    val rSchema = s.read.parquet(rightPath).schema
-    val l = s.readStream.schema(lSchema)
-      .option("maxFilesPerTrigger", 1).parquet(leftPath)
-      .withWatermark("l_ts", delay)
-    val r = s.readStream.schema(rSchema)
-      .option("maxFilesPerTrigger", 1).parquet(rightPath)
-      .withWatermark("r_ts", delay)
-    val joined = l.join(r,
-      col(keyCol) === col(s"r_$keyCol") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + org.apache.spark.sql.functions
-          .expr(s"INTERVAL $rangeMaxSec SECONDS"),
-      "leftOuter")
-    val q = joined.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      rangeMaxSec: Long, joinType: String = "inner",
+      delay: String = "30 minutes"): Unit =
+    drain(spark, Seq(leftPath, rightPath), 1, checkpoint, Left(outPath)) { srcs =>
+      srcs(0).withWatermark("l_ts", delay).join(srcs(1).withWatermark("r_ts", delay),
+        col(keyCol) === col(s"r_$keyCol") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $rangeMaxSec SECONDS"),
+        joinType)
+    }
 
   final case class UserEvent(user_id: Long, ts: java.sql.Timestamp)
   final case class SessionState(start: Long, end: Long, n: Long)
@@ -367,26 +313,13 @@ object StreamingState {
   def sessionizeRunOnce(spark: SparkSession, inputPath: String,
       outPath: String, checkpoint: String, gapSec: Long,
       watermarkDelay: String = "10 seconds",
-      shufflePartitions: Option[Int] = None,
-      useRocksDb: Boolean = false): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb)
-    import s.implicits._
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-      .as[UserEvent]
-    val q = sessionize(s, src, gapSec, watermarkDelay)
-      .filter(_.user_id >= 0L)
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      useRocksDb: Boolean = false): Unit =
+    drain(spark, Seq(inputPath), 1, checkpoint, Left(outPath), useRocksDb = useRocksDb) { srcs =>
+      val s = srcs.head.sparkSession
+      import s.implicits._
+      sessionize(s, srcs.head.as[UserEvent], gapSec, watermarkDelay)
+        .filter(_.user_id >= 0L)
+    }
 
   final case class UserVal(user_id: Long, cents: Long)
   final case class RunningTotal(user_id: Long, n_events: Long, sum_cents: Long)
@@ -482,31 +415,17 @@ object StreamingState {
     */
   def sessionizeV2RunOnce(spark: SparkSession, inputPath: String,
       outPath: String, checkpoint: String, gapSec: Long,
-      watermarkDelay: String = "10 seconds",
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb = true)
-    import s.implicits._
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-      .as[UserEvent]
-    val q = src
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionV2Processor(gapSec),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .filter(_.user_id >= 0L)
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      watermarkDelay: String = "10 seconds"): Unit =
+    drain(spark, Seq(inputPath), 1, checkpoint, Left(outPath), useRocksDb = true) { srcs =>
+      val s = srcs.head.sparkSession
+      import s.implicits._
+      srcs.head.as[UserEvent]
+        .withWatermark("ts", watermarkDelay)
+        .groupByKey(_.user_id)
+        .transformWithState(new SessionV2Processor(gapSec),
+          TimeMode.EventTime(), OutputMode.Append())
+        .filter(_.user_id >= 0L)
+    }
 
   final case class UserEventVal(user_id: Long, event_id: Long, cents: Long)
   final case class LatestK(user_id: Long, n_seen: Long,
@@ -591,88 +510,21 @@ object StreamingState {
     }
   }
 
-  /** One AvailableNow drain of the type-counts processor (RocksDB
-    * forced; maxFilesPerTrigger=1 for genuine cross-batch map updates).
+  /** One AvailableNow drain of a per-user v2 processor
+    * ([[RunningTotalProcessor]], [[LatestKProcessor]],
+    * [[TypeCountsProcessor]]) over a parquet landing dir of `I` rows,
+    * keyed by `user`. maxFilesPerTrigger=1, so a multi-file landing zone
+    * genuinely exercises state continuity ACROSS micro-batches inside
+    * the one drain. RocksDB is forced: transformWithState only runs on
+    * the RocksDB provider.
     */
-  def typeCountsRunOnce(spark: SparkSession, inputPath: String,
-      outPath: String, checkpoint: String,
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb = true)
-    import s.implicits._
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-      .as[UserTyped]
-    val q = src.groupByKey(_.user_id)
-      .transformWithState(new TypeCountsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow drain of the latest-k processor (RocksDB forced,
-    * transformWithState requires it; maxFilesPerTrigger=1 for genuine
-    * cross-batch list-state merging).
-    */
-  def latestKRunOnce(spark: SparkSession, inputPath: String,
-      outPath: String, checkpoint: String, k: Int,
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb = true)
-    import s.implicits._
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-      .as[UserEventVal]
-    val q = src.groupByKey(_.user_id)
-      .transformWithState(new LatestKProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow drain of the running-total processor over a
-    * parquet landing dir of (user_id, cents) rows — maxFilesPerTrigger=1
-    * so a multi-file landing zone genuinely exercises state continuity
-    * ACROSS micro-batches inside the one drain. RocksDB is forced:
-    * transformWithState only runs on the RocksDB provider.
-    */
-  def runningTotalsRunOnce(spark: SparkSession, inputPath: String,
-      outPath: String, checkpoint: String,
-      shufflePartitions: Option[Int] = None): Unit = {
-    val s = sessionFor(spark, shufflePartitions, useRocksDb = true)
-    import s.implicits._
-    val schema = s.read.parquet(inputPath).schema
-    val src = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputPath)
-      .as[UserVal]
-    val q = src.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def transformWithStateRunOnce[I <: Product : TypeTag, O <: Product : TypeTag](
+      spark: SparkSession, inputPath: String, outPath: String, checkpoint: String,
+      processor: StatefulProcessor[Long, I, O])(user: I => Long): Unit =
+    drain(spark, Seq(inputPath), 1, checkpoint, Left(outPath), useRocksDb = true) { srcs =>
+      val s = srcs.head.sparkSession
+      import s.implicits._
+      srcs.head.as[I].groupByKey(user)
+        .transformWithState(processor, TimeMode.None(), OutputMode.Append())
+    }
 }

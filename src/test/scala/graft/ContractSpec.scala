@@ -100,4 +100,31 @@ class ContractSpec extends AnyFunSuite {
     val lost = counts.keys.filterNot(known).toSeq.sorted
     assert(lost.isEmpty, s"map-entry-shaped keys not present in either map: $lost")
   }
+
+  test("only the streaming drain helper starts and awaits a streaming query") {
+    // every AvailableNow drain goes through StreamingState.drain; a
+    // hand-written writeStream chain elsewhere fails here
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val starters = try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && {
+        val src = java.nio.file.Files.readString(p)
+        src.contains("Trigger.AvailableNow") || src.contains("awaitTermination")
+      })
+      .map(root.relativize(_).toString).toSet
+    finally files.close()
+    assert(starters == Set("graft/streaming/StreamingState.scala"), starters)
+  }
+
+  test("oracleSql is pinned byte for byte") {
+    // the oracle is the contract every query is checked against: a
+    // change to any (key, SQL) pair must be deliberate and re-pinned
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (k, sql) =>
+      sha.update(s"$k\t$sql\n".getBytes("UTF-8"))
+    }
+    val hex = sha.digest().map(b => f"${b & 0xff}%02x").mkString
+    val pinned = "0e62f6f01c16381b37610464a06798844e37f82b45f304938a71f501cc197128"
+    assert(hex == pinned, s"oracleSql changed: sha256 $hex")
+  }
 }

@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 /** Resume semantics (SURVEY.md §5.6): a partial run followed by a resume
   * must process only the remainder and the union must equal a single
   * uninterrupted run's output.
@@ -477,6 +479,40 @@ class LineageSpec extends AnyFunSuite {
     assert(mixed._1 == ((30L, 30L)))
     assert(mixed._2.length == 60)
     assert(mixed == zstd)
+  }
+
+  /** The messages `logger` emits while `body` runs. */
+  private def logged(logger: String)(body: => Any): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { seen.add(e.getMessage.getFormattedMessage); () }
+    }
+    capture.start()
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    log.addAppender(capture)
+    try body finally { log.removeAppender(capture); capture.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("merge-on-read reads its delete files without Spark's ignored-path warning") {
+    import spark.implicits._
+    import graft.lineage.{MorDeletes, ParquetCatalog}
+    val tbl = tmp() + "/mor_warn"
+    ParquetCatalog.append((0L until 10L).toDF("id"), tbl)
+    MorDeletes.commitDelete(Seq(3L, 7L).toDF("id"), tbl, "id")
+    val dataSource = "org.apache.spark.sql.execution.datasources.DataSource"
+    val ignored = "All paths were ignored"
+    // the capture works: handing Spark the hidden directory does warn
+    val direct = logged(dataSource)(spark.read.parquet(s"$tbl/_graft_deletes"))
+    assert(direct.exists(_.contains(ignored)), direct)
+    var rows = Set.empty[Long]
+    val mor = logged(dataSource) {
+      rows = MorDeletes.readCurrent(spark, tbl, "id").as[Long].collect().toSet
+    }
+    assert(rows == (0L until 10L).toSet -- Set(3L, 7L))
+    assert(!mor.exists(_.contains(ignored)), mor)
   }
 
   test("merge-on-read deletes: key-file anti-join, then compaction folds them in") {

@@ -699,6 +699,19 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("media: the JPEG path leaves ImageIO's global cache flag alone") {
+    // Media passes its own memory-cached streams; flipping the JVM-wide
+    // flag would silently change every stock ImageIO.write/read
+    // (sinks/DebugImage) in the same executor. Nothing in the engine
+    // sets it, so it is also still the JDK default.
+    val before = javax.imageio.ImageIO.getUseCache
+    val jpg = Media.encodeImage(4L, Media.widthOf(4L), Media.heightOf(4L), "jpg")
+    assert(Media.decodeImage(jpg) != null)
+    assert(!Media.decodeBytes(Array.fill[Byte](64)(0x5a))._5)
+    assert(javax.imageio.ImageIO.getUseCache == before)
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("media: resize passes corrupt image payloads through instead of failing the task") {
     import spark.implicits._
     val corrupt = Media.MediaBlob(9L, "media://9/0", "png", 40, 30, 1,

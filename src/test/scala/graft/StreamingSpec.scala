@@ -2,8 +2,9 @@ package graft
 
 import graft.extract.Extract
 import graft.fixtures.SpanGen
-import graft.streaming.StreamingExtract
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.streaming.{StreamingExtract, StreamingState}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -79,7 +80,7 @@ class StreamingSpec extends AnyFunSuite {
     def drain(tag: String, rocks: Boolean): Set[String] = {
       graft.streaming.StreamingState.dedupRunOnce(
         spark, base + "/in", s"$base/out_$tag", s"$base/cp_$tag",
-        shufflePartitions = Some(2), useRocksDb = rocks)
+        useRocksDb = rocks)
       spark.read.parquet(s"$base/out_$tag")
         .select("checksum").as[String].collect().toSet
     }
@@ -94,18 +95,10 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingState.Session
     val base = Files.createTempDirectory("graft-sessdrain").toString
     val B = 100000L
-    def landOne(rows: Seq[(Long, Long)], name: String, mtime: Long): Unit = {
-      rows.map { case (u, s) =>
+    def landOne(rows: Seq[(Long, Long)], name: String, mtime: Long): Unit =
+      StreamingState.landFile(rows.map { case (u, s) =>
         (u, new java.sql.Timestamp((B + s) * 1000))
-      }.toDF("user_id", "ts").coalesce(1).write.parquet(s"$base/stage_$name")
-      val part = new java.io.File(s"$base/stage_$name").listFiles()
-        .filter(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$base/in/$name.parquet")
-      dst.getParentFile.mkdirs()
-      Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(mtime))
-    }
+      }.toDF("user_id", "ts"), s"$base/in/$name.parquet", mtime)
     // user 1: gap-split into two sessions (closes inline + by timeout);
     // user 2: one tail session that only a timeout can close
     val now = System.currentTimeMillis()
@@ -114,7 +107,7 @@ class StreamingSpec extends AnyFunSuite {
     landOne(Seq((-1L, 40000001L)), "c", now + 120000)
     graft.streaming.StreamingState.sessionizeRunOnce(
       spark, base + "/in", base + "/out", base + "/cp", gapSec = 30,
-      shufflePartitions = Some(2), useRocksDb = true)
+      useRocksDb = true)
     val got = spark.read.parquet(base + "/out").as[Session].collect().toSet
     assert(got == Set(
       Session(1, B + 0, B + 10, 2),
@@ -174,8 +167,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1100)
     Seq((1L, 40L), (2L, 7L)).toDF("user_id", "cents")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    graft.streaming.StreamingState.runningTotalsRunOnce(
-      spark, s"$root/in", s"$root/out", s"$root/cp", shufflePartitions = Some(2))
+    StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
+      new StreamingState.RunningTotalProcessor)(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val u1 = rows.filter(_._1 == 1L).sortBy(_._2)
@@ -187,8 +180,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1100)
     Seq((2L, 100L)).toDF("user_id", "cents")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    graft.streaming.StreamingState.runningTotalsRunOnce(
-      spark, s"$root/in", s"$root/out", s"$root/cp", shufflePartitions = Some(2))
+    StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
+      new StreamingState.RunningTotalProcessor)(_.user_id)
     val after = spark.read.parquet(s"$root/out")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .filter(_._1 == 2L).maxBy(_._2)
@@ -211,9 +204,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1100)
     Seq((1L, 40L, 400L)).toDF("user_id", "event_id", "cents")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    graft.streaming.StreamingState.latestKRunOnce(
-      spark, s"$root/in", s"$root/out", s"$root/cp", k = 3,
-      shufflePartitions = Some(2))
+    StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
+      new StreamingState.LatestKProcessor(3))(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
       .collect().map(r => (r.getLong(1),
         r.getSeq[Long](2).toList, r.getSeq[Long](3).toList)).sortBy(_._1)
@@ -242,11 +234,9 @@ class StreamingSpec extends AnyFunSuite {
     Seq((-9L, ts(100001))).toDF("user_id", "ts")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
     graft.streaming.StreamingState.sessionizeV2RunOnce(
-      spark, s"$root/in", s"$root/outv2", s"$root/cpv2", gapSec = 1000L,
-      shufflePartitions = Some(2))
+      spark, s"$root/in", s"$root/outv2", s"$root/cpv2", gapSec = 1000L)
     graft.streaming.StreamingState.sessionizeRunOnce(
-      spark, s"$root/in", s"$root/outv1", s"$root/cpv1", gapSec = 1000L,
-      shufflePartitions = Some(2))
+      spark, s"$root/in", s"$root/outv1", s"$root/cpv1", gapSec = 1000L)
     def readOut(p: String) = spark.read.parquet(p)
       .filter(org.apache.spark.sql.functions.col("user_id") >= 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -264,8 +254,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1100)
     Seq((1L, "view"), (1L, "purchase")).toDF("user_id", "event_type")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    graft.streaming.StreamingState.typeCountsRunOnce(
-      spark, s"$root/in", s"$root/out", s"$root/cp", shufflePartitions = Some(2))
+    StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
+      new StreamingState.TypeCountsProcessor)(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
       .collect().map(r => (r.getLong(1),
         r.getSeq[String](2).toList, r.getSeq[Long](3).toList)).sortBy(_._1)
@@ -280,24 +270,15 @@ class StreamingSpec extends AnyFunSuite {
     val table = s"$root/tbl"
     graft.lineage.ParquetCatalog.append(
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("doc_id", "v"), table)
-    def land(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val stage = s"$root/stage_$name"
-      df.coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$root/in/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(mtime))
-    }
+    def land(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit =
+      StreamingState.landFile(df, s"$root/in/$name.parquet", mtime)
     val now = System.currentTimeMillis()
     // batch 1: update doc 1; batch 2: delete doc 2, insert doc 9
     land(Seq((1L, 11L, false)).toDF("doc_id", "v", "_deleted"), "a", now)
     land(Seq((2L, 0L, true), (9L, 90L, false)).toDF("doc_id", "v", "_deleted"),
       "b", now + 60000L)
     graft.streaming.StreamingState.mergeSinkRunOnce(
-      spark, s"$root/in", table, "doc_id", "_deleted", s"$root/cp",
-      shufflePartitions = Some(2))
+      spark, s"$root/in", table, "doc_id", "_deleted", s"$root/cp")
     def current = graft.lineage.ParquetCatalog.readCurrent(spark, table)
       .as[(Long, Long)].collect().toSet
     assert(current == Set((1L, 11L), (3L, 30L), (9L, 90L)))
@@ -305,12 +286,70 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.lineage.ParquetCatalog.snapshots(spark, table).size == 3)
     // replay with the same checkpoint: nothing new to process, table unchanged
     graft.streaming.StreamingState.mergeSinkRunOnce(
-      spark, s"$root/in", table, "doc_id", "_deleted", s"$root/cp",
-      shufflePartitions = Some(2))
+      spark, s"$root/in", table, "doc_id", "_deleted", s"$root/cp")
     assert(current == Set((1L, 11L), (3L, 30L), (9L, 90L)))
     assert(graft.lineage.ParquetCatalog.snapshots(spark, table).size == 3)
     // time travel: the pre-merge base is intact at snapshot 1
     assert(graft.lineage.ParquetCatalog.readAsOf(spark, table, 1L)
       .as[(Long, Long)].collect().toSet == Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
+  /** A tiny two-sided join landing, one file per side: left (doc_id,
+    * l_ts, lang) and right (r_doc_id, r_ts, score). Right lags put rows
+    * on both sides of the 600 s range bound. With `sentinels`, two
+    * far-future files per side (keys -1, -2) follow in mtime order.
+    * Returns the root and the real left and right rows.
+    */
+  private def joinLanding(sentinels: Boolean): (String, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_ssjoin_test").toString
+    def ts(sec: Long) = new java.sql.Timestamp((1700000000L + sec) * 1000)
+    val left = (1L to 6L).map(k => (k, ts(k * 10), s"l$k")).toDF("doc_id", "l_ts", "lang")
+    // key 1 matches twice, 3 sits on the inclusive bound, 4 and 5 fall
+    // outside the range, 6 has no right row, 7 no left row
+    val right = Seq((1L, 0L), (1L, 100L), (2L, 300L), (3L, 600L), (4L, 601L),
+        (5L, -1L), (7L, 0L))
+      .map { case (k, lag) => (k, ts(k * 10 + lag), k * 1000 + lag) }
+      .toDF("r_doc_id", "r_ts", "score")
+    val tail = if (sentinels) Seq(-1L -> 300000L, -2L -> 400000L) else Nil
+    val lefts = left +: tail.map { case (k, sec) =>
+      Seq((k, ts(sec), "xx")).toDF("doc_id", "l_ts", "lang") }
+    val rights = right +: tail.map { case (k, sec) =>
+      Seq((k, ts(sec), 0L)).toDF("r_doc_id", "r_ts", "score") }
+    val now = System.currentTimeMillis()
+    for ((side, files) <- Seq("left" -> lefts, "right" -> rights); (df, i) <- files.zipWithIndex)
+      StreamingState.landFile(df, s"$root/$side/part-$i.parquet", now + i * 60000L)
+    (root, left, right)
+  }
+
+  private val joinCols = Seq("doc_id", "l_ts", "r_ts", "lang", "score")
+
+  /** The batch range join the stream-stream drains must equal. */
+  private def batchRangeJoin(left: DataFrame, right: DataFrame, joinType: String): Set[Row] =
+    left.join(right, col("doc_id") === col("r_doc_id") && col("r_ts") >= col("l_ts") &&
+        col("r_ts") <= col("l_ts") + expr("INTERVAL 600 SECONDS"), joinType)
+      .select(joinCols.map(col): _*).collect().toSet
+
+  test("stream-stream inner join drain equals the batch range join") {
+    val (root, left, right) = joinLanding(sentinels = false)
+    StreamingState.streamStreamJoinRunOnce(spark, s"$root/left", s"$root/right",
+      "doc_id", s"$root/out", s"$root/cp", rangeMaxSec = 600L)
+    val got = spark.read.parquet(s"$root/out").select(joinCols.map(col): _*).collect().toSet
+    val want = batchRangeJoin(left, right, "inner")
+    assert(want.map(_.getLong(0)) == Set(1L, 2L, 3L) && want.size == 4, want.toString)
+    assert(got == want, got.toString)
+  }
+
+  test("stream-stream left outer join drain equals the batch left join, sentinels removed") {
+    val (root, left, right) = joinLanding(sentinels = true)
+    StreamingState.streamStreamJoinRunOnce(spark, s"$root/left", s"$root/right",
+      "doc_id", s"$root/out", s"$root/cp", rangeMaxSec = 600L, joinType = "leftOuter")
+    val got = spark.read.parquet(s"$root/out")
+      .filter(col("doc_id") >= 0)
+      .select(joinCols.map(col): _*).collect().toSet
+    val want = batchRangeJoin(left, right, "leftOuter")
+    // 4 matches plus keys 4, 5 and 6 null-padded
+    assert(want.size == 7 && want.count(_.isNullAt(2)) == 3, want.toString)
+    assert(got == want, got.toString)
   }
 }
