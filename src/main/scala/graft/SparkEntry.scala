@@ -104,14 +104,11 @@ object SparkEntry {
     * pair), so the checkpoint is metadata-sized; Bench unpersists all
     * leftover blocks after every query.
     */
-  private def winnowPairsCp(s: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.dedup.Winnow.candidatePairs(
+  private def winnowPairsCp(s: SparkSession, dir: String): DataFrame =
+    Rounds.checkpoint(graft.dedup.Winnow.candidatePairs(
       graft.dedup.Winnow.fingerprints(
         s.read.parquet(t(dir, "documents")), "doc_id", "text", k = 4, w = 4),
-      minShared = 2)
-    val (cp, _) = graft.dedup.Dedup.checkpointOwned(pairs)
-    cp
-  }
+      minShared = 2))
 
   /** Landing-zone roots by key, one per key per JVM: the materialized
     * input copy (the big part) that drains and file-source queries
@@ -2364,7 +2361,7 @@ object SparkEntry {
       // one row per doc — materialized once so the bigram-LM scoring
       // pipeline doesn't re-execute on both branches of the diamond
       // (tercile cuts below + the final bucket join both read it)
-      val (scores, _) = graft.dedup.Dedup.checkpointOwned(
+      val scores = Rounds.checkpoint(
         graft.textops.LangModel.scoreDocs(docs, "doc_id", "text")
           .filter(col("n_bigrams") > 0)
           .join(docs.select(col("doc_id"), col("lang")), "doc_id")
@@ -2720,7 +2717,7 @@ object SparkEntry {
       // diff's left side, the mutated copy, the injected-extra rows);
       // materialize it once instead of re-running span synthesis +
       // extraction per branch (was ~3x the single-pass task-CPU)
-      val (withMax, _) = graft.dedup.Dedup.checkpointOwned(
+      val withMax = Rounds.checkpoint(
         extractExprFlat(s, dir)
           .select("doc_id", "offset", "kind", "text", "media_ref")
           .withColumn("__mx",
@@ -2780,7 +2777,7 @@ object SparkEntry {
       // (d, term, cnt) is read twice (day universe + the served
       // explode); materialize the aggregated frame once so the
       // tokenize+explode+count pipeline underneath runs once
-      val (tok, _) = graft.dedup.Dedup.checkpointOwned(
+      val tok = Rounds.checkpoint(
         graft.Parallelize.bySplits(
             s.read.parquet(t(dir, "documents"))
               .select(col("doc_id"), col("text")), "doc_id")
@@ -2929,7 +2926,7 @@ object SparkEntry {
       // the media-ref frame feeds both the audit side and the seeded
       // inventory below; materialize it once so the span synthesis +
       // explode doesn't run per branch
-      val (refs, _) = graft.dedup.Dedup.checkpointOwned(
+      val refs = Rounds.checkpoint(
         SpanGen.fromDocuments(s, dir).toDF()
           .select(explode(col("spans")).as("sp"))
           .filter(col("sp.kind") === "media")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Rounds
 import graft.textops.TextOps
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -323,9 +324,7 @@ object Dedup {
     // own the cleanup (nearDupClusters does).
     val (pairs, sigs) =
       minhashNearDupsWithSigs(docs, idCol, textCol, n, k, bands, threshold)
-    val (out, _) = checkpointOwned(pairs)
-    sigs.unpersist(blocking = false)
-    out
+    try Rounds.checkpoint(pairs) finally sigs.unpersist(blocking = false)
   }
 
   /** As minhashNearDups, also returning the persisted signature frame so
@@ -372,7 +371,7 @@ object Dedup {
     // the candidate-pair frame is read twice below (the exact-Jaccard
     // intersection join and the final assembly); checkpoint it so the
     // banded self-join + rerank runs once — pairs are few and narrow
-    val (pairs, _) = checkpointOwned(
+    val pairs = Rounds.checkpoint(
       minhashCandidates(sigs, bands, k / bands, maxBucketSize)
         .withColumn("n_match",
           size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
@@ -404,10 +403,8 @@ object Dedup {
         col("n_common"), col("n_a"), col("n_b"),
         exact.as("exact_jaccard"),
         (col("est_jaccard") - exact).as("err"))
-    val (cp, _) = checkpointOwned(out)
-    sigs.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    cp
+    try Rounds.checkpoint(out)
+    finally { sigs.unpersist(blocking = false); sh.unpersist(blocking = false) }
   }
 
   /** SimHash fingerprint width: 60 bits (15 hex chars of md5 per token —
@@ -599,119 +596,69 @@ object Dedup {
     * (and same localCheckpoint-vs-checkpoint trade-off) as
     * [[connectedComponentsJump]]. Returns (labels, rounds).
     */
-  /** Checkpoint plus the precise ids of the RDD blocks it owns, read
-    * from the LogicalRDD the checkpointed Dataset wraps. Diffing
-    * sc.getPersistentRDDs around the action instead would also capture
-    * FOREIGN caches that happen to first materialize inside it (a
-    * caller-persisted input, a concurrent job's cache in the same
-    * session) and later unpersist blocks this algorithm does not own.
-    *
-    * Mode: `localCheckpoint` by default — fastest, executor-storage,
-    * but UNRECOVERABLE on executor loss (the job fails instead of
-    * recomputing). On a real cluster set the session conf
-    * `graft.checkpoint.reliable=true` (and `sc.setCheckpointDir` to a
-    * fault-tolerant FS): rounds then cut lineage through reliable
-    * checkpoint files and survive executor loss — the multi-hour
-    * iterative-job setting at 10^12 edges. Gated in ClusterSpec.
-    */
-  private[graft] def checkpointOwned(df: DataFrame): (DataFrame, Set[Int]) = {
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.getOption("graft.checkpoint.reliable").exists(_.toBoolean)
-    if (reliable) {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        "graft.checkpoint.reliable=true needs sc.setCheckpointDir(...)")
-      // reliable checkpoints are files, not persisted blocks: nothing
-      // to unpersist (the context cleaner reclaims the files)
-      (df.checkpoint(), Set.empty[Int])
-    } else {
-      val cp = df.localCheckpoint()
-      val ids = cp.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }.toSet
-      (cp, ids)
-    }
-  }
-
-  private[graft] def unpersistOwned(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (ids(id)) rdd.unpersist(blocking = false)
-    }
-
   private[graft] def connectedComponentsStar(pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
       maxIters: Int = 25): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
     // ONE materialization of the (potentially expensive) upstream pair
     // pipeline; the node universe and the edge set both derive from it
     // — deriving each straight from `pairs` would execute the whole
     // candidate-generation lineage twice
-    val (base, baseIds) = checkpointOwned(
+    val base = Rounds.checkpoint(
       pairs.select(col(idA).cast("long").as("a"), col(idB).cast("long").as("b")))
     // node universe up front: self-loop-only nodes never enter the edge
     // iteration but still label themselves in the output
-    val (nodes, _) = checkpointOwned(
+    val nodes = Rounds.checkpoint(
       base.select(col("a").as("id"))
         .union(base.select(col("b").as("id")))
         .distinct())
-    var (edges, frontierIds) = checkpointOwned(
+    val edges0 = Rounds.checkpoint(
       base.filter(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
         .distinct())
-    unpersistOwned(sc, baseIds)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      // large-star over the symmetrized neighborhood; emitted (v, m) has
-      // v > u >= m, so output is canonical-downhill and self-loop-free
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lmins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-      val (large, largeIds) = checkpointOwned(
-        sym.join(lmins, "u")
-          .filter(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .distinct())
-      // small-star: canonical edges already key each u to its smaller
-      // neighbors; m = their min, re-link u and every other neighbor
-      val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val (next, smallIds) = checkpointOwned(
-        large.join(smins, "u")
-          .filter(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .union(smins.select(col("u"), col("m").as("v")))
-          .distinct())
-      // path-halving, fused into the round: relink every edge's head to
-      // the head's own min parent, KEEPING the (head, parent) witness
-      // edge so the rewrite stays connectivity-safe on multi-parent
-      // nodes — u—v becomes u—p(v) plus v—p(v), still one component.
-      // Star phases halve chain depth once per round; this halves it
-      // again for one extra groupBy+join, which is what makes the round
-      // count beat plain pointer jumping on high-diameter graphs
-      // (ClusterSpec measures both).
-      val parents = next.groupBy(col("u")).agg(min(col("v")).as("p"))
-      val (halved, nextIds) = checkpointOwned(
+    Rounds.release(base)
+    // fixed point: the round reproduced its input edge set
+    val (forest, rounds) = Rounds.iterate(edges0, maxIters, Rounds.SameRows) {
+      (edges, materialize) =>
+        // large-star over the symmetrized neighborhood; emitted (v, m) has
+        // v > u >= m, so output is canonical-downhill and self-loop-free
+        val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val lmins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
+        val large = materialize(
+          sym.join(lmins, "u")
+            .filter(col("v") > col("u"))
+            .select(col("v").as("u"), col("m").as("v"))
+            .distinct())
+        // small-star: canonical edges already key each u to its smaller
+        // neighbors; m = their min, re-link u and every other neighbor
+        val smins = large.groupBy("u").agg(min(col("v")).as("m"))
+        val next = materialize(
+          large.join(smins, "u")
+            .filter(col("v") =!= col("m"))
+            .select(col("v").as("u"), col("m").as("v"))
+            .union(smins.select(col("u"), col("m").as("v")))
+            .distinct())
+        // path-halving, fused into the round: relink every edge's head to
+        // the head's own min parent, KEEPING the (head, parent) witness
+        // edge so the rewrite stays connectivity-safe on multi-parent
+        // nodes — u—v becomes u—p(v) plus v—p(v), still one component.
+        // Star phases halve chain depth once per round; this halves it
+        // again for one extra groupBy+join, which is what makes the round
+        // count beat plain pointer jumping on high-diameter graphs
+        // (ClusterSpec measures both).
+        val parents = next.groupBy(col("u")).agg(min(col("v")).as("p"))
         next
           .join(parents.select(col("u").as("v"), col("p")), Seq("v"), "left")
           .select(col("u"), coalesce(col("p"), col("v")).as("v"))
           .union(parents.select(col("u"), col("p").as("v")))
-          .distinct())
-      unpersistOwned(sc, largeIds ++ smallIds)
-      // fixed point: the round reproduced its input edge set
-      // (|halved \ edges| = 0 and equal counts => set equality)
-      converged = halved.except(edges).isEmpty && halved.count() == edges.count()
-      unpersistOwned(sc, frontierIds)
-      frontierIds = nextIds
-      edges = halved
-      iter += 1
+          .distinct()
     }
-    require(converged, s"connectedComponentsStar did not converge in $maxIters rounds")
     // star forest: every non-center node has exactly one downhill edge to
     // its component min; centers (and self-loop-only nodes) label = self
     val labels = nodes
-      .join(edges.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
+      .join(forest.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("label"), col("id")).as("cluster_id"))
-    (labels, iter)
+    (labels, rounds)
   }
 
   /** Pointer-jumping connected components — the production default (see
@@ -727,79 +674,60 @@ object Dedup {
     * (same doubling idea as Kiveris et al., "Connected Components in
     * MapReduce and Beyond", SoCC 2014), vs O(diameter) for plain
     * propagation. Near-dup graphs are forests of shallow dense blobs,
-    * so in practice 3-5 rounds. Each round localCheckpoints the label
-    * frontier (keeps the lineage flat across iterations) and runs one
-    * action for convergence detection; superseded rounds' checkpoint
-    * blocks are unpersisted as soon as the next frontier materializes,
-    * so executor storage holds O(1) frontiers, not one per round.
-    * Trade-off, documented: localCheckpoint blocks are UNRECOVERABLE on
-    * executor loss — the job fails and restarts instead of recomputing.
-    * That is the right call single-host (this sandbox) and for short
-    * O(log d) loops; on a long-running real cluster swap the
-    * localCheckpoint calls for reliable `checkpoint()` against a
-    * cluster-visible checkpoint dir — same lineage truncation, blocks
-    * recompute from the checkpoint files on loss.
+    * so in practice 3-5 rounds. The rounds run through
+    * [[graft.Rounds.iterate]]: each checkpoints the label frontier
+    * (keeps the lineage flat across iterations) and counts the changed
+    * labels on that same pass; superseded rounds' checkpoint blocks are
+    * unpersisted as soon as the next frontier materializes, so executor
+    * storage holds O(1) frontiers, not one per round. The
+    * localCheckpoint-vs-reliable trade-off is [[graft.Rounds]]'s.
     */
   private[graft] def connectedComponentsJump(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIters: Int = 25): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
     // one materialization of the (potentially expensive) upstream pair
     // pipeline — the symmetrizing union below reads `half` twice, and
     // without this checkpoint each branch would re-execute the whole
     // candidate-generation lineage (measured: the single largest cost
-    // of the round-2 driver bench's q_dedup_cluster). Each checkpoint's
-    // own block ids come from checkpointOwned, so superseded frames are
-    // dropped without sweeping foreign caches.
-    val (half, halfIds) = checkpointOwned(
+    // of the round-2 driver bench's q_dedup_cluster)
+    val half = Rounds.checkpoint(
       pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v")))
     // edges hash-partitioned on the probe key v once, BEFORE the
     // checkpoint (localCheckpoint preserves outputPartitioning): every
     // round's neighbor join then reuses this layout and only the label
     // frontier — never the edge set — shuffles per round
-    val (edges, _) = checkpointOwned(
+    val edges = Rounds.checkpoint(
       half.union(half.select(col("v").as("u"), col("u").as("v")))
         .repartition(col("v")))
-    // edges is materialized; half's blocks are no longer referenced
-    unpersistOwned(sc, halfIds)
+    Rounds.release(half)
     // seed labels with round 1's relax fused in: label(u) = min(u, N(u))
-    // comes free from the same groupBy that enumerates the nodes.
-    // frontierIds = blocks backing the CURRENT labels frontier —
-    // superseded (and dropped) when the next round's materializes
-    var (labels, frontierIds) = checkpointOwned(
+    // comes free from the same groupBy that enumerates the nodes
+    val seed = Rounds.checkpoint(
       edges.groupBy(col("u"))
         .agg(least(min(col("v")), col("u")).as("label"))
         .select(col("u").as("id"), col("label")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val nbrMin = edges.join(labels.withColumnRenamed("id", "v"), "v")
-        .groupBy(col("u").as("id")).agg(min("label").as("nb_label"))
-      // materialized once per round: both sides of the pointer-jump
-      // self-join read it, which would otherwise recompute the relax
-      // join (and the neighbor join underneath it) twice
-      val (relaxed, relaxedIds) = checkpointOwned(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nb_label"), col("label"))).as("label")))
-      // pointer jumping: follow the label one hop (labels are node ids,
-      // so every label value has a row; left join guards the root case).
-      // The previous round's label rides along so convergence detection
-      // is a filter+count on the checkpointed frontier, not another join.
-      val (next, nextIds) = checkpointOwned(
-        relaxed.as("x")
-          .join(relaxed.select(col("id").as("label"), col("label").as("ll")).as("y"),
-            Seq("label"), "left")
-          .select(col("id"), col("prev"), coalesce(col("ll"), col("label")).as("label")))
-      // next is materialized: the round's relaxed intermediate and the
-      // previous frontier are superseded — drop their blocks now
-      unpersistOwned(sc, relaxedIds ++ frontierIds)
-      frontierIds = nextIds
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
-      labels = next.select(col("id"), col("label"))
-      iter += 1
-    }
-    require(converged, s"connectedComponentsJump did not converge in $maxIters rounds")
-    (labels.select(col("id").as("doc_id"), col("label").as("cluster_id")), iter)
+    // the previous round's label rides along in `prev`, so convergence
+    // is a count observed on the frontier's own checkpoint pass
+    val (fixed, rounds) =
+      Rounds.iterate(seed, maxIters, Rounds.NoneChanged(col("label") =!= col("prev"))) {
+        (labels, materialize) =>
+          val nbrMin = edges.join(labels.select(col("id").as("v"), col("label")), "v")
+            .groupBy(col("u").as("id")).agg(min("label").as("nb_label"))
+          // materialized once per round: both sides of the pointer-jump
+          // self-join read it, which would otherwise recompute the relax
+          // join (and the neighbor join underneath it) twice
+          val relaxed = materialize(
+            labels.join(nbrMin, Seq("id"), "left")
+              .select(col("id"), col("label").as("prev"),
+                least(col("label"), coalesce(col("nb_label"), col("label"))).as("label")))
+          // pointer jumping: follow the label one hop (labels are node ids,
+          // so every label value has a row; left join guards the root case)
+          relaxed.as("x")
+            .join(relaxed.select(col("id").as("label"), col("label").as("ll")).as("y"),
+              Seq("label"), "left")
+            .select(col("id"), col("prev"), coalesce(col("ll"), col("label")).as("label"))
+      }
+    Rounds.release(edges)
+    (fixed.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** End-to-end near-dup grouping: MinHash+LSH candidate pairs ->

@@ -78,8 +78,6 @@ object Incremental {
           .as("dup_source"),
         col("n_match"),
         (col("n_match").cast("double") / k).as("est_jaccard"))
-    val (cp, _) = Dedup.checkpointOwned(out)
-    sigsTagged.unpersist(blocking = false)
-    cp
+    try graft.Rounds.checkpoint(out) finally sigsTagged.unpersist(blocking = false)
   }
 }

@@ -81,7 +81,7 @@ object Eval {
     // q_cohen_kappa — measured ~3x its single-pass task-CPU without
     // this) never re-executes per branch. |classes|^2 rows — the
     // checkpoint is metadata-sized.
-    val (cm, _) = graft.dedup.Dedup.checkpointOwned(
+    val cm = graft.Rounds.checkpoint(
       df.groupBy(col(aCol).as("ra"), col(bCol).as("rb"))
         .agg(count(lit(1)).as("c")))
     val tot = cm.agg(sum(col("c")).as("n"),

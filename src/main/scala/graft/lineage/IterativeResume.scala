@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * costs at most the in-flight round, and the resumed run replays
   * completed rounds from the table instead of recomputing them.
   * Reading each round back from parquet also cuts the lineage chain —
-  * this is the durable sibling of the localCheckpoint discipline in
-  * `Dedup.connectedComponents` (which trades executor-loss recovery
-  * for speed; this trades a write per round for full restartability).
+  * this is the durable sibling of the localCheckpoint rounds of
+  * `graft.Rounds.iterate` (which trade executor-loss recovery for
+  * speed; this trades a write per round for full restartability).
   *
   * Layout: round k lives at `<root>/round=<k>`; a round counts as
   * committed only when Spark's committer has written its `_SUCCESS`

@@ -201,8 +201,6 @@ object Phash {
         .as("hamming"))
       .filter(col("hamming") <= maxDist)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    val (cp, _) = graft.dedup.Dedup.checkpointOwned(out)
-    bands.unpersist(blocking = false)
-    cp
+    try graft.Rounds.checkpoint(out) finally bands.unpersist(blocking = false)
   }
 }

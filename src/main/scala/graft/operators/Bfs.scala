@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   * visited set to keep the frontier minimal. Work per round is
   * O(frontier out-degree), not O(V); rounds = maxHops, so the total
   * shuffle count is bounded up front. For unbounded-hop closures swap
-  * the loop for the checkpointed fixpoint pattern in
-  * `Dedup.connectedComponents` (lineage must be cut when round count
-  * is data-dependent; for the small fixed maxHops here the plan tree
-  * stays shallow without checkpoints).
+  * the loop for [[graft.Rounds.iterate]] with a stopping rule
+  * (lineage must be cut when round count is data-dependent; for the
+  * small fixed maxHops here the plan tree stays shallow without
+  * checkpoints).
   */
 object Bfs {
 

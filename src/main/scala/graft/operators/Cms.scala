@@ -59,7 +59,7 @@ object Cms {
     val vals = df.select(col(valueCol).as("v"))
       .filter(col("v").isNotNull)
       .groupBy(col("v")).agg(count(lit(1)).as("exact_count"))
-    val (probes, _) = graft.dedup.Dedup.checkpointOwned(
+    val probes = graft.Rounds.checkpoint(
       vals
         .select(col("v"), col("exact_count"),
           explode(sequence(lit(0), lit(d - 1))).as("row"))

@@ -95,7 +95,7 @@ object EditJoin {
     // Materialized once: the frequency aggregation and the ranked join
     // below both read it, and each read would otherwise re-run the
     // gram explode + occurrence window.
-    val (keys, _) = graft.dedup.Dedup.checkpointOwned(
+    val keys = graft.Rounds.checkpoint(
       grams.withColumn("occ",
         row_number().over(Window.partitionBy("id", "gram").orderBy("pos")))
         .select("id", "gram", "occ"))

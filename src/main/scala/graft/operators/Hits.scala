@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Rounds
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,7 +37,9 @@ import org.apache.spark.sql.functions._
   * pre-partitioned on src (dst-keyed steps reuse AQE-planned exchanges
   * of the same frame); each iteration shuffles only O(nodes) score rows
   * plus one map-side-combined sum, and the global normalizer is a
-  * broadcast 1-row frame — nothing reaches the driver.
+  * broadcast 1-row frame — nothing reaches the driver. The rounds run
+  * through [[graft.Rounds.iterate]] with the authority vector as the
+  * checkpointed frontier and the hub vector as a round intermediate.
   */
 object Hits {
 
@@ -46,54 +50,45 @@ object Hits {
       iters: Int = 4, quantum: Double = 1e12): DataFrame = {
     require(iters >= 1, s"bad iters=$iters")
     require(quantum >= 1e3, s"quantum too small to be meaningful: $quantum")
-    val sc = edges.sparkSession.sparkContext
-    val shuffleParts =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val (e, eIds) = graft.dedup.Dedup.checkpointOwned(
+    val e = Rounds.checkpoint(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct()
-        .repartition(shuffleParts, col("src")))
-    val (nodes, nodeIds) = graft.dedup.Dedup.checkpointOwned(
+        .repartition(Rounds.shufflePartitions(edges.sparkSession), col("src")))
+    val nodes = Rounds.checkpoint(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct())
 
-    def normalize(raw: DataFrame, outCol: String): DataFrame = {
+    // one half-round: each `from` endpoint's score summed onto its `to`
+    // endpoint, then normalized by a broadcast global total. Every dst
+    // in e has an in-edge (every src an out-edge) by construction, so
+    // the result covers exactly the nodes with nonzero score
+    def spread(scores: DataFrame, score: String, from: String, to: String,
+        out: String): DataFrame = {
+      val raw = e.join(scores, e(from) === scores("node")).groupBy(e(to).as("node"))
+        .agg(sum(floor(col(score) * lit(quantum)).cast("long")).as("m"))
       val tot = raw.agg(sum(col("m")).as("tot"))
       raw.crossJoin(broadcast(tot))
-        .select(col("node"),
-          (col("m").cast("double") / col("tot").cast("double")).as(outCol))
+        .select(col("node"), (col("m").cast("double") / col("tot").cast("double")).as(out))
     }
+    def authorities(h: DataFrame): DataFrame = spread(h, "h", "src", "dst", "a")
+    def hubs(a: DataFrame): DataFrame = spread(a, "a", "dst", "src", "h")
 
-    var h = nodes.select(col("node"), lit(1.0).as("h"))
-    var hIds = Set.empty[Int]
-    var a = nodes.limit(0).select(col("node"), lit(0.0).as("a"))
-    var aIds = Set.empty[Int]
-    for (_ <- 1 to iters) {
-      // every dst in e has an in-edge by construction, so the raw
-      // frames cover exactly the nodes with nonzero score
-      val aRaw = e.join(h, e("src") === h("node")).groupBy(e("dst").as("node"))
-        .agg(sum(floor(col("h") * lit(quantum)).cast("long")).as("m"))
-      val (aNext, aNextIds) = graft.dedup.Dedup.checkpointOwned(normalize(aRaw, "a"))
-      graft.dedup.Dedup.unpersistOwned(sc, aIds)
-      a = aNext
-      aIds = aNextIds
-      val hRaw = e.join(a, e("dst") === a("node")).groupBy(e("src").as("node"))
-        .agg(sum(floor(col("a") * lit(quantum)).cast("long")).as("m"))
-      val (hNext, hNextIds) = graft.dedup.Dedup.checkpointOwned(normalize(hRaw, "h"))
-      graft.dedup.Dedup.unpersistOwned(sc, hIds)
-      h = hNext
-      hIds = hNextIds
+    // the last hub vector is computed inside the output checkpoint below
+    val (a, _) = Rounds.iterate(
+        Rounds.checkpoint(authorities(nodes.select(col("node"), lit(1.0).as("h")))),
+        iters - 1) { (a, materialize) =>
+      authorities(materialize(hubs(a)))
     }
     // checkpoint the joined result so every upstream block (graph,
-    // frontiers) can be released before handing it to the caller —
-    // the out block itself stays persisted, the caller holds it
-    val (out, _) = graft.dedup.Dedup.checkpointOwned(nodes
-      .join(h, Seq("node"), "left")
+    // frontier) can be released before handing it to the caller — the
+    // out block itself stays persisted, the caller holds it
+    val out = Rounds.checkpoint(nodes
+      .join(hubs(a), Seq("node"), "left")
       .join(a, Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0.0)).as("hub"),
         coalesce(col("a"), lit(0.0)).as("auth")))
-    graft.dedup.Dedup.unpersistOwned(sc, eIds ++ nodeIds ++ hIds ++ aIds)
+    Rounds.release(e, nodes, a)
     // overflow tripwire: every contribution is nonnegative, so a
     // negative score can only be a wrapped quantum sum
     require(out.filter(col("hub") < 0.0 || col("auth") < 0.0).isEmpty,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Rounds
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,26 +21,23 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: per round one map-side-combined degree count and one
   * two-sided semi-join of the edge frame against the surviving node
-  * set — O(edges) shuffled per round with no cross product anywhere;
-  * frontiers are checkpointed and superseded blocks released, the same
-  * discipline (and the same localCheckpoint-vs-reliable trade-off on a
-  * real cluster) as Dedup.connectedComponents and PageRank.
+  * set — O(edges) shuffled per round with no cross product anywhere.
+  * The rounds run through [[graft.Rounds.iterate]], which checkpoints
+  * each edge frontier and releases the superseded one (with Rounds'
+  * localCheckpoint-vs-reliable trade-off on a real cluster).
   */
 object KCore {
 
   def kcore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"bad k=$k rounds=$rounds")
-    val sc = edges.sparkSession.sparkContext
-    val shuffleParts =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    var (e, eIds) = graft.dedup.Dedup.checkpointOwned(
-      raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .repartition(shuffleParts, col("src")))
-    for (_ <- 1 to rounds) {
+    val (e, _) = Rounds.iterate(Rounds.checkpoint(
+        raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
+          .distinct()
+          .repartition(Rounds.shufflePartitions(edges.sparkSession), col("src"))),
+        rounds) { (e, _) =>
       val surviving = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
@@ -51,13 +50,9 @@ object KCore {
       // holds only then: when the src semi-join broadcasts, its output
       // keeps the clustering of its input, the dst-semi's (by dst, if
       // that one shuffled), and the groupBy pays its own exchange
-      val (next, nextIds) = graft.dedup.Dedup.checkpointOwned(
-        e.join(surviving.withColumnRenamed("node", "dst"), Seq("dst"), "leftsemi")
-          .join(surviving.withColumnRenamed("node", "src"), Seq("src"), "leftsemi")
-          .select(col("src"), col("dst")))
-      graft.dedup.Dedup.unpersistOwned(sc, eIds)
-      e = next
-      eIds = nextIds
+      e.join(surviving.withColumnRenamed("node", "dst"), Seq("dst"), "leftsemi")
+        .join(surviving.withColumnRenamed("node", "src"), Seq("src"), "leftsemi")
+        .select(col("src"), col("dst"))
     }
     // the output aggregates the final checkpointed edge frame; its
     // block stays persisted — the caller holds it

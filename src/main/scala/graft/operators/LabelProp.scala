@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Rounds
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,10 +28,10 @@ import org.apache.spark.sql.functions._
   * count and one argmax reduced by `max(struct(cnt, -label))` —
   * map-side combinable again, never a window over raw votes; the
   * O(edges) label join shuffles the O(nodes) label vector against the
-  * once-checkpointed, pre-partitioned edge frame. Superseded label
-  * frontiers are checkpointed and released per round, the same
-  * discipline (and the same localCheckpoint-vs-reliable trade-off on
-  * a real cluster) as Dedup.connectedComponents.
+  * once-checkpointed, pre-partitioned edge frame. The rounds run
+  * through [[graft.Rounds.iterate]], which checkpoints each label
+  * frontier and releases the superseded one (with Rounds'
+  * localCheckpoint-vs-reliable trade-off on a real cluster).
   */
 object LabelProp {
 
@@ -40,20 +42,16 @@ object LabelProp {
   def propagate(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"bad rounds=$rounds")
-    val sc = edges.sparkSession.sparkContext
-    val shuffleParts =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val (e, _) = graft.dedup.Dedup.checkpointOwned(
+    val e = Rounds.checkpoint(
       raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
-        .repartition(shuffleParts, col("dst")))
-    var labels = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    var labelIds = Set.empty[Int]
-    for (_ <- 1 to rounds) {
+        .repartition(Rounds.shufflePartitions(edges.sparkSession), col("dst")))
+    val (labels, _) = Rounds.iterate(
+        e.select(col("src").as("node")).distinct()
+          .select(col("node"), col("node").as("label")), rounds) { (labels, _) =>
       // src hears dst's previous label along each symmetric edge
       val votes = e.join(labels, e("dst") === labels("node"))
         .groupBy(e("src").as("node"), col("label"))
@@ -61,14 +59,13 @@ object LabelProp {
       // argmax by (cnt desc, label asc): max over the total order
       // (cnt, -label) — integer struct comparison, no window, second
       // aggregation map-side combines on node
-      val (next, nextIds) = graft.dedup.Dedup.checkpointOwned(
-        votes.groupBy(col("node"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("top"))
-          .select(col("node"), (-col("top.nl")).as("label")))
-      graft.dedup.Dedup.unpersistOwned(sc, labelIds)
-      labels = next
-      labelIds = nextIds
+      votes.groupBy(col("node"))
+        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("top"))
+        .select(col("node"), (-col("top.nl")).as("label"))
     }
+    // the last frontier is its own checkpoint: the edge set is no
+    // longer referenced
+    Rounds.release(e)
     labels
   }
 }

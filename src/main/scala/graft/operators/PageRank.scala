@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank as join-based power iteration — the
@@ -20,10 +22,10 @@ import org.apache.spark.sql.functions._
   * ONCE (checkpointed, pre-partitioned on src), so every iteration
   * reuses the same exchange on the big side and shuffles only the
   * current rank vector — O(nodes) rows — plus one map-side-combined
-  * sum per iteration. Iterations checkpoint their rank frontier and
-  * drop the superseded one, the same discipline (and the same
-  * localCheckpoint-vs-reliable-checkpoint trade-off on a real cluster)
-  * as Dedup.connectedComponents. Nothing reaches the driver.
+  * sum per iteration. The iterations run through [[graft.Rounds.iterate]],
+  * which checkpoints each rank frontier and drops the superseded one
+  * (with Rounds' localCheckpoint-vs-reliable-checkpoint trade-off on a
+  * real cluster). Nothing reaches the driver.
   *
   * Cross-engine posture: per-edge contributions are discretized to
   * integer picounits (floor(r/deg * 1e12) as BIGINT) BEFORE the
@@ -67,50 +69,34 @@ object PageRank {
     require(iters >= 1 && d > 0.0 && d < 1.0, s"bad iters=$iters d=$d")
     require(seeds.forall(_.nonEmpty), "seed set must be non-empty when given")
     require(quantum >= 1e3, s"quantum too small to be meaningful: $quantum")
-    val sc = edges.sparkSession.sparkContext
-    val shuffleParts =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // one materialization of the (possibly expensive) upstream edge
     // pipeline; dedupe, attach out-degrees, pre-partition on src so the
     // per-iteration rank join reuses this exchange
-    val (e0, e0Ids) = graft.dedup.Dedup.checkpointOwned(
+    val e0 = Rounds.checkpoint(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct())
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val (ew, ewIds) = graft.dedup.Dedup.checkpointOwned(
-      e0.join(deg, "src").repartition(shuffleParts, col("src")))
-    val (nodes, nodeIds) = graft.dedup.Dedup.checkpointOwned(
+    val ew = Rounds.checkpoint(e0.join(deg, "src")
+      .repartition(Rounds.shufflePartitions(edges.sparkSession), col("src")))
+    val nodes = Rounds.checkpoint(
       e0.select(col("src").as("node"))
         .union(e0.select(col("dst").as("node")))
         .distinct())
-    graft.dedup.Dedup.unpersistOwned(sc, e0Ids)
+    Rounds.release(e0)
     // uniform restart = 1.0 everywhere (the classic form); personalized
     // restart = the seed indicator
     val restart = seeds match {
       case Some(ss) => when(col("node").isin(ss: _*), lit(1.0)).otherwise(lit(0.0))
       case None => lit(1.0)
     }
-    var (ranks, rankIds) = graft.dedup.Dedup.checkpointOwned(
-      nodes.select(col("node"), restart.as("r")))
-    for (_ <- 1 to iters) {
-      val contribs = ew
-        .join(ranks, ew("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(floor(col("r") / col("deg") * lit(quantum)).cast("long")).as("m"))
-      val (next, nextIds) = graft.dedup.Dedup.checkpointOwned(
-        nodes
-          .join(contribs, nodes("node") === contribs("dst"), "left")
-          .select(col("node"),
-            (lit(1.0 - d) * restart + lit(d) *
-              (coalesce(col("m"), lit(0L)).cast("double") / lit(quantum))).as("r")))
-      graft.dedup.Dedup.unpersistOwned(sc, rankIds)
-      ranks = next
-      rankIds = nextIds
+    val (ranks, _) = Rounds.iterate(
+        Rounds.checkpoint(nodes.select(col("node"), restart.as("r"))), iters) {
+      (ranks, _) => round(ew, nodes, ranks, d, quantum, restart)
     }
-    // the final frontier is checkpointed/materialized, so the graph
-    // blocks can be released before handing the result to the caller
-    // (the last rank block stays persisted — the caller holds it)
-    graft.dedup.Dedup.unpersistOwned(sc, ewIds ++ nodeIds)
+    // the final frontier is materialized, so the graph blocks can be
+    // released before handing the result to the caller (the last rank
+    // block stays persisted — the caller holds it)
+    Rounds.release(ew, nodes)
     // overflow tripwire on the (already materialized) final frontier:
     // every update term is nonnegative, so a negative rank can only be
     // a wrapped contribution sum
@@ -142,17 +128,24 @@ object PageRank {
       .union(e0.select(col("dst").as("node"))).distinct()
     graft.lineage.IterativeResume.run(spark, stateRoot, iters,
         init = nodes.select(col("node"), lit(1.0).as("r")),
-        step = (prev, _) => {
-          val contribs = ew
-            .join(prev, ew("src") === prev("node"))
-            .groupBy(col("dst"))
-            .agg(sum(floor(col("r") / col("deg") * lit(quantum)).cast("long")).as("m"))
-          nodes
-            .join(contribs, nodes("node") === contribs("dst"), "left")
-            .select(col("node"),
-              (lit(1.0 - d) + lit(d) *
-                (coalesce(col("m"), lit(0L)).cast("double") / lit(quantum))).as("r"))
-        })
+        step = (prev, _) => round(ew, nodes, prev, d, quantum, lit(1.0)))
       .select(col("node"), col("r").as("pr"))
+  }
+
+  /** One power-iteration round over the out-degree-annotated edges `ew`:
+    * picounit contributions summed per dst, then the damped update with
+    * `restart` as each node's restart mass.
+    */
+  private def round(ew: DataFrame, nodes: DataFrame, ranks: DataFrame, d: Double,
+      quantum: Double, restart: Column): DataFrame = {
+    val contribs = ew
+      .join(ranks, ew("src") === ranks("node"))
+      .groupBy(col("dst"))
+      .agg(sum(floor(col("r") / col("deg") * lit(quantum)).cast("long")).as("m"))
+    nodes
+      .join(contribs, nodes("node") === contribs("dst"), "left")
+      .select(col("node"),
+        (lit(1.0 - d) * restart + lit(d) *
+          (coalesce(col("m"), lit(0L)).cast("double") / lit(quantum))).as("r"))
   }
 }

@@ -118,7 +118,7 @@ object LangModel {
     // the identical lp_micro, so summing k * lp_micro equals summing
     // lp_micro over occurrences, and n_bigrams = sum(k) — and both c12
     // and the join-back now read the compact checkpointed frame.
-    val (g, _) = graft.dedup.Dedup.checkpointOwned(
+    val g = graft.Rounds.checkpoint(
       bigramPairs(docs, idCol, textCol)
         .groupBy(col("doc_id"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("k")))

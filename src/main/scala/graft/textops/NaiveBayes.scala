@@ -61,7 +61,7 @@ object NaiveBayes {
     // the train-corpus tokenize+explode+count pipeline underneath runs
     // once per action, not once per reader. Model size is bounded by
     // |classes| x |vocabulary| — independent of corpus size.
-    val (classTok, _) = graft.dedup.Dedup.checkpointOwned(
+    val classTok = graft.Rounds.checkpoint(
       trainOcc.groupBy(col("label").as("cls"), col("tok"))
         .agg(count(lit(1)).as("c_lt")))
     val classTotal = classTok.groupBy(col("cls")).agg(sum(col("c_lt")).as("c_l"))

@@ -70,13 +70,7 @@ class ContractSpec extends AnyFunSuite {
   test("the mains under src/main/scala are the pinned set") {
     // a new triage main fails here until it is added on purpose;
     // graft.tools.Profile is the one per-query profiler
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root)
-    val mains = try files.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        java.nio.file.Files.readString(p).contains("def main(args"))
-      .map(root.relativize(_).toString).toSet
-    finally files.close()
+    val mains = sourcesWhere("src/main/scala")(_.contains("def main(args"))
     val pinned = Set("Bench", "BenchOne", "ScalingBench", "Verify", "Run",
       "tools/Profile", "tools/PlanDump", "tools/VerifyOne", "tools/FindAdversarial",
       "tools/FuzzCampaign").map(n => s"graft/$n.scala")
@@ -104,16 +98,32 @@ class ContractSpec extends AnyFunSuite {
   test("only the streaming drain helper starts and awaits a streaming query") {
     // every AvailableNow drain goes through StreamingState.drain; a
     // hand-written writeStream chain elsewhere fails here
-    val root = java.nio.file.Paths.get("src/main/scala")
+    val starters = sourcesWhere("src/main/scala")(src =>
+      src.contains("Trigger.AvailableNow") || src.contains("awaitTermination"))
+    assert(starters == Set("graft/streaming/StreamingState.scala"), starters)
+  }
+
+  test("only graft.Rounds checkpoints a frame") {
+    // Rounds owns the checkpoint mode and the release of its blocks; a
+    // checkpoint taken elsewhere is one nothing releases
+    val call = """localCheckpoint\(|(?<!Rounds)\.checkpoint\(""".r
+    val takers = sourcesWhere("src/main/scala")(call.findFirstIn(_).isDefined)
+    assert(takers == Set("graft/Rounds.scala"), takers)
+    val retired = Seq("checkpoint", "unpersist").map(_ + "Owned")
+    val stale = sourcesWhere("src")(src => retired.exists(src.contains))
+    assert(stale.isEmpty, stale)
+  }
+
+  /** The .scala files under `dir` whose text satisfies `pred`, relative
+    * to `dir`.
+    */
+  private def sourcesWhere(dir: String)(pred: String => Boolean): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
     val files = java.nio.file.Files.walk(root)
-    val starters = try files.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && {
-        val src = java.nio.file.Files.readString(p)
-        src.contains("Trigger.AvailableNow") || src.contains("awaitTermination")
-      })
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && pred(java.nio.file.Files.readString(p)))
       .map(root.relativize(_).toString).toSet
     finally files.close()
-    assert(starters == Set("graft/streaming/StreamingState.scala"), starters)
   }
 
   test("oracleSql is pinned byte for byte") {

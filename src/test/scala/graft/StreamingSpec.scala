@@ -23,6 +23,13 @@ class StreamingSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Lands `df` as file `i` of `<root>/in`, its mtime `i` minutes after
+    * the suite's start, so the file source reads the files in order.
+    */
+  private def landBatch(root: String, i: Int, df: DataFrame): Unit =
+    StreamingState.landFile(df, s"$root/in/b$i.parquet", landedFrom + i * 60000L)
+  private val landedFrom = System.currentTimeMillis()
+
   test("watermarked streaming dedup drops later duplicates, state bounded") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -159,14 +166,9 @@ class StreamingSpec extends AnyFunSuite {
     // appears in every batch, so the drain must emit an increasing
     // running total that spans batches — a per-batch-only aggregate
     // would reset to the batch count instead
-    Seq((1L, 10L), (1L, 20L), (2L, 5L)).toDF("user_id", "cents")
-      .coalesce(1).write.parquet(s"$root/in")
-    Thread.sleep(1100) // distinct mtimes -> deterministic file order
-    Seq((1L, 30L)).toDF("user_id", "cents")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((1L, 40L), (2L, 7L)).toDF("user_id", "cents")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
+    landBatch(root, 0, Seq((1L, 10L), (1L, 20L), (2L, 5L)).toDF("user_id", "cents"))
+    landBatch(root, 1, Seq((1L, 30L)).toDF("user_id", "cents"))
+    landBatch(root, 2, Seq((1L, 40L), (2L, 7L)).toDF("user_id", "cents"))
     StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
       new StreamingState.RunningTotalProcessor)(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
@@ -176,10 +178,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(u1.map(r => (r._2, r._3)).toSeq == Seq((2L, 30L), (3L, 60L), (4L, 100L)), u1.toSeq.toString)
     val u2 = rows.filter(_._1 == 2L).sortBy(_._2)
     assert(u2.map(r => (r._2, r._3)).toSeq == Seq((1L, 5L), (2L, 12L)))
-    // a SECOND drain over a new file resumes from the checkpointed state
-    Thread.sleep(1100)
-    Seq((2L, 100L)).toDF("user_id", "cents")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
+    // a SECOND drain over a new, later file resumes from the checkpointed state
+    landBatch(root, 3, Seq((2L, 100L)).toDF("user_id", "cents"))
     StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
       new StreamingState.RunningTotalProcessor)(_.user_id)
     val after = spark.read.parquet(s"$root/out")
@@ -196,14 +196,10 @@ class StreamingSpec extends AnyFunSuite {
     // largest-k semantics must keep {20,30,40}, never the 3 freshest
     // arrivals {5,30,40}... wait 30,40 arrive later; final top-3 of
     // {10,20,5,30,40} = {40,30,20}
-    Seq((1L, 10L, 100L), (1L, 20L, 200L)).toDF("user_id", "event_id", "cents")
-      .coalesce(1).write.parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((1L, 5L, 50L), (1L, 30L, 300L)).toDF("user_id", "event_id", "cents")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((1L, 40L, 400L)).toDF("user_id", "event_id", "cents")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
+    def events(rows: (Long, Long, Long)*) = rows.toDF("user_id", "event_id", "cents")
+    landBatch(root, 0, events((1L, 10L, 100L), (1L, 20L, 200L)))
+    landBatch(root, 1, events((1L, 5L, 50L), (1L, 30L, 300L)))
+    landBatch(root, 2, events((1L, 40L, 400L)))
     StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
       new StreamingState.LatestKProcessor(3))(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
@@ -222,17 +218,10 @@ class StreamingSpec extends AnyFunSuite {
     // user 1: two sessions split by a 2000s gap that SPANS batches
     // (only the timer path can close the first one); sentinel user -9
     // advances the watermark, its own session stays open and is dropped
-    Seq((1L, ts(1000)), (1L, ts(1500))).toDF("user_id", "ts")
-      .coalesce(1).write.parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((1L, ts(3500))).toDF("user_id", "ts")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((-9L, ts(100000))).toDF("user_id", "ts")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((-9L, ts(100001))).toDF("user_id", "ts")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
+    landBatch(root, 0, Seq((1L, ts(1000)), (1L, ts(1500))).toDF("user_id", "ts"))
+    landBatch(root, 1, Seq((1L, ts(3500))).toDF("user_id", "ts"))
+    landBatch(root, 2, Seq((-9L, ts(100000))).toDF("user_id", "ts"))
+    landBatch(root, 3, Seq((-9L, ts(100001))).toDF("user_id", "ts"))
     graft.streaming.StreamingState.sessionizeV2RunOnce(
       spark, s"$root/in", s"$root/outv2", s"$root/cpv2", gapSec = 1000L)
     graft.streaming.StreamingState.sessionizeRunOnce(
@@ -249,11 +238,9 @@ class StreamingSpec extends AnyFunSuite {
   test("MapState type counts accumulate per (user, type) across batches") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_mc").toString
-    Seq((1L, "view"), (1L, "click"), (1L, "view")).toDF("user_id", "event_type")
-      .coalesce(1).write.parquet(s"$root/in")
-    Thread.sleep(1100)
-    Seq((1L, "view"), (1L, "purchase")).toDF("user_id", "event_type")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/in")
+    landBatch(root, 0,
+      Seq((1L, "view"), (1L, "click"), (1L, "view")).toDF("user_id", "event_type"))
+    landBatch(root, 1, Seq((1L, "view"), (1L, "purchase")).toDF("user_id", "event_type"))
     StreamingState.transformWithStateRunOnce(spark, s"$root/in", s"$root/out", s"$root/cp",
       new StreamingState.TypeCountsProcessor)(_.user_id)
     val rows = spark.read.parquet(s"$root/out")
