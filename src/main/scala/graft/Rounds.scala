@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit, when}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
 /** Owned materialization: the one way a frame is checkpointed, the one
-  * way its blocks are released, and the one round loop of the iterative
-  * operators (connected components, PageRank, HITS, k-core, label
-  * propagation).
+  * way its blocks are released, the one way a frame is cached for a
+  * scope, and the one round loop of the iterative operators (connected
+  * components, PageRank, HITS, k-core, label propagation).
   *
   * Mode: `localCheckpoint` by default — fastest, but UNRECOVERABLE on
   * executor loss (the job fails instead of recomputing). On a real
@@ -40,6 +41,21 @@ object Rounds {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ =>
   })
+
+  /** Runs `use` over `df` persisted at MEMORY_AND_DISK and unpersists it
+    * afterwards, also when `use` throws. A frame whose plan is already
+    * cached on entry (an enclosing scope over the same plan, or a cache
+    * the caller owns) is used as it is: the CacheManager keys entries by
+    * plan, so only the scope that registered the plan releases it. `use`
+    * returns a collected value or a frame that no longer reads the
+    * cache, i.e. one that ends in [[checkpoint]].
+    */
+  def cached[A](df: DataFrame)(use: DataFrame => A): A =
+    if (df.storageLevel != StorageLevel.NONE) use(df)
+    else {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try use(df) finally df.unpersist(blocking = false)
+    }
 
   /** The shuffle width of frames pre-partitioned for every round's join. */
   def shufflePartitions(spark: SparkSession): Int =

@@ -4,6 +4,7 @@ import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.extract.Extract
 import graft.fixtures.SpanGen
+import graft.functions.FenceExpr.fence
 import graft.media.Media
 import graft.sinks.Csv
 import graft.streaming.StreamingState
@@ -1077,11 +1078,11 @@ object SparkEntry {
     // so the probe must land on pointer jumping — and either choice is
     // label-identical, which the shared recursive-CTE oracle gates
     "q_dedup_cluster_auto" -> ((s, dir) => {
-      val (pairs, sigs) = Dedup.minhashNearDupsWithSigs(
-        s.read.parquet(t(dir, "documents")), "doc_id", "text",
-        n = 3, k = 64, bands = 16, threshold = 0.5)
-      val (labels, _, _) = Dedup.connectedComponentsAuto(pairs)
-      sigs.unpersist(blocking = false)
+      val (labels, _, _) = Rounds.cached(Dedup.minhashSignatures(
+          s.read.parquet(t(dir, "documents")), "doc_id", "text", n = 3, k = 64)) { sigs =>
+        Dedup.connectedComponentsAuto(
+          Dedup.minhashPairs(sigs, k = 64, bands = 16, threshold = 0.5))
+      }
       labels.withColumn("keep", col("doc_id") === col("cluster_id"))
     }),
 
@@ -1554,15 +1555,14 @@ object SparkEntry {
         .select(col("doc_id"),
           sha2(lower(trim(col("text"))), 256).as("checksum"),
           TextOps.langId(col("text")).as("pred_lang"),
-          TextOps.qualityScore(col("text")).as("quality"),
+          // fenced, so the quality/langid filter stays above this Project:
+          // predicate pushdown otherwise substitutes the full scoring
+          // expressions into a filter BELOW the spread exchange, running
+          // the whole quality/langid computation inside the one scan task
+          // (measured a 1.5 s single-task stage) and re-evaluating it
+          // above for the output columns
+          fence(TextOps.qualityScore(col("text"))).as("quality"),
           TextOps.tokenCount(col("text")).as("n_tokens"))
-        // lazy persist as an optimizer fence, not for reuse: predicate
-        // pushdown otherwise substitutes the full scoring expressions
-        // into a filter BELOW the spread exchange, running the whole
-        // quality/langid computation inside the one scan task (measured
-        // a 1.5 s single-task stage) and re-evaluating it above for the
-        // output columns
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         .filter(col("quality") >= 0.5 && col("pred_lang") =!= "und")
       val canonical = scored
         .withColumn("keep_id",
@@ -1875,15 +1875,15 @@ object SparkEntry {
       // spread the single-split scan: the quantization HOFs and the
       // posexplode otherwise evaluate inside the one scan task
       // (measured a 1.6 s single-task stage = ~90% of the query's
-      // wall). The lazy persist is an optimizer fence, not reuse:
-      // posexplode's implicit size/null guard otherwise pushes below
-      // the spread exchange and evaluates the whole quantize
-      // expression serially in the scan task — and again above it.
+      // wall). The fence on q keeps posexplode's implicit size/null
+      // guard from pushing below the spread exchange, where it would
+      // evaluate the whole quantize expression serially in the scan
+      // task — and again above it.
       graft.ann.Quant.quantize(
         graft.Parallelize.bySplits(
           s.read.parquet(t(dir, "embeddings")), "vec_id"),
         "vec_id", "embedding")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("q", fence(col("q")))
         .select(col("vec_id"), col("scale"),
           posexplode(col("q")).as(Seq("i", "q_i")))),
 

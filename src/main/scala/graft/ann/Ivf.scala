@@ -74,16 +74,13 @@ object Ivf {
 
   /** Lloyd's k-means, `iters` fixed rounds, distributed updates. */
   def train(spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
-      nList: Int, iters: Int = 5): Model = {
-    val vecs = vecsDF(emb, idCol, vecCol).cache()
-    val model = trainOnVecs(spark, vecs, nList, iters)
-    vecs.unpersist()
-    model
-  }
+      nList: Int, iters: Int = 5): Model =
+    graft.Rounds.cached(vecsDF(emb, idCol, vecCol))(trainOnVecs(spark, _, nList, iters))
 
   /** Training core over an ALREADY-CACHED (id, vec) frame — callers
-    * that hold their own vector cache (topK, semanticDedup) pass it
-    * here instead of train() building a second cache of the same data.
+    * that hold their own vector cache (topK, semanticDedup,
+    * Pq.topKIvf) pass it here instead of train() building a second
+    * cache of the same data.
     * Each round's update aggregation emits (cluster, vec) straight
     * from the assignment map — the previous assign-then-join-by-id
     * shape paid one extra shuffle join per round for rows the map
@@ -141,35 +138,35 @@ object Ivf {
       nProbe: Int = 4,
       iters: Int = 5): DataFrame = {
     import spark.implicits._
-    val vecs = vecsDF(emb, idCol, vecCol).cache()
-    val model = trainOnVecs(spark, vecs, nList, iters)
-    val assigned = assign(spark, vecs, model)
+    graft.Rounds.cached(vecsDF(emb, idCol, vecCol)) { vecs =>
+      val model = trainOnVecs(spark, vecs, nList, iters)
+      val assigned = assign(spark, vecs, model)
 
-    val queryVecs = vecs.filter(col("id").isin(queryIds: _*))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val probes = queryVecs.toSeq.flatMap { case (qid, qv) =>
-      model.nearest(qv, nProbe).map(c => (qid, c))
+      val queryVecs = vecs.filter(col("id").isin(queryIds: _*))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+      val probes = queryVecs.toSeq.flatMap { case (qid, qv) =>
+        model.nearest(qv, nProbe).map(c => (qid, c))
+      }
+      val probeDF = probes.toDF("query_id", "cluster")
+
+      val candidates = assigned.join(broadcast(probeDF), "cluster")
+        .filter(col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("item_id"))
+        .distinct()
+      val reranked = candidates
+        .join(vecs.withColumnRenamed("id", "item_id").withColumnRenamed("vec", "item_vec"), "item_id")
+        .join(broadcast(vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "query_vec")
+          .filter(col("query_id").isin(queryIds: _*))), "query_id")
+        .withColumn("sim",
+          Ann.dot(col("query_vec"), col("item_vec")) /
+            (Ann.norm(col("query_vec")) * Ann.norm(col("item_vec"))))
+      val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("item_id"))
+      // checkpointed inside the scope: the result never reads the cache
+      graft.Rounds.checkpoint(reranked.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("query_id"), col("item_id").as("neighbor_id"),
+          col("rank").cast("bigint").as("rank"), col("sim")))
     }
-    val probeDF = probes.toDF("query_id", "cluster")
-
-    val candidates = assigned.join(broadcast(probeDF), "cluster")
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("item_id"))
-      .distinct()
-    val reranked = candidates
-      .join(vecs.withColumnRenamed("id", "item_id").withColumnRenamed("vec", "item_vec"), "item_id")
-      .join(broadcast(vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "query_vec")
-        .filter(col("query_id").isin(queryIds: _*))), "query_id")
-      .withColumn("sim",
-        Ann.dot(col("query_vec"), col("item_vec")) /
-          (Ann.norm(col("query_vec")) * Ann.norm(col("item_vec"))))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("item_id"))
-    val out = reranked.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
-    vecs.unpersist()
-    out
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al., "SemDeDup:
@@ -192,23 +189,23 @@ object Ivf {
   def semanticDedup(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, eps: Double, nList: Int = 16, iters: Int = 3,
       maxClusterSize: Int = 10000): DataFrame = {
-    val vecs = vecsDF(emb, idCol, vecCol).cache()
-    val model = trainOnVecs(spark, vecs, nList, iters)
-    val withC = assign(spark, vecs, model).join(vecs, "id")
-      .withColumn("csz", count(lit(1)).over(Window.partitionBy("cluster")))
-      .filter(col("csz") <= maxClusterSize)
-      .select(col("cluster"), col("id"), col("vec"), Ann.norm(col("vec")).as("nrm"))
-    val pairs = withC.as("a")
-      .join(withC.as("b"),
-        col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
-      .withColumn("sim",
-        Ann.dot(col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm")))
-      .filter(col("sim") >= eps)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // connectedComponents checkpoints the pair pipeline eagerly, so the
-    // vector cache has served all its reads by the time it returns
-    val cc = graft.dedup.Dedup.connectedComponents(pairs)
-    vecs.unpersist(blocking = false)
+    val cc = graft.Rounds.cached(vecsDF(emb, idCol, vecCol)) { vecs =>
+      val model = trainOnVecs(spark, vecs, nList, iters)
+      val withC = assign(spark, vecs, model).join(vecs, "id")
+        .withColumn("csz", count(lit(1)).over(Window.partitionBy("cluster")))
+        .filter(col("csz") <= maxClusterSize)
+        .select(col("cluster"), col("id"), col("vec"), Ann.norm(col("vec")).as("nrm"))
+      val pairs = withC.as("a")
+        .join(withC.as("b"),
+          col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
+        .withColumn("sim",
+          Ann.dot(col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm")))
+        .filter(col("sim") >= eps)
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      // connectedComponents checkpoints the pair pipeline up front, so
+      // its labels never read the vector cache
+      graft.dedup.Dedup.connectedComponents(pairs)
+    }
     cc.select(col("doc_id").as("vec_id"), col("cluster_id").as("group_id"),
       (col("doc_id") === col("cluster_id")).as("keep"))
   }

@@ -167,12 +167,13 @@ object Pca {
   def fitK(spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 5): (Array[Double], Array[Array[Double]]) = {
     require(k >= 1, s"k must be positive, got $k")
-    val vecs = Ivf.vecsDF(emb, idCol, vecCol).cache()
-    val dim = vecs.select(size(col("vec"))).head().getInt(0)
-    val (mean, n) = meanOf(vecs, dim)
-    require(n > 1, s"need > 1 vectors, got $n")
-    var cov = covarianceOf(spark, vecs, mean, n, dim)
-    vecs.unpersist(blocking = false)
+    val (mean, cov0) = graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol)) { vecs =>
+      val dim = vecs.select(size(col("vec"))).head().getInt(0)
+      val (mean, n) = meanOf(vecs, dim)
+      require(n > 1, s"need > 1 vectors, got $n")
+      (mean, covarianceOf(spark, vecs, mean, n, dim))
+    }
+    var cov = cov0
     val comps = new Array[Array[Double]](k)
     var c = 0
     while (c < k) {

@@ -71,9 +71,17 @@ object Pq {
     * round's shuffle instead of paying M of them).
     */
   def train(spark: SparkSession, emb: DataFrame, idCol: String,
-      vecCol: String, numSub: Int, k: Int, iters: Int): Model = {
+      vecCol: String, numSub: Int, k: Int, iters: Int): Model =
+    graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol))(
+      trainOnVecs(spark, _, numSub, k, iters))
+
+  /** Training core over an ALREADY-CACHED (id, vec) frame (the
+    * Ivf.trainOnVecs split): [[topKIvf]] trains both codebooks on the
+    * one vector cache it holds.
+    */
+  private def trainOnVecs(spark: SparkSession, vecs: DataFrame, numSub: Int,
+      k: Int, iters: Int): Model = {
     import spark.implicits._
-    val vecs = Ivf.vecsDF(emb, idCol, vecCol).cache()
     val dim = vecs.select(size(col("vec"))).head().getInt(0)
     require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
     val subDim = dim / numSub
@@ -107,7 +115,6 @@ object Pq {
       }
       books = next
     }
-    vecs.unpersist()
     Model(books)
   }
 
@@ -200,35 +207,35 @@ object Pq {
     * probed inverted lists exactly as Ivf.topK builds them; scoring is
     * the same broadcast-LUT ADC as [[topK]]; both training loops are
     * the deterministic fixed-point constructions, so the composition
-    * replays end to end in the oracle.
+    * replays end to end in the oracle. Both train on one vector cache,
+    * and the small top-k result is checkpointed before it is dropped.
     */
   def topKIvf(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, queryIds: Seq[Long], k: Int,
       nList: Int = 16, nProbe: Int = 4, ivfIters: Int = 3,
       numSub: Int = 4, kSub: Int = 8, pqIters: Int = 2): DataFrame = {
     import spark.implicits._
-    val vecs = Ivf.vecsDF(emb, idCol, vecCol).cache()
-    val coarse = Ivf.train(spark, emb, idCol, vecCol, nList, ivfIters)
-    val assigned = Ivf.assign(spark, vecs, coarse)
-    val queryVecs = collectQueryVecs(vecs, queryIds)
-    val probeDF = queryVecs.toSeq
-      .flatMap { case (qid, qv) => coarse.nearest(qv, nProbe).map(c => (qid, c)) }
-      .toDF("query_id", "cluster")
-    val candidates = assigned.join(broadcast(probeDF), "cluster")
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("item_id"))
-      .distinct()
-    val model = train(spark, emb, idCol, vecCol, numSub, kSub, pqIters)
-    val codes = encode(spark, emb, idCol, vecCol, model)
-      .withColumnRenamed("id", "item_id")
-    val bcLut = spark.sparkContext.broadcast(lutFor(queryVecs, model).toMap)
-    val scored = candidates.join(codes, "item_id")
-      .select(col("query_id"), col("item_id"), col("codes"))
-      .as[(Long, Long, Seq[Int])]
-      .map { case (qid, id, cs) => (qid, id, adcScore(bcLut.value(qid), cs)) }
-      .toDF("query_id", "item_id", "adot")
-    val out = rankTopK(scored, k)
-    vecs.unpersist(blocking = false)
-    out
+    graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol)) { vecs =>
+      val coarse = Ivf.trainOnVecs(spark, vecs, nList, ivfIters)
+      val assigned = Ivf.assign(spark, vecs, coarse)
+      val queryVecs = collectQueryVecs(vecs, queryIds)
+      val probeDF = queryVecs.toSeq
+        .flatMap { case (qid, qv) => coarse.nearest(qv, nProbe).map(c => (qid, c)) }
+        .toDF("query_id", "cluster")
+      val candidates = assigned.join(broadcast(probeDF), "cluster")
+        .filter(col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("item_id"))
+        .distinct()
+      val model = trainOnVecs(spark, vecs, numSub, kSub, pqIters)
+      val codes = encode(spark, emb, idCol, vecCol, model)
+        .withColumnRenamed("id", "item_id")
+      val bcLut = spark.sparkContext.broadcast(lutFor(queryVecs, model).toMap)
+      val scored = candidates.join(codes, "item_id")
+        .select(col("query_id"), col("item_id"), col("codes"))
+        .as[(Long, Long, Seq[Int])]
+        .map { case (qid, id, cs) => (qid, id, adcScore(bcLut.value(qid), cs)) }
+        .toDF("query_id", "item_id", "adot")
+      graft.Rounds.checkpoint(rankTopK(scored, k))
+    }
   }
 }

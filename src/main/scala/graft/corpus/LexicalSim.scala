@@ -63,14 +63,14 @@ object LexicalSim {
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(sum(col("a.tf") * col("b.tf") * col("a.idfm")).as("score"))
-    // materialize before mirroring: the union's two branches otherwise
-    // each re-run the whole term self-join + aggregation (lazy persist,
-    // not a checkpoint barrier — the branches sit in one final job)
-    val pairsCached =
-      pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = pairsCached.unionByName(pairsCached.select(col("id_b").as("id_a"),
-      col("id_a").as("id_b"), col("score")))
-    sym
+    // mirror by exploding both orientations of each pair row: one read
+    // of the aggregate, where a union of two reads would re-run the
+    // whole term self-join + aggregation per branch
+    pairs
+      .select(explode(array(
+        struct(col("id_a"), col("id_b"), col("score")),
+        struct(col("id_b").as("id_a"), col("id_a").as("id_b"), col("score")))).as("p"))
+      .select(col("p.id_a"), col("p.id_b"), col("p.score"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("id_a"))
           .orderBy(col("score").desc, col("id_b").asc)))

@@ -278,7 +278,7 @@ object Dedup {
     // for i < j — the same (id_a < id_b) pair set the self-join built.
     // The ids array is an ATTRIBUTE, so the HOF lambdas referencing it
     // re-read a bound value, not a recomputed subtree (the HOF-CSE
-    // rule). minhashNearDups persists `sigs` upstream, so its three
+    // rule). minhashNearDups caches `sigs` upstream, so its three
     // reads (banding + both rerank attaches) hit one cached
     // computation of the signature pass.
     val buckets = bandedKeys(sigs, bands, rowsPerBand)
@@ -303,46 +303,31 @@ object Dedup {
   /** MinHash near-dup pairs with estimated Jaccard (matching signature
     * fraction) >= threshold.
     *
-    * The signature frame is persisted (MEMORY_AND_DISK) across its
-    * three reads (banding + the two re-attach joins), so the shingle
-    * shuffle + k partial mins run ONCE per action instead of twice.
-    * The cache is bounded — (id, k ints) per doc, ~300 B/doc at k=64,
-    * spillable — and callers that materialize the pairs eagerly
-    * (nearDupClusters) unpersist it as soon as the pair set is
-    * checkpointed; a lazily-consumed result keeps it cached for reuse
-    * until session end or LRU eviction.
+    * The signature frame is cached (MEMORY_AND_DISK, [[Rounds.cached]])
+    * across its three reads (banding + the two re-attach joins), so the
+    * shingle shuffle + k partial mins run ONCE instead of twice. The
+    * cache is bounded — (id, k ints) per doc, ~300 B/doc at k=64,
+    * spillable — and lives only while the (small) pair set is
+    * checkpointed: the result reads the checkpoint, never the cache.
     */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64, bands: Int = 16, threshold: Double = 0.7): DataFrame = {
-    // materialize the (small) pair set eagerly so the signature cache
-    // can be dropped HERE: the lazy form leaked one MEMORY_AND_DISK
-    // signature frame per invocation for the session lifetime (a lazy
-    // caller has no handle to unpersist it). The checkpointed pair
-    // frame that remains cached is a few rows per near-dup pair —
-    // negligible next to k-wide signatures for the whole corpus.
-    // Callers that want the lazy plan use minhashNearDupsWithSigs and
-    // own the cleanup (nearDupClusters does).
-    val (pairs, sigs) =
-      minhashNearDupsWithSigs(docs, idCol, textCol, n, k, bands, threshold)
-    try Rounds.checkpoint(pairs) finally sigs.unpersist(blocking = false)
-  }
+      n: Int = 3, k: Int = 64, bands: Int = 16, threshold: Double = 0.7): DataFrame =
+    Rounds.cached(minhashSignatures(docs, idCol, textCol, n, k)) { sigs =>
+      Rounds.checkpoint(minhashPairs(sigs, k, bands, threshold))
+    }
 
-  /** As minhashNearDups, also returning the persisted signature frame so
-    * eager callers can unpersist it once the pairs are materialized.
+  /** The lazy pair plan of [[minhashNearDups]] over a signature frame;
+    * callers hold `sigs` in a [[Rounds.cached]] scope.
     */
-  def minhashNearDupsWithSigs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7): (DataFrame, DataFrame) = {
+  private[graft] def minhashPairs(sigs: DataFrame, k: Int, bands: Int,
+      threshold: Double): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
-    val sigs = minhashSignatures(docs, idCol, textCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = minhashCandidates(sigs, bands, k / bands)
+    minhashCandidates(sigs, bands, k / bands)
       .withColumn("est_jaccard",
         size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
           when(x === y, 1).otherwise(0)), _ === 1)).cast("double") / k)
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    (pairs, sigs)
   }
 
   /** LSH estimator calibration: every banded candidate pair with BOTH
@@ -366,45 +351,43 @@ object Dedup {
   def estimatorEval(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16,
       maxBucketSize: Int = 10000): DataFrame = {
-    val sigs = minhashSignatures(docs, idCol, textCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the candidate-pair frame is read twice below (the exact-Jaccard
     // intersection join and the final assembly); checkpoint it so the
-    // banded self-join + rerank runs once — pairs are few and narrow
-    val pairs = Rounds.checkpoint(
-      minhashCandidates(sigs, bands, k / bands, maxBucketSize)
-        .withColumn("n_match",
-          size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
-            when(x === y, 1).otherwise(0)), _ === 1)).cast("long"))
-        .select(col("id_a"), col("id_b"), col("n_match")))
+    // banded self-join + rerank runs once — pairs are few and narrow.
+    // The signature cache serves only this checkpoint
+    val pairs = Rounds.cached(minhashSignatures(docs, idCol, textCol, n, k)) { sigs =>
+      Rounds.checkpoint(
+        minhashCandidates(sigs, bands, k / bands, maxBucketSize)
+          .withColumn("n_match",
+            size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
+              when(x === y, 1).otherwise(0)), _ === 1)).cast("long"))
+          .select(col("id_a"), col("id_b"), col("n_match")))
+    }
     // the shingle frame feeds three readers (per-doc counts + both
-    // sides of the exact-intersection join); persist it so the
-    // tokenize+shingle explode runs once per action instead of three
-    // times — same bounded-cache posture as the signature frame above
-    val sh = shingles(docs, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
-    val common = pairs.select(col("id_a"), col("id_b"))
-      .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    val est = col("n_match").cast("double") / k
-    val exact = col("n_common").cast("double") /
-      (col("n_a") + col("n_b") - col("n_common")).cast("double")
-    val out = pairs
-      .join(common, Seq("id_a", "id_b"), "left")
-      .join(counts.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
-      .join(counts.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("n_match"), est.as("est_jaccard"),
-        coalesce(col("n_common"), lit(0L)).as("n_common"),
-        col("n_a"), col("n_b"))
-      .select(col("id_a"), col("id_b"), col("n_match"), col("est_jaccard"),
-        col("n_common"), col("n_a"), col("n_b"),
-        exact.as("exact_jaccard"),
-        (col("est_jaccard") - exact).as("err"))
-    try Rounds.checkpoint(out)
-    finally { sigs.unpersist(blocking = false); sh.unpersist(blocking = false) }
+    // sides of the exact-intersection join); cache it so the
+    // tokenize+shingle explode runs once instead of three times
+    try Rounds.cached(shingles(docs, idCol, textCol, n)) { sh =>
+      val counts = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
+      val common = pairs.select(col("id_a"), col("id_b"))
+        .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
+        .join(sh.select(col("id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("n_common"))
+      val est = col("n_match").cast("double") / k
+      val exact = col("n_common").cast("double") /
+        (col("n_a") + col("n_b") - col("n_common")).cast("double")
+      Rounds.checkpoint(pairs
+        .join(common, Seq("id_a", "id_b"), "left")
+        .join(counts.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
+        .join(counts.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
+        .select(col("id_a"), col("id_b"), col("n_match"), est.as("est_jaccard"),
+          coalesce(col("n_common"), lit(0L)).as("n_common"),
+          col("n_a"), col("n_b"))
+        .select(col("id_a"), col("id_b"), col("n_match"), col("est_jaccard"),
+          col("n_common"), col("n_a"), col("n_b"),
+          exact.as("exact_jaccard"),
+          (col("est_jaccard") - exact).as("err")))
+    } finally Rounds.release(pairs)
   }
 
   /** SimHash fingerprint width: 60 bits (15 hex chars of md5 per token —
@@ -430,19 +413,6 @@ object Dedup {
       .select(col("id"), expr("simhash60(__t)").as("simhash"))
   }
 
-  /** SimHash near-dup pairs with Hamming distance <= maxDist (<= 3 for
-    * the 4x15-bit pigeonhole banding to be lossless).
-    *
-    * maxBucketSize caps the per-(chunk, chunk_val) bucket fan-out — the
-    * same skew guard as ngramJaccardPairs' maxShingleDf. Without it a
-    * common fingerprint chunk (near-empty docs, boilerplate) makes the
-    * self-join quadratic in that bucket: at 10^9 docs a 15-bit chunk
-    * bucket averages ~n/65k members, i.e. ~10^8 candidate pairs per hot
-    * value. Over-cap buckets are dropped entirely: their members are
-    * mass-duplicates that exact dedup already catches, and recall for
-    * genuinely near (Hamming<=3) pairs only needs ONE of the four chunk
-    * buckets to survive.
-    */
   /** (id, chunk, chunk_val): 15-bit pigeonhole chunk keys per
     * fingerprint — shared by candidate generation and the cap audit.
     */
@@ -467,6 +437,19 @@ object Dedup {
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > maxBucketSize)
 
+  /** SimHash near-dup pairs with Hamming distance <= maxDist (<= 3 for
+    * the 4x15-bit pigeonhole banding to be lossless).
+    *
+    * maxBucketSize caps the per-(chunk, chunk_val) bucket fan-out — the
+    * same skew guard as ngramJaccardPairs' maxShingleDf. Without it a
+    * common fingerprint chunk (near-empty docs, boilerplate) makes the
+    * self-join quadratic in that bucket: at 10^9 docs a 15-bit chunk
+    * bucket averages ~n/65k members, i.e. ~10^8 candidate pairs per hot
+    * value. Over-cap buckets are dropped entirely: their members are
+    * mass-duplicates that exact dedup already catches, and recall for
+    * genuinely near (Hamming<=3) pairs only needs ONE of the four chunk
+    * buckets to survive.
+    */
   def simhashNearDups(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, maxDist: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
     val chunked = simhashChunks(spark, docs, idCol, textCol)
@@ -511,8 +494,8 @@ object Dedup {
     *    so each later round shuffles a shrinking frontier — the variant
     *    to pick when components can be long chains (linked-page graphs,
     *    citation chains) rather than near-dup blobs.
-    */
-  /** Production guidance: call [[connectedComponentsAuto]] when the
+    *
+    * Production guidance: call [[connectedComponentsAuto]] when the
     * graph shape is UNKNOWN (it probes degree statistics once and picks
     * the variant that wins on that shape); this entry point pins
     * pointer jumping because its callers are near-dup candidate graphs,
@@ -539,18 +522,16 @@ object Dedup {
     *    count there (see [[connectedComponents]] scaladoc timings).
     *
     * The probe executes the upstream pair lineage once, so the input is
-    * persisted for its duration; the chosen implementation eagerly
-    * localCheckpoints its own base before returning, after which the
-    * probe cache is dropped. Returns (labels, rounds, choice) with
-    * choice in {"star", "jump"} so callers (and specs) can audit the
-    * decision.
+    * cached ([[Rounds.cached]]) for its duration; the chosen
+    * implementation checkpoints its own base before returning, after
+    * which the probe cache is dropped. Returns (labels, rounds, choice)
+    * with choice in {"star", "jump"} so callers (and specs) can audit
+    * the decision.
     */
   def connectedComponentsAuto(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIters: Int = 25): (DataFrame, Int, String) = {
-    val p = pairs
-      .select(col(idA).cast("long").as(idA), col(idB).cast("long").as(idB))
-      .persist()
-    try {
+      idB: String = "id_b", maxIters: Int = 25): (DataFrame, Int, String) =
+    Rounds.cached(pairs
+        .select(col(idA).cast("long").as(idA), col(idB).cast("long").as(idB))) { p =>
       val e = p.select(least(col(idA), col(idB)).as("u"),
           greatest(col(idA), col(idB)).as("v"))
         .filter(col("u") =!= col("v")).distinct()
@@ -567,8 +548,7 @@ object Dedup {
         if (pickStar) connectedComponentsStar(p, idA, idB, maxIters)
         else connectedComponentsJump(p, idA, idB, maxIters)
       (labels, rounds, if (pickStar) "star" else "jump")
-    } finally p.unpersist(blocking = false)
-  }
+    }
 
   /** Alternating two-phase connected components (the large-star /
     * small-star construction of Kiveris et al., "Connected Components in
@@ -738,14 +718,11 @@ object Dedup {
     */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16, threshold: Double = 0.7): DataFrame = {
-    val (pairs, sigs) =
-      minhashNearDupsWithSigs(docs, idCol, textCol, n, k, bands, threshold)
-    // connectedComponents localCheckpoints the pair pipeline eagerly up
-    // front, so by the time it returns the signature cache has served
-    // its three reads and can be dropped
-    val cc = connectedComponents(pairs)
-    sigs.unpersist(blocking = false)
-    cc.withColumn("keep", col("doc_id") === col("cluster_id"))
+    // connectedComponents checkpoints the pair pipeline up front, so
+    // its labels never read the signature cache
+    Rounds.cached(minhashSignatures(docs, idCol, textCol, n, k)) { sigs =>
+      connectedComponents(minhashPairs(sigs, k, bands, threshold))
+    }.withColumn("keep", col("doc_id") === col("cluster_id"))
   }
 
   /** The deduplicated corpus: every doc except non-canonical members of

@@ -44,40 +44,40 @@ object Incremental {
       threshold: Double = 0.5, maxBucketSize: Int = 10000): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     val minMatch = math.ceil(threshold * k).toLong
-    val sigsTagged = Dedup.minhashSignatures(docs, idCol, textCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val side = docs.select(col(idCol).as("id"), isNew.as("is_new")).distinct()
-    val banded = Dedup.bandedBuckets(sigsTagged, bands, k / bands)
-      .filter(col("bsz") <= maxBucketSize)
-      .drop("bsz")
-      .join(side, "id")
-    val a = banded.filter(col("is_new")).as("a")
-    val b = banded.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") =!= col("b.id") &&
-          (!col("b.is_new") || col("b.id") < col("a.id")))
-      .select(col("a.id").as("new_id"), col("b.id").as("partner"),
-        col("b.is_new").as("partner_new"))
-      .distinct()
-    val verified = cand
-      .join(sigsTagged.select(col("id").as("new_id"), col("sig").as("sig_a")), "new_id")
-      .join(sigsTagged.select(col("id").as("partner"), col("sig").as("sig_b")), "partner")
-      .withColumn("n_match",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
-          when(x === y, 1).otherwise(0)), _ === 1)).cast("long"))
-      .filter(col("n_match") >= minMatch)
-      .select(col("new_id"), col("partner"), col("partner_new"), col("n_match"))
-    val w = Window.partitionBy(col("new_id")).orderBy(col("partner").asc)
-    val out = verified
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("new_id").as("doc_id"), col("partner").as("dup_of"),
-        when(col("partner_new"), lit("batch")).otherwise(lit("index"))
-          .as("dup_source"),
-        col("n_match"),
-        (col("n_match").cast("double") / k).as("est_jaccard"))
-    try graft.Rounds.checkpoint(out) finally sigsTagged.unpersist(blocking = false)
+    graft.Rounds.cached(Dedup.minhashSignatures(docs, idCol, textCol, n, k)) { sigsTagged =>
+      val side = docs.select(col(idCol).as("id"), isNew.as("is_new")).distinct()
+      val banded = Dedup.bandedBuckets(sigsTagged, bands, k / bands)
+        .filter(col("bsz") <= maxBucketSize)
+        .drop("bsz")
+        .join(side, "id")
+      val a = banded.filter(col("is_new")).as("a")
+      val b = banded.as("b")
+      val cand = a.join(b,
+          col("a.band") === col("b.band") &&
+            col("a.band_hash") === col("b.band_hash") &&
+            col("a.id") =!= col("b.id") &&
+            (!col("b.is_new") || col("b.id") < col("a.id")))
+        .select(col("a.id").as("new_id"), col("b.id").as("partner"),
+          col("b.is_new").as("partner_new"))
+        .distinct()
+      val verified = cand
+        .join(sigsTagged.select(col("id").as("new_id"), col("sig").as("sig_a")), "new_id")
+        .join(sigsTagged.select(col("id").as("partner"), col("sig").as("sig_b")), "partner")
+        .withColumn("n_match",
+          size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) =>
+            when(x === y, 1).otherwise(0)), _ === 1)).cast("long"))
+        .filter(col("n_match") >= minMatch)
+        .select(col("new_id"), col("partner"), col("partner_new"), col("n_match"))
+      val w = Window.partitionBy(col("new_id")).orderBy(col("partner").asc)
+      val out = verified
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .select(col("new_id").as("doc_id"), col("partner").as("dup_of"),
+          when(col("partner_new"), lit("batch")).otherwise(lit("index"))
+            .as("dup_source"),
+          col("n_match"),
+          (col("n_match").cast("double") / k).as("est_jaccard"))
+      graft.Rounds.checkpoint(out)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,71 +42,72 @@ object PrefixJoin {
       textCol: String,
       n: Int,
       threshold: Double): DataFrame = {
-    // (id, shingle), distinct — materialized once: the df aggregation,
-    // the rarity window and the verify-side set assembly all read it,
-    // and each read would otherwise re-run the tokenize+shingle+distinct
-    // pipeline over the corpus (measured 21.3 -> 7.2 task-CPU-s for
-    // q_prefix_join at sf0.1 together with the prefix materialization
-    // and the positional filter below)
-    // lazy persist, not an eager checkpoint: the three readers sit in
-    // ONE final job, so a barrier would serialize the whole pipeline
-    // into sequential jobs (measured +0.7 s wall at sf0.1); persisted
-    // blocks populate on first materialization and the later stages
-    // reuse them (the estimatorEval pattern; the bench's per-query
-    // unpersist sweep reclaims the blocks)
-    val sh = Dedup.shingles(docs, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    // (id, shingle), distinct — cached for the scope: the df
+    // aggregation, the rarity window and the verify-side set assembly
+    // all read it, and each read would otherwise re-run the
+    // tokenize+shingle+distinct pipeline over the corpus (measured 21.3
+    // -> 7.2 task-CPU-s for q_prefix_join at sf0.1 together with the
+    // prefix cache and the positional filter below). The readers sit
+    // in ONE job, the checkpoint of the small verified pair set that
+    // ends both scopes, so cached blocks populate on first use and the
+    // later stages reuse them
+    Rounds.cached(Dedup.shingles(docs, idCol, textCol, n)) { sh =>
+      val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
 
-    // per-doc global-order position r and set size sz; the order key
-    // (df, shingle) is a total order within a doc (shingles distinct)
-    val byRarity = Window.partitionBy("id").orderBy(col("df"), col("shingle"))
-    val pos = sh.join(docFreq, "shingle")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
+      // per-doc global-order position r and set size sz; the order key
+      // (df, shingle) is a total order within a doc (shingles distinct)
+      val byRarity = Window.partitionBy("id").orderBy(col("df"), col("shingle"))
+      val pos = sh.join(docFreq, "shingle")
+        .withColumn("r", row_number().over(byRarity))
+        .withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
 
-    // ceil(t*sz) computed robustly: if the FP product lands one ulp
-    // ABOVE an exact integer (t*sz = m + eps), plain ceil returns m+1 —
-    // one token too few in the prefix, a hole in the completeness
-    // guarantee. Subtracting 1e-9 before ceil absorbs that ulp; it can
-    // only ever shrink the bound (longer prefix, looser length filter),
-    // which errs on the COMPLETE side, never drops a qualifying pair.
-    def ceilT(szCol: org.apache.spark.sql.Column) =
-      ceil(szCol * lit(threshold) - lit(1e-9))
+      // prefix = first sz - ceil(t*sz) + 1 tokens (rarest-first),
+      // cached for the self-join's two sides (the join + rarity-window
+      // pipeline would otherwise run per side)
+      Rounds.cached(pos
+          .filter(col("r") <= col("sz") - ceilT(col("sz"), threshold) + 1)
+          .select(col("id"), col("shingle"), col("sz"), col("r"))) { pref =>
+        Rounds.checkpoint(verified(candidates(pref, threshold), sh, threshold))
+      }
+    }
+  }
 
-    // prefix = first sz - ceil(t*sz) + 1 tokens (rarest-first),
-    // materialized once for the self-join's two sides (the join +
-    // rarity-window pipeline would otherwise run per side)
-    val pref = pos
-      .filter(col("r") <= col("sz") - ceilT(col("sz")) + 1)
-      .select(col("id"), col("shingle"), col("sz"), col("r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  // ceil(t*sz) computed robustly: if the FP product lands one ulp
+  // ABOVE an exact integer (t*sz = m + eps), plain ceil returns m+1 —
+  // one token too few in the prefix, a hole in the completeness
+  // guarantee. Subtracting 1e-9 before ceil absorbs that ulp; it can
+  // only ever shrink the bound (longer prefix, looser length filter),
+  // which errs on the COMPLETE side, never drops a qualifying pair.
+  private def ceilT(szCol: Column, threshold: Double): Column =
+    ceil(szCol * lit(threshold) - lit(1e-9))
 
-    // candidates: prefix-token equi-join + in-join length filter
-    // (Jaccard >= t forces |B| >= t*|A| and |A| >= t*|B|) + PPJoin's
-    // positional filter. Both docs are ordered by the same global key,
-    // so tokens shared by the pair sit at or after the FIRST shared
-    // token's positions (r_a, r_b): overlap <= min(sz_a - r_a,
-    // sz_b - r_b) + 1. Jaccard >= t is equivalent to overlap >=
-    // t/(1+t) * (sz_a + sz_b), so an occurrence whose position bound
-    // cannot reach that requirement generates no candidate. Lossless
-    // under the per-occurrence + distinct shape: for a qualifying pair
-    // the first shared token lies inside both prefixes (prefix lemma)
-    // and its occurrence row satisfies the bound by construction.
+  /** Candidates: prefix-token equi-join + in-join length filter
+    * (Jaccard >= t forces |B| >= t*|A| and |A| >= t*|B|) + PPJoin's
+    * positional filter. Both docs are ordered by the same global key,
+    * so tokens shared by the pair sit at or after the FIRST shared
+    * token's positions (r_a, r_b): overlap <= min(sz_a - r_a,
+    * sz_b - r_b) + 1. Jaccard >= t is equivalent to overlap >=
+    * t/(1+t) * (sz_a + sz_b), so an occurrence whose position bound
+    * cannot reach that requirement generates no candidate. Lossless
+    * under the per-occurrence + distinct shape: for a qualifying pair
+    * the first shared token lies inside both prefixes (prefix lemma)
+    * and its occurrence row satisfies the bound by construction.
+    */
+  private def candidates(pref: DataFrame, threshold: Double): DataFrame = {
     val alpha =
       ceil((col("a.sz") + col("b.sz")) * lit(threshold / (1 + threshold))
         - lit(1e-9))
-    val a = pref.as("a")
-    val b = pref.as("b")
-    val cand = a.join(b,
+    pref.as("a").join(pref.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id") &&
-        col("b.sz") >= ceilT(col("a.sz")) &&
-        col("a.sz") >= ceilT(col("b.sz")) &&
+        col("b.sz") >= ceilT(col("a.sz"), threshold) &&
+        col("a.sz") >= ceilT(col("b.sz"), threshold) &&
         least(col("a.sz") - col("a.r"), col("b.sz") - col("b.r")) + 1 >= alpha)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+  }
 
-    // exact verify: set intersection over full sorted shingle arrays
+  /** Exact verify: set intersection over full sorted shingle arrays. */
+  private def verified(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
     val sets = sh.groupBy("id").agg(
       sort_array(collect_list(col("shingle"))).as("toks"),
       count(lit(1)).as("sz"))

@@ -167,40 +167,39 @@ object Phash {
     * simhashNearDups) reranked by exact 64-bit Hamming <= maxDist.
     * Output (id_a, id_b, hamming), id_a < id_b.
     *
-    * The band frame is persisted (MEMORY_AND_DISK) across its five
+    * The band frame is cached ([[graft.Rounds.cached]]) across its five
     * reads (cap window, both sides of the candidate self-join, both
     * rerank re-attach joins) — without it every read re-runs the
     * CPU-bound PNG encode+decode+hash over the whole corpus, which
     * measured 4-5x the operator's real cost. The cache is four int
     * rows per image (the payload bytes are never cached or shuffled);
-    * the small pair result is checkpointed eagerly so the cache can be
-    * dropped here rather than leaked to session end (the
+    * the small pair result is checkpointed inside the scope, so the
+    * cache is dropped here rather than leaked to session end (the
     * minhashNearDups pattern).
     */
   def nearDups(blobs: Dataset[MediaBlob], maxDist: Int = 8,
-      maxBucketSize: Int = 10000): DataFrame = {
-    val bands = chunkRows(blobs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped = bands
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("chunk", "chunk_val")))
-      .filter(col("bsz") <= maxBucketSize)
-      .drop("bsz")
-    val cand = capped.as("a").join(capped.as("b"),
-        col("a.chunk") === col("b.chunk") &&
-          col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val out = cand
-      .join(bands.select(col("id").as("id_a"), col("chunk"),
-        col("chunk_val").as("cv_a")), "id_a")
-      .join(bands.select(col("id").as("id_b"), col("chunk"),
-        col("chunk_val").as("cv_b")), Seq("id_b", "chunk"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(sum(bit_count(col("cv_a").bitwiseXOR(col("cv_b")))).cast("int")
-        .as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    try graft.Rounds.checkpoint(out) finally bands.unpersist(blocking = false)
-  }
+      maxBucketSize: Int = 10000): DataFrame =
+    graft.Rounds.cached(chunkRows(blobs)) { bands =>
+      val capped = bands
+        .withColumn("bsz", count(lit(1)).over(Window.partitionBy("chunk", "chunk_val")))
+        .filter(col("bsz") <= maxBucketSize)
+        .drop("bsz")
+      val cand = capped.as("a").join(capped.as("b"),
+          col("a.chunk") === col("b.chunk") &&
+            col("a.chunk_val") === col("b.chunk_val") &&
+            col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      val out = cand
+        .join(bands.select(col("id").as("id_a"), col("chunk"),
+          col("chunk_val").as("cv_a")), "id_a")
+        .join(bands.select(col("id").as("id_b"), col("chunk"),
+          col("chunk_val").as("cv_b")), Seq("id_b", "chunk"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(sum(bit_count(col("cv_a").bitwiseXOR(col("cv_b")))).cast("int")
+          .as("hamming"))
+        .filter(col("hamming") <= maxDist)
+        .select(col("id_a"), col("id_b"), col("hamming"))
+      graft.Rounds.checkpoint(out)
+    }
 }

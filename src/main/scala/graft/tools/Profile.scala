@@ -26,7 +26,8 @@ import scala.collection.mutable
   *     sbt "runMain graft.tools.Profile [query ...]"
   * No query names profiles all of `SparkEntry.queries`. The shuffle-writer
   * A/B is two runs, `SPARK_BYPASS_THRESHOLD=1` against `200` (build.sbt);
-  * every row records the threshold in effect.
+  * every row records the threshold in effect. The run ends by naming
+  * the queries that left CacheManager entries behind.
   */
 object Profile {
 
@@ -162,6 +163,12 @@ object Profile {
     }
   }
 
+  /** The queries whose row left more CacheManager entries than it found. */
+  def cacheLeaks(rows: Seq[Seq[(String, Any)]]): Seq[String] = rows.map(_.toMap)
+    .filter(r => r.contains("cache_after") &&
+      r("cache_after").asInstanceOf[Int] > r("cache_before").asInstanceOf[Int])
+    .map(_("query").toString)
+
   private def json(row: Seq[(String, Any)]): String = row.map { case (k, v) =>
     val value = v match {
       case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -183,14 +190,17 @@ object Profile {
     val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     warmUp(spark, names, sfDir)
-    val rows = mutable.ArrayBuffer[String]()
+    val rows = mutable.ArrayBuffer[Seq[(String, Any)]]()
     for (n <- names) {
-      val row = profile(spark, n, sfDir, trials)
-      rows += json(row)
-      System.err.println(s"[profile] ${rows.size}/${names.size} ${rows.last}")
+      rows += profile(spark, n, sfDir, trials)
+      System.err.println(s"[profile] ${rows.size}/${names.size} ${json(rows.last)}")
       // rewritten after every query, so an interrupted run keeps its rows
-      Files.writeString(Paths.get("PROFILE.json"), rows.mkString("[\n", ",\n", "\n]\n"))
+      Files.writeString(Paths.get("PROFILE.json"),
+        rows.map(json).mkString("[\n", ",\n", "\n]\n"))
     }
+    val leaks = cacheLeaks(rows.toSeq)
+    System.err.println(s"[profile] cache_after > cache_before: " +
+      (if (leaks.isEmpty) "none" else leaks.mkString(" ")))
     spark.stop()
   }
 }

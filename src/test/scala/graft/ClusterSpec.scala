@@ -123,26 +123,89 @@ class ClusterSpec extends AnyFunSuite {
     }.toSet
 
   test("round operators leave persisted only the checkpoints their result reads") {
+    import graft.ann.{Ivf, Pq}
+    import graft.dedup.{Incremental, PrefixJoin}
+    import graft.media.Phash
     import graft.operators.{Hits, KCore, LabelProp, PageRank}
     val edges = pairsDf(((1L until 40L).map(i => (i, i + 1)) ++
       Seq((5L, 20L), (7L, 7L), (41L, 42L))): _*)
+    val sf = new java.io.File("../testdata/sf0.001").getCanonicalPath
+    lazy val docs = spark.read.parquet(s"$sf/documents.parquet")
+    lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val qids = Seq(0L, 1L, 2L)
     val ops = Seq[(String, () => DataFrame)](
       "connectedComponentsJump" -> (() => Dedup.connectedComponentsJump(edges)._1),
       "connectedComponentsStar" -> (() => Dedup.connectedComponentsStar(edges)._1),
       "pageRank" -> (() => PageRank.pageRank(edges, "id_a", "id_b", iters = 3)),
       "hits" -> (() => Hits.hits(edges, "id_a", "id_b", iters = 3)),
       "kcore" -> (() => KCore.kcore(edges, "id_a", "id_b", k = 2, rounds = 3)),
-      "labelProp" -> (() => LabelProp.propagate(edges, "id_a", "id_b", rounds = 3)))
+      "labelProp" -> (() => LabelProp.propagate(edges, "id_a", "id_b", rounds = 3)),
+      // the operators that hold a Rounds.cached scope
+      "minhashNearDups" -> (() => Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)),
+      "estimatorEval" -> (() => Dedup.estimatorEval(docs, "doc_id", "text")),
+      "nearDupClusters" -> (() => Dedup.nearDupClusters(docs, "doc_id", "text", threshold = 0.5)),
+      "connectedComponentsAuto" -> (() => Dedup.connectedComponentsAuto(edges)._1),
+      "Phash.nearDups" -> (() => Phash.nearDups(Phash.synthesizeVariants(spark, sf))),
+      "dedupBatchAgainstIndex" -> (() => Incremental.dedupBatchAgainstIndex(
+        docs, "doc_id", "text", Incremental.isNewDoc(col("doc_id")))),
+      "prefixJaccardPairs" -> (() => PrefixJoin.prefixJaccardPairs(
+        docs.filter(col("doc_id") < 200), "doc_id", "text", n = 3, threshold = 0.15)),
+      "Ivf.topK" -> (() => Ivf.topK(spark, emb, "vec_id", "embedding", qids, k = 5, iters = 2)),
+      "semanticDedup" -> (() => Ivf.semanticDedup(spark, emb, "vec_id", "embedding",
+        eps = 0.3, iters = 2)),
+      "Pq.topKIvf" -> (() => Pq.topKIvf(spark, emb, "vec_id", "embedding", qids, k = 5,
+        ivfIters = 2, pqIters = 1)))
     val sc = spark.sparkContext
     val leaks = ops.flatMap { case (name, op) =>
       val before = sc.getPersistentRDDs.keySet
+      val entries = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark)
       val out = op()
+      // materialized, so a cache a lazy result still reads would show
+      out.count()
       val left = sc.getPersistentRDDs.keySet -- before
       val reads = checkpointIds(out)
+      val entriesLeft = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark) - entries
       left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
-      if (left == reads) None else Some(s"$name left $left persisted, its result reads $reads")
+      if (left == reads && entriesLeft == 0) None
+      else Some(s"$name left $left persisted and $entriesLeft cache entries, its result reads $reads")
     }
     assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  test("a Rounds.cached scope nested in one on the same plan leaves the outer frame cached") {
+    import spark.implicits._
+    // two identically built frames share one CacheManager entry, keyed by
+    // plan: the inner scope must not drop the entry the outer one made
+    def build() = Seq((1L, "a"), (2L, "b")).toDF("id", "s").select((col("id") * 2).as("x"))
+    val entries = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark)
+    Rounds.cached(build()) { outer =>
+      assert(outer.count() == 2)
+      val inner = Rounds.cached(build()) { inner =>
+        assert(inner.queryExecution.withCachedData.toString.contains("InMemoryRelation"))
+        inner.count()
+      }
+      assert(inner == 2)
+      assert(outer.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(outer.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+        "the inner scope dropped the outer scope's cache")
+      assert(org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark) == entries + 1)
+    }
+    assert(org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark) == entries)
+  }
+
+  test("Rounds.cached releases its cache when the scope throws") {
+    import spark.implicits._
+    val df = Seq(3L, 4L).toDF("y").select((col("y") + 1).as("z"))
+    val entries = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark)
+    val e = intercept[IllegalStateException] {
+      Rounds.cached(df) { d =>
+        assert(d.count() == 2 && d.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark) == entries)
   }
 
   test("connected components on the 128-node path: convergence costs no extra jobs") {

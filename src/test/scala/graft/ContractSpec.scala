@@ -114,6 +114,43 @@ class ContractSpec extends AnyFunSuite {
     assert(stale.isEmpty, stale)
   }
 
+  test("only graft.Rounds caches a frame") {
+    // Rounds.cached owns the storage level and the release; the
+    // persistent-RDD sweeps of Bench and Profile free blocks, not frames
+    val sweep = """getPersistentRDDs\.values\s*\.foreach\(_\.unpersist\(""".r
+    val call = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val owners = sourcesWhere("src/main/scala")(src =>
+      call.findFirstIn(sweep.replaceAllIn(src, "")).isDefined)
+    assert(owners == Set("graft/Rounds.scala"), owners)
+    val retired = "minhashNearDups" + "WithSigs"
+    val stale = sourcesWhere("src")(_.contains(retired))
+    assert(stale.isEmpty, stale)
+  }
+
+  test("the routed cache owners leave no CacheManager entry behind") {
+    // each builds, counts and releases its cached frames; a registration
+    // left behind turns a later query's matching plan fragment into an
+    // InMemoryRelation
+    val sf = new java.io.File("../testdata/sf0.001").getCanonicalPath
+    val routed = Seq("q_prefix_join", "q_dedup_minhash", "q_dedup_cluster",
+      "q_dedup_cluster_auto", "q_cluster_canonical", "q_fold_assign", "q_dedup_eval",
+      "q_dedup_incremental", "q_ann_ivf", "q_ann_ivfpq", "q_semantic_dedup",
+      "q_pca_project", "q_pca2_project", "q_phash_neardup", "q_lexical_topk",
+      "q_corpus_clean", "q_embed_quant")
+    // persist registers a plan when the query is BUILT, and registering
+    // an already-cached plan is a no-op: an entry an earlier build left
+    // (the array/map output test builds every query) would hide this
+    // query's own
+    spark.catalog.clearCache()
+    val leaks = routed.flatMap { q =>
+      val before = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark)
+      SparkEntry.queries(q)(spark, sf).count()
+      val after = org.apache.spark.sql.graft.PlanBridge.cacheEntries(spark)
+      if (after == before) None else Some(s"$q: $before -> $after")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
   /** The .scala files under `dir` whose text satisfies `pred`, relative
     * to `dir`.
     */

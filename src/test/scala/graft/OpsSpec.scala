@@ -409,13 +409,13 @@ class OpsSpec extends AnyFunSuite {
   test("minhash near-dups: sigs cached across reads, released by the eager wrapper") {
     val docs = docsDf(
       (1L, "aaaa bbbb cccc dddd"), (2L, "aaaa bbbb cccc eeee"), (3L, "zzzz yyyy"))
-    // lazy variant: the pair plan reads the cached signature frame at
-    // its three consumers (banding + both re-attach sides)
-    val (pairs, sigs) = Dedup.minhashNearDupsWithSigs(docs, "doc_id", "text")
-    val plan = pairs.queryExecution.executedPlan.toString
+    // inside the signature scope the pair plan reads the cached frame
+    // at its three consumers (banding + both re-attach sides)
+    val plan = Rounds.cached(Dedup.minhashSignatures(docs, "doc_id", "text", 3, 64)) { sigs =>
+      Dedup.minhashPairs(sigs, 64, 16, 0.7).queryExecution.executedPlan.toString
+    }
     val cachedReads = "InMemoryTableScan".r.findAllIn(plan).length
     assert(cachedReads >= 3, s"expected >=3 cached sig reads, got $cachedReads:\n$plan")
-    sigs.unpersist(blocking = false)
     // eager wrapper: materializes the (small) pair set, then releases
     // the signature cache — a lazy caller must not leak one
     // corpus-sized cached frame per invocation

@@ -100,46 +100,34 @@ class PlanSpec extends AnyFunSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, "fingerprints must be computed once")
   }
 
-  test("lexical top-k: pair frame cached for the mirror; self-join reuses exchanges; rank limit pushed") {
-    // The mirror union's two branches both read the MATERIALIZED pair
-    // frame (InMemoryTableScan x2 — round 6: the lazy persist replaced
-    // the ReusedExchange-based mirror reuse, which re-ran the pair
-    // aggregation when any plan detail diverged). Inside the cached
-    // pair plan the identical-column-set self-join sides still
+  test("lexical top-k: one pair aggregate mirrored in place; self-join reuses exchanges; rank limit pushed") {
+    // The mirror explodes both orientations of each aggregated pair row,
+    // so the term self-join + pair aggregation runs ONCE with no cache
+    // (no InMemoryTableScan). The identical-column-set self-join sides
     // collapse onto ONE tf term-exchange and ONE df exchange
     // (ReusedExchange). Tokenization deliberately runs TWICE (tf and
     // df are different aggregates of the exploded stream; deriving df
     // as a count-over-term window would reuse the exchange but funnel
     // every hot stopword's postings into one window task — Zipf skew
     // kills that at 100 TB, a second map-side-combined scan does not).
-    // Fixed scan budget inside the cached plan: 2 tokenize + 1
-    // one-column n_docs + 1 zero-column crossJoin count = 4. Also pin
-    // the top-k rank-limit pushdown: a Partial WindowGroupLimit must
-    // bound map output at k rows per doc below the final exchange.
+    // Fixed scan budget: 2 tokenize + 1 one-column n_docs + 1
+    // zero-column crossJoin count = 4. Also pin the top-k rank-limit
+    // pushdown: a Partial WindowGroupLimit must bound map output at k
+    // rows per doc below the final exchange.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    // the CacheManager is shared across sessions: drop any pair-frame
-    // registration a previous test left (its cachedPlan was compiled
-    // under THAT test's join config) so the plan below compiles under
-    // this test's no-broadcast conf
-    s2.catalog.clearCache()
-    val exec = graft.corpus.LexicalSim.topKSimilar(
+    val p = graft.corpus.LexicalSim.topKSimilar(
         s2.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
         k = 5, minDf = 2L, dfCap = 100L)
-      .queryExecution.executedPlan
-    val p = exec.toString
-    assert("InMemoryTableScan".r.findAllIn(p).length == 2,
-      s"pair frame not materialized for both mirror branches:\n${p.take(2000)}")
+      .queryExecution.executedPlan.toString
+    assert("partial_sum\\(".r.findAllIn(p).length == 1 &&
+      "functions=\\[sum\\(".r.findAllIn(p).length == 1,
+      s"the pair aggregate must run once:\n${p.take(3000)}")
+    assert(!p.contains("InMemoryTableScan"), p.take(3000))
     assert("WindowGroupLimit".r.findAllIn(p).length == 2, "rank-limit pushdown lost")
-    val cached = exec.collectFirst {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s.relation.cachedPlan
-    }.map(_.toString).getOrElse("")
-    assert("ReusedExchange".r.findAllIn(cached).length >= 2, cached.take(2000))
-    assert("Scan parquet".r.findAllIn(cached).length == 4, "scan budget regressed")
-    // drop the cache this test materialized registration for
-    s2.catalog.clearCache()
+    assert("ReusedExchange".r.findAllIn(p).length >= 2, p.take(3000))
+    assert("Scan parquet".r.findAllIn(p).length == 4, "scan budget regressed")
   }
 
   test("as-of join: one keyed exchange + one window, no join operator at all") {
@@ -208,11 +196,36 @@ class PlanSpec extends AnyFunSuite {
     // production scan widths. Any ENSURE_REQUIREMENTS exchange here
     // would mean the operator grew a real shuffle.
     val p = plan("q_embed_quant")
-    assert(p.contains("Scan parquet") || p.contains("InMemory"), p)
+    assert(p.contains("Scan parquet"), p)
     val exchanges = "(?i)exchange".r.findAllIn(p).size
     assert(exchanges <= 1, s"q_embed_quant grew extra shuffles:\n$p")
     assert(!p.contains("ENSURE_REQUIREMENTS"),
       s"q_embed_quant grew an algorithmic shuffle:\n$p")
+    // q's FLOOR(x / scale + 0.5) is the quantize expression's own node
+    spreadAbove("q_embed_quant", "FLOOR(")
+  }
+
+  test("corpus cleaning scores each doc once, above the spread") {
+    // lenScore's `/ 64.0` is the quality score's own node
+    spreadAbove("q_corpus_clean", "/ 64.0)")
+  }
+
+  /** The fenced record-local work of `name` runs once, above the spread:
+    * no cache in the plan, ONE bySplits exchange (REPARTITION_BY_NUM),
+    * `marker` (a node of the fenced expression) exactly once and above
+    * that exchange, and no higher-order function evaluated under it —
+    * a filter pushed below the spread would copy the expression there.
+    */
+  private def spreadAbove(name: String, marker: String): Unit = {
+    val p = plan(name)
+    assert(!p.contains("InMemoryTableScan") && !p.contains("InMemoryRelation"), p)
+    val spread = p.indexOf("REPARTITION_BY_NUM")
+    assert(spread >= 0 && spread == p.lastIndexOf("REPARTITION_BY_NUM"),
+      s"$name: expected one spread exchange:\n$p")
+    assert(p.split(java.util.regex.Pattern.quote(marker), -1).length == 2 &&
+      p.indexOf(marker) < spread, s"$name: `$marker` not once above the spread:\n$p")
+    assert(!p.substring(spread).contains("lambdafunction"),
+      s"$name: work evaluated under the spread:\n$p")
   }
 
   test("substring dedup: hash-keyed joins only, no pairwise doc join anywhere") {

@@ -46,6 +46,15 @@ class ProfileSpec extends AnyFunSuite {
     }
   }
 
+  test("the run names exactly the queries that left CacheManager entries") {
+    def row(q: String, before: Int, after: Int) =
+      Seq("query" -> q, "cache_before" -> before, "cache_after" -> after)
+    val rows = Seq(row("q_a", 0, 0), row("q_b", 0, 1), row("q_c", 3, 5), row("q_d", 2, 1),
+      Seq("query" -> "q_e", "error" -> "java.lang.RuntimeException"))
+    assert(Profile.cacheLeaks(rows) == Seq("q_b", "q_c"))
+    assert(Profile.cacheLeaks(rows.take(1)).isEmpty)
+  }
+
   test("a query that throws yields an error row, not a dropped one") {
     val missingDir = new File(sf, "no_such_sf").getPath
     val row = Profile.profile(spark, "q_filter_word", missingDir, trials = 2).toMap
