@@ -2,9 +2,9 @@ package graft.lineage
 
 import graft.{Doc, Parallelize}
 import graft.extract.Extract
-import graft.functions.ExtractSpansExpr
+import graft.functions.{BucketFingerprintAgg, ExtractSpansExpr}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, RepartitionOperation}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
@@ -31,13 +31,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   *  1. run_id reuse and table existence are filesystem checks on the
   *     catalog (no Spark job);
-  *  2. one completed-set read (`doc_id`, `status` only) feeds an
-  *     aggregation that fingerprints the input's and the completed set's
-  *     resume buckets; its <= 2 x `buckets` values are collected to the
-  *     driver, which derives both the skipped count and the incomplete
-  *     buckets from them. The completed side is [[completedDocIds]],
-  *     whose `distinct()` adds a shuffle of every completed doc_id
-  *     before that aggregation;
+  *  2. the resume pass fingerprints the input's resume buckets in one
+  *     observed pass and compares them on the driver with the completed
+  *     set's, which derives both the skipped count and the incomplete
+  *     buckets. The completed side comes from the per-snapshot
+  *     summaries each run commits with its metrics rows, summed on the
+  *     driver, so the pass scans the input only; where the metrics
+  *     table has no valid summaries (`ParquetCatalog.summaries`) the
+  *     same pass also reads the completed set (see
+  *     [[filterPendingBucketed]]);
   *  3. the per-doc anti-join runs on the incomplete buckets alone;
   *  4. extraction is one codegen'd Project over the pending rows, the
   *     timed form of `extract_spans`, run on the partitions the rows
@@ -46,7 +48,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     pays a placement shuffle (see [[extractWithLineage]]);
   *  5. the commit appends the output, reads back only this run's
   *     partition, and appends the metrics rows derived from it, counting
-  *     them in the same pass (`Observe`).
+  *     them (`Observe`) and fingerprinting the `ok` ones (the
+  *     snapshot's summary) in the same pass.
   *
   * Resume = left-anti join of the input against the metrics table's
   * successfully completed doc_ids. Idempotence: Spark's output committer
@@ -70,18 +73,27 @@ object Lineage {
   private val CompletedSchema = StructType(Seq(
     StructField("doc_id", StringType), StructField("status", StringType)))
 
+  /** The metrics-table columns `readCommitted` keys on. */
+  private val CommittedSchema = StructType(Seq(
+    StructField("run_id", StringType), StructField("doc_id", StringType)))
+
   /** Data columns of the output table; run_id lives in the partition path. */
   private val OutSchema = Encoders.product[LineageDoc].schema
 
   /** Resume buckets of a production run. */
   private val ResumeBuckets = 4096
 
+  /** The `doc_id` of every `ok` row of an existing metrics table, one
+    * per row: a doc committed `ok` twice appears twice.
+    */
+  private def okDocIds(spark: SparkSession, metricsPath: String): DataFrame =
+    ParquetCatalog.read(spark, metricsPath, CompletedSchema)
+      .filter(col("status") === "ok")
+      .select(col("doc_id"))
+
   /** doc_ids already successfully extracted in any previous run. */
   def completedDocIds(spark: SparkSession, metricsPath: String): DataFrame =
-    if (ParquetCatalog.exists(spark, metricsPath))
-      ParquetCatalog.read(spark, metricsPath, CompletedSchema)
-        .filter(col("status") === "ok")
-        .select(col("doc_id")).distinct()
+    if (ParquetCatalog.exists(spark, metricsPath)) okDocIds(spark, metricsPath).distinct()
     else spark.range(0).select(lit("").as("doc_id")).filter(lit(false))
 
   /** Input minus completed docs — the resume anti-join (broadcast-able
@@ -95,9 +107,10 @@ object Lineage {
 
   /** Stable resume bucket of a doc_id: independent of the run's
     * extraction partitioning, so completeness accounting survives
-    * re-running at a different parallelism.
+    * re-running at a different parallelism. The one doc_id hash of the
+    * file: batch slices and the `numPartitions` salt use it too.
     */
-  private def resumeBucket(buckets: Int) =
+  private def resumeBucket(buckets: Int): Column =
     pmod(xxhash64(col("doc_id"), lit(16)), lit(buckets))
 
   /** What the resume pass leaves on the driver: the completed-doc count
@@ -105,47 +118,60 @@ object Lineage {
     */
   private final case class ResumeState(skipped: Long, incomplete: Seq[Long])
 
-  /** The resume pass. Per-bucket SET fingerprints (count plus two
-    * independent mod-p hash sums of the doc_ids — mod-p keeps the
-    * running sums overflow-free at 10^8 docs/bucket under ANSI
-    * arithmetic) of the input and of the completed set, computed by ONE
-    * aggregation over the tagged union of both column-pruned scans and
-    * collected to the driver (<= `buckets` rows, two fingerprints each).
-    * A bucket is wholly done only when the completed-id set equals the
-    * input-id set exactly, so the pruning stays CORRECT when the metrics
-    * table holds doc_ids not in the current input (a replaced/renamed
-    * doc sharing a bucket with a completed one): any asymmetry fails the
-    * fingerprint and the bucket falls through to the per-doc anti-join,
-    * which handles extras natively. False "equal" needs a simultaneous
-    * collision of both independent sums (~p^-2 ~ 2.5e-19 per bucket).
-    * The skipped count is the completed side's total, so it needs no
-    * pass of its own.
+  /** The set fingerprint of the `doc_id`s of the rows whose `bucket` is
+    * not null, per resume bucket: the one fingerprint the commit
+    * observes and the resume compares.
+    */
+  private def fingerprint(bucket: Column, buckets: Int): Column =
+    BucketFingerprintAgg.of(bucket, col("doc_id"), buckets)
+
+  /** The resume pass. A bucket is wholly done only when the completed
+    * doc_ids in it equal the input's as a multiset, tested by their
+    * per-bucket SET fingerprints ([[BucketFingerprintAgg]]: two
+    * independent mod-p hash sums), so the pruning stays CORRECT when the
+    * metrics table holds doc_ids not in the current input (a
+    * replaced/renamed doc sharing a bucket with a completed one): any
+    * asymmetry fails the fingerprint and the bucket falls through to the
+    * per-doc anti-join, which handles extras natively. False "equal"
+    * needs a simultaneous collision of both sums (~p^-2 ~ 2.5e-19 per
+    * bucket).
+    *
+    * The fingerprints are observed over one discarded pass, so the
+    * tasks' partial fingerprints merge on the driver. The completed
+    * side, in one of two ways:
+    *  - summary path: when `ParquetCatalog.summaries` holds one summary
+    *    per snapshot over `buckets` buckets, their sum. The pass then
+    *    reads the input alone: one Spark job, no shuffle. `skipped` is
+    *    the sum of the summaries' row counts: the `ok` rows, which
+    *    equals the distinct completed doc_ids whenever no doc_id is
+    *    committed `ok` twice (only an input carrying a doc_id twice does
+    *    that);
+    *  - fallback: the pass is the tagged union of the input and
+    *    [[completedDocIds]] (a completed-table scan and a `distinct()`
+    *    shuffle), fingerprinting both sides; `skipped` is the distinct
+    *    completed doc_id count.
     */
   private def resumeState(spark: SparkSession, input: Dataset[Doc],
       metricsPath: String, buckets: Int): ResumeState = {
-    val P = 2000000011L
+    import BucketFingerprintAgg.Fingerprint
+    val summed = ParquetCatalog.summaries(spark, metricsPath)
+      .map(_.map(Fingerprint.decode)).filter(_.forall(_.buckets == buckets))
     def side(df: DataFrame, isInput: Boolean): DataFrame =
-      df.select(resumeBucket(buckets).as("bucket"), lit(isInput).as("is_in"),
-        pmod(xxhash64(col("doc_id"), lit(71)), lit(P)).as("h1"),
-        pmod(xxhash64(col("doc_id"), lit(1213)), lit(P)).as("h2"))
-    def fp(isInput: Boolean, suffix: String): Seq[Column] = {
-      val mine = col("is_in") === isInput
-      Seq(count(when(mine, 1)).as(s"n_$suffix"),
-        sum(when(mine, col("h1"))).as(s"s1_$suffix"),
-        sum(when(mine, col("h2"))).as(s"s2_$suffix"))
-    }
-    val aggs = fp(isInput = true, "in") ++ fp(isInput = false, "done")
-    val rows = side(input.toDF(), isInput = true)
-      .unionByName(side(completedDocIds(spark, metricsPath), isInput = false))
-      .groupBy("bucket").agg(aggs.head, aggs.tail: _*)
-      .select(col("bucket"), col("n_in"), col("n_done"),
-        (col("n_done") === col("n_in") && col("s1_done") <=> col("s1_in") &&
-          col("s2_done") <=> col("s2_in")).as("done"))
-      .collect()
-    ResumeState(
-      skipped = rows.map(_.getLong(2)).sum,
-      incomplete = rows.collect { case r if r.getLong(1) > 0 && !r.getBoolean(3) => r.getLong(0) }
-        .toSeq.sorted)
+      df.select(col("doc_id"), lit(isInput).as("is_in"))
+    def fp(isInput: Boolean): Column =
+      fingerprint(when(col("is_in") === isInput, resumeBucket(buckets)), buckets)
+    val inputSide = side(input.toDF(), isInput = true)
+    val pass =
+      if (summed.isDefined) inputSide
+      else inputSide.unionByName(side(completedDocIds(spark, metricsPath), isInput = false))
+    val observed = Observe.writeWithMetrics(pass,
+        "in" -> fp(isInput = true), "done" -> fp(isInput = false))(
+      _.write.format("noop").mode(SaveMode.Overwrite).save())
+    def decoded(name: String) = Fingerprint.decode(observed(name).asInstanceOf[Array[Byte]])
+    val in = decoded("in")
+    val done = summed.map(_.foldLeft(new Fingerprint(buckets))(_.merge(_)))
+      .getOrElse(decoded("done"))
+    ResumeState(skipped = done.rows, incomplete = in.differing(done))
   }
 
   /** Input buckets NOT fully completed, as a `bucket` column — the
@@ -168,7 +194,7 @@ object Lineage {
       if (state.incomplete.isEmpty) input.filter(lit(false))
       else {
         val inS = resumeBucket(buckets).isin(state.incomplete: _*)
-        val done = completedDocIds(spark, metricsPath).filter(inS)
+        val done = okDocIds(spark, metricsPath).filter(inS)
         input.filter(inS).join(done, Seq("doc_id"), "left_anti").as[Doc]
       }
     (state.skipped, pending)
@@ -176,19 +202,24 @@ object Lineage {
 
   /** Partition-granular resume fast path. The plain anti-join keys the
     * FULL input against the FULL completed-id set. Here the resume pass
-    * (one completed-set read, fingerprints collected on the driver:
-    * <= 2 x `buckets` values) runs eagerly and finds the incomplete
-    * buckets S; the returned plan is `input[bucket in S]` left-anti
-    * `completed[bucket in S]`, so only docs in partially-complete
-    * buckets (the crash frontier — a few buckets out of thousands on a
-    * steady resume) reach the per-doc anti-join, and an empty S is the
-    * empty input with no scan at all. The pass itself still shuffles
-    * the whole completed set once: its completed side is
-    * [[completedDocIds]], whose `distinct()` shuffles every completed
-    * doc_id (partially aggregated per task) before the bounded bucket
-    * aggregation — at 10^12 docs a 10^12-row shuffle on every resume.
-    * Worst case (every bucket incomplete) degrades to the plain path
-    * plus the resume pass. Output is identical to filterPending.
+    * runs eagerly and finds the incomplete buckets S; the returned plan
+    * is `input[bucket in S]` left-anti `ok[bucket in S]`, so only docs in
+    * partially-complete buckets (the crash frontier — a few buckets out
+    * of thousands on a steady resume) reach the per-doc anti-join, and an
+    * empty S is the empty input with no scan at all. The right side is
+    * the `ok` rows' doc_ids without `distinct()`: a left-anti join's
+    * output does not depend on duplicates on its right.
+    *
+    * On a metrics table whose snapshots all carry summaries (every table
+    * `runResumable` alone has written), the pass sums the summaries on
+    * the driver and scans only the input: no completed-set read and no
+    * shuffle of completed doc_ids. Elsewhere (a table written outside
+    * the catalog, an orphan, a compaction or expiry, a lost summary, or
+    * a `buckets` other than the summaries') it falls back to reading the
+    * completed set through [[completedDocIds]], whose `distinct()`
+    * shuffles every completed doc_id. Worst case (every bucket
+    * incomplete) degrades to the plain path plus the resume pass.
+    * Output is identical to filterPending.
     */
   def filterPendingBucketed(spark: SparkSession, input: Dataset[Doc],
       metricsPath: String, buckets: Int = ResumeBuckets): Dataset[Doc] =
@@ -221,8 +252,7 @@ object Lineage {
       numPartitions: Int): Dataset[LineageDoc] = {
     val placed =
       if (numPartitions > 0)
-        docs.toDF().repartition(numPartitions,
-          pmod(xxhash64(col("doc_id"), lit(16)), lit(numPartitions)))
+        docs.toDF().repartition(numPartitions, resumeBucket(numPartitions))
       else if (movesRows(docs.queryExecution.optimizedPlan)) docs.toDF()
       else Parallelize.bySplits(docs.toDF(), "doc_id")
     val (split, mid) = strategy match {
@@ -255,8 +285,9 @@ object Lineage {
     * yet; the resume pass of [[filterPendingBucketed]] (which also yields
     * the skipped count); extraction and the output append; a read-back of
     * this run's output partition only, with the known output schema; and
-    * the metrics append, whose row count is observed in the same pass to
-    * give the processed count.
+    * the metrics append, whose row count (the processed count) and the
+    * fingerprint of its `ok` doc_ids (the snapshot's summary the next
+    * resume sums) are observed in the same pass.
     *
     * Crash-window contract: the output append commits before the metrics
     * append, so a crash between the two leaves output rows with no
@@ -295,8 +326,10 @@ object Lineage {
       col("n_tables"), col("n_cells"),
       sha2(to_json(col("spans")), 256).as("checksum"),
       col("wall_ms"), current_timestamp().as("ts"))
+    val okFingerprint =
+      fingerprint(when(col("status") === "ok", resumeBucket(ResumeBuckets)), ResumeBuckets)
     val observed = Observe.writeWithMetrics(metrics, "processed" -> count(lit(1)))(
-      ParquetCatalog.append(_, metricsPath))
+      ParquetCatalog.appendSummarized(_, metricsPath, okFingerprint))
     (observed("processed").asInstanceOf[Long], skipped)
   }
 
@@ -306,7 +339,7 @@ object Lineage {
     */
   def batchSlice(input: Dataset[Doc], batches: Int, b: Int): Dataset[Doc] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
-    input.filter(pmod(xxhash64(col("doc_id"), lit(16)), lit(batches)) === b)
+    input.filter(resumeBucket(batches) === b)
   }
 
   /** Batched resumable run: the input is processed as `batches`
@@ -315,7 +348,7 @@ object Lineage {
     * whole input succeeds — at 10^12 docs, where some failure is
     * certain, that is an unusable blast radius; here a crash loses at
     * most one in-flight batch, and the retry's per-batch resume prunes
-    * every completed batch with two bounded aggregations
+    * every completed batch with one resume pass
     * (filterPendingBucketed) before touching per-doc state. Each batch
     * commits under run_id `<runId>-b<b>`; a retry needs a fresh base
     * runId like any other attempt. Returns (processed this run,
@@ -349,8 +382,7 @@ object Lineage {
     * idempotence contract (one row per doc even across crashed attempts).
     */
   def readCommitted(spark: SparkSession, outPath: String, metricsPath: String): DataFrame = {
-    val committed = ParquetCatalog.read(spark, metricsPath)
-      .select(col("run_id"), col("doc_id")).distinct()
+    val committed = ParquetCatalog.read(spark, metricsPath, CommittedSchema)
     ParquetCatalog.read(spark, outPath).join(committed, Seq("run_id", "doc_id"), "left_semi")
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * observed aggregates and are read on the driver after the action
   * completes. This is the Spark-native replacement for the
   * "write, then re-read to count" anti-pattern; `Lineage.runResumable`
-  * takes its `processed` count from the metrics-table append this way.
+  * takes its `processed` count from the metrics-table append this way,
+  * and the resume pass its input fingerprint from a discarded pass.
   */
 object Observe {
 

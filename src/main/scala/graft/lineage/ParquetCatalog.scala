@@ -1,7 +1,8 @@
 package graft.lineage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -20,6 +21,21 @@ import java.nio.charset.StandardCharsets.UTF_8
   * union of files from manifests `<= id` with `basePath=<table>` so
   * partition columns survive. Underscore-prefixed paths are invisible to
   * Spark's parquet reader, so `read` (current view) is unaffected.
+  *
+  * Snapshot summaries: [[appendSummarized]] also commits a summary of
+  * the rows the append added, as `<table>/_graft_snapshots/fp-<id>`
+  * beside `snap-<id>`. The summary is the value of an aggregate the
+  * caller supplies, observed in the write's own pass, so it costs no
+  * Spark job; the catalog stores its bytes without reading them.
+  * [[summaries]] returns them only while they describe every row
+  * `read` sees: every committed snapshot is an append with a summary,
+  * and the visible data files are exactly the union of those snapshots'
+  * manifests. A table written outside the catalog, an orphan file
+  * (adopted or not), a rewrite ([[overwrite]], [[compact]],
+  * [[expireSnapshots]]) or a lost summary make it return None, and the
+  * caller reads the rows instead. The summary is written after the
+  * manifest, so a crash between the two leaves a snapshot without a
+  * summary, never a summary without a snapshot.
   *
   * Codec: every data file the catalog writes is zstd-compressed
   * (`Codec`, Parquet's default zstd level). It is part of the table
@@ -41,7 +57,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `write.parquet.compression-codec=zstd` (Iceberg's default since 1.4).
   * The run_id partition column maps to a hidden partition transform;
   * `hasPartition` becomes a lookup in the `<table>.partitions` metadata
-  * table and `readPartition` a filtered `spark.table(table)`.
+  * table and `readPartition` a filtered `spark.table(table)`. A snapshot
+  * summary maps to the partition summaries an Iceberg manifest carries
+  * per partition field (value bounds, null counts), computed by the
+  * writer at commit time; here the summarized field is the caller's
+  * bucket and the summary a per-bucket set fingerprint.
   */
 object ParquetCatalog {
   private val SnapDir = "_graft_snapshots"
@@ -108,6 +128,9 @@ object ParquetCatalog {
     finally in.close()
   }
 
+  /** Where snapshot `id`'s summary lives. */
+  private def summaryPath(root: Path, id: Long): Path = new Path(root, f"$SnapDir/fp-$id%09d")
+
   /** (isRewrite, files) of one manifest. */
   private def manifestEntry(spark: SparkSession, table: String,
       id: Long): (Boolean, Seq[String]) = {
@@ -141,11 +164,18 @@ object ParquetCatalog {
     * see orphan rows that readAsOf excludes, which is exactly the
     * crash-window contract Lineage.readCommitted already enforces at
     * the row level.
+    *
+    * `summary`, when given, is evaluated after the manifest is written
+    * and stored as the snapshot's summary, unless the commit adopted
+    * orphans: the summary covers only the rows `write` added.
     */
   private def commitSnapshot(spark: SparkSession, table: String,
-      rewrite: Boolean = false)(write: => Unit): Unit = {
+      rewrite: Boolean = false, summary: Option[() => Array[Byte]] = None)(
+      write: => Unit): Unit = {
     val ids = snapshots(spark, table)
     val before = ids.flatMap(id => manifestFiles(spark, table, id)).toSet
+    val orphans =
+      if (summary.isDefined) listDataFiles(spark, table) -- before else Set.empty[String]
     write
     val added = (listDataFiles(spark, table) -- before).toSeq.sorted
     val fs = fsFor(spark, new Path(table))
@@ -157,12 +187,54 @@ object ParquetCatalog {
       else added.mkString("\n")
     val os = fs.create(new Path(root, f"$SnapDir/snap-$snapId%09d"), false)
     try os.write(body.getBytes(UTF_8)) finally os.close()
+    if (orphans.isEmpty) summary.foreach { bytes =>
+      // written under a temporary name and renamed, so a crash leaves
+      // either the whole summary or none
+      val tmp = new Path(root, f"$SnapDir/fp-$snapId%09d.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(bytes()) finally out.close()
+      fs.rename(tmp, summaryPath(root, snapId))
+    }
   }
 
   def append(df: DataFrame, table: String): Unit =
     commitSnapshot(df.sparkSession, table) {
       writer(df).parquet(table)
     }
+
+  /** [[append]] that also commits a summary of the appended rows:
+    * `summary` is an aggregate over `df` whose value is the summary's
+    * bytes (`binary`). It is observed in the write's own pass and its
+    * value written as the snapshot's `fp-<id>` after the manifest.
+    */
+  def appendSummarized(df: DataFrame, table: String, summary: Column): Unit = {
+    val obs = Observation()
+    commitSnapshot(df.sparkSession, table,
+        summary = Some(() => obs.get("summary").asInstanceOf[Array[Byte]])) {
+      writer(df.observe(obs, summary.as("summary"))).parquet(table)
+    }
+  }
+
+  /** The summaries of the table's snapshots, oldest first, when they
+    * describe every row `read` sees: every committed snapshot is an
+    * append with a summary, and the visible data files are exactly the
+    * union of the snapshots' manifests. None otherwise, and for a table
+    * with no snapshot. Runs no Spark job.
+    */
+  def summaries(spark: SparkSession, table: String): Option[Seq[Array[Byte]]] = {
+    val fs = fsFor(spark, new Path(table))
+    val root = fs.makeQualified(new Path(table))
+    val ids = snapshots(spark, table)
+    val entries = ids.map(id => manifestEntry(spark, table, id))
+    val whole = ids.nonEmpty && !entries.exists { case (isRewrite, _) => isRewrite } &&
+      ids.forall(id => fs.exists(summaryPath(root, id))) &&
+      listDataFiles(spark, table) == entries.flatMap(_._2).toSet
+    if (!whole) None
+    else Some(ids.map { id =>
+      val in = fs.open(summaryPath(root, id))
+      try in.readAllBytes() finally in.close()
+    })
+  }
 
   def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit =
     commitSnapshot(df.sparkSession, table) {
@@ -318,9 +390,12 @@ object ParquetCatalog {
     val os = fs.create(new Path(root, f"$SnapDir/snap-$oldestKept%09d"), true)
     try os.write((RewriteMarker +: oldestFiles.sorted).mkString("\n").getBytes(UTF_8))
     finally os.close()
-    // drop expired manifests, then unreferenced data files
-    expired.foreach(id =>
-      fs.delete(new Path(root, f"$SnapDir/snap-$id%09d"), false))
+    // drop expired manifests and their summaries, then unreferenced
+    // data files
+    expired.foreach { id =>
+      fs.delete(new Path(root, f"$SnapDir/snap-$id%09d"), false)
+      fs.delete(summaryPath(root, id), false)
+    }
     (listDataFiles(spark, table) -- live).foreach(rel =>
       fs.delete(new Path(root, rel), false))
   }

@@ -127,6 +127,14 @@ class ContractSpec extends AnyFunSuite {
     assert(stale.isEmpty, stale)
   }
 
+  test("only the catalog names its snapshot directory") {
+    // manifests and snapshot summaries are ParquetCatalog's format; a
+    // reader elsewhere would bypass the summaries' validity rule. Test
+    // sources, which inspect the layout on purpose, are excepted
+    val namers = sourcesWhere("src/main/scala")(_.contains("_graft_snapshots"))
+    assert(namers == Set("graft/lineage/ParquetCatalog.scala"), namers)
+  }
+
   test("the routed cache owners leave no CacheManager entry behind") {
     // each builds, counts and releases its cached frames; a registration
     // left behind turns a later query's matching plan fragment into an

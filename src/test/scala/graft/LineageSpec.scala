@@ -2,7 +2,9 @@ package graft
 
 import graft.fixtures.SpanGen
 import graft.lineage.Lineage
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -53,6 +55,41 @@ class LineageSpec extends AnyFunSuite {
     val added = parquetFiles(root) -- before
     assert(added.nonEmpty, s"no parquet file added under $root")
     added.flatMap(chunkCodecs)
+  }
+
+  private def docIds(ds: Dataset[Doc]): Seq[String] =
+    ds.toDF().select("doc_id").collect().map(_.getString(0)).sorted.toSeq
+
+  /** The bucketed resume keeps exactly the docs the plain anti-join
+    * keeps, on whichever path `metrics` sends it down.
+    */
+  private def assertPendingAsPlain(input: Dataset[Doc], metrics: String): Unit =
+    assert(docIds(Lineage.filterPendingBucketed(spark, input, metrics)) ==
+      docIds(Lineage.filterPending(spark, input, metrics)), metrics)
+
+  /** No doc is committed `ok` twice in `metrics`: the invariant under
+    * which the summaries' ok-row count is the distinct completed count.
+    */
+  private def assertOkOnce(metrics: String): Unit = {
+    val ok = spark.read.parquet(metrics).filter("status = 'ok'").select("doc_id")
+    assert(ok.count() == ok.distinct().count(), metrics)
+  }
+
+  /** `body`'s value, the Spark jobs and stages it started, and the
+    * queries it ran.
+    */
+  private def observed[T](body: => T): (T, Int, Int, Seq[QueryExecution]) = {
+    import org.apache.spark.jobcount.JobCount
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { done.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (out, jobs, stages) = JobCount.withStages(spark)(body)
+      (out, jobs, stages, done.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("partial run + resume equals one full run; nothing reprocessed") {
@@ -133,10 +170,12 @@ class LineageSpec extends AnyFunSuite {
     assert(committed.count() == 20)
     assert(committed.select("doc_id").distinct().count() == 20)
     assert(committed.filter($"run_id" =!= "retry").count() == 0)
+    assertOkOnce(metrics)
   }
 
   test("bucketed resume prunes completed buckets before the per-doc anti-join") {
     import spark.implicits._
+    import graft.lineage.ParquetCatalog
     import org.apache.spark.sql.functions._
     val fixtures = SpanGen.genDocs(200, seed = 31L)
     val all = spark.createDataset(fixtures.map(_._1))
@@ -153,6 +192,8 @@ class LineageSpec extends AnyFunSuite {
     withB.filter($"bucket" =!= 3 && col("doc_id") =!= straggler)
       .select(col("doc_id"), lit("ok").as("status"))
       .write.parquet(metrics)
+    // written outside the catalog: no summaries, so the resume reads it
+    assert(ParquetCatalog.summaries(spark, metrics).isEmpty)
 
     // pruning: only the two partially-complete buckets survive, so the
     // per-doc anti-join input shrinks from 200 docs to just their docs
@@ -174,6 +215,7 @@ class LineageSpec extends AnyFunSuite {
 
   test("bucketed resume stays correct when metrics holds docs not in the input") {
     import spark.implicits._
+    import graft.lineage.ParquetCatalog
     import org.apache.spark.sql.functions._
     // run 1 completed {A, B}; the input then replaces B with a new doc E.
     // buckets = 1 forces everything into one bucket: a count-equality
@@ -185,12 +227,167 @@ class LineageSpec extends AnyFunSuite {
     Seq(a.doc_id, bDoc.doc_id).toDF("doc_id")
       .withColumn("status", lit("ok")).write.parquet(metrics)
     val input = spark.createDataset(Seq(a, e))
+    assert(ParquetCatalog.summaries(spark, metrics).isEmpty)
     val pending = Lineage.filterPendingBucketed(spark, input, metrics, buckets = 1)
       .select("doc_id").as[String].collect().toSeq
     assert(pending == Seq(e.doc_id))
+    assert(pending == docIds(Lineage.filterPending(spark, input, metrics)))
     // and the unchanged-input steady case still prunes to empty
     val same = spark.createDataset(Seq(a, bDoc))
     assert(Lineage.filterPendingBucketed(spark, same, metrics, buckets = 1).isEmpty)
+  }
+
+  test("bucket fingerprint: the SQL-defined sums, additive over a split, lossless encoding") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.BucketFingerprintAgg
+    import BucketFingerprintAgg.{Fingerprint, P}
+    val buckets = 16
+    val ids = (0 until 300).map(i => s"doc-$i").toDF("doc_id").repartition(4)
+    val bucket = pmod(xxhash64(col("doc_id"), lit(16)), lit(buckets))
+    def fp(df: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.Column = bucket) =
+      Fingerprint.decode(df.agg(BucketFingerprintAgg.of(b, col("doc_id"), buckets))
+        .head().getAs[Array[Byte]](0))
+    def same(a: Fingerprint, b: Fingerprint) =
+      a.rows == b.rows && a.differing(b).isEmpty && b.differing(a).isEmpty
+    val whole = fp(ids)
+    val sql = new Fingerprint(buckets)
+    ids.select(bucket, pmod(xxhash64(col("doc_id"), lit(71)), lit(P)),
+        pmod(xxhash64(col("doc_id"), lit(1213)), lit(P)))
+      .as[(Long, Long, Long)].collect().foreach { case (b, h1, h2) => sql.add(b.toInt, h1, h2) }
+    assert(whole.rows == 300 && same(whole, sql))
+    val even = col("doc_id").endsWith("0") || col("doc_id").endsWith("2")
+    assert(same(whole, fp(ids.filter(even)).merge(fp(ids.filter(!even)))))
+    // a null bucket leaves the row out
+    assert(same(fp(ids, when(even, bucket)), fp(ids.filter(even))))
+    assert(same(whole, Fingerprint.decode(whole.encode)))
+    // one doc fewer changes its bucket's sums and no other bucket's
+    val dropped = ids.filter(col("doc_id") =!= "doc-7")
+    val bucketOf7 = Seq("doc-7").toDF("doc_id").select(bucket).as[Long].head()
+    assert(whole.differing(fp(dropped)) == Seq(bucketOf7))
+  }
+
+  test("a doc committed ok twice: the resume loses and repeats nothing on either path") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import java.nio.file.Paths
+    // the only way a doc is committed ok twice: an input that carries
+    // its doc_id twice (crash retries and batches commit each doc once)
+    val docs = SpanGen.genDocs(12, seed = 45L).map(_._1)
+    val first = docs.take(8) :+ docs.head
+    val base = tmp()
+    val (p1, _) = Lineage.runResumable(spark, spark.createDataset(first),
+      s"$base/out", s"$base/metrics", "run-1")
+    assert(p1 == 9)
+    val ok = spark.read.parquet(s"$base/metrics").select("doc_id")
+    assert(ok.count() == 9 && ok.distinct().count() == 8)
+
+    // the same tables twice: one keeps its summaries, one loses them
+    val copy = s"$base/copy"
+    Seq("out", "metrics").foreach { t =>
+      Files.walk(Paths.get(base, t)).iterator().asScala.foreach { from =>
+        val to = Paths.get(copy, t).resolve(Paths.get(base, t).relativize(from))
+        if (Files.isDirectory(from)) Files.createDirectories(to) else Files.copy(from, to)
+      }
+    }
+    Files.delete(Paths.get(copy, "metrics", "_graft_snapshots", "fp-000000001"))
+    assert(ParquetCatalog.summaries(spark, s"$base/metrics").isDefined)
+    assert(ParquetCatalog.summaries(spark, s"$copy/metrics").isEmpty)
+
+    // the resume's input repeats the twice-committed doc and adds four
+    val input = spark.createDataset(docs :+ docs.head)
+    for (root <- Seq(base, copy)) assertPendingAsPlain(input, s"$root/metrics")
+    // the summary path counts ok rows, the fallback distinct doc_ids
+    val resumed = Seq(base, copy).map(root =>
+      Lineage.runResumable(spark, input, s"$root/out", s"$root/metrics", "run-2"))
+    assert(resumed == Seq((4L, 9L), (4L, 8L)))
+    for (root <- Seq(base, copy)) {
+      val committed = Lineage.readCommitted(spark, s"$root/out", s"$root/metrics")
+        .filter($"run_id" === "run-2").select("doc_id").as[String].collect().sorted.toSeq
+      assert(committed == docs.drop(8).map(_.doc_id).sorted)
+    }
+  }
+
+  test("resume sums the summaries where they describe the table, else reads it") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import java.nio.file.Paths
+    val docs = SpanGen.genDocs(60, seed = 37L).map(_._1)
+    val all = spark.createDataset(docs)
+    /** Tables two overlapping runs committed; returns their root. */
+    def committed(): String = {
+      val base = tmp()
+      for ((range, run) <- Seq((0 until 30) -> "run-1", (20 until 40) -> "run-2"))
+        Lineage.runResumable(spark, spark.createDataset(range.map(docs)),
+          s"$base/out", s"$base/metrics", run)
+      base
+    }
+    def check(metrics: String, summarized: Boolean): Unit = {
+      assert(ParquetCatalog.summaries(spark, metrics).isDefined == summarized, metrics)
+      assertPendingAsPlain(all, metrics)
+    }
+
+    val plain = committed()
+    check(s"$plain/metrics", summarized = true)
+    assert(Lineage.runResumable(spark, all, s"$plain/out", s"$plain/metrics", "run-3") ==
+      ((20L, 40L)))
+
+    // a crashed metrics append leaves an orphan file; the next commit
+    // adopts it, and its summary would not cover the orphan's rows
+    val orphaned = committed()
+    docs.slice(40, 45).map(d => (d.doc_id, "ok")).toDF("doc_id", "status")
+      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$orphaned/metrics")
+    check(s"$orphaned/metrics", summarized = false)
+    Lineage.runResumable(spark, spark.createDataset(docs.slice(45, 50)),
+      s"$orphaned/out", s"$orphaned/metrics", "run-3")
+    check(s"$orphaned/metrics", summarized = false)
+
+    // a compaction is a rewrite snapshot; raw reads then see every ok
+    // row twice until expiry reclaims the old files
+    val compacted = committed()
+    ParquetCatalog.compact(spark, s"$compacted/metrics", targetFiles = 1)
+    check(s"$compacted/metrics", summarized = false)
+    ParquetCatalog.expireSnapshots(spark, s"$compacted/metrics", keepLast = 1)
+    check(s"$compacted/metrics", summarized = false)
+    // expiry alone turns the oldest kept snapshot into a rewrite that
+    // also lists the expired snapshots' files
+    val expired = committed()
+    ParquetCatalog.expireSnapshots(spark, s"$expired/metrics", keepLast = 1)
+    check(s"$expired/metrics", summarized = false)
+
+    // a lost summary
+    val lost = committed()
+    Files.delete(Paths.get(lost, "metrics", "_graft_snapshots", "fp-000000002"))
+    check(s"$lost/metrics", summarized = false)
+    assert(Lineage.runResumable(spark, all, s"$lost/out", s"$lost/metrics", "run-3") ==
+      ((20L, 40L)))
+  }
+
+  test("plan gate: the resume pass scans the metrics table only without summaries") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    val docs = SpanGen.genDocs(40, seed = 43L).map(_._1)
+    val base = tmp()
+    spark.createDataset(docs).write.parquet(s"$base/in")
+    val input = spark.read.parquet(s"$base/in").as[Doc]
+    val summarized = s"$base/metrics"
+    Lineage.runResumable(spark, spark.createDataset(docs.take(30)), s"$base/out", summarized, "run-1")
+    val raw = s"$base/raw"
+    spark.read.parquet(summarized).write.parquet(raw)
+    def metricsScans(metrics: String): Int = {
+      val root = new org.apache.hadoop.fs.Path(metrics).toUri.getPath
+      val (incomplete, _, _, queries) = observed(
+        Lineage.incompleteBuckets(spark, input, metrics, 4096).as[Long].collect().toSet)
+      assert(incomplete.nonEmpty)
+      queries.map(qe => Plans.collect(qe.executedPlan) {
+        case scan: FileSourceScanExec
+            if scan.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(root)) => scan
+      }.length).sum
+    }
+    assert(metricsScans(summarized) == 0)
+    assert(metricsScans(raw) == 1)
   }
 
   test("snapshot time travel: readAsOf replays the table as of a prior append") {
@@ -259,6 +456,7 @@ class LineageSpec extends AnyFunSuite {
     val (p2, s2) = Lineage.runResumableBatched(
       spark, all, out, metrics, "retry2", batches = batches)
     assert(p2 == 0 && s2 == 80)
+    assertOkOnce(metrics)
   }
 
   test("orphan files from a crashed append are published by the next commit") {
@@ -461,6 +659,9 @@ class LineageSpec extends AnyFunSuite {
         Seq(out, metrics).foreach(reencodeSnappy)
         assert(codecs(out) == Set("SNAPPY") && codecs(metrics) == Set("SNAPPY"))
       }
+      // re-encoding keeps every file name, so the summaries still hold
+      assert(ParquetCatalog.summaries(spark, metrics).isDefined)
+      assertPendingAsPlain(all, metrics)
       val resumed = Lineage.runResumable(spark, all, out, metrics, "run-2")
       if (snappyFirst) assert(codecs(out) == Set("SNAPPY", "ZSTD"))
       val committed = outRows(Lineage.readCommitted(spark, out, metrics))
@@ -606,6 +807,7 @@ class LineageSpec extends AnyFunSuite {
 
   test("job-count gate: a fresh run and a resume stay within their Spark job budgets") {
     import spark.implicits._
+    import graft.lineage.ParquetCatalog
     import org.apache.spark.jobcount.JobCount
     // At the benchmark's shape (10k SpanGen docs, local[4]) graft.Run
     // started 8 jobs fresh and 27 on resume before the single-pass
@@ -633,6 +835,11 @@ class LineageSpec extends AnyFunSuite {
       JobCount(spark)(Lineage.runResumable(spark, full, out, metrics, "run-2"))
     assert(p2 == 30 && s2 == 30)
     assert(resumed <= 12, s"resume started $resumed Spark jobs")
+    // the resume pass sums the metrics table's summaries and observes
+    // the input's fingerprint over one discarded pass: 4 jobs, where
+    // reading and shuffling the completed set took 7
+    assert(ParquetCatalog.summaries(spark, metrics).isDefined)
+    assert(resumed <= 4, s"resume started $resumed Spark jobs")
   }
 
   test("a no-op resume commits one empty snapshot on each table") {
@@ -710,14 +917,12 @@ class LineageSpec extends AnyFunSuite {
 
   test("fresh run over a well-split scan: one codegen'd Project, no exchange; stage gate") {
     import spark.implicits._
-    import org.apache.spark.jobcount.JobCount
     import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec,
-      ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+      ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.util.QueryExecutionListener
     val fixtures = SpanGen.genDocs(60, seed = 83L)
     val base = tmp()
     spark.createDataset(fixtures.map(_._1)).repartition(4).write.parquet(s"$base/in")
@@ -725,21 +930,13 @@ class LineageSpec extends AnyFunSuite {
     assert(input.queryExecution.toRdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
     val out = s"$base/out"
 
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { done.add(qe); () }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val ((p, s), jobs, stages) =
-      try JobCount.withStages(spark)(
-        Lineage.runResumable(spark, input, out, s"$base/metrics", "run-1"))
-      finally spark.listenerManager.unregister(listener)
+    val ((p, s), jobs, stages, done) =
+      observed(Lineage.runResumable(spark, input, out, s"$base/metrics", "run-1"))
     assert(p == 60 && s == 0)
 
     object Plans extends AdaptiveSparkPlanHelper
     val outPath = new org.apache.hadoop.fs.Path(out).toUri.getPath
-    val write: SparkPlan = done.toArray(Array.empty[QueryExecution]).iterator
+    val write: SparkPlan = done.iterator
       .flatMap(qe => Plans.collect(qe.executedPlan) {
         case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
             if c.outputPath.toUri.getPath == outPath => w.child
