@@ -51,24 +51,6 @@ object Extract {
     case object SplitMidpoint extends Strategy
   }
 
-  /** Serialize a recovered table row-major as cell spans (1-based
-    * "row,col" refs), mirroring the reference's [][]string IR.
-    */
-  def tableToSpans(table: Vector[Vector[String]]): Vector[(String, String, String)] = {
-    val out = Vector.newBuilder[(String, String, String)]
-    var r = 0
-    while (r < table.length) {
-      val row = table(r)
-      var c = 0
-      while (c < row.length) {
-        out += ((SpanKinds.Cell, row(c), s"${r + 1},${c + 1}"))
-        c += 1
-      }
-      r += 1
-    }
-    out.result()
-  }
-
   /** Total function: a document that trips an unexpected per-doc error
     * (e.g. a comparator-contract violation from adversarial geometry in
     * the E2 path) passes through unchanged with status "error:<class>"

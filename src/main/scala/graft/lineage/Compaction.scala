@@ -43,11 +43,4 @@ object Compaction {
         expr(s"CAST((__cum - $sizeCol) div ${targetBytes}L AS INT)"))
       .drop("__cum")
   }
-
-  /** Per-bin rewrite manifest: file count and total bytes per planned
-    * bin — the work list a compaction executor consumes.
-    */
-  def summarize(planned: DataFrame, partCol: String, sizeCol: String): DataFrame =
-    planned.groupBy(col(partCol), col("bin"))
-      .agg(count(lit(1)).as("n_files"), sum(col(sizeCol)).as("bytes"))
 }

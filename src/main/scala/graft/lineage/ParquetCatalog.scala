@@ -1,6 +1,6 @@
 package graft.lineage
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -33,9 +33,21 @@ import java.nio.charset.StandardCharsets.UTF_8
   * manifests. A table written outside the catalog, an orphan file
   * (adopted or not), a rewrite ([[overwrite]], [[compact]],
   * [[expireSnapshots]]) or a lost summary make it return None, and the
-  * caller reads the rows instead. The summary is written after the
-  * manifest, so a crash between the two leaves a snapshot without a
-  * summary, never a summary without a snapshot.
+  * caller reads the rows instead.
+  *
+  * Commit protocol: a metadata file (`snap-<id>`, `fp-<id>`,
+  * `stage-<n>`) is never written in place. Its bytes go in full to
+  * `.tmp-<name>`, which no lister reads, and one rename names it; a
+  * rename onto an existing name fails (the single-writer guard). An
+  * append writes its data files, then renames in its manifest, then
+  * its summary. A crash before the manifest's rename leaves orphan data
+  * files, which the next commit adopts; one before the summary's leaves
+  * a snapshot with no summary, so [[summaries]] returns None. Either may
+  * also leave a stray `.tmp-` file, which the next write of that name
+  * replaces. [[publishStaged]] is one rename. [[expireSnapshots]]
+  * replaces the oldest kept manifest by an overwriting rename: atomic
+  * on HDFS, while Hadoop's local filesystem deletes the target first,
+  * so a crash between the two leaves that snapshot with no manifest.
   *
   * Codec: every data file the catalog writes is zstd-compressed
   * (`Codec`, Parquet's default zstd level). It is part of the table
@@ -61,10 +73,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   * summary maps to the partition summaries an Iceberg manifest carries
   * per partition field (value bounds, null counts), computed by the
   * writer at commit time; here the summarized field is the caller's
-  * bucket and the summary a per-bucket set fingerprint.
+  * bucket and the summary a per-bucket set fingerprint. The commit
+  * protocol maps to Iceberg's atomic swap of the table's metadata file.
   */
 object ParquetCatalog {
   private val SnapDir = "_graft_snapshots"
+
+  /** The kinds of metadata file, each named `<kind>-<id>` in `SnapDir`. */
+  private val Snap = "snap"
+  private val Fp = "fp"
+  private val Stage = "stage"
+  private val MetaName = """(snap|fp|stage)-(\d+)""".r
 
   /** The Parquet codec of every data file the catalog writes. */
   private val Codec = "zstd"
@@ -73,8 +92,19 @@ object ParquetCatalog {
   private[lineage] def writer(df: DataFrame): DataFrameWriter[Row] =
     df.write.mode(SaveMode.Append).option("compression", Codec)
 
-  private def fsFor(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  /** A table's filesystem and qualified root. */
+  private final case class Table(fs: FileSystem, root: Path) {
+    def path(rel: String): Path = new Path(root, rel)
+
+    /** Metadata file `<kind>-<id>`. */
+    def meta(kind: String, id: Long): Path = path(f"$SnapDir/$kind-$id%09d")
+  }
+
+  private def tableAt(spark: SparkSession, table: String): Table = {
+    val p = new Path(table)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    Table(fs, fs.makeQualified(p))
+  }
 
   /** The manifest dir and Spark's side files (`_SUCCESS`, `.crc`,
     * `_temporary`) start with `_` or `.`; Spark's reader skips them.
@@ -84,15 +114,12 @@ object ParquetCatalog {
   /** Data files under the table root, as table-relative paths. Skips
     * every path with a hidden segment.
     */
-  private def listDataFiles(spark: SparkSession, table: String): Set[String] = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    if (!fs.exists(root)) return Set.empty
+  private def listDataFiles(t: Table): Set[String] = {
+    if (!t.fs.exists(t.root)) return Set.empty
     val out = scala.collection.mutable.Set[String]()
-    val it = fs.listFiles(root, true)
+    val it = t.fs.listFiles(t.root, true)
     while (it.hasNext) {
-      val status = it.next()
-      val rel = root.toUri.relativize(status.getPath.toUri).toString
+      val rel = t.root.toUri.relativize(it.next().getPath.toUri).toString
       if (!rel.split('/').exists(hidden)) out += rel
     }
     out.toSet
@@ -101,11 +128,10 @@ object ParquetCatalog {
   /** Whether `dir` holds a data file by listDataFiles' rule; stops at
     * the first one and never descends into a hidden directory.
     */
-  private def hasDataFile(spark: SparkSession, dir: Path): Boolean = {
-    val fs = fsFor(spark, dir)
-    def walk(d: Path): Boolean = fs.listStatus(d).exists(st =>
+  private def hasDataFile(t: Table, dir: Path): Boolean = {
+    def walk(d: Path): Boolean = t.fs.listStatus(d).exists(st =>
       !hidden(st.getPath.getName) && (st.isFile || walk(st.getPath)))
-    fs.exists(dir) && walk(dir)
+    t.fs.exists(dir) && walk(dir)
   }
 
   /** `<table>/<col>=<value>`, escaped the way Spark's partitioned
@@ -114,91 +140,110 @@ object ParquetCatalog {
   private def partitionDir(table: String, partitionCol: String, value: String): Path =
     new Path(table, ExternalCatalogUtils.getPartitionPathString(partitionCol, value))
 
+  /** The ids of the metadata files, ascending, by kind. Temporary files
+    * and checksum sidecars match no kind.
+    */
+  private def metaIds(t: Table): Map[String, Seq[Long]] = {
+    val dir = t.path(SnapDir)
+    val names = if (t.fs.exists(dir)) t.fs.listStatus(dir).toSeq.map(_.getPath.getName) else Nil
+    names.collect { case MetaName(kind, id) => kind -> id.toLong }
+      .groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap.withDefaultValue(Nil)
+  }
+
+  /** The one reader of metadata files. */
+  private def readMeta(t: Table, kind: String, id: Long): Array[Byte] = {
+    val in = t.fs.open(t.meta(kind, id))
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** The one writer of metadata files: `bytes` go in full to
+    * `.tmp-<kind>-<id>`, then [[rename]] names them `<kind>-<id>`.
+    */
+  private def writeMeta(t: Table, kind: String, id: Long, bytes: Array[Byte],
+      replace: Boolean = false): Unit = {
+    val dst = t.meta(kind, id)
+    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}")
+    val out = t.fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    try rename(t, tmp, dst, replace)
+    catch { case e: java.io.IOException => t.fs.delete(tmp, false); throw e }
+  }
+
+  /** Renames metadata file `from` to `to` in one step, checksum sidecar
+    * included. Throws when `to` exists, unless `replace`.
+    * `FileSystem.rename` never overwrites; only `FileContext` can, and on
+    * the local filesystem it forks a `readlink` per status it checks, so
+    * only a replace pays for it.
+    */
+  private def rename(t: Table, from: Path, to: Path, replace: Boolean): Unit =
+    if (replace)
+      FileContext.getFileContext(t.root.toUri, t.fs.getConf)
+        .rename(from, to, Options.Rename.OVERWRITE)
+    else if (!t.fs.rename(from, to))
+      throw new java.io.IOException(s"cannot rename $from to $to: it exists, or $from does not")
+
   /** A rewrite manifest (compaction / expiry self-containment) starts
     * with this marker line and lists the table's FULL effective file
     * set; append manifests list only the files that commit added.
     */
   private val RewriteMarker = "#rewrite"
 
-  private def manifestBody(spark: SparkSession, table: String, id: Long): String = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val in = fs.open(new Path(root, f"$SnapDir/snap-$id%09d"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
+  private def manifest(rewrite: Boolean, files: Seq[String]): Array[Byte] =
+    ((if (rewrite) Seq(RewriteMarker) else Nil) ++ files).mkString("\n").getBytes(UTF_8)
 
-  /** Where snapshot `id`'s summary lives. */
-  private def summaryPath(root: Path, id: Long): Path = new Path(root, f"$SnapDir/fp-$id%09d")
-
-  /** (isRewrite, files) of one manifest. */
-  private def manifestEntry(spark: SparkSession, table: String,
-      id: Long): (Boolean, Seq[String]) = {
-    val lines = manifestBody(spark, table, id).split("\n").toSeq.filter(_.nonEmpty)
+  /** (isRewrite, files) of manifest `<kind>-<id>`. */
+  private def manifestEntry(t: Table, kind: String, id: Long): (Boolean, Seq[String]) = {
+    val lines = new String(readMeta(t, kind, id), UTF_8).split("\n").toSeq.filter(_.nonEmpty)
     if (lines.headOption.contains(RewriteMarker)) (true, lines.tail)
     else (false, lines)
   }
 
-  private def manifestFiles(spark: SparkSession, table: String, id: Long): Seq[String] =
-    manifestEntry(spark, table, id)._2
-
   /** The file set a snapshot reads: the latest rewrite at or before it
     * (full listing) plus every append delta after that rewrite.
     */
-  private def effectiveFiles(spark: SparkSession, table: String, id: Long,
-      ids: Seq[Long]): Seq[String] = {
-    val entries = ids.filter(_ <= id)
-      .map(i => i -> manifestEntry(spark, table, i))
+  private def effectiveFiles(t: Table, id: Long, ids: Seq[Long]): Seq[String] = {
+    val entries = ids.filter(_ <= id).map(i => i -> manifestEntry(t, Snap, i))
     val lastRewrite = entries.collect { case (i, (true, _)) => i }
       .lastOption.getOrElse(Long.MinValue)
     entries.collect { case (i, (_, fs)) if i >= lastRewrite => fs }.flatten
   }
 
-  /** The "before" set is the union of COMMITTED manifests, not a
-    * directory listing: a crash between a parquet append and its
-    * manifest write leaves orphan data files, and a listing-based diff
-    * would exclude them from every future manifest — permanently
-    * desynchronizing readAsOf(latest) from read(). Manifest-based
-    * diffing instead attributes orphans to the NEXT successful commit
-    * (the Iceberg retry semantics); until that commit, raw read() may
-    * see orphan rows that readAsOf excludes, which is exactly the
-    * crash-window contract Lineage.readCommitted already enforces at
-    * the row level.
+  /** Runs `write` and commits the data files it added as the next
+    * manifest of `kind` (`snap`, or `stage` for [[stageAppend]]);
+    * returns its id.
+    *
+    * The "before" set is the union of the manifests, not a directory
+    * listing: a crash between a parquet append and its manifest write
+    * leaves orphan data files, and a listing-based diff would exclude
+    * them from every future manifest — permanently desynchronizing
+    * readAsOf(latest) from read(). Manifest-based diffing instead
+    * attributes orphans to the NEXT successful commit (the Iceberg retry
+    * semantics); until that commit, raw read() may see orphan rows that
+    * readAsOf excludes, which is exactly the crash-window contract
+    * Lineage.readCommitted already enforces at the row level. Staged
+    * files are listed, so no commit adopts them.
     *
     * `summary`, when given, is evaluated after the manifest is written
     * and stored as the snapshot's summary, unless the commit adopted
     * orphans: the summary covers only the rows `write` added.
     */
-  private def commitSnapshot(spark: SparkSession, table: String,
+  private def commit(spark: SparkSession, table: String, kind: String = Snap,
       rewrite: Boolean = false, summary: Option[() => Array[Byte]] = None)(
-      write: => Unit): Unit = {
-    val ids = snapshots(spark, table)
-    val before = ids.flatMap(id => manifestFiles(spark, table, id)).toSet
-    val orphans =
-      if (summary.isDefined) listDataFiles(spark, table) -- before else Set.empty[String]
+      write: => Unit): Long = {
+    val t = tableAt(spark, table)
+    val ids = metaIds(t)
+    val before =
+      Seq(Snap, Stage).flatMap(k => ids(k).flatMap(id => manifestEntry(t, k, id)._2)).toSet
+    val adopts = summary.isDefined && (listDataFiles(t) -- before).nonEmpty
     write
-    val added = (listDataFiles(spark, table) -- before).toSeq.sorted
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val snapId = ids.lastOption.getOrElse(0L) + 1
-    fs.mkdirs(new Path(root, SnapDir))
-    val body =
-      if (rewrite) (RewriteMarker +: added).mkString("\n")
-      else added.mkString("\n")
-    val os = fs.create(new Path(root, f"$SnapDir/snap-$snapId%09d"), false)
-    try os.write(body.getBytes(UTF_8)) finally os.close()
-    if (orphans.isEmpty) summary.foreach { bytes =>
-      // written under a temporary name and renamed, so a crash leaves
-      // either the whole summary or none
-      val tmp = new Path(root, f"$SnapDir/fp-$snapId%09d.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes()) finally out.close()
-      fs.rename(tmp, summaryPath(root, snapId))
-    }
+    val id = ids(kind).lastOption.getOrElse(0L) + 1
+    writeMeta(t, kind, id, manifest(rewrite, (listDataFiles(t) -- before).toSeq.sorted))
+    if (!adopts) summary.foreach(bytes => writeMeta(t, Fp, id, bytes()))
+    id
   }
 
   def append(df: DataFrame, table: String): Unit =
-    commitSnapshot(df.sparkSession, table) {
+    commit(df.sparkSession, table) {
       writer(df).parquet(table)
     }
 
@@ -209,7 +254,7 @@ object ParquetCatalog {
     */
   def appendSummarized(df: DataFrame, table: String, summary: Column): Unit = {
     val obs = Observation()
-    commitSnapshot(df.sparkSession, table,
+    commit(df.sparkSession, table,
         summary = Some(() => obs.get("summary").asInstanceOf[Array[Byte]])) {
       writer(df.observe(obs, summary.as("summary"))).parquet(table)
     }
@@ -222,22 +267,17 @@ object ParquetCatalog {
     * with no snapshot. Runs no Spark job.
     */
   def summaries(spark: SparkSession, table: String): Option[Seq[Array[Byte]]] = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val ids = snapshots(spark, table)
-    val entries = ids.map(id => manifestEntry(spark, table, id))
-    val whole = ids.nonEmpty && !entries.exists { case (isRewrite, _) => isRewrite } &&
-      ids.forall(id => fs.exists(summaryPath(root, id))) &&
-      listDataFiles(spark, table) == entries.flatMap(_._2).toSet
-    if (!whole) None
-    else Some(ids.map { id =>
-      val in = fs.open(summaryPath(root, id))
-      try in.readAllBytes() finally in.close()
-    })
+    val t = tableAt(spark, table)
+    val ids = metaIds(t)
+    val snaps = ids(Snap)
+    val entries = snaps.map(id => manifestEntry(t, Snap, id))
+    val whole = snaps.nonEmpty && !entries.exists { case (isRewrite, _) => isRewrite } &&
+      snaps.forall(ids(Fp).toSet) && listDataFiles(t) == entries.flatMap(_._2).toSet
+    if (whole) Some(snaps.map(id => readMeta(t, Fp, id))) else None
   }
 
   def appendPartitioned(df: DataFrame, table: String, partitionCol: String): Unit =
-    commitSnapshot(df.sparkSession, table) {
+    commit(df.sparkSession, table) {
       writer(df).partitionBy(partitionCol).parquet(table)
     }
 
@@ -256,22 +296,24 @@ object ParquetCatalog {
     * without Spark ignoring the path.
     */
   private[lineage] def readDataFiles(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val root = fsFor(spark, new Path(dir)).makeQualified(new Path(dir))
-    val files = listDataFiles(spark, dir).toSeq.sorted
+    val t = tableAt(spark, dir)
+    val files = listDataFiles(t).toSeq.sorted
     if (files.isEmpty) None
-    else Some(spark.read.parquet(files.map(f => new Path(root, f).toString): _*))
+    else Some(spark.read.parquet(files.map(f => t.path(f).toString): _*))
   }
 
   /** Whether the table holds any data file; runs no Spark job. */
-  def exists(spark: SparkSession, table: String): Boolean =
-    hasDataFile(spark, new Path(table))
+  def exists(spark: SparkSession, table: String): Boolean = {
+    val t = tableAt(spark, table)
+    hasDataFile(t, t.root)
+  }
 
   /** Whether partition `partitionCol = value` holds any data file;
     * runs no Spark job.
     */
   def hasPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String): Boolean =
-    hasDataFile(spark, partitionDir(table, partitionCol, value))
+    hasDataFile(tableAt(spark, table), partitionDir(table, partitionCol, value))
 
   /** The rows of partition `partitionCol = value` alone, read with the
     * known data `schema`, plus `partitionCol` as a string column; empty
@@ -285,38 +327,30 @@ object ParquetCatalog {
     val dir = partitionDir(table, partitionCol, value)
     val full = StructType(schema.fields.map(_.copy(nullable = true)) :+
       StructField(partitionCol, StringType))
-    if (hasDataFile(spark, dir))
+    if (hasDataFile(tableAt(spark, table), dir))
       spark.read.schema(full).option("basePath", table).parquet(dir.toString)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), full)
   }
 
   /** Committed snapshot ids, ascending — one per successful append. */
-  def snapshots(spark: SparkSession, table: String): Seq[Long] = {
-    val fs = fsFor(spark, new Path(table))
-    val dir = fs.makeQualified(new Path(table, SnapDir))
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("snap-") => n.stripPrefix("snap-").toLong }
-      .sorted
-  }
+  def snapshots(spark: SparkSession, table: String): Seq[Long] =
+    metaIds(tableAt(spark, table))(Snap)
 
   /** Table contents as of `snapshotId` (inclusive) — Iceberg's
     * `VERSION AS OF` / `option("snapshot-id", ...)` time travel.
     * Fails on an id that was never committed.
     */
   def readAsOf(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
-    val ids = snapshots(spark, table)
+    val t = tableAt(spark, table)
+    val ids = metaIds(t)(Snap)
     require(ids.contains(snapshotId),
       s"unknown snapshot $snapshotId for $table (committed: ${ids.mkString(", ")})")
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val files = effectiveFiles(spark, table, snapshotId, ids)
+    val files = effectiveFiles(t, snapshotId, ids)
     if (files.isEmpty) read(spark, table).limit(0)
     else
       spark.read
-        .option("basePath", root.toString)
-        .parquet(files.map(f => new Path(root, f).toString): _*)
+        .option("basePath", t.root.toString)
+        .parquet(files.map(f => t.path(f).toString): _*)
   }
 
   /** The latest committed view. After a [[compact]] this is the ONLY
@@ -339,7 +373,7 @@ object ParquetCatalog {
     * working until [[expireSnapshots]].
     */
   def overwrite(df: DataFrame, table: String): Unit =
-    commitSnapshot(df.sparkSession, table, rewrite = true) {
+    commit(df.sparkSession, table, rewrite = true) {
       writer(df).parquet(table)
     }
 
@@ -358,7 +392,7 @@ object ParquetCatalog {
     val ids = snapshots(spark, table)
     require(ids.nonEmpty, s"no committed snapshots to compact in $table")
     val current = readAsOf(spark, table, ids.last)
-    commitSnapshot(spark, table, rewrite = true) {
+    commit(spark, table, rewrite = true) {
       val w = writer(current.repartition(targetFiles))
       partitionCol match {
         case Some(c) => w.partitionBy(c).parquet(table)
@@ -371,88 +405,51 @@ object ParquetCatalog {
     * `keepLast` snapshots, self-contain the oldest kept one (its
     * manifest becomes a rewrite listing its full effective file set,
     * so it no longer depends on expired manifests), delete expired
-    * manifests and every data file no kept snapshot references.
-    * readAsOf on an expired id fails fast afterwards.
+    * manifests and every data file neither a kept snapshot nor a staged
+    * write references. readAsOf on an expired id fails fast afterwards.
     */
   def expireSnapshots(spark: SparkSession, table: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must be positive: $keepLast")
-    val ids = snapshots(spark, table)
-    val expired = ids.dropRight(keepLast)
+    val t = tableAt(spark, table)
+    val ids = metaIds(t)
+    val (expired, kept) = ids(Snap).splitAt(ids(Snap).length - keepLast)
     if (expired.isEmpty) return
-    val kept = ids.takeRight(keepLast)
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
     // compute every kept view's file set BEFORE touching manifests
-    val keptSets = kept.map(id => id -> effectiveFiles(spark, table, id, ids))
-    val live = keptSets.flatMap(_._2).toSet
+    val keptSets = kept.map(id => id -> effectiveFiles(t, id, ids(Snap)))
+    val live = keptSets.flatMap(_._2).toSet ++
+      ids(Stage).flatMap(id => manifestEntry(t, Stage, id)._2)
     // self-contain the oldest kept snapshot
     val (oldestKept, oldestFiles) = keptSets.head
-    val os = fs.create(new Path(root, f"$SnapDir/snap-$oldestKept%09d"), true)
-    try os.write((RewriteMarker +: oldestFiles.sorted).mkString("\n").getBytes(UTF_8))
-    finally os.close()
+    writeMeta(t, Snap, oldestKept, manifest(rewrite = true, oldestFiles.sorted), replace = true)
     // drop expired manifests and their summaries, then unreferenced
     // data files
-    expired.foreach { id =>
-      fs.delete(new Path(root, f"$SnapDir/snap-$id%09d"), false)
-      fs.delete(summaryPath(root, id), false)
-    }
-    (listDataFiles(spark, table) -- live).foreach(rel =>
-      fs.delete(new Path(root, rel), false))
+    for (id <- expired; kind <- Seq(Snap, Fp)) t.fs.delete(t.meta(kind, id), false)
+    (listDataFiles(t) -- live).foreach(rel => t.fs.delete(t.path(rel), false))
   }
 
   // ---- write-audit-publish (Iceberg's WAP / branch commit) ----------
   //
   // stageAppend writes the data files plus a STAGED manifest
   // (stage-<n>) that snapshots() and every reader ignore — the write
-  // is invisible until audited. publishStaged moves the manifest into
-  // the snapshot chain (one atomic rename-equivalent commit);
-  // abortStaged deletes the staged manifest AND its data files, as if
-  // the write never happened. The audit step reads readStaged —
-  // current view + the staged delta — and decides.
-
-  private def stagedIds(spark: SparkSession, table: String): Seq[Long] = {
-    val fs = fsFor(spark, new Path(table))
-    val dir = fs.makeQualified(new Path(table, SnapDir))
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("stage-") => n.stripPrefix("stage-").toLong }
-      .sorted
-  }
-
-  private def stagedFiles(spark: SparkSession, table: String, stageId: Long): Seq[String] = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val in = fs.open(new Path(root, f"$SnapDir/stage-$stageId%09d"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      .split("\n").toSeq.filter(_.nonEmpty)
-    finally in.close()
-  }
+  // is invisible until audited. publishStaged renames stage-<n> to the
+  // next snap-<id>: the staged listing, byte for byte, becomes the
+  // snapshot in one step. abortStaged deletes the staged data files,
+  // then the staged manifest, as if the write never happened. The audit
+  // step reads readStaged — current view + the staged delta — and
+  // decides.
 
   /** Stage `df` invisibly; returns the stage id for audit/publish. */
-  def stageAppend(df: DataFrame, table: String): Long = {
-    val spark = df.sparkSession
-    val before = snapshots(spark, table)
-      .flatMap(id => manifestFiles(spark, table, id)).toSet ++
-      stagedIds(spark, table).flatMap(id => stagedFiles(spark, table, id))
-    writer(df).parquet(table)
-    val added = (listDataFiles(spark, table) -- before).toSeq.sorted
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val stageId = (0L +: stagedIds(spark, table)).max + 1
-    fs.mkdirs(new Path(root, SnapDir))
-    val os = fs.create(new Path(root, f"$SnapDir/stage-$stageId%09d"), false)
-    try os.write(added.mkString("\n").getBytes(UTF_8)) finally os.close()
-    stageId
-  }
+  def stageAppend(df: DataFrame, table: String): Long =
+    commit(df.sparkSession, table, kind = Stage) {
+      writer(df).parquet(table)
+    }
 
   /** The audit view: current committed rows + the staged delta. */
   def readStaged(spark: SparkSession, table: String, stageId: Long): DataFrame = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val staged = spark.read.option("basePath", root.toString)
-      .parquet(stagedFiles(spark, table, stageId)
-        .map(f => new Path(root, f).toString): _*)
-    snapshots(spark, table).lastOption match {
+    val t = tableAt(spark, table)
+    val staged = spark.read.option("basePath", t.root.toString)
+      .parquet(manifestEntry(t, Stage, stageId)._2.map(f => t.path(f).toString): _*)
+    metaIds(t)(Snap).lastOption match {
       case Some(id) => readAsOf(spark, table, id).unionByName(staged)
       case None => staged
     }
@@ -460,23 +457,16 @@ object ParquetCatalog {
 
   /** Commit the staged write as the next snapshot. */
   def publishStaged(spark: SparkSession, table: String, stageId: Long): Unit = {
-    val files = stagedFiles(spark, table, stageId)
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    val snapId = snapshots(spark, table).lastOption.getOrElse(0L) + 1
-    val os = fs.create(new Path(root, f"$SnapDir/snap-$snapId%09d"), false)
-    try os.write(files.mkString("\n").getBytes(UTF_8)) finally os.close()
-    fs.delete(new Path(root, f"$SnapDir/stage-$stageId%09d"), false)
-    ()
+    val t = tableAt(spark, table)
+    val snapId = metaIds(t)(Snap).lastOption.getOrElse(0L) + 1
+    rename(t, t.meta(Stage, stageId), t.meta(Snap, snapId), replace = false)
   }
 
-  /** Discard the staged write: its manifest and its data files. */
+  /** Discard the staged write: its data files, then its manifest. */
   def abortStaged(spark: SparkSession, table: String, stageId: Long): Unit = {
-    val fs = fsFor(spark, new Path(table))
-    val root = fs.makeQualified(new Path(table))
-    stagedFiles(spark, table, stageId).foreach(rel =>
-      fs.delete(new Path(root, rel), false))
-    fs.delete(new Path(root, f"$SnapDir/stage-$stageId%09d"), false)
+    val t = tableAt(spark, table)
+    manifestEntry(t, Stage, stageId)._2.foreach(rel => t.fs.delete(t.path(rel), false))
+    t.fs.delete(t.meta(Stage, stageId), false)
     ()
   }
 }

@@ -304,7 +304,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("streaming windowed counts: only watermark-closed windows are emitted") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_swin_test").toString
+    val root = TempDirs("graft_swin_test")
     def ts(h: Int, m: Int) = java.sql.Timestamp.from(
       java.time.LocalDateTime.of(2024, 1, 1, h, m)
         .toInstant(java.time.ZoneOffset.UTC))
@@ -326,7 +326,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("session_window drain: gap merge, end-exclusive boundary, watermark emission") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_swsess_test").toString
+    val root = TempDirs("graft_swsess_test")
     def ts(h: Int, m: Int) = java.sql.Timestamp.from(
       java.time.LocalDateTime.of(2024, 1, 1, h, m)
         .toInstant(java.time.ZoneOffset.UTC))
@@ -350,7 +350,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("streaming dedup drain keeps one row per checksum (same-event-time dups)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_sdedup_test").toString
+    val root = TempDirs("graft_sdedup_test")
     val ts = new java.sql.Timestamp(1700000000000L)
     Seq((1L, "h1", ts), (2L, "h2", ts), (3L, "h1", ts), (4L, "h3", ts), (5L, "h2", ts))
       .toDF("doc_id", "checksum", "ts")
@@ -364,7 +364,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("stream-static enrichment drain inner-joins the dim and drops absent keys") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_senrich_test").toString
+    val root = TempDirs("graft_senrich_test")
     Seq((1L, "en"), (2L, "fr"), (3L, "de"), (4L, "en"))
       .toDF("doc_id", "lang")
       .coalesce(1).write.parquet(s"$root/in")

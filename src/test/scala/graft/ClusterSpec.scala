@@ -337,7 +337,7 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("reliable checkpoint mode: rounds cut lineage through checkpoint files, labels identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = TempDirs("graft_ckpt")
     val sc = spark.sparkContext
     try {
       sc.setCheckpointDir(dir)
@@ -354,10 +354,6 @@ class ClusterSpec extends AnyFunSuite {
       assert(files(new java.io.File(dir)) > 0, "no reliable checkpoint files written")
     } finally {
       spark.conf.unset("graft.checkpoint.reliable")
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
     }
   }
 }

@@ -135,6 +135,14 @@ class ContractSpec extends AnyFunSuite {
     assert(namers == Set("graft/lineage/ParquetCatalog.scala"), namers)
   }
 
+  test("the catalog creates its metadata files in one place") {
+    // ParquetCatalog.writeMeta writes under a temporary name and renames;
+    // a second create( would write a manifest outside that protocol
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/lineage/ParquetCatalog.scala"))
+    assert("""\.create\(""".r.findAllIn(src).length == 1)
+  }
+
   test("the routed cache owners leave no CacheManager entry behind") {
     // each builds, counts and releases its cached frames; a registration
     // left behind turns a later query's matching plan fragment into an

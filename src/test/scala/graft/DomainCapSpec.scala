@@ -63,8 +63,7 @@ class DomainCapSpec extends AnyFunSuite {
 
   test("snapshot diff over catalog time travel reports appended rows as added") {
     import spark.implicits._
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_sdiff").toString + "/t"
+    val table = TempDirs("graft_sdiff") + "/t"
     ParquetCatalog.append(
       Seq((1L, "a"), (2L, "b")).toDF("id", "checksum"), table)
     ParquetCatalog.append(Seq((3L, "c")).toDF("id", "checksum"), table)

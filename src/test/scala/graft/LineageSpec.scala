@@ -25,8 +25,7 @@ class LineageSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-lineage").toString
+  private def tmp(): String = TempDirs("graft-lineage")
 
   /** Parquet files under `root`, the catalog's hidden directories included. */
   private def parquetFiles(root: String): Set[java.io.File] = {
@@ -46,12 +45,23 @@ class LineageSpec extends AnyFunSuite {
     finally reader.close()
   }
 
+  /** Fails unless `table`'s snapshot directory holds only metadata
+    * files (`snap-`, `fp-`, `stage-`) and their checksums: no temporary
+    * file is left behind.
+    */
+  private def assertMetaOnly(table: String): Unit = {
+    val names = Option(new java.io.File(table, "_graft_snapshots").list()).toSeq.flatten
+    val stray = names.filterNot(_.matches("""(snap|fp|stage)-\d{9}|\.(snap|fp|stage)-\d{9}\.crc"""))
+    assert(stray.isEmpty, s"$table: $stray")
+  }
+
   /** The codecs of the column chunks in the files `write` adds under
-    * `root`; fails when it adds none.
+    * `root`; fails when it adds none, or leaves a metadata leftover.
     */
   private def codecsAdded(root: String)(write: => Any): Set[String] = {
     val before = parquetFiles(root)
     write
+    assertMetaOnly(root)
     val added = parquetFiles(root) -- before
     assert(added.nonEmpty, s"no parquet file added under $root")
     added.flatMap(chunkCodecs)
@@ -622,6 +632,90 @@ class LineageSpec extends AnyFunSuite {
     val (out, metrics) = (s"$base/out", s"$base/metrics")
     Lineage.runResumable(spark, ds, out, metrics, "run-1")
     assert((parquetFiles(out) ++ parquetFiles(metrics)).flatMap(chunkCodecs) == zstd)
+    Seq(out, metrics).foreach(assertMetaOnly)
+    // publish renames the staged listing, byte for byte, into the
+    // snapshot chain; abort and expiry leave no metadata behind
+    val wapMeta = java.nio.file.Paths.get(wap, "_graft_snapshots")
+    def metaNames() = wapMeta.toFile.list().toSet
+    val staged = Files.readAllBytes(wapMeta.resolve("stage-000000001"))
+    ParquetCatalog.publishStaged(spark, wap, 1L)
+    assert(metaNames() == Set("snap-000000001", ".snap-000000001.crc"))
+    assert(Files.readAllBytes(wapMeta.resolve("snap-000000001")).sameElements(staged))
+    val aborted = ParquetCatalog.stageAppend(df, wap)
+    assertMetaOnly(wap)
+    ParquetCatalog.abortStaged(spark, wap, aborted)
+    assert(metaNames() == Set("snap-000000001", ".snap-000000001.crc"))
+    ParquetCatalog.expireSnapshots(spark, flat, keepLast = 1)
+    assertMetaOnly(flat)
+    assert(ParquetCatalog.snapshots(spark, flat) == Seq(3L))
+  }
+
+  test("a crash mid-commit leaves temporary files no reader sees; the next commit is last+1") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import org.apache.spark.sql.DataFrame
+    val docs = SpanGen.genDocs(40, seed = 47L).map(_._1)
+    val base = tmp()
+    val (out, metrics) = (s"$base/out", s"$base/metrics")
+    for ((n, run) <- Seq(20 -> "run-1", 30 -> "run-2"))
+      Lineage.runResumable(spark, spark.createDataset(docs.take(n)), out, metrics, run)
+    def rows(df: DataFrame) =
+      df.select("run_id", "doc_id", "status", "checksum")
+        .as[(String, String, String, String)].collect().sorted.toSeq
+    def view() = {
+      val ids = ParquetCatalog.snapshots(spark, metrics)
+      (ids, rows(ParquetCatalog.readCurrent(spark, metrics)),
+        ids.map(id => rows(ParquetCatalog.readAsOf(spark, metrics, id))),
+        ParquetCatalog.summaries(spark, metrics).map(_.map(_.toSeq)))
+    }
+    val before = view()
+    assert(before._1 == Seq(1L, 2L) && before._4.isDefined)
+    // the crash: snapshot 3's manifest and summary half written under
+    // their temporary names, never renamed
+    val meta = java.nio.file.Paths.get(metrics, "_graft_snapshots")
+    val listing = Files.readAllBytes(meta.resolve("snap-000000002"))
+    Files.write(meta.resolve(".tmp-snap-000000003"), listing.take(listing.length / 2))
+    Files.write(meta.resolve(".tmp-fp-000000003"), Array[Byte](1, 2, 3))
+    assert(view() == before)
+    // the retry commits snapshot 3 over the strays, with a real summary
+    assert(Lineage.runResumable(spark, spark.createDataset(docs), out, metrics, "run-3") ==
+      ((10L, 30L)))
+    assert(ParquetCatalog.snapshots(spark, metrics) == Seq(1L, 2L, 3L))
+    assert(ParquetCatalog.summaries(spark, metrics).isDefined)
+    assertMetaOnly(metrics)
+    assertPendingAsPlain(spark.createDataset(docs), metrics)
+  }
+
+  test("expireSnapshots rewrites the oldest kept manifest whole; kept views are unchanged") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    val table = tmp() + "/t"
+    def appendRange(r: Seq[Long]): Unit = ParquetCatalog.append(r.toDF("v").repartition(4), table)
+    def values(id: Long) =
+      ParquetCatalog.readAsOf(spark, table, id).as[Long].collect().sorted.toSeq
+    appendRange(1L to 20L)
+    appendRange(21L to 40L)
+    ParquetCatalog.compact(spark, table, targetFiles = 1)
+    appendRange(41L to 60L)
+    // a write staged before the last append: no commit adopts its
+    // files, and expiry keeps them
+    val staged = ParquetCatalog.stageAppend((81L to 90L).toDF("v"), table)
+    appendRange(61L to 80L)
+    val kept = Seq(4L, 5L)
+    val views = kept.map(values)
+    val meta = java.nio.file.Paths.get(table, "_graft_snapshots")
+    def lines(id: Long) =
+      Files.readString(meta.resolve(f"snap-$id%09d")).split("\n").toSeq.filter(_.nonEmpty)
+    val effective = (lines(3L).tail ++ lines(4L)).toSet
+    ParquetCatalog.expireSnapshots(spark, table, keepLast = 2)
+    assert(ParquetCatalog.snapshots(spark, table) == kept)
+    assert(lines(4L).head == "#rewrite")
+    assert(lines(4L).tail == effective.toSeq.sorted)
+    assert(kept.map(values) == views)
+    assertMetaOnly(table)
+    ParquetCatalog.publishStaged(spark, table, staged)
+    assert(ParquetCatalog.readCurrent(spark, table).as[Long].collect().sorted.toSeq ==
+      (1L to 90L))
   }
 
   test("tables holding snappy files resume, read and compact like all-zstd tables") {

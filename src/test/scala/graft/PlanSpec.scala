@@ -70,7 +70,7 @@ class PlanSpec extends AnyFunSuite {
     // ConvertToLocalRelation pre-evaluates the Project at optimization
     // time and the plan degenerates to LocalTableScan (which would make
     // this test vacuous)
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString + "/docs"
+    val dir = TempDirs("graft-plan") + "/docs"
     spark.createDataset(SpanGen.genDocs(4, 2L).map(_._1)).toDF()
       .write.parquet(dir)
     val p = GraftFunctions.extractDF(spark, spark.read.parquet(dir))
@@ -341,7 +341,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucketed tables co-locate the join: sort-merge with zero shuffle exchanges") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket").toString
+    val dir = TempDirs("graft_bucket")
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -367,10 +367,6 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS graft_fact_b")
       spark.sql("DROP TABLE IF EXISTS graft_dim_b")
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
     }
   }
 
@@ -419,36 +415,29 @@ class PlanSpec extends AnyFunSuite {
 
   test("dynamic partition pruning fires on a partitioned fact x filtered dim join") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    try {
-      spark.read.parquet(s"$sf/documents.parquet")
-        .write.partitionBy("lang").mode("overwrite").parquet(s"$dir/fact")
-      val fact = spark.read.parquet(s"$dir/fact")
-      // the dim must be file-backed so the selective filter survives as
-      // a real Filter node (a local Seq constant-folds it away and DPP
-      // sees no selective predicate)
-      spark.createDataFrame(
-          Seq(("en", 1.0), ("de", 0.5), ("es", 0.2), ("fr", 0.1), ("zh", 0.9)))
-        .toDF("lang", "w")
-        .write.parquet(s"$dir/dim")
-      val dim = spark.read.parquet(s"$dir/dim")
-        .filter(col("w") > 0.8) // selective dim predicate -> DPP candidate
-      val q = fact.join(dim, "lang").groupBy(col("lang"))
-        .agg(org.apache.spark.sql.functions.sum(col("n_chars")).as("tot"))
-      val p = q.queryExecution.executedPlan.toString
-      // the fact scan's partition filter must carry the runtime
-      // dynamicpruning subquery — the 100 TB guarantee that a dim
-      // filter skips fact partitions without reading them
-      assert(p.toLowerCase.contains("dynamicpruning"), p.take(3000))
-      // and the pruned result is still correct
-      val langs = q.collect().map(_.getString(0)).toSet
-      assert(langs == Set("en", "zh"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = TempDirs("graft_dpp")
+    spark.read.parquet(s"$sf/documents.parquet")
+      .write.partitionBy("lang").mode("overwrite").parquet(s"$dir/fact")
+    val fact = spark.read.parquet(s"$dir/fact")
+    // the dim must be file-backed so the selective filter survives as
+    // a real Filter node (a local Seq constant-folds it away and DPP
+    // sees no selective predicate)
+    spark.createDataFrame(
+        Seq(("en", 1.0), ("de", 0.5), ("es", 0.2), ("fr", 0.1), ("zh", 0.9)))
+      .toDF("lang", "w")
+      .write.parquet(s"$dir/dim")
+    val dim = spark.read.parquet(s"$dir/dim")
+      .filter(col("w") > 0.8) // selective dim predicate -> DPP candidate
+    val q = fact.join(dim, "lang").groupBy(col("lang"))
+      .agg(org.apache.spark.sql.functions.sum(col("n_chars")).as("tot"))
+    val p = q.queryExecution.executedPlan.toString
+    // the fact scan's partition filter must carry the runtime
+    // dynamicpruning subquery — the 100 TB guarantee that a dim
+    // filter skips fact partitions without reading them
+    assert(p.toLowerCase.contains("dynamicpruning"), p.take(3000))
+    // and the pruned result is still correct
+    val langs = q.collect().map(_.getString(0)).toSet
+    assert(langs == Set("en", "zh"))
   }
   test("degree-oriented triangles: equi-joins only, no cartesian or NLJ") {
     val p = plan("q_triangles_degree")

@@ -346,40 +346,26 @@ class Round4hSpec extends AnyFunSuite {
 
   test("mergeSchema read: old-epoch rows surface NULL for the new column") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_schev_t").toString
-    try {
-      val m = graft.lineage.Evolution.mergeSchemaRead(spark, docs, root).collect()
-      assert(m.length == docs.count())
-      m.foreach { r =>
-        if (r.getLong(0) % 2 == 0) assert(r.isNullAt(2)) else assert(!r.isNullAt(2))
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(root))
+    val root = TempDirs("graft_schev_t")
+    val m = graft.lineage.Evolution.mergeSchemaRead(spark, docs, root).collect()
+    assert(m.length == docs.count())
+    m.foreach { r =>
+      if (r.getLong(0) % 2 == 0) assert(r.isNullAt(2)) else assert(!r.isNullAt(2))
     }
   }
 
   test("dynamic partition overwrite refreshes only the recomputed partition") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_dynov_t").toString
-    try {
-      val out = graft.lineage.Evolution.dynamicPartitionRefresh(spark, docs, root)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      val truth = docs.select("doc_id", "n_chars", "source").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-      assert(out.length == truth.size)
-      out.foreach { case (id, m, src) =>
-        val (n, s) = truth(id)
-        assert(s == src)
-        if (src == "src1") assert(m == n) else assert(m == n + 1000)
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(root))
+    val root = TempDirs("graft_dynov_t")
+    val out = graft.lineage.Evolution.dynamicPartitionRefresh(spark, docs, root)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val truth = docs.select("doc_id", "n_chars", "source").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    assert(out.length == truth.size)
+    out.foreach { case (id, m, src) =>
+      val (n, s) = truth(id)
+      assert(s == src)
+      if (src == "src1") assert(m == n) else assert(m == n + 1000)
     }
   }
 
@@ -442,19 +428,12 @@ class Round4hSpec extends AnyFunSuite {
   test("observe: write-pass metrics equal a recompute, with no second scan coded") {
     import spark.implicits._
     val df = (0L until 100L).map(i => (i, i % 7)).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_obs").toString
-    try {
-      val m = graft.lineage.Observe.writeWithMetrics(df, s"$dir/out",
-        "n" -> count(lit(1)), "v_sum" -> sum(col("v")), "id_max" -> max(col("id")))
-      assert(m("n") == 100L && m("id_max") == 99L)
-      assert(m("v_sum") == (0L until 100L).map(_ % 7).sum)
-      // and the written data is intact
-      assert(spark.read.parquet(s"$dir/out").count() == 100L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = TempDirs("graft_obs")
+    val m = graft.lineage.Observe.writeWithMetrics(df, s"$dir/out",
+      "n" -> count(lit(1)), "v_sum" -> sum(col("v")), "id_max" -> max(col("id")))
+    assert(m("n") == 100L && m("id_max") == 99L)
+    assert(m("v_sum") == (0L until 100L).map(_ % 7).sum)
+    // and the written data is intact
+    assert(spark.read.parquet(s"$dir/out").count() == 100L)
   }
 }

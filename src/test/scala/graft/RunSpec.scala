@@ -20,7 +20,7 @@ class RunSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(): String = Files.createTempDirectory("graft-run").toString
+  private def tmp(): String = TempDirs("graft-run")
 
   test("partial attempt + resume via the Run entry point; goldens hold") {
     import spark.implicits._

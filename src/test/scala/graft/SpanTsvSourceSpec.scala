@@ -28,7 +28,7 @@ class SpanTsvSourceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("spantsv_spec").toString
+    TempDirs("spantsv_spec")
 
   private def writeFixture(out: String, n: Int): Unit = {
     import spark.implicits._

@@ -7,8 +7,6 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
-
 /** Streaming extraction: an AvailableNow pass over a span-table
   * directory must produce exactly the batch output, and a second file
   * arriving must be picked up incrementally (checkpointed offsets).
@@ -79,7 +77,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dedup drain output is provider-independent (RocksDB == HDFS-backed)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-rocks").toString
+    val base = TempDirs("graft-rocks")
     def ts(s: Long) = new java.sql.Timestamp((100000 + s) * 1000)
     Seq((1L, "A", ts(0)), (2L, "B", ts(5)), (3L, "A", ts(0)), (4L, "C", ts(9)))
       .toDF("doc_id", "checksum", "ts")
@@ -100,7 +98,7 @@ class StreamingSpec extends AnyFunSuite {
   test("sentinel-flushed sessionization drain closes every real session") {
     import spark.implicits._
     import graft.streaming.StreamingState.Session
-    val base = Files.createTempDirectory("graft-sessdrain").toString
+    val base = TempDirs("graft-sessdrain")
     val B = 100000L
     def landOne(rows: Seq[(Long, Long)], name: String, mtime: Long): Unit =
       StreamingState.landFile(rows.map { case (u, s) =>
@@ -124,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("AvailableNow drain equals batch output; increments are incremental") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = TempDirs("graft-stream")
     val in = base + "/in"
     val out = base + "/out"
     val ckpt = base + "/ckpt"
@@ -161,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("transformWithState running totals carry state ACROSS micro-batches") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_tws").toString
+    val root = TempDirs("graft_tws")
     // 3 landing files, maxFilesPerTrigger=1 -> 3 micro-batches; user 1
     // appears in every batch, so the drain must emit an increasing
     // running total that spans batches — a per-batch-only aggregate
@@ -190,7 +188,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ListState latest-k merges across batches by event_id, not arrival") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_lk").toString
+    val root = TempDirs("graft_lk")
     // event_ids arrive OUT OF ORDER across batches: batch 2 carries a
     // LOWER id (5) than batch 1's max (20), and batch 3 a higher one —
     // largest-k semantics must keep {20,30,40}, never the 3 freshest
@@ -213,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("v2 timer sessionization == v1 flatMapGroupsWithState on a sentinel landing") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_sv2").toString
+    val root = TempDirs("graft_sv2")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // user 1: two sessions split by a 2000s gap that SPANS batches
     // (only the timer path can close the first one); sentinel user -9
@@ -237,7 +235,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("MapState type counts accumulate per (user, type) across batches") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_mc").toString
+    val root = TempDirs("graft_mc")
     landBatch(root, 0,
       Seq((1L, "view"), (1L, "click"), (1L, "view")).toDF("user_id", "event_type"))
     landBatch(root, 1, Seq((1L, "view"), (1L, "purchase")).toDF("user_id", "event_type"))
@@ -253,7 +251,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch MERGE sink: per-batch rewrites, final table, no-op replay") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_smerge_test").toString
+    val root = TempDirs("graft_smerge_test")
     val table = s"$root/tbl"
     graft.lineage.ParquetCatalog.append(
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("doc_id", "v"), table)
@@ -289,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
     */
   private def joinLanding(sentinels: Boolean): (String, DataFrame, DataFrame) = {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ssjoin_test").toString
+    val root = TempDirs("graft_ssjoin_test")
     def ts(sec: Long) = new java.sql.Timestamp((1700000000L + sec) * 1000)
     val left = (1L to 6L).map(k => (k, ts(k * 10), s"l$k")).toDF("doc_id", "l_ts", "lang")
     // key 1 matches twice, 3 sits on the inclusive bound, 4 and 5 fall
