@@ -1,7 +1,6 @@
 package graft.lineage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Bucketed-table co-location — the pre-paid shuffle. A join between
   * two 100 TB-scale tables shuffles BOTH sides on the key every time

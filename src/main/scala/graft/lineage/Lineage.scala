@@ -337,10 +337,8 @@ object Lineage {
     * `b` of `batches` — same stable doc_id hash as the resume buckets,
     * so completed batches prune in filterPendingBucketed's fast path.
     */
-  def batchSlice(input: Dataset[Doc], batches: Int, b: Int): Dataset[Doc] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
+  def batchSlice(input: Dataset[Doc], batches: Int, b: Int): Dataset[Doc] =
     input.filter(resumeBucket(batches) === b)
-  }
 
   /** Batched resumable run: the input is processed as `batches`
     * sequential bucket-slices, each committing its output + metrics

@@ -57,6 +57,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   * earlier codec (snappy, Spark's default) keeps reading, resuming and
   * compacting; a compaction rewrites them as zstd.
   *
+  * Listing: one `listStatus` per directory, skipping hidden names. Not
+  * `listFiles`/`listLocatedStatus`: their `LocatedFileStatus` copies each
+  * entry's permission (a forked `ls -ld` per file on a local filesystem
+  * without `libhadoop`) and looks up block locations on HDFS. On S3A the
+  * walk costs one LIST per `run_id` directory where `listFiles` lists
+  * flat. Tables carry no `_SUCCESS`: the manifest is the commit record.
+  *
   * Single-writer by design: the engine's driver is the only committer
   * (Lineage.runResumable fails fast on run_id reuse). Real Iceberg
   * replaces the before/after listing with optimistic metadata commits.
@@ -91,6 +98,7 @@ object ParquetCatalog {
   /** The one writer of catalog data files: an append in `Codec`. */
   private[lineage] def writer(df: DataFrame): DataFrameWriter[Row] =
     df.write.mode(SaveMode.Append).option("compression", Codec)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
   /** A table's filesystem and qualified root. */
   private final case class Table(fs: FileSystem, root: Path) {
@@ -111,28 +119,19 @@ object ParquetCatalog {
     */
   private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
-  /** Data files under the table root, as table-relative paths. Skips
-    * every path with a hidden segment.
+  /** The data files under `dir`, lazily: one `listStatus` per
+    * directory, never descending into a hidden name.
     */
-  private def listDataFiles(t: Table): Set[String] = {
-    if (!t.fs.exists(t.root)) return Set.empty
-    val out = scala.collection.mutable.Set[String]()
-    val it = t.fs.listFiles(t.root, true)
-    while (it.hasNext) {
-      val rel = t.root.toUri.relativize(it.next().getPath.toUri).toString
-      if (!rel.split('/').exists(hidden)) out += rel
-    }
-    out.toSet
+  private def dataFiles(t: Table, dir: Path): Iterator[Path] = {
+    def walk(d: Path): Iterator[Path] = t.fs.listStatus(d).iterator
+      .filterNot(st => hidden(st.getPath.getName))
+      .flatMap(st => if (st.isFile) Iterator(st.getPath) else walk(st.getPath))
+    if (t.fs.exists(dir)) walk(dir) else Iterator.empty
   }
 
-  /** Whether `dir` holds a data file by listDataFiles' rule; stops at
-    * the first one and never descends into a hidden directory.
-    */
-  private def hasDataFile(t: Table, dir: Path): Boolean = {
-    def walk(d: Path): Boolean = t.fs.listStatus(d).exists(st =>
-      !hidden(st.getPath.getName) && (st.isFile || walk(st.getPath)))
-    t.fs.exists(dir) && walk(dir)
-  }
+  /** Data files under the table root, as table-relative paths. */
+  private def listDataFiles(t: Table): Set[String] =
+    dataFiles(t, t.root).map(p => t.root.toUri.relativize(p.toUri).toString).toSet
 
   /** `<table>/<col>=<value>`, escaped the way Spark's partitioned
     * writer names the directory.
@@ -305,7 +304,7 @@ object ParquetCatalog {
   /** Whether the table holds any data file; runs no Spark job. */
   def exists(spark: SparkSession, table: String): Boolean = {
     val t = tableAt(spark, table)
-    hasDataFile(t, t.root)
+    dataFiles(t, t.root).hasNext
   }
 
   /** Whether partition `partitionCol = value` holds any data file;
@@ -313,7 +312,7 @@ object ParquetCatalog {
     */
   def hasPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String): Boolean =
-    hasDataFile(tableAt(spark, table), partitionDir(table, partitionCol, value))
+    dataFiles(tableAt(spark, table), partitionDir(table, partitionCol, value)).hasNext
 
   /** The rows of partition `partitionCol = value` alone, read with the
     * known data `schema`, plus `partitionCol` as a string column; empty
@@ -327,7 +326,7 @@ object ParquetCatalog {
     val dir = partitionDir(table, partitionCol, value)
     val full = StructType(schema.fields.map(_.copy(nullable = true)) :+
       StructField(partitionCol, StringType))
-    if (hasDataFile(tableAt(spark, table), dir))
+    if (dataFiles(tableAt(spark, table), dir).hasNext)
       spark.read.schema(full).option("basePath", table).parquet(dir.toString)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), full)
   }

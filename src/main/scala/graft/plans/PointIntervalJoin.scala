@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
 
 /** Broadcast point-in-interval lookup join as a FULL custom operator —

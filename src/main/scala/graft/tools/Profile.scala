@@ -7,6 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,11 +41,14 @@ object Profile {
     "Scan ExistingRDD" -> "existing_rdd_scans")
 
   /** What Spark did while one trial ran. */
-  private final class Window {
+  private[graft] final class Window {
     var jobs, stages = 0
     var cpuNs, gcMs, shuffleRead, shuffleWrite, spill = 0L
     val taskMs = mutable.ArrayBuffer[Long]()
     val ops = mutable.Map[String, Int]().withDefaultValue(0)
+    /** The cached relations whose plans `ops` holds, by identity. */
+    val cached = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
   }
 
   /** Attributes every job, stage, task and SQL execution to the open
@@ -71,23 +75,27 @@ object Profile {
       w.taskMs += e.taskInfo.duration
     }
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      record(w => countOps(qe.executedPlan, w.ops))
+      record(w => countOps(qe.executedPlan, w))
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 
   /** Adds the `PlanOps` nodes of a final (post-AQE) physical plan to
-    * `into`, query stages and subqueries included. A reused exchange ran
-    * once, where it was first planned, so its subtree is not counted again.
+    * `w.ops`, query stages, subqueries and cached plans (once per window)
+    * included. A reused exchange ran once, where it was first planned, so
+    * its subtree is not counted again.
     */
-  private def countOps(plan: SparkPlan, into: mutable.Map[String, Int]): Unit = plan match {
-    case a: AdaptiveSparkPlanExec => countOps(a.executedPlan, into)
-    case s: QueryStageExec => countOps(s.plan, into)
-    case c: CommandResultExec => countOps(c.commandPhysicalPlan, into)
+  private[graft] def countOps(plan: SparkPlan, w: Window): Unit = plan match {
+    case a: AdaptiveSparkPlanExec => countOps(a.executedPlan, w)
+    case s: QueryStageExec => countOps(s.plan, w)
+    case c: CommandResultExec => countOps(c.commandPhysicalPlan, w)
     case _: ReusedExchangeExec => ()
+    case m: InMemoryTableScanExec =>
+      w.ops(m.nodeName) += 1
+      if (w.cached.add(m.relation.cacheBuilder)) countOps(m.relation.cachedPlan, w)
     case p =>
-      if (PlanOps.exists(_._1 == p.nodeName)) into(p.nodeName) += 1
-      p.children.foreach(countOps(_, into))
-      p.subqueries.foreach(countOps(_, into))
+      if (PlanOps.exists(_._1 == p.nodeName)) w.ops(p.nodeName) += 1
+      p.children.foreach(countOps(_, w))
+      p.subqueries.foreach(countOps(_, w))
   }
 
   private final case class Trial(wallS: Double, rows: Long, w: Window)

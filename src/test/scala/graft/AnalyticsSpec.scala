@@ -379,7 +379,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("resample: gap days zero-filled over each user's own span, counts preserved") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val got = SparkEntry.queries("q_resample")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDate(1).toString, r.getLong(2)))
     val byUser = got.groupBy(_._1)
@@ -402,7 +402,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("funnel: stage times strictly ordered, local recomputation matches") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("user_id"), col("event_type"), unix_timestamp(col("ts")).as("sec"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -429,7 +429,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("retention: offset-0 counts cohort sizes, totals match distinct activity") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val got = SparkEntry.queries("q_retention")(spark, sf).collect()
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2)))
     assert(got.forall(_._2 >= 0))
@@ -444,7 +444,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("ewma: fold matches the local recurrence, single-event user is its value") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("user_id"), col("event_id"), unix_timestamp(col("ts")).as("sec"), col("value"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -459,7 +459,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("group trend: slope equals the local sufficient-statistics computation") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val S = 1048576.0
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("user_id"), (unix_timestamp(col("ts")) - 1704067200L).as("xs"), col("value"))
@@ -482,7 +482,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("group corr: quantized-series Pearson equals local computation, bounded") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("user_id"), (unix_timestamp(col("ts")) - 1704067200L).as("xs"), col("value"))
       .collect().map(r => (r.getLong(0), r.getLong(1), math.floor(r.getDouble(2) * 1024.0 + 0.5).toLong))
@@ -504,7 +504,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("scd2: runs compressed, intervals chain, exactly one open row per user") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val got = SparkEntry.queries("q_scd2")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))

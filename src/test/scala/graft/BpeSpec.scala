@@ -117,7 +117,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("training is deterministic and corpus-derived on real testdata") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${TestData.Sf0001}/documents.parquet")
     val a = Bpe.train(docs, "text", numMerges = 50)
     val b = Bpe.train(docs, "text", numMerges = 50)
     assert(a.merges.toSeq == b.merges.toSeq)
@@ -126,7 +126,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("bpe_count expression: codegen'd column == local codec, plan stays codegen") {
     import spark.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${TestData.Sf0001}/documents.parquet")
     val codec = Bpe.train(docs, "text", numMerges = 50)
     val df = docs.select(col("doc_id"), col("text"),
       graft.functions.GraftFunctions.bpeCount(spark, col("text"), codec).as("n_bpe"))

@@ -129,7 +129,7 @@ class ClusterSpec extends AnyFunSuite {
     import graft.operators.{Hits, KCore, LabelProp, PageRank}
     val edges = pairsDf(((1L until 40L).map(i => (i, i + 1)) ++
       Seq((5L, 20L), (7L, 7L), (41L, 42L))): _*)
-    val sf = new java.io.File("../testdata/sf0.001").getCanonicalPath
+    val sf = TestData.Sf0001
     lazy val docs = spark.read.parquet(s"$sf/documents.parquet")
     lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val qids = Seq(0L, 1L, 2L)

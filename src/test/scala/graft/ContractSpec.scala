@@ -35,7 +35,7 @@ class ContractSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("driver-compat: no query emits a top-level array/map column") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, f) =>
         f(spark, sf).schema.fields.collect {
@@ -143,11 +143,20 @@ class ContractSpec extends AnyFunSuite {
     assert("""\.create\(""".r.findAllIn(src).length == 1)
   }
 
+  test("the catalog lists tables without LocatedFileStatus") {
+    // a LocatedFileStatus copies each entry's permission, a forked
+    // `ls -ld` per file on a local filesystem without libhadoop
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/lineage/ParquetCatalog.scala"))
+    val named = Seq("listFiles(", "listLocatedStatus(").filter(src.contains)
+    assert(named.isEmpty, named)
+  }
+
   test("the routed cache owners leave no CacheManager entry behind") {
     // each builds, counts and releases its cached frames; a registration
     // left behind turns a later query's matching plan fragment into an
     // InMemoryRelation
-    val sf = new java.io.File("../testdata/sf0.001").getCanonicalPath
+    val sf = TestData.Sf0001
     val routed = Seq("q_prefix_join", "q_dedup_minhash", "q_dedup_cluster",
       "q_dedup_cluster_auto", "q_cluster_canonical", "q_fold_assign", "q_dedup_eval",
       "q_dedup_incremental", "q_ann_ivf", "q_ann_ivfpq", "q_semantic_dedup",

@@ -648,6 +648,10 @@ class LineageSpec extends AnyFunSuite {
     ParquetCatalog.expireSnapshots(spark, flat, keepLast = 1)
     assertMetaOnly(flat)
     assert(ParquetCatalog.snapshots(spark, flat) == Seq(3L))
+    // the manifest is the commit record: no table root holds a marker
+    val marked = Seq(flat, part, wap, out, metrics)
+      .filter(t => new java.io.File(t, "_SUCCESS").exists)
+    assert(marked.isEmpty, marked)
   }
 
   test("a crash mid-commit leaves temporary files no reader sees; the next commit is last+1") {
@@ -968,6 +972,50 @@ class LineageSpec extends AnyFunSuite {
     assert(e.getMessage.contains(runId))
     assert(Lineage.readCommitted(spark, out, metrics)
       .select("run_id").as[String].collect().toSet == Set(runId))
+  }
+
+  test("killed-write leftovers under hidden directories change no listing") {
+    import spark.implicits._
+    import graft.lineage.ParquetCatalog
+    import org.apache.spark.sql.DataFrame
+    import java.nio.file.Paths
+    val docs = SpanGen.genDocs(30, seed = 53L).map(_._1)
+    val base = tmp()
+    val (out, metrics) = (s"$base/out", s"$base/metrics")
+    Lineage.runResumable(spark, spark.createDataset(docs.take(20)), out, metrics, "run-1")
+    /** Copies `data` where a killed write leaves files in `table`: a task
+      * attempt's directory and a partition's temporary directory.
+      */
+    def plant(table: String, data: java.io.File): Unit =
+      for (dir <- Seq("_temporary/0/_temporary/attempt_x", "run_id=r/_temporary"))
+        Files.copy(data.toPath, Files.createDirectories(Paths.get(table, dir)).resolve(data.getName))
+    def visible(table: String): Set[String] = parquetFiles(table)
+      .map(f => Paths.get(table).relativize(f.toPath).toString)
+      .filterNot(_.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
+    def rows(df: DataFrame) =
+      df.select("run_id", "doc_id", "status").as[(String, String, String)].collect().sorted.toSeq
+    val tables = Seq(out, metrics)
+    for (t <- tables; data = parquetFiles(t).head) {
+      plant(t, data)
+      Files.write(data.toPath.resolveSibling(".part-00000-leftover.crc"), Array[Byte](1))
+    }
+    assert(ParquetCatalog.summaries(spark, metrics).isDefined)
+    assert(!ParquetCatalog.hasPartition(spark, out, "run_id", "r"))
+    val before = tables.map(visible)
+    Lineage.runResumable(spark, spark.createDataset(docs), out, metrics, "run-2")
+    for ((t, seen) <- tables.zip(before)) {
+      val id = ParquetCatalog.snapshots(spark, t).last
+      val listed = Files.readString(Paths.get(t, "_graft_snapshots", f"snap-$id%09d"))
+        .split("\n").filter(_.nonEmpty).toSet
+      assert(listed.nonEmpty && listed == visible(t) -- seen, t)
+      assert(rows(ParquetCatalog.readCurrent(spark, t)) == rows(ParquetCatalog.read(spark, t)), t)
+    }
+    assert(ParquetCatalog.summaries(spark, metrics).isDefined)
+    // a table holding nothing but leftovers does not exist
+    val leftovers = s"$base/leftovers"
+    plant(leftovers, parquetFiles(metrics).head)
+    Files.write(Paths.get(leftovers, ".part-00000-leftover.crc"), Array[Byte](1))
+    assert(!ParquetCatalog.exists(spark, leftovers))
   }
 
   test("ParquetCatalog.exists: only a visible data file makes a table exist") {

@@ -290,7 +290,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("LSH top-k returns exact-cosine-consistent ranks over its candidates") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestData.Sf0001}/embeddings.parquet")
     val qids = Seq(0L, 1L, 2L)
     val lsh = Ann.lshTopK(spark, emb, "vec_id", "embedding", qids, k = 5)
       .collect()
@@ -308,7 +308,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("cosine near-dup pairs are symmetric-free and thresholded") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestData.Sf0001}/embeddings.parquet")
     val got = Ann.cosineNearDupPairs(emb, "vec_id", "embedding", 0.3, maxId = 200).collect()
     assert(got.forall(r => r.getAs[Long]("id_a") < r.getAs[Long]("id_b")))
     assert(got.forall(_.getAs[Double]("sim") >= 0.3))
@@ -621,7 +621,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("media: binary round-trip decodes REAL image bytes at sf0.001") {
-    val blobs = Media.synthesize(spark, "/root/testdata/sf0.001")
+    val blobs = Media.synthesize(spark, TestData.Sf0001)
     val decoded = Media.decode(blobs).collect()
     assert(decoded.length == 500)
     assert(decoded.forall(_.getAs[Boolean]("decode_ok")))
@@ -724,7 +724,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("media: resize re-encodes real images; frame sampling passes stills through") {
-    val blobs = Media.synthesize(spark, "/root/testdata/sf0.001")
+    val blobs = Media.synthesize(spark, TestData.Sf0001)
     val dec = Media.decode(Media.resize(blobs, 32, 32)).collect()
     assert(dec.forall(r => r.getAs[Int]("width") == 32 && r.getAs[Int]("height") == 32))
     assert(dec.forall(_.getAs[Boolean]("decode_ok")))
@@ -738,7 +738,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IVF top-k: probes a fraction of lists, exact ranks within candidates") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestData.Sf0001}/embeddings.parquet")
     val qids = Seq(0L, 1L, 2L)
     val ivf = graft.ann.Ivf.topK(spark, emb, "vec_id", "embedding", qids,
       k = 10, nList = 8, nProbe = 2, iters = 3).collect()
@@ -826,7 +826,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("matryoshka: full shortlist == brute force; narrowed shortlist reranks exactly") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestData.Sf0001}/embeddings.parquet")
     val n = emb.count().toInt
     val qids = Seq(0L, 1L, 2L)
     // shortlist = whole corpus -> the coarse stage prunes nothing and
@@ -850,7 +850,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("mips: norm-bound pruning is exact vs local brute force; audit accounts for every row") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestData.Sf0001}/embeddings.parquet")
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
     val got = Ann.mipsTopK(emb, "vec_id", "embedding", qids, k = 10, normPrefix = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet

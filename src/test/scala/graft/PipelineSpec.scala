@@ -47,10 +47,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("fromDocuments synthesizes one deterministic doc per documents row") {
-    val ds = SpanGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    val ds = SpanGen.fromDocuments(spark, TestData.Sf0001)
     val a = ds.collect().map(d => d.doc_id -> d.spans).toMap
     assert(a.size == 500)
-    val b = SpanGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    val b = SpanGen.fromDocuments(spark, TestData.Sf0001)
       .repartition(13).collect().map(d => d.doc_id -> d.spans).toMap
     assert(a == b)
     // every synthesized doc extracts cleanly with at least one table

@@ -21,7 +21,7 @@ class PlanSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = TestData.Sf0001
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString

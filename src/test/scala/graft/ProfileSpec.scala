@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.io.File
 
 /** `graft.tools.Profile`'s per-query row: the fields PROFILE.json holds,
-  * their basic consistency, and the error row of a query that throws.
+  * their basic consistency, the error row of a query that throws, and
+  * the operator count through a cached frame.
   */
 class ProfileSpec extends AnyFunSuite {
 
@@ -19,8 +20,7 @@ class ProfileSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** The sf0.001 tables (TESTDATA.md), a sibling of the checkout. */
-  private val sf = new File("../testdata/sf0.001").getCanonicalPath
+  private val sf = TestData.Sf0001
 
   private val identity = Seq("query", "sf", "cpus", "trials", "bypass_merge_threshold")
   private val measured = Seq("rows", "wall_s", "task_cpu_s", "gc_s", "jobs", "stages",
@@ -44,6 +44,17 @@ class ProfileSpec extends AnyFunSuite {
       if (q == "q_join_lookup")
         assert(row("broadcast_hash_joins").asInstanceOf[Int] >= 1, row)
     }
+  }
+
+  test("a cached frame's plan counts once per window, however many scans read it") {
+    import org.apache.spark.sql.functions.col
+    val w = new Profile.Window
+    Rounds.cached(spark.range(100).toDF().repartition(3, col("id"))) { c =>
+      val twice = c.union(c)
+      twice.collect()
+      Profile.countOps(twice.queryExecution.executedPlan, w)
+    }
+    assert(w.ops("InMemoryTableScan") == 2 && w.ops("Exchange") == 1, w.ops)
   }
 
   test("the run names exactly the queries that left CacheManager entries") {

@@ -101,7 +101,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
   }
 
   test("q_rangejoin_rule plans as an equi-join and matches the baseline output") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = TestData.Sf0001
     val df = SparkEntry.queries("q_rangejoin_rule")(spark, sf)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"), p.take(2000))

@@ -224,9 +224,9 @@ class Round4hSpec extends AnyFunSuite {
 
   test("confusion matrix marginals are consistent with the classifier output") {
     val base = graft.textops.NaiveBayes.classifyHoldout(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
+      spark.read.parquet(s"${TestData.Sf0001}/documents.parquet"),
       "doc_id", "lang", "text")
-    val cm = SparkEntry.queries("q_nb_confusion")(spark, "/root/testdata/sf0.001")
+    val cm = SparkEntry.queries("q_nb_confusion")(spark, TestData.Sf0001)
       .collect()
     assert(cm.map(_.getLong(2)).sum == base.count())
     // per-label shares sum to 1 exactly (n/label_total over the label's rows)
@@ -240,9 +240,9 @@ class Round4hSpec extends AnyFunSuite {
 
   test("RRF fusion equals the driver-side fusion of the two rankings") {
     import spark.implicits._
-    val got = SparkEntry.queries("q_rrf_fusion")(spark, "/root/testdata/sf0.001")
+    val got = SparkEntry.queries("q_rrf_fusion")(spark, TestData.Sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val d = spark.read.parquet(s"${TestData.Sf0001}/documents.parquet")
       .select(col("doc_id"), col("n_chars"),
         size(array_distinct(split(col("text"), " ", -1))).cast("bigint").as("v"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -345,7 +345,7 @@ class Round4hSpec extends AnyFunSuite {
   }
 
   test("mergeSchema read: old-epoch rows surface NULL for the new column") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${TestData.Sf0001}/documents.parquet")
     val root = TempDirs("graft_schev_t")
     val m = graft.lineage.Evolution.mergeSchemaRead(spark, docs, root).collect()
     assert(m.length == docs.count())
@@ -355,7 +355,7 @@ class Round4hSpec extends AnyFunSuite {
   }
 
   test("dynamic partition overwrite refreshes only the recomputed partition") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${TestData.Sf0001}/documents.parquet")
     val root = TempDirs("graft_dynov_t")
     val out = graft.lineage.Evolution.dynamicPartitionRefresh(spark, docs, root)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))

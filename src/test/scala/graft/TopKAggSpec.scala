@@ -83,7 +83,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("plan: ObjectHashAggregate with a partial/final two-phase split") {
-    val p = SparkEntry.queries("q_topk_agg")(spark, "/root/testdata/sf0.001")
+    val p = SparkEntry.queries("q_topk_agg")(spark, TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("ObjectHashAggregate"), p.take(2000))
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
@@ -92,7 +92,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("driver query ranks are 1-based and value-descending") {
-    val rows = SparkEntry.queries("q_topk_agg")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q_topk_agg")(spark, TestData.Sf0001)
       .orderBy(col("lang"), col("rank")).collect()
     val byLang = rows.groupBy(_.getString(0))
     byLang.foreach { case (_, rs) =>
