@@ -1934,8 +1934,8 @@ object SparkEntry {
         s.read.parquet(t(dir, "documents")), "doc_id", "text", minCount = 3)),
 
     // ---- corpus LM: skip-gram co-occurrence counts (window 3) — the
-    // word2vec/GloVe training-pair table; pair generation is a
-    // record-local nested-transform HOF, never a positional self-join
+    // word2vec/GloVe training-pair table; pair generation zips shifted
+    // token slices record-locally, never a positional self-join
     // (the oracle replays THAT plan); one count shuffle total
     "q_skipgram" -> ((s, dir) =>
       graft.textops.LangModel.skipgramCounts(

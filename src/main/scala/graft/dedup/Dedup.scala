@@ -4,17 +4,17 @@ import graft.Rounds
 import graft.textops.TextOps
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for a training-data pipeline, Spark-first:
   *
   *  - exact: hash-groupBy on a normalized checksum (one shuffle,
   *    map-side partial agg);
-  *  - n-gram Jaccard: shingle explode -> self-equi-join on shingle ->
-  *    per-pair intersection counts vs per-doc counts (the classic
-  *    relational Jaccard; shuffle keyed by shingle, so frequent shingles
-  *    are the skew axis — cap with a document-frequency filter);
+  *  - n-gram Jaccard: shingle explode -> per-shingle blocks
+  *    ([[Pairs]]) -> per-pair intersection counts vs per-doc counts
+  *    (the classic relational Jaccard; shuffle keyed by shingle, so
+  *    frequent shingles are the skew axis — cap with a
+  *    document-frequency filter);
   *  - MinHash + LSH: k min-hashes per doc (single groupBy with k partial
   *    mins), banded into b buckets, candidate pairs only within equal
   *    (band, bandHash) buckets — the published banding construction, so
@@ -49,47 +49,31 @@ object Dedup {
   }
 
   /** No-silent-caps audit for ngramJaccardPairs: the shingles its
-    * document-frequency cap drops, with their df. Run alongside capped
-    * jobs — a non-empty result quantifies the (deliberate) recall trade.
+    * document-frequency cap drops, with their df ([[Pairs.overCap]]).
+    * Run alongside capped jobs — a non-empty result quantifies the
+    * (deliberate) recall trade.
     */
   def ngramDroppedShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxShingleDf: Int = 1000): DataFrame =
-    shingles(docs, idCol, textCol, n)
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxShingleDf)
+    Pairs.overCap(shingles(docs, idCol, textCol, n), Seq("shingle"), maxShingleDf)
+      .withColumnRenamed("bsz", "df")
 
   /** Shared candidate core for the exact n-gram similarity pair
     * queries: per-doc counts of cap-surviving shingles and per-pair
-    * intersection counts, built from ONE groupBy of the shingle rows
-    * into per-shingle member lists with record-local ordered pair
-    * expansion — the pre-round-6 formulation attached a per-row window
-    * document frequency (a full sort of the shingle rows) and
-    * self-joined the frame. Equivalence: the member lists ARE the
-    * cap-surviving rows (each id once per shingle — shingles() emits
-    * distinct shingles per doc), so exploding them back replays the
-    * per-id counts, and the sorted i<j expansion emits one (id_a,
-    * id_b) per shared surviving shingle exactly as the a.id < b.id
-    * self-join did. The ids array is an attribute, so the HOF lambdas
-    * re-read a bound value (the HOF-CSE rule).
+    * intersection counts, both from ONE [[Pairs.blocks]] frame of the
+    * shingle rows. The member lists ARE the cap-surviving rows (each id
+    * once per shingle: shingles() emits distinct shingles per doc), so
+    * exploding them back gives the per-id counts, and [[Pairs.of]]'s
+    * n_shared is the number of surviving shingles a pair shares.
     */
   private def shingleOverlap(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxShingleDf: Int): (DataFrame, DataFrame) = {
-    val groups = shingles(docs, idCol, textCol, n)
-      .groupBy(col("shingle"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) <= maxShingleDf)
-    val counts = groups.select(explode(col("ids")).as("id"))
+    val groups = Pairs.blocks(shingles(docs, idCol, textCol, n), Seq("shingle"),
+      col("id"), maxShingleDf)
+    val counts = groups.select(explode(col("members")).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = groups
-      .filter(size(col("ids")) >= 2)
-      .select(sort_array(col("ids")).as("ids"))
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ids) - 2), i ->
-          |  transform(sequence(i + 1, size(ids) - 1), j ->
-          |    struct(element_at(ids, i + 1) AS id_a,
-          |           element_at(ids, j + 1) AS id_b))))""".stripMargin)).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
+    val common = Pairs.of(groups)
+      .select(col("a").as("id_a"), col("b").as("id_b"), col("n_shared").as("n_common"))
     (counts, common)
   }
 
@@ -126,9 +110,9 @@ object Dedup {
     * threshold.
     *
     * Scale shape: identical to `ngramJaccardPairs` — the candidate set
-    * is the shingle equi-join bounded by the same document-frequency
-    * cap (auditable via `ngramDroppedShingles`), never an all-pairs
-    * product; the two ratios are int/int divisions, engine-exact.
+    * comes from the same capped shingle blocks (auditable via
+    * `ngramDroppedShingles`), never an all-pairs product; the two
+    * ratios are int/int divisions, engine-exact.
     */
   def ngramContainmentPairs(
       docs: DataFrame,
@@ -206,13 +190,11 @@ object Dedup {
       .select(col("id"), array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"))
   }
 
-  /** LSH banding: b bands of r rows; bucket key = the band slice itself
-    * (serialized "v,v,v,v" — exact equality, no hash-collision false
-    * candidates, and byte-reproducible by the DuckDB oracle). Candidate
-    * pairs are generated within buckets only.
-    */
-  /** (id, band, band_hash): the banded bucket keys per signature —
-    * shared by candidate generation and the cap audit.
+  /** (id, band, band_hash): LSH banding of each signature into b bands
+    * of r rows. The bucket key is the band slice itself (serialized
+    * "v,v,v,v": exact equality, no hash-collision false candidates, and
+    * byte-reproducible by the DuckDB oracle). Shared by candidate
+    * generation, the cap audit and the incremental probe.
     */
   private[dedup] def bandedKeys(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigs.select(col("id"),
@@ -223,77 +205,43 @@ object Dedup {
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
 
-  /** Banded keys with per-row bucket sizes attached (window count) —
-    * the candidate path needs bsz on every row for the cap filter.
-    */
-  private[dedup] def bandedBuckets(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    bandedKeys(sigs, bands, rowsPerBand)
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "band_hash")))
-
   /** No-silent-caps audit for minhashCandidates: the (band, band_hash,
-    * bsz) buckets the cap drops whole. A separate query by design: the
-    * candidate self-join reads the banded frame twice, and Spark rejects
-    * a self-joined observe() plan (duplicate observed-metric nodes), so
-    * the drop count cannot ride the production query itself. Run this
+    * bsz) buckets the cap drops whole ([[Pairs.overCap]]). Run this
     * alongside capped dedup jobs — a non-empty result is recall loss the
     * pair output cannot show (a >cap near-dup clique that saturates
     * every band loses all its pairs; exact dedup only covers the
-    * byte-identical case). One plain aggregation — no per-row window,
-    * since only the per-bucket total matters here.
+    * byte-identical case).
     */
   def minhashDroppedBuckets(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int = 10000): DataFrame =
-    bandedKeys(sigs, bands, rowsPerBand)
-      .groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucketSize)
+    Pairs.overCap(bandedKeys(sigs, bands, rowsPerBand), Seq("band", "band_hash"),
+      maxBucketSize)
 
+  /** (id_a, id_b, sig_a, sig_b): the distinct pairs sharing a band
+    * bucket ([[Pairs]] over the banded keys), with both signatures.
+    *
+    * The buckets carry bare ids: the k-element signature arrays never
+    * ride through the banded shuffle (k x the payload at 10^9 docs);
+    * they re-attach by id join after the pair set, when each signature
+    * is read exactly twice. minhashNearDups caches `sigs` upstream, so
+    * its three reads (banding + both re-attach joins) hit one cached
+    * computation of the signature pass.
+    *
+    * maxBucketSize is the mass-duplicate guard (same rationale as
+    * simhashNearDups'): a corpus with 10^6 exact copies puts them all
+    * in the same bucket of EVERY band — n^2/2 candidate pairs — and
+    * exact dedup already catches them. Over-cap buckets are dropped
+    * whole; a genuinely near (not identical) pair still surfaces from
+    * any one of its other matching bands that stays under the cap.
+    * Capped runs are auditable via minhashDroppedBuckets. The DuckDB
+    * oracle replays the uncapped construction, valid while every
+    * test-corpus bucket is under the cap.
+    */
   def minhashCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int = 10000): DataFrame = {
-    // band join carries only (id, band, band_hash) — the k-element
-    // signature arrays never ride through the banded shuffle (k x the
-    // payload at 10^9 docs); they re-attach by id join after the pair
-    // set is deduped, when each signature is read exactly twice.
-    //
-    // maxBucketSize is the mass-duplicate guard (same rationale as
-    // simhashNearDups'): a corpus with 10^6 exact copies puts them all
-    // in the same bucket of EVERY band — n^2/2 candidate pairs — and
-    // exact dedup already catches them. Over-cap buckets are dropped
-    // whole; a genuinely near (not identical) pair still surfaces from
-    // any one of its other matching bands that stays under the cap.
-    // Capped runs are auditable via minhashDroppedBuckets (see its
-    // scaladoc for why the metric is a separate query).
-    // The DuckDB oracle replays the uncapped construction, valid while
-    // every test-corpus bucket is far below the default cap.
-    //
-    // Plan shape: ONE exchange of the (id, band, band_hash) rows into
-    // a collect_list aggregate per bucket, then RECORD-LOCAL ordered
-    // pair expansion per member list — the pre-round-6 formulation
-    // attached a per-row window count (a full sort of the banded rows
-    // behind the same exchange) and self-joined the frame, and the
-    // window+sort+join machinery measured ~5 of the ~7 task-CPU-s of
-    // the candidate stage at sf0.1. The member lists are bounded by
-    // maxBucketSize (over-cap buckets drop whole, as before), each id
-    // appears once per bucket, and sort_array makes ids[i] < ids[j]
-    // for i < j — the same (id_a < id_b) pair set the self-join built.
-    // The ids array is an ATTRIBUTE, so the HOF lambdas referencing it
-    // re-read a bound value, not a recomputed subtree (the HOF-CSE
-    // rule). minhashNearDups caches `sigs` upstream, so its three
-    // reads (banding + both rerank attaches) hit one cached
-    // computation of the signature pass.
-    val buckets = bandedKeys(sigs, bands, rowsPerBand)
-      .groupBy(col("band"), col("band_hash"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucketSize)
-      .select(sort_array(col("ids")).as("ids"))
-    val pairs = buckets
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ids) - 2), i ->
-          |  transform(sequence(i + 1, size(ids) - 1), j ->
-          |    struct(element_at(ids, i + 1) AS id_a,
-          |           element_at(ids, j + 1) AS id_b))))""".stripMargin)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
+    val pairs = Pairs.of(Pairs.blocks(bandedKeys(sigs, bands, rowsPerBand),
+        Seq("band", "band_hash"), col("id"), maxBucketSize))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
     pairs
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -353,7 +301,7 @@ object Dedup {
       maxBucketSize: Int = 10000): DataFrame = {
     // the candidate-pair frame is read twice below (the exact-Jaccard
     // intersection join and the final assembly); checkpoint it so the
-    // banded self-join + rerank runs once — pairs are few and narrow.
+    // banded pair generation + rerank runs once — pairs are few and narrow.
     // The signature cache serves only this checkpoint
     val pairs = Rounds.cached(minhashSignatures(docs, idCol, textCol, n, k)) { sigs =>
       Rounds.checkpoint(
@@ -427,15 +375,12 @@ object Dedup {
       .withColumnRenamed("col", "chunk_val")
 
   /** No-silent-caps audit for simhashNearDups: the (chunk, chunk_val,
-    * bsz) buckets its cap drops whole (same separate-query rationale as
-    * minhashDroppedBuckets).
+    * bsz) buckets its cap drops whole ([[Pairs.overCap]]).
     */
   def simhashDroppedBuckets(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, maxBucketSize: Int = 10000): DataFrame =
-    simhashChunks(spark, docs, idCol, textCol)
-      .groupBy(col("chunk"), col("chunk_val"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucketSize)
+    Pairs.overCap(simhashChunks(spark, docs, idCol, textCol), Seq("chunk", "chunk_val"),
+      maxBucketSize)
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist (<= 3 for
     * the 4x15-bit pigeonhole banding to be lossless).
@@ -443,35 +388,23 @@ object Dedup {
     * maxBucketSize caps the per-(chunk, chunk_val) bucket fan-out — the
     * same skew guard as ngramJaccardPairs' maxShingleDf. Without it a
     * common fingerprint chunk (near-empty docs, boilerplate) makes the
-    * self-join quadratic in that bucket: at 10^9 docs a 15-bit chunk
-    * bucket averages ~n/65k members, i.e. ~10^8 candidate pairs per hot
-    * value. Over-cap buckets are dropped entirely: their members are
-    * mass-duplicates that exact dedup already catches, and recall for
-    * genuinely near (Hamming<=3) pairs only needs ONE of the four chunk
-    * buckets to survive.
+    * pair expansion quadratic in that bucket: at 10^9 docs a 15-bit
+    * chunk bucket averages ~n/65k members, i.e. ~10^8 candidate pairs
+    * per hot value. Over-cap buckets are dropped entirely: their
+    * members are mass-duplicates that exact dedup already catches, and
+    * recall for genuinely near (Hamming<=3) pairs only needs ONE of the
+    * four chunk buckets to survive.
+    *
+    * The fingerprint rides in the bucket member, so [[Pairs.of]] hands
+    * both fingerprints to the Hamming check on the pair itself.
     */
   def simhashNearDups(spark: SparkSession, docs: DataFrame, idCol: String,
-      textCol: String, maxDist: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
-    val chunked = simhashChunks(spark, docs, idCol, textCol)
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("chunk", "chunk_val")))
-      .filter(col("bsz") <= maxBucketSize)
-      .drop("bsz")
-    val a = chunked.as("a")
-    val b = chunked.as("b")
-    a.join(b,
-        col("a.chunk") === col("b.chunk") &&
-          col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.id") < col("b.id"))
+      textCol: String, maxDist: Int = 3, maxBucketSize: Int = 10000): DataFrame =
+    Pairs.of(Pairs.blocks(simhashChunks(spark, docs, idCol, textCol),
+        Seq("chunk", "chunk_val"), struct(col("id"), col("simhash")), maxBucketSize))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
-      // dedupe on the id pair before the Hamming check (not distinct():
-      // the pair key alone shuffles, one fingerprint copy rides along)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(first(col("sh_a")).as("sh_a"), first(col("sh_b")).as("sh_b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
 
   /** Connected components over an undirected candidate-pair edge list —
     * the clustering stage that turns near-dup PAIRS into dedup GROUPS.

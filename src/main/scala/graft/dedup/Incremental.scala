@@ -46,7 +46,10 @@ object Incremental {
     val minMatch = math.ceil(threshold * k).toLong
     graft.Rounds.cached(Dedup.minhashSignatures(docs, idCol, textCol, n, k)) { sigsTagged =>
       val side = docs.select(col(idCol).as("id"), isNew.as("is_new")).distinct()
-      val banded = Dedup.bandedBuckets(sigsTagged, bands, k / bands)
+      // the probe self-join below needs each row's bucket size for the
+      // cap (see Pairs' scaladoc for why this site is not a Pairs block)
+      val banded = Dedup.bandedKeys(sigsTagged, bands, k / bands)
+        .withColumn("bsz", count(lit(1)).over(Window.partitionBy("band", "band_hash")))
         .filter(col("bsz") <= maxBucketSize)
         .drop("bsz")
         .join(side, "id")

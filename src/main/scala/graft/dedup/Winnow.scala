@@ -4,7 +4,6 @@ import graft.PortableHash
 import graft.textops.TextOps
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, "Winnowing:
@@ -21,9 +20,10 @@ import org.apache.spark.sql.functions._
   * Scale posture: entirely record-local HOF columns over the scan
   * (shingle -> portable md5 hash -> window min via slice/array_min) —
   * zero shuffles to fingerprint a corpus; the one distinct at the end
-  * is per-(doc, pos, fp). Matching = an equi-join on fp, the same
-  * bucketed shape as every other candidate generator here. The portable
-  * hash makes the DuckDB oracle replay selections bit-for-bit.
+  * is per-(doc, pos, fp). Matching blocks the postings on fp with
+  * [[Pairs]], the capped generator the other near-dup operators share.
+  * The portable hash makes the DuckDB oracle replay selections
+  * bit-for-bit.
   */
 object Winnow {
 
@@ -95,43 +95,33 @@ object Winnow {
       .distinct()
   }
 
-  /** Distinct (fp, doc_id) postings with ubiquitous fingerprints
-    * dropped whole: an fp selected by more than `maxFpFreq` docs (site
-    * chrome, license boilerplate) would fan the self-join below out
-    * quadratically in ONE reduce partition — same hot-key posture as
-    * every other candidate generator's cap.
+  /** Distinct (fp, doc_id) postings: a doc may select one fp at
+    * several positions, but shares it with another doc once.
     */
-  private def postings(fps: DataFrame, maxFpFreq: Int): DataFrame =
-    fps.select(col("fp"), col("doc_id")).distinct()
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("fp")))
-      .filter(col("df") <= maxFpFreq)
-      .drop("df")
+  private def postings(fps: DataFrame): DataFrame =
+    fps.select(col("fp"), col("doc_id").as("id")).distinct()
 
   /** Local-overlap candidate pairs: documents sharing at least
     * `minShared` winnowing fingerprints — each shared fp witnesses a
     * shared token run, so unlike MinHash (whole-doc similarity) the
-    * pairs surface documents that merely SHARE PASSAGES. Bucketed
-    * equi-join on fp (never all-pairs), capped + auditable via
-    * [[droppedFingerprints]]. Returns (id_a, id_b, n_shared).
+    * pairs surface documents that merely SHARE PASSAGES. The postings
+    * are blocked on fp by [[Pairs]] (never all-pairs): an fp selected
+    * by more than `maxFpFreq` docs (site chrome, license boilerplate)
+    * is dropped whole, auditable via [[droppedFingerprints]], and
+    * n_shared counts the distinct fps a pair shares. Returns (id_a,
+    * id_b, n_shared).
     */
   def candidatePairs(fps: DataFrame, minShared: Int = 2,
-      maxFpFreq: Int = 10000): DataFrame = {
-    val p = postings(fps, maxFpFreq)
-    p.as("a").join(p.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"), col("a.fp").as("fp"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(countDistinct(col("fp")).as("n_shared"))
+      maxFpFreq: Int = 10000): DataFrame =
+    Pairs.of(Pairs.blocks(postings(fps), Seq("fp"), col("id"), maxFpFreq))
       .filter(col("n_shared") >= minShared)
-  }
+      .select(col("a").as("id_a"), col("b").as("id_b"), col("n_shared"))
 
   /** No-silent-caps audit: the fingerprints candidatePairs' maxFpFreq
-    * drops, with their document frequency (the posture shared with the
-    * LSH / ngram / simhash / substring caps).
+    * drops, with their document frequency ([[Pairs.overCap]] over the
+    * same postings; the posture shared with the LSH / ngram / simhash /
+    * substring caps).
     */
   def droppedFingerprints(fps: DataFrame, maxFpFreq: Int = 10000): DataFrame =
-    fps.select(col("fp"), col("doc_id")).distinct()
-      .groupBy(col("fp"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") > maxFpFreq)
+    Pairs.overCap(postings(fps), Seq("fp"), maxFpFreq).withColumnRenamed("bsz", "df")
 }

@@ -3,7 +3,6 @@ package graft.media
 import java.awt.image.BufferedImage
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.media.Media.MediaBlob
@@ -38,9 +37,10 @@ import graft.media.Media.MediaBlob
   * the rerank bit for bit from the synthesis formula.
   *
   * Scale shape: one CPU-bound record-local decode+hash pass (spread via
-  * [[graft.Parallelize.bySplits]] upstream), then the banded self-join
-  * moves only (id, chunk, chunk_val) rows — 4 small rows per image, the
-  * payload bytes never shuffle; fan-out is bounded by `maxBucketSize`.
+  * [[graft.Parallelize.bySplits]] upstream), then the bucket blocks
+  * move only (id, chunk, chunk_val, h) rows — 4 small rows per image,
+  * the payload bytes never shuffle; fan-out is bounded by
+  * `maxBucketSize`.
   *
   * Reference analog: none — the reference extracts tables from one
   * image per request (`/root/reference/main.go`); corpus-level image
@@ -148,56 +148,38 @@ object Phash {
     }
   }
 
-  /** (id, chunk, chunk_val) band postings — the only rows that ever
-    * shuffle; the decode happens exactly once per image here.
+  /** (id, chunk, chunk_val, h) band postings, h = the four chunks
+    * packed into one long (chunk t at bits 16t..16t+15) — the only rows
+    * that ever shuffle; the decode happens exactly once per image here.
     */
   def chunkRows(blobs: Dataset[MediaBlob]): DataFrame = {
     import blobs.sparkSession.implicits._
     blobs.flatMap { b =>
         val cs = dhashChunks(b.content)
         if (cs == null) Iterator.empty
-        else cs.iterator.zipWithIndex.map { case (v, c) => (b.doc_id, c, v) }
+        else {
+          val h = cs.indices.foldLeft(0L)((acc, c) => acc | (cs(c).toLong << (16 * c)))
+          cs.iterator.zipWithIndex.map { case (v, c) => (b.doc_id, c, v, h) }
+        }
       }
-      .toDF("id", "chunk", "chunk_val")
+      .toDF("id", "chunk", "chunk_val", "h")
   }
 
-  /** Near-dup image pairs: banded candidates (bucket cap as in
-    * simhashNearDups) reranked by exact 64-bit Hamming <= maxDist.
-    * Output (id_a, id_b, hamming), id_a < id_b.
+  /** Near-dup image pairs: banded candidates ([[graft.dedup.Pairs]],
+    * bucket cap as in simhashNearDups) reranked by exact 64-bit Hamming
+    * <= maxDist. The chunks occupy disjoint bits of the packed hash, so
+    * `bit_count(a.h ^ b.h)` is the per-chunk sum. Output (id_a, id_b,
+    * hamming), id_a < id_b.
     *
-    * The band frame is cached ([[graft.Rounds.cached]]) across its five
-    * reads (cap window, both sides of the candidate self-join, both
-    * rerank re-attach joins) — without it every read re-runs the
-    * CPU-bound PNG encode+decode+hash over the whole corpus, which
-    * measured 4-5x the operator's real cost. The cache is four int
-    * rows per image (the payload bytes are never cached or shuffled);
-    * the small pair result is checkpointed inside the scope, so the
-    * cache is dropped here rather than leaked to session end (the
-    * minhashNearDups pattern).
+    * The band rows are read once, by the block aggregate, so the
+    * CPU-bound PNG encode+decode+hash runs once per image without a
+    * cache.
     */
   def nearDups(blobs: Dataset[MediaBlob], maxDist: Int = 8,
       maxBucketSize: Int = 10000): DataFrame =
-    graft.Rounds.cached(chunkRows(blobs)) { bands =>
-      val capped = bands
-        .withColumn("bsz", count(lit(1)).over(Window.partitionBy("chunk", "chunk_val")))
-        .filter(col("bsz") <= maxBucketSize)
-        .drop("bsz")
-      val cand = capped.as("a").join(capped.as("b"),
-          col("a.chunk") === col("b.chunk") &&
-            col("a.chunk_val") === col("b.chunk_val") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      val out = cand
-        .join(bands.select(col("id").as("id_a"), col("chunk"),
-          col("chunk_val").as("cv_a")), "id_a")
-        .join(bands.select(col("id").as("id_b"), col("chunk"),
-          col("chunk_val").as("cv_b")), Seq("id_b", "chunk"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(sum(bit_count(col("cv_a").bitwiseXOR(col("cv_b")))).cast("int")
-          .as("hamming"))
-        .filter(col("hamming") <= maxDist)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-      graft.Rounds.checkpoint(out)
-    }
+    graft.dedup.Pairs.of(graft.dedup.Pairs.blocks(chunkRows(blobs),
+        Seq("chunk", "chunk_val"), struct(col("id"), col("h")), maxBucketSize))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(col("a.h").bitwiseXOR(col("b.h"))).as("hamming"))
+      .filter(col("hamming") <= maxDist)
 }

@@ -69,8 +69,10 @@ object Triangles {
     * (a, b, c) with a < b < c.
     */
   def trianglesDegreeOriented(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val d = orientedByDegree(edges, srcCol, dstCol)
+      dstCol: String): DataFrame =
+    trianglesOfDegreeOriented(orientedByDegree(edges, srcCol, dstCol))
+
+  private def trianglesOfDegreeOriented(d: DataFrame): DataFrame = {
     // wedge (x; y, z) with (dy, y) < (dz, z) in the same total order
     // that oriented the edges — so the closing edge {y, z}, if present,
     // is stored oriented y -> z and one equi-join finds it
@@ -92,7 +94,12 @@ object Triangles {
     * Package-visible so tests can assert the sqrt(m) out-degree bound.
     */
   private[graft] def orientedByDegree(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
+      dstCol: String): DataFrame =
+    byDegree(edges, srcCol, dstCol)._1
+
+  /** [[orientedByDegree]] and the (node, deg) table it was oriented by. */
+  private def byDegree(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame) = {
     val e = oriented(edges, srcCol, dstCol)
     val deg = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
@@ -102,10 +109,10 @@ object Triangles {
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    ann.select(
+    (ann.select(
       when(uFirst, col("u")).otherwise(col("v")).as("x"),
       when(uFirst, col("v")).otherwise(col("u")).as("y"),
-      when(uFirst, col("dv")).otherwise(col("du")).as("dy"))
+      when(uFirst, col("dv")).otherwise(col("du")).as("dy")), deg)
   }
 
   /** Per-node local clustering coefficient — the "how clique-like is
@@ -128,14 +135,12 @@ object Triangles {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val e = oriented(edges, srcCol, dstCol)
-    val deg = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // degree-oriented enumeration (the production default — see
-    // [[triangles]]): T(v) is orientation-invariant, so the coefficient
-    // inherits the sqrt(m) wedge bound without any output change
-    val tri = trianglesDegreeOriented(edges, srcCol, dstCol)
+    // [[triangles]]) over the degree table the coefficient reads: T(v)
+    // is orientation-invariant, so the coefficient inherits the sqrt(m)
+    // wedge bound without any output change
+    val (d, deg) = byDegree(edges, srcCol, dstCol)
+    val tri = trianglesOfDegreeOriented(d)
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("tri_cnt"))
     deg.join(tri, Seq("node"), "left")

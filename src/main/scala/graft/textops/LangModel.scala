@@ -51,8 +51,8 @@ object LangModel {
     * earlier, so the pair orientation is position-deterministic and no
     * canonicalization is needed), thresholded at `minCount`.
     *
-    * Scale posture: pair generation is a RECORD-LOCAL nested-transform
-    * HOF over the token array — never a positional self-join of the
+    * Scale posture: pair generation is RECORD-LOCAL, one zip of shifted
+    * token slices per offset — never a positional self-join of the
     * exploded token table (which would shuffle the corpus once to
     * build positions and again for the band join); fan-out per doc is
     * <= window * tokens. One map-side-combined count shuffle total.
@@ -65,25 +65,24 @@ object LangModel {
     val spread = graft.Parallelize.bySplits(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")), "doc_id")
     // The token array MUST be bound to its own projection before the
-    // nested transforms reference it — the HOF-CSE hazard bigramPairs'
-    // scaladoc names: inlined syntactically, every element_at() lambda
-    // re-ran the whole split() over the document, O(n^2 * window)
-    // splits per doc (measured: 70.7 task-CPU-s for q_skipgram at
-    // sf0.1 vs ~3 bound). CollapseProject's cost guard keeps the
-    // projections separate because __toks is non-cheap and referenced
-    // more than once.
+    // pair expression references it — the HOF-CSE hazard bigramPairs'
+    // scaladoc names: inlined syntactically, a nested-transform
+    // formulation re-ran the whole split() in every element_at()
+    // lambda, O(n^2 * window) splits per doc (measured: 70.7
+    // task-CPU-s for q_skipgram at sf0.1 vs ~3 bound). CollapseProject's
+    // cost guard keeps the projections separate because __toks is
+    // non-cheap and referenced more than once.
     val withToks = spread.select(TextOps.tokens(col("__t")).as("__toks"))
-    // for i in 1..n-1: j in i+1..min(i+window, n) — the outer bound
-    // keeps every inner sequence ascending; n < 2 guards to empty
-    val pairs = expr(
-      s"""CASE WHEN size(__toks) < 2 THEN
-         |  array()
-         |ELSE
-         |  flatten(transform(sequence(1, size(__toks) - 1), i ->
-         |    transform(sequence(i + 1, least(i + $window, size(__toks))), j ->
-         |      struct(element_at(__toks, i) AS w1,
-         |             element_at(__toks, j) AS w2))))
-         |END""".stripMargin)
+    // offset d pairs token i with token i + d: two slices of __toks
+    // shifted by d, zipped (the bigramPairs construction, once per
+    // offset, unrolled on the driver) — no lambda captures __toks, and
+    // a doc shorter than d + 1 tokens gives d's slices no elements
+    val toks = col("__toks")
+    val pairs = flatten(array((1 to window).map { d =>
+      val len = greatest(size(toks) - d, lit(0))
+      zip_with(slice(toks, lit(1), len), slice(toks, lit(1 + d), len),
+        (a, b) => struct(a.as("w1"), b.as("w2")))
+    }: _*))
     withToks
       .select(explode(pairs).as("p"))
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))

@@ -73,7 +73,7 @@ object PlanDump {
         graft.dedup.Dedup.minhashSignatures(
           spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text", 3, 64),
         bands = 16, rowsPerBand = 4),
-      "Band self-join carries only (id, band, band_hash); the 64-long signature arrays join back AFTER the pair-set distinct — the banded shuffle payload is k x smaller than shipping signatures through it. (The connected-components rounds that follow are iterative joins; see Dedup.connectedComponents scaladoc.)")
+      "Pairs blocks the (id, band, band_hash) rows into one bare-id member list per bucket and expands each list record-locally; the 64-long signature arrays join back AFTER the per-pair aggregate — the banded shuffle payload is k x smaller than shipping signatures through it. (The connected-components rounds that follow are iterative joins; see Dedup.connectedComponents scaladoc.)")
 
     dump("q_url_dedup (URL canonicalization + dedup)",
       SparkEntry.queries("q_url_dedup")(spark, sf),

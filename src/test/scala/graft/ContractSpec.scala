@@ -152,6 +152,24 @@ class ContractSpec extends AnyFunSuite {
     assert(named.isEmpty, named)
   }
 
+  test("dedup.Pairs is the one capped candidate-pair generator") {
+    // an in-row pair array builds all C(n, 2) pairs of a block inside
+    // one row (~50M structs at a 10k cap); Pairs.of expands one
+    // member's later slice per row instead
+    val inRow = sourcesWhere("src/main/scala")(_.contains("flatten(transform(sequence"))
+    assert(inRow.isEmpty, inRow)
+    val expanders = sourcesWhere("src/main/scala")(_.contains("posexplode(col(\"members\"))"))
+    assert(expanders == Set("graft/dedup/Pairs.scala"), expanders)
+    // the routed generators block and cap through Pairs, never with a
+    // window count (a full sort of the block rows)
+    for (f <- Seq("graft/dedup/Dedup.scala", "graft/dedup/Winnow.scala",
+        "graft/media/Phash.scala")) {
+      val src = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala", f))
+      assert(src.contains("Pairs.of(") && src.contains("Pairs.blocks("), f)
+      assert(!src.contains("Window"), s"$f caps with a window")
+    }
+  }
+
   test("the routed cache owners leave no CacheManager entry behind") {
     // each builds, counts and releases its cached frames; a registration
     // left behind turns a later query's matching plan fragment into an

@@ -84,19 +84,19 @@ class PlanSpec extends AnyFunSuite {
       s"extraction Project fell out of codegen:\n$p")
   }
 
-  test("simhash self-join reuses the fingerprint exchange beyond the broadcast regime") {
-    // At bench scale AQE broadcasts one side, so the simhash60 subtree
-    // appears twice in the plan; at 100 TB neither side broadcasts and
-    // both sides are canonically identical shuffle exchanges — Spark
-    // must then compute fingerprints ONCE (ReusedExchange), or the
-    // operator costs two full scans. Pin that property.
+  test("simhash computes fingerprints once, with no self-join and no window") {
+    // Beyond the broadcast regime the fingerprint subtree must run ONCE,
+    // or the operator costs two full scans. The bucket blocks of
+    // dedup.Pairs read the fingerprints once and expand pairs
+    // record-locally: no self-join whose sides would need a reused
+    // exchange, and no window count for the cap.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     val p = graft.dedup.Dedup.simhashNearDups(s2,
       s2.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")
       .queryExecution.executedPlan.toString
-    assert(p.contains("ReusedExchange"), p.take(2000))
+    assert(!p.contains("SortMergeJoin") && !p.contains("Window"), p.take(2000))
     assert("Scan parquet".r.findAllIn(p).length == 1, "fingerprints must be computed once")
   }
 
