@@ -4296,7 +4296,7 @@ object SparkEntry {
     * Lloyd's rounds with strict-less L2 argmin (dist ASC, c ASC ==
     * Pq.assignSub's strict-less / keep-lowest-code), ending in final
     * assignments af_<m> over codebooks c<iters>_<m>. Every arithmetic
-    * step mirrors Pq.scala's accumulation order bit-for-bit.
+    * step mirrors Ivf.lloyd's accumulation order bit-for-bit.
     */
   private def pqCtes(numSub: Int, kSub: Int, iters: Int,
       defineVecs: Boolean = true): String = {

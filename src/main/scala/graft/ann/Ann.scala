@@ -4,17 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (`array<float>`).
+/** Similarity search over an embedding column (`array<float>`), and
+  * the retrieval core the family shares.
   *
   *  - Brute-force cosine top-k: broadcast the (small) query set, one
-  *    codegen'd pass over the corpus, per-query window rank. The exact
+  *    codegen'd pass over the corpus, per-query rank. The exact
   *    baseline; O(|corpus| * |queries|) but shuffle-free except the
-  *    final per-query top-k.
-  *  - LSH-bucketed top-k (the scale path): random-hyperplane signatures
-  *    (L tables x nbits sign bits, seeded), equi-join on (table, sig) to
-  *    form candidates, exact cosine rerank within candidates only. At
-  *    10^9 vectors the bucket join replaces the full scan per query with
-  *    ~L * bucketsize candidates.
+  *    final per-query top-k. Matryoshka and MIPS are its two-stage and
+  *    norm-pruned variants.
+  *  - Candidate paths: LSH here (random-hyperplane signatures, L tables
+  *    x nbits sign bits, seeded, equi-joined on (table, sig)), IVF and
+  *    IVFADC in [[Ivf]] and [[Pq]]. At 10^9 vectors the candidate set
+  *    replaces the full scan per query.
+  *  - The core: [[vecs]], the one (id, vec) double-array frame;
+  *    [[ranked]], the one per-query ranker (row_number by score, ties
+  *    to the lower item_id); [[rerank]], the one exact cosine rerank of
+  *    a candidate set. [[Ivf.lloyd]] is the one training loop and
+  *    [[Ivf.probed]] the one probe.
   */
 object Ann {
 
@@ -25,21 +31,65 @@ object Ann {
   def norm(v: Column): Column =
     sqrt(aggregate(transform(v, x => x * x), lit(0.0), (acc, x) => acc + x))
 
-  private def asDouble(v: Column): Column = transform(v, _.cast("double"))
+  /** Cosine of two double-array columns, folded as the oracle does. */
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  private[ann] def asDouble(v: Column): Column = transform(v, _.cast("double"))
+
+  /** (id, vec): the id as long and the vector as array<double>, the
+    * frame every trained operator caches and reads.
+    */
+  def vecs(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("vec"))
+
+  /** The query rows of a [[vecs]] frame, on the driver, by id. */
+  private[ann] def queryVecs(vecs: DataFrame, queryIds: Seq[Long]): Array[(Long, Array[Double])] =
+    vecs.filter(col("id").isin(queryIds: _*))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
+  /** The one per-query ranker: `row_number` over each query_id's rows by
+    * `score` descending, ties to the lower item_id, keeping ranks 1..k
+    * in column `rank`.
+    */
+  private[ann] def ranked(scored: DataFrame, score: String, k: Int,
+      rank: String = "rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+      Window.partitionBy("query_id").orderBy(col(score).desc, col("item_id"))))
+      .filter(col(rank) <= k)
+
+  /** [[ranked]] as a top-k operator's output: (query_id, neighbor_id,
+    * `extra`..., rank, `score`).
+    */
+  private[ann] def neighbors(scored: DataFrame, score: String, k: Int,
+      extra: Column*): DataFrame =
+    ranked(scored, score, k).select(Seq(col("query_id"), col("item_id").as("neighbor_id")) ++
+      extra :+ col("rank").cast("bigint").as("rank") :+ col(score): _*)
+
+  /** The one exact rerank of a candidate set: each (query_id, item_id)
+    * candidate joined to both vectors of `vecs`, scored by cosine and
+    * ranked to `k`. Output: (query_id, neighbor_id, rank, sim).
+    */
+  private[ann] def rerank(candidates: DataFrame, vecs: DataFrame,
+      queryIds: Seq[Long], k: Int): DataFrame = {
+    def side(s: String) = vecs.select(col("id").as(s"${s}_id"), col("vec").as(s"${s}_vec"))
+    neighbors(candidates.join(side("item"), "item_id")
+      .join(broadcast(side("query").filter(col("query_id").isin(queryIds: _*))), "query_id")
+      .withColumn("sim", cosine(col("query_vec"), col("item_vec"))), "sim", k)
+  }
 
   /** Shared brute-force core: broadcast query set, cosine against the
-    * full item set, per-query window rank to k — parameterized by an
-    * optional label column (carried through to queries/output) and the
-    * row-keep predicate ([[bruteForceTopK]] excludes self;
-    * [[hardNegatives]] excludes same-label).
+    * full item set — parameterized by an optional label column (carried
+    * through to queries/output) and the row-keep predicate
+    * ([[bruteForceTopK]] excludes self; [[hardNegatives]] excludes
+    * same-label).
     */
-  private def rankedBySim(
+  private def bySim(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       labelCol: Option[String],
-      queryIds: Seq[Long],
-      k: Int): DataFrame = {
+      queryIds: Seq[Long]): DataFrame = {
     val itemCols = Seq(col(idCol).cast("long").as("item_id")) ++
       labelCol.map(c => col(c).as("item_label")) :+
       asDouble(col(vecCol)).as("item_vec")
@@ -53,15 +103,9 @@ object Ann {
     val keep = labelCol
       .map(_ => col("item_label") =!= col("query_label"))
       .getOrElse(col("item_id") =!= col("query_id"))
-    val joined = items.crossJoin(broadcast(queries))
+    items.crossJoin(broadcast(queries))
       .filter(keep)
-      .withColumn("sim",
-        dot(col("query_vec"), col("item_vec")) /
-          (norm(col("query_vec")) * norm(col("item_vec"))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("item_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("sim", cosine(col("query_vec"), col("item_vec")))
   }
 
   /** Exact cosine top-k for each query id. Output:
@@ -73,9 +117,7 @@ object Ann {
       vecCol: String,
       queryIds: Seq[Long],
       k: Int): DataFrame =
-    rankedBySim(emb, idCol, vecCol, None, queryIds, k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+    neighbors(bySim(emb, idCol, vecCol, None, queryIds), "sim", k)
 
   /** Brute-force hard-negative mining: the top-k most-similar items
     * carrying a DIFFERENT label than the query — the contrastive-
@@ -91,10 +133,8 @@ object Ann {
       labelCol: String,
       queryIds: Seq[Long],
       k: Int): DataFrame =
-    rankedBySim(emb, idCol, vecCol, Some(labelCol), queryIds, k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("item_label").as("neighbor_label"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+    neighbors(bySim(emb, idCol, vecCol, Some(labelCol), queryIds), "sim", k,
+      col("item_label").as("neighbor_label"))
 
   /** One portable hyperplane weight: md5("seed:t:b:i") -> 60-bit int ->
     * uniform in [-1, 1] via exact integer arithmetic + one IEEE divide.
@@ -144,8 +184,7 @@ object Ann {
     val dim = emb.select(size(col(vecCol))).head().getInt(0)
     val planes = hyperplanes(tables, bits, dim, seed)
     val bc = spark.sparkContext.broadcast(planes)
-    emb.select(col(idCol).cast("long"), asDouble(col(vecCol)))
-      .as[(Long, Seq[Double])]
+    vecs(emb, idCol, vecCol).as[(Long, Seq[Double])]
       .flatMap { case (id, v) =>
         val arr = v.toArray
         val ps = bc.value
@@ -172,20 +211,7 @@ object Ann {
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("item_id"))
       .distinct()
-    val vecs = emb.select(col(idCol).cast("long").as("vid"),
-      asDouble(col(vecCol)).as("vec"))
-    val reranked = candidates
-      .join(vecs.withColumnRenamed("vid", "item_id").withColumnRenamed("vec", "item_vec"), "item_id")
-      .join(broadcast(vecs.withColumnRenamed("vid", "query_id").withColumnRenamed("vec", "query_vec")
-        .filter(col("query_id").isin(queryIds: _*))), "query_id")
-      .withColumn("sim",
-        dot(col("query_vec"), col("item_vec")) /
-          (norm(col("query_vec")) * norm(col("item_vec"))))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("item_id"))
-    reranked.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+    rerank(candidates, vecs(emb, idCol, vecCol), queryIds, k)
   }
 
   /** Johnson-Lindenstrauss random projection to `k` dims: the
@@ -212,8 +238,7 @@ object Ann {
     val planes = Array.tabulate(k, dim)((b, i) => planeWeight(seed, 0, b, i + 1))
     val scale = math.sqrt(3.0 / k)
     val bc = spark.sparkContext.broadcast(planes)
-    emb.select(col(idCol).cast("long"), asDouble(col(vecCol)))
-      .as[(Long, Seq[Double])]
+    vecs(emb, idCol, vecCol).as[(Long, Seq[Double])]
       .map { case (id, v) =>
         val arr = v.toArray
         val ps = bc.value
@@ -268,20 +293,9 @@ object Ann {
         col("item_head").as("query_head"))
     val coarse = items.crossJoin(broadcast(queries))
       .filter(col("item_id") =!= col("query_id"))
-      .withColumn("csim",
-        dot(col("query_head"), col("item_head")) /
-          (norm(col("query_head")) * norm(col("item_head"))))
-    val cw = Window.partitionBy("query_id").orderBy(col("csim").desc, col("item_id"))
-    val reranked = coarse.withColumn("crank", row_number().over(cw))
-      .filter(col("crank") <= shortlist)
-      .withColumn("sim",
-        dot(col("query_vec"), col("item_vec")) /
-          (norm(col("query_vec")) * norm(col("item_vec"))))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("item_id"))
-    reranked.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+      .withColumn("csim", cosine(col("query_head"), col("item_head")))
+    neighbors(ranked(coarse, "csim", shortlist, "crank")
+      .withColumn("sim", cosine(col("query_vec"), col("item_vec"))), "sim", k)
   }
 
   /** Shared MIPS scaffolding: items with norms, broadcast query set,
@@ -318,8 +332,7 @@ object Ann {
       .crossJoin(broadcast(queries))
       .filter(col("item_id") =!= col("query_id"))
       .withColumn("score", dot(col("query_vec"), col("item_vec")))
-    val kw = Window.partitionBy("query_id").orderBy(col("score").desc, col("item_id"))
-    val kth = headScored.withColumn("r", row_number().over(kw))
+    val kth = ranked(headScored, "score", k, "r")
       .filter(col("r") === k)
       .select(col("query_id").as("tq"), col("score").as("kth_score"))
     // Safety margin on the prune bound: in exact arithmetic
@@ -362,11 +375,7 @@ object Ann {
       .withColumn("score", dot(col("query_vec"), col("item_vec")))
     val all = headScored.select(col("query_id"), col("item_id"), col("score"))
       .unionByName(tailScored.select(col("query_id"), col("item_id"), col("score")))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("item_id"))
-    all.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("score"))
+    neighbors(all, "score", k)
   }
 
   /** No-silent-caps audit for [[mipsTopK]] (same posture as the LSH and

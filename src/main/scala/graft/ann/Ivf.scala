@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: training is Lloyd's algorithm with every step a
   * DataFrame aggregation (assignment via broadcast codebook in a typed
-  * map, centroid update via posexplode + groupBy(cluster, dim) sums);
-  * only the k x dim codebook ever reaches the driver.
+  * map, centroid update via posexplode + groupBy(subspace, cluster, dim)
+  * sums); only the codebook ever reaches the driver. [[lloyd]] is the
+  * one such loop: IVF runs it over one subspace with [[cosineArgmax]],
+  * [[Pq]] over M subspaces with its L2 argmin.
   *
   * Fully deterministic — and therefore DuckDB-oracle-able: init picks
   * the k lowest-id vectors, the iteration count is fixed, assignment
@@ -46,84 +48,95 @@ object Ivf {
 
   private[ann] def normArr(a: Array[Double]): Double = math.sqrt(dotArr(a, a))
 
-  private[ann] def vecsDF(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    emb.select(col(idCol).cast("long").as("id"),
-      transform(col(vecCol), _.cast("double")).as("vec"))
+  /** IVF's assignment rule: cosine argmax over the centroids, both norms
+    * guarded, ties to the lowest cluster id.
+    */
+  private[ann] def cosineArgmax(vec: Array[Double], centroids: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestSim = Double.NegativeInfinity
+    var c = 0
+    while (c < centroids.length) {
+      val sim = dotArr(centroids(c), vec) /
+        (math.max(normArr(centroids(c)), 1e-12) * math.max(normArr(vec), 1e-12))
+      if (sim > bestSim) { bestSim = sim; best = c }
+      c += 1
+    }
+    best
+  }
 
   /** Cluster id of each row under a broadcast codebook (cosine). */
   def assign(spark: SparkSession, vecs: DataFrame, model: Model): DataFrame = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model.centroids)
     vecs.select(col("id"), col("vec")).as[(Long, Seq[Double])]
-      .map { case (id, v) =>
-        val arr = v.toArray
-        val cs = bc.value
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < cs.length) {
-          val sim = dotArr(cs(c), arr) /
-            (math.max(normArr(cs(c)), 1e-12) * math.max(normArr(arr), 1e-12))
-          if (sim > bestSim) { bestSim = sim; best = c }
-          c += 1
-        }
-        (id, best)
-      }
+      .map { case (id, v) => (id, cosineArgmax(v.toArray, bc.value)) }
       .toDF("id", "cluster")
   }
 
-  /** Lloyd's k-means, `iters` fixed rounds, distributed updates. */
-  def train(spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
-      nList: Int, iters: Int = 5): Model =
-    graft.Rounds.cached(vecsDF(emb, idCol, vecCol))(trainOnVecs(spark, _, nList, iters))
-
-  /** Training core over an ALREADY-CACHED (id, vec) frame — callers
-    * that hold their own vector cache (topK, semanticDedup,
-    * Pq.topKIvf) pass it here instead of train() building a second
-    * cache of the same data.
-    * Each round's update aggregation emits (cluster, vec) straight
-    * from the assignment map — the previous assign-then-join-by-id
-    * shape paid one extra shuffle join per round for rows the map
-    * already held.
+  /** The one k-means loop of the family: Lloyd's, `iters` fixed rounds,
+    * over `numSub` contiguous subspaces of an (id, vec) frame, with `k`
+    * codewords each. Returns books(m)(c), the c-th codeword of subspace m.
+    *  - init: the k lowest-id vectors, sliced per subspace;
+    *  - assignment: `nearest(subvector, book)` in a typed map under the
+    *    broadcast books, one (m, c, subvector) row per subspace, so all
+    *    M codebooks share each round's one shuffle;
+    *  - update: per (m, c, pos), the fixed-point sum and the count,
+    *    divided on the driver; a codeword no row chose keeps its value.
+    * `vecs` is read once per round plus once for the init, so callers
+    * pass a cached frame.
     */
-  private[ann] def trainOnVecs(spark: SparkSession, vecs: DataFrame,
-      nList: Int, iters: Int): Model = {
+  private[ann] def lloyd(spark: SparkSession, vecs: DataFrame, numSub: Int, k: Int,
+      iters: Int, nearest: (Array[Double], Array[Array[Double]]) => Int)
+      : Array[Array[Array[Double]]] = {
     import spark.implicits._
-    // deterministic init: the nList lowest-id vectors
-    var model = Model(vecs.orderBy("id").limit(nList)
-      .collect().map(_.getSeq[Double](1).toArray))
+    val init = vecs.orderBy("id").limit(k).collect().map(_.getSeq[Double](1).toArray)
+    val dim = init.headOption.fold(0)(_.length)
+    require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
+    val sd = dim / numSub
+    var books = Array.tabulate(numSub)(m => init.map(_.slice(m * sd, (m + 1) * sd)))
     for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(model.centroids)
-      val assigned = vecs.select(col("id"), col("vec")).as[(Long, Seq[Double])]
-        .map { case (_, v) =>
+      val bc = spark.sparkContext.broadcast(books)
+      val sums = vecs.select(col("vec")).as[Seq[Double]]
+        .flatMap { v =>
           val arr = v.toArray
-          val cs = bc.value
-          var best = 0
-          var bestSim = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val sim = dotArr(cs(c), arr) /
-              (math.max(normArr(cs(c)), 1e-12) * math.max(normArr(arr), 1e-12))
-            if (sim > bestSim) { bestSim = sim; best = c }
-            c += 1
+          (0 until numSub).map { m =>
+            val sub = arr.slice(m * sd, (m + 1) * sd)
+            (m, nearest(sub, bc.value(m)), sub)
           }
-          (best, v)
         }
-        .toDF("cluster", "vec")
-      val sums = assigned
-        .select(col("cluster"), posexplode(col("vec")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(floor(col("col") * FixedPointScale + 0.5)).as("s"),
-          count(lit(1)).as("n"))
+        .toDF("m", "c", "sub")
+        .select(col("m"), col("c"), posexplode(col("sub")))
+        .groupBy(col("m"), col("c"), col("pos"))
+        .agg(sum(floor(col("col") * FixedPointScale + 0.5)).as("s"), count(lit(1)).as("n"))
         .collect()
-      val next = Array.tabulate(model.centroids.length)(c => model.centroids(c).clone())
-      for (r <- sums) {
-        next(r.getAs[Int]("cluster"))(r.getAs[Int]("pos")) =
-          r.getAs[Long]("s").toDouble / (FixedPointScale.toDouble * r.getAs[Long]("n"))
-      }
-      model = Model(next)
+      val next = books.map(_.map(_.clone()))
+      for (r <- sums)
+        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+          r.getLong(3).toDouble / (FixedPointScale.toDouble * r.getLong(4))
+      books = next
     }
-    model
+    books
+  }
+
+  /** The IVF codebook: [[lloyd]] over one subspace with [[cosineArgmax]]. */
+  private[ann] def train(spark: SparkSession, vecs: DataFrame, nList: Int,
+      iters: Int): Model =
+    Model(lloyd(spark, vecs, 1, nList, iters, cosineArgmax)(0))
+
+  /** The probed candidates of IVF and IVFADC: (query_id, item_id) for
+    * every item in one of the `nProbe` lists nearest each query
+    * ([[Model.nearest]]), the query itself excluded.
+    */
+  private[ann] def probed(spark: SparkSession, vecs: DataFrame, model: Model,
+      queryVecs: Seq[(Long, Array[Double])], nProbe: Int): DataFrame = {
+    import spark.implicits._
+    val probes = queryVecs
+      .flatMap { case (qid, qv) => model.nearest(qv, nProbe).map(c => (qid, c)) }
+      .toDF("query_id", "cluster")
+    assign(spark, vecs, model).join(broadcast(probes), "cluster")
+      .filter(col("id") =!= col("query_id"))
+      .select(col("query_id"), col("id").as("item_id"))
+      .distinct()
   }
 
   /** IVF top-k: probe nProbe lists per query, exact cosine rerank. */
@@ -136,38 +149,20 @@ object Ivf {
       k: Int,
       nList: Int = 16,
       nProbe: Int = 4,
-      iters: Int = 5): DataFrame = {
-    import spark.implicits._
-    graft.Rounds.cached(vecsDF(emb, idCol, vecCol)) { vecs =>
-      val model = trainOnVecs(spark, vecs, nList, iters)
-      val assigned = assign(spark, vecs, model)
-
-      val queryVecs = vecs.filter(col("id").isin(queryIds: _*))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-      val probes = queryVecs.toSeq.flatMap { case (qid, qv) =>
-        model.nearest(qv, nProbe).map(c => (qid, c))
-      }
-      val probeDF = probes.toDF("query_id", "cluster")
-
-      val candidates = assigned.join(broadcast(probeDF), "cluster")
-        .filter(col("id") =!= col("query_id"))
-        .select(col("query_id"), col("id").as("item_id"))
-        .distinct()
-      val reranked = candidates
-        .join(vecs.withColumnRenamed("id", "item_id").withColumnRenamed("vec", "item_vec"), "item_id")
-        .join(broadcast(vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "query_vec")
-          .filter(col("query_id").isin(queryIds: _*))), "query_id")
-        .withColumn("sim",
-          Ann.dot(col("query_vec"), col("item_vec")) /
-            (Ann.norm(col("query_vec")) * Ann.norm(col("item_vec"))))
-      val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("item_id"))
+      iters: Int = 5): DataFrame =
+    graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
+      val model = train(spark, vecs, nList, iters)
+      val candidates = probed(spark, vecs, model, Ann.queryVecs(vecs, queryIds), nProbe)
       // checkpointed inside the scope: the result never reads the cache
-      graft.Rounds.checkpoint(reranked.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("item_id").as("neighbor_id"),
-          col("rank").cast("bigint").as("rank"), col("sim")))
+      graft.Rounds.checkpoint(Ann.rerank(candidates, vecs, queryIds, k))
     }
-  }
+
+  /** Cluster id of each cached vector under its trained codebook: the
+    * one assignment [[semanticDedup]] and [[droppedClusters]] share.
+    */
+  private def clusters(spark: SparkSession, vecs: DataFrame, nList: Int,
+      iters: Int): DataFrame =
+    assign(spark, vecs, train(spark, vecs, nList, iters))
 
   /** SemDeDup-style semantic dedup (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic
@@ -189,9 +184,8 @@ object Ivf {
   def semanticDedup(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, eps: Double, nList: Int = 16, iters: Int = 3,
       maxClusterSize: Int = 10000): DataFrame = {
-    val cc = graft.Rounds.cached(vecsDF(emb, idCol, vecCol)) { vecs =>
-      val model = trainOnVecs(spark, vecs, nList, iters)
-      val withC = assign(spark, vecs, model).join(vecs, "id")
+    val cc = graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
+      val withC = clusters(spark, vecs, nList, iters).join(vecs, "id")
         .withColumn("csz", count(lit(1)).over(Window.partitionBy("cluster")))
         .filter(col("csz") <= maxClusterSize)
         .select(col("cluster"), col("id"), col("vec"), Ann.norm(col("vec")).as("nrm"))
@@ -211,16 +205,16 @@ object Ivf {
   }
 
   /** No-silent-caps audit for semanticDedup: the clusters its
-    * maxClusterSize drops, with their sizes.
+    * maxClusterSize drops, with their sizes, from the same assignment
+    * under one vector cache.
     */
   def droppedClusters(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, nList: Int = 16, iters: Int = 3,
-      maxClusterSize: Int = 10000): DataFrame = {
-    val vecs = vecsDF(emb, idCol, vecCol)
-    val model = train(spark, emb, idCol, vecCol, nList, iters)
-    assign(spark, vecs, model)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("csz"))
-      .filter(col("csz") > maxClusterSize)
-  }
+      maxClusterSize: Int = 10000): DataFrame =
+    graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
+      graft.Rounds.checkpoint(clusters(spark, vecs, nList, iters)
+        .groupBy(col("cluster"))
+        .agg(count(lit(1)).as("csz"))
+        .filter(col("csz") > maxClusterSize))
+    }
 }

@@ -167,7 +167,7 @@ object Pca {
   def fitK(spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 5): (Array[Double], Array[Array[Double]]) = {
     require(k >= 1, s"k must be positive, got $k")
-    val (mean, cov0) = graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol)) { vecs =>
+    val (mean, cov0) = graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
       val dim = vecs.select(size(col("vec"))).head().getInt(0)
       val (mean, n) = meanOf(vecs, dim)
       require(n > 1, s"need > 1 vectors, got $n")
@@ -192,7 +192,7 @@ object Pca {
     val m1 = Model(mean, comps(0))
     val m2 = Model(mean, comps(1))
     val bc = spark.sparkContext.broadcast((m1, m2))
-    Ivf.vecsDF(emb, idCol, vecCol).as[(Long, Seq[Double])]
+    Ann.vecs(emb, idCol, vecCol).as[(Long, Seq[Double])]
       .map { case (id, v) =>
         val arr = v.toArray
         (id, bc.value._1.project(arr), bc.value._2.project(arr))
@@ -208,7 +208,7 @@ object Pca {
     import spark.implicits._
     val model = fit(spark, emb, idCol, vecCol, iters)
     val bc = spark.sparkContext.broadcast(model)
-    Ivf.vecsDF(emb, idCol, vecCol).as[(Long, Seq[Double])]
+    Ann.vecs(emb, idCol, vecCol).as[(Long, Seq[Double])]
       .map { case (id, v) => (id, bc.value.project(v.toArray)) }
       .toDF("vec_id", "pc1")
   }

@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou, Douze, Schmid, "Product Quantization
@@ -17,12 +16,11 @@ import org.apache.spark.sql.functions._
   * IVF (scan fewer) as the classic IVFADC layout; here PQ is exercised
   * standalone so the code path is oracle-gated end to end.
   *
-  * Spark-first shape: per-subspace Lloyd's where every step is a
-  * DataFrame aggregation — assignment in a typed map under a broadcast
-  * codebook, centroid updates via posexplode + groupBy(m, c, pos) —
-  * and only the M x K x (D/M) codebook reaches the driver. Scoring is
-  * one codes-table scan with a broadcast LUT; the final top-k is a
-  * per-query window.
+  * Spark-first shape: training is [[Ivf.lloyd]], the family's one
+  * fixed-point Lloyd loop, over M subspaces with the L2 argmin
+  * [[assignSub]]; only the M x K x (D/M) codebook reaches the driver.
+  * Scoring is one codes-table scan with a broadcast LUT; the final
+  * top-k is the family's one per-query ranker ([[Ann.ranked]]).
   *
   * Fully deterministic, hence DuckDB-replayable (the Ivf.scala
   * contract): lowest-id init, fixed-point centroid sums
@@ -64,67 +62,23 @@ object Pq {
     best
   }
 
-  /** Per-subspace Lloyd's, `iters` fixed rounds, distributed updates —
-    * the Ivf.train construction generalized to M independent subspace
-    * codebooks trained in ONE pass per round (the flatMap emits every
-    * (m, c, subvector) assignment, so all M codebooks share each
-    * round's shuffle instead of paying M of them).
+  /** Per-subspace codebooks: [[Ivf.lloyd]] over `numSub` subspaces of
+    * an (id, vec) frame ([[Ann.vecs]]) with [[assignSub]] as the
+    * assignment rule, all M codebooks trained in one pass per round.
+    * The operators pass the one vector cache they hold.
     */
-  def train(spark: SparkSession, emb: DataFrame, idCol: String,
-      vecCol: String, numSub: Int, k: Int, iters: Int): Model =
-    graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol))(
-      trainOnVecs(spark, _, numSub, k, iters))
+  def train(spark: SparkSession, vecs: DataFrame, numSub: Int, k: Int,
+      iters: Int): Model =
+    Model(Ivf.lloyd(spark, vecs, numSub, k, iters,
+      (sub, book) => assignSub(sub, 0, sub.length, book)))
 
-  /** Training core over an ALREADY-CACHED (id, vec) frame (the
-    * Ivf.trainOnVecs split): [[topKIvf]] trains both codebooks on the
-    * one vector cache it holds.
+  /** Code array of every row of an (id, vec) frame ([[Ann.vecs]]) under
+    * a broadcast model.
     */
-  private def trainOnVecs(spark: SparkSession, vecs: DataFrame, numSub: Int,
-      k: Int, iters: Int): Model = {
-    import spark.implicits._
-    val dim = vecs.select(size(col("vec"))).head().getInt(0)
-    require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
-    val subDim = dim / numSub
-    val initRows = vecs.orderBy("id").limit(k)
-      .collect().map(_.getSeq[Double](1).toArray)
-    var books: Array[Array[Array[Double]]] = Array.tabulate(numSub)(mi =>
-      initRows.map(r => r.slice(mi * subDim, (mi + 1) * subDim)))
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(books)
-      val assigned = vecs.select(col("id"), col("vec")).as[(Long, Seq[Double])]
-        .flatMap { case (_, v) =>
-          val arr = v.toArray
-          (0 until bc.value.length).map { mi =>
-            val sd = arr.length / bc.value.length
-            (mi, assignSub(arr, mi, sd, bc.value(mi)),
-              arr.slice(mi * sd, (mi + 1) * sd))
-          }
-        }
-        .toDF("m", "c", "sub")
-      val sums = assigned
-        .select(col("m"), col("c"), posexplode(col("sub")))
-        .groupBy(col("m"), col("c"), col("pos"))
-        .agg(sum(floor(col("col") * Ivf.FixedPointScale + 0.5)).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      for (r <- sums) {
-        next(r.getAs[Int]("m"))(r.getAs[Int]("c"))(r.getAs[Int]("pos")) =
-          r.getAs[Long]("s").toDouble /
-            (Ivf.FixedPointScale.toDouble * r.getAs[Long]("n"))
-      }
-      books = next
-    }
-    Model(books)
-  }
-
-  /** Code array of every vector under a broadcast model. */
-  def encode(spark: SparkSession, emb: DataFrame, idCol: String,
-      vecCol: String, model: Model): DataFrame = {
+  def encode(spark: SparkSession, vecs: DataFrame, model: Model): DataFrame = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model.codebooks)
-    Ivf.vecsDF(emb, idCol, vecCol)
-      .select(col("id"), col("vec")).as[(Long, Seq[Double])]
+    vecs.select(col("id"), col("vec")).as[(Long, Seq[Double])]
       .map { case (id, v) =>
         val arr = v.toArray
         val m = bc.value.length
@@ -161,81 +115,60 @@ object Pq {
     s
   }
 
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adot").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("item_id").as("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("adot"))
-  }
-
-  private def collectQueryVecs(vecs: DataFrame,
-      queryIds: Seq[Long]): Array[(Long, Array[Double])] =
-    vecs.filter(col("id").isin(queryIds: _*))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-
   /** ADC top-k: approximate inner product of each query against every
     * encoded vector — sum over subspaces of dot(query subvector,
-    * assigned codeword), M lookup-adds per item. One codes scan, one
-    * per-query window; the raw vectors are never touched at query time.
+    * assigned codeword), M lookup-adds per item. Training, the query
+    * rows and the codes read one vector cache; scoring reads only the
+    * codes, and the small top-k result is checkpointed before the cache
+    * is dropped.
     */
   def topK(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, queryIds: Seq[Long], k: Int,
       numSub: Int = 4, kSub: Int = 8, iters: Int = 2): DataFrame = {
     import spark.implicits._
-    val model = train(spark, emb, idCol, vecCol, numSub, kSub, iters)
-    val codes = encode(spark, emb, idCol, vecCol, model)
-    val queryVecs = collectQueryVecs(Ivf.vecsDF(emb, idCol, vecCol), queryIds)
-    val bcLut = spark.sparkContext.broadcast(lutFor(queryVecs, model))
-    val scored = codes.select(col("id"), col("codes"))
-      .as[(Long, Seq[Int])]
-      .flatMap { case (id, cs) =>
-        bcLut.value.iterator
-          .filter { case (qid, _) => qid != id }
-          .map { case (qid, tab) => (qid, id, adcScore(tab, cs)) }
-      }
-      .toDF("query_id", "item_id", "adot")
-    rankTopK(scored, k)
+    graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
+      val model = train(spark, vecs, numSub, kSub, iters)
+      val bcLut = spark.sparkContext.broadcast(lutFor(Ann.queryVecs(vecs, queryIds), model))
+      val scored = encode(spark, vecs, model).as[(Long, Seq[Int])]
+        .flatMap { case (id, cs) =>
+          bcLut.value.iterator
+            .filter { case (qid, _) => qid != id }
+            .map { case (qid, tab) => (qid, id, adcScore(tab, cs)) }
+        }
+        .toDF("query_id", "item_id", "adot")
+      // checkpointed inside the scope: the result never reads the cache
+      graft.Rounds.checkpoint(Ann.neighbors(scored, "adot", k))
+    }
   }
 
   /** IVFADC (the production ANN layout at 10^9+ vectors): the IVF
     * coarse quantizer bounds WHICH items are scored (~nProbe/nList of
     * the corpus per query) and PQ bounds WHAT is read per item (M code
-    * bytes + LUT adds, never the raw vector). Candidates come from the
-    * probed inverted lists exactly as Ivf.topK builds them; scoring is
-    * the same broadcast-LUT ADC as [[topK]]; both training loops are
-    * the deterministic fixed-point constructions, so the composition
-    * replays end to end in the oracle. Both train on one vector cache,
-    * and the small top-k result is checkpointed before it is dropped.
+    * bytes + LUT adds, never the raw vector). Candidates are
+    * [[Ivf.probed]], as Ivf.topK's; scoring is the same broadcast-LUT
+    * ADC as [[topK]]; both codebooks come from [[Ivf.lloyd]], so the
+    * composition replays end to end in the oracle. Training, probing
+    * and encoding all read the one vector cache, and the small top-k
+    * result is checkpointed before it is dropped.
     */
   def topKIvf(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, queryIds: Seq[Long], k: Int,
       nList: Int = 16, nProbe: Int = 4, ivfIters: Int = 3,
       numSub: Int = 4, kSub: Int = 8, pqIters: Int = 2): DataFrame = {
     import spark.implicits._
-    graft.Rounds.cached(Ivf.vecsDF(emb, idCol, vecCol)) { vecs =>
-      val coarse = Ivf.trainOnVecs(spark, vecs, nList, ivfIters)
-      val assigned = Ivf.assign(spark, vecs, coarse)
-      val queryVecs = collectQueryVecs(vecs, queryIds)
-      val probeDF = queryVecs.toSeq
-        .flatMap { case (qid, qv) => coarse.nearest(qv, nProbe).map(c => (qid, c)) }
-        .toDF("query_id", "cluster")
-      val candidates = assigned.join(broadcast(probeDF), "cluster")
-        .filter(col("id") =!= col("query_id"))
-        .select(col("query_id"), col("id").as("item_id"))
-        .distinct()
-      val model = trainOnVecs(spark, vecs, numSub, kSub, pqIters)
-      val codes = encode(spark, emb, idCol, vecCol, model)
-        .withColumnRenamed("id", "item_id")
+    graft.Rounds.cached(Ann.vecs(emb, idCol, vecCol)) { vecs =>
+      val queryVecs = Ann.queryVecs(vecs, queryIds)
+      val candidates = Ivf.probed(spark, vecs, Ivf.train(spark, vecs, nList, ivfIters),
+        queryVecs, nProbe)
+      val model = train(spark, vecs, numSub, kSub, pqIters)
+      val codes = encode(spark, vecs, model).withColumnRenamed("id", "item_id")
       val bcLut = spark.sparkContext.broadcast(lutFor(queryVecs, model).toMap)
       val scored = candidates.join(codes, "item_id")
         .select(col("query_id"), col("item_id"), col("codes"))
         .as[(Long, Long, Seq[Int])]
         .map { case (qid, id, cs) => (qid, id, adcScore(bcLut.value(qid), cs)) }
         .toDF("query_id", "item_id", "adot")
-      graft.Rounds.checkpoint(rankTopK(scored, k))
+      graft.Rounds.checkpoint(Ann.neighbors(scored, "adot", k))
     }
   }
 }

@@ -20,11 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Quant {
 
-  private def asDouble(v: Column): Column = transform(v, _.cast("double"))
-
   /** max_i |v_i| as a double (0.0 for empty vectors). */
   def maxAbs(v: Column): Column =
-    aggregate(asDouble(v), lit(0.0), (acc, x) => greatest(acc, abs(x)))
+    aggregate(Ann.asDouble(v), lit(0.0), (acc, x) => greatest(acc, abs(x)))
 
   /** (scale, q): per-vector symmetric int8 quantization. q values are
     * in [-127, 127] by construction (the max-abs element maps to ±127).
@@ -36,14 +34,9 @@ object Quant {
       col(idCol).cast("long").as("vec_id"),
       scale.as("scale"),
       when(col(vecCol).isNull, lit(null))
-        .otherwise(when(m === 0.0, transform(asDouble(col(vecCol)), _ => lit(0)))
-          .otherwise(transform(asDouble(col(vecCol)),
+        .otherwise(when(m === 0.0, transform(Ann.asDouble(col(vecCol)), _ => lit(0)))
+          .otherwise(transform(Ann.asDouble(col(vecCol)),
             x => floor(x / (m / 127.0) + 0.5).cast("int"))))
         .as("q"))
   }
-
-  /** Approximate reconstruction: q_i * scale, as array<double>. */
-  def dequantize(quantized: DataFrame): DataFrame =
-    quantized.withColumn("vec_approx",
-      transform(col("q"), qi => qi.cast("double") * col("scale")))
 }

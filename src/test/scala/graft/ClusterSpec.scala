@@ -153,6 +153,9 @@ class ClusterSpec extends AnyFunSuite {
       "Ivf.topK" -> (() => Ivf.topK(spark, emb, "vec_id", "embedding", qids, k = 5, iters = 2)),
       "semanticDedup" -> (() => Ivf.semanticDedup(spark, emb, "vec_id", "embedding",
         eps = 0.3, iters = 2)),
+      "Ivf.droppedClusters" -> (() => Ivf.droppedClusters(spark, emb, "vec_id", "embedding",
+        iters = 2, maxClusterSize = 50)),
+      "Pq.topK" -> (() => Pq.topK(spark, emb, "vec_id", "embedding", qids, k = 5, iters = 1)),
       "Pq.topKIvf" -> (() => Pq.topKIvf(spark, emb, "vec_id", "embedding", qids, k = 5,
         ivfIters = 2, pqIters = 1)))
     val sc = spark.sparkContext

@@ -170,6 +170,17 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("graft.ann ranks in one place and trains through one Lloyd loop") {
+    // the per-query ranker (Ann.ranked) and the fixed-point centroid
+    // update (Ivf.lloyd) each have one definition the family shares
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/ann")
+    def uses(pattern: String): Map[String, Int] =
+      sourcesWhere(dir.toString)(pattern.r.findFirstIn(_).isDefined).map(f =>
+        f -> pattern.r.findAllIn(java.nio.file.Files.readString(dir.resolve(f))).length).toMap
+    assert(uses("""row_number\(\)""") == Map("Ann.scala" -> 1))
+    assert(uses("""FixedPointScale \+ 0\.5""") == Map("Ivf.scala" -> 1))
+  }
+
   test("the routed cache owners leave no CacheManager entry behind") {
     // each builds, counts and releases its cached frames; a registration
     // left behind turns a later query's matching plan fragment into an
@@ -177,7 +188,7 @@ class ContractSpec extends AnyFunSuite {
     val sf = TestData.Sf0001
     val routed = Seq("q_prefix_join", "q_dedup_minhash", "q_dedup_cluster",
       "q_dedup_cluster_auto", "q_cluster_canonical", "q_fold_assign", "q_dedup_eval",
-      "q_dedup_incremental", "q_ann_ivf", "q_ann_ivfpq", "q_semantic_dedup",
+      "q_dedup_incremental", "q_ann_ivf", "q_ann_pq", "q_ann_ivfpq", "q_semantic_dedup",
       "q_pca_project", "q_pca2_project", "q_phash_neardup", "q_lexical_topk",
       "q_corpus_clean", "q_embed_quant")
     // persist registers a plan when the query is BUILT, and registering

@@ -24,6 +24,13 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "lang")
   }
 
+  /** Approximate reconstruction of `Quant.quantize` rows: q_i * scale,
+    * as array<double> in `vec_approx`.
+    */
+  private def dequantize(quantized: DataFrame): DataFrame =
+    quantized.withColumn("vec_approx",
+      transform(col("q"), qi => qi.cast("double") * col("scale")))
+
   test("hashSample is deterministic and near the requested rate") {
     val d = docs(2000)
     val a = Sampling.hashSample(d, "doc_id", 0.2).collect().map(_.getLong(0)).sorted
@@ -60,7 +67,7 @@ class CorpusSpec extends AnyFunSuite {
       val dim = 1 + rng.nextInt(32)
       (i, Array.fill(dim)((rng.nextGaussian() * math.pow(10, rng.nextInt(5) - 2)).toFloat))
     }.toDF("vec_id", "embedding")
-    val deq = graft.ann.Quant.dequantize(graft.ann.Quant.quantize(emb, "vec_id", "embedding"))
+    val deq = dequantize(Quant.quantize(emb, "vec_id", "embedding"))
       .select("vec_id", "vec_approx", "scale", "q")
       .collect().map(r => r.getLong(0) ->
         ((r.getSeq[Double](1).toVector, r.getDouble(2), r.getSeq[Int](3).toVector))).toMap
@@ -148,7 +155,7 @@ class CorpusSpec extends AnyFunSuite {
     assert(rows(1L) == ((0.0, Vector(0, 0))))
     assert(rows(2L)._2 == Vector(127))
     // reconstruction error bound
-    val deq = Quant.dequantize(q).select("vec_id", "vec_approx", "scale")
+    val deq = dequantize(q).select("vec_id", "vec_approx", "scale")
       .collect().map(r => r.getLong(0) -> ((r.getSeq[Double](1).toVector, r.getDouble(2)))).toMap
     val orig = Map(0L -> Vector(0.5, -1.0, 0.25), 1L -> Vector(0.0, 0.0), 2L -> Vector(3.140000104904175))
     for ((id, (approx, scale)) <- deq; (a, o) <- approx.zip(orig(id)))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ann.Pq
+import graft.ann.{Ann, Pq}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,11 +44,10 @@ class PqSpec extends AnyFunSuite {
 
   test("encode emits one in-range code per subspace for every vector") {
     import spark.implicits._
-    val emb = syntheticEmb(30)
-    val model = Pq.train(spark, emb, "vec_id", "embedding",
-      numSub = 2, k = 4, iters = 2)
+    val vecs = Ann.vecs(syntheticEmb(30), "vec_id", "embedding")
+    val model = Pq.train(spark, vecs, numSub = 2, k = 4, iters = 2)
     assert(model.numSub == 2 && model.subDim == 4)
-    val codes = Pq.encode(spark, emb, "vec_id", "embedding", model)
+    val codes = Pq.encode(spark, vecs, model)
       .as[(Long, Seq[Int])].collect().toMap
     assert(codes.size == 30)
     assert(codes.values.forall(cs => cs.length == 2 && cs.forall(c => c >= 0 && c < 4)))
